@@ -42,13 +42,16 @@ object Materialize {
     try f finally caller.foreach(_ => sc.clearCallSite())
   }
 
-  /** Mark a LAZY checkpoint in the session's configured mode (nothing
-    * runs yet). In reliable-dir mode the marked RDD is additionally
-    * persisted so the caller's probe pass and the checkpoint-file write
-    * job read ONE computation — without it ReliableRDDCheckpointData
-    * recomputes the plan for the file write, and a non-deterministic
-    * plan could checkpoint rows the probe never saw. */
-  private def lazyCheckpoint(df: DataFrame): DataFrame = {
+  /** Mark a LAZY checkpoint in the session's configured mode and run
+    * `probe` over it: the probe's pass is what materializes it. In
+    * reliable-dir mode the marked RDD is persisted for the probe so the
+    * probe and the checkpoint-file write job read ONE computation —
+    * without it ReliableRDDCheckpointData recomputes the plan for the
+    * file write, and a non-deterministic plan could checkpoint rows the
+    * probe never saw. Once the files are written, reads come from them,
+    * so the persisted blocks are dropped at once instead of pinning
+    * storage until driver GC. */
+  private def lazyProbe[A](df: DataFrame)(probe: DataFrame => A): (DataFrame, A) = {
     val sc = df.sparkSession.sparkContext
     df.sparkSession.conf.getOption(DirProp).filter(_.nonEmpty) match {
       case Some(dir) =>
@@ -57,10 +60,15 @@ object Materialize {
         if (!sc.getCheckpointDir.exists(_.startsWith(dir)))
           sc.setCheckpointDir(dir)
         val ck = df.checkpoint(eager = false)
-        rddOf(ck).foreach(_.persist(
+        val rdd = rddOf(ck)
+        rdd.foreach(_.persist(
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        ck
-      case None => df.localCheckpoint(eager = false)
+        val a = probe(ck)
+        rdd.filter(_.isCheckpointed).foreach(_.unpersist(blocking = false))
+        (ck, a)
+      case None =>
+        val ck = df.localCheckpoint(eager = false)
+        (ck, probe(ck))
     }
   }
 
@@ -99,14 +107,15 @@ object Materialize {
     * localCheckpoint/checkpoint cache is complete after it — identical
     * post-state to [[apply]]. (Reliable-dir mode persists the marked RDD
     * first, so the deferred checkpoint-file write job re-reads the same
-    * cached computation the probe counted — see [[lazyCheckpoint]].) */
+    * cached computation the probe counted — see [[lazyProbe]].) */
   def probed(df: DataFrame,
       pred: org.apache.spark.sql.Column): (DataFrame, Long) = {
     import org.apache.spark.sql.functions.{sum, when}
     tagged(df, "materialize+probe") {
-      val ck = lazyCheckpoint(df)
-      val row = ck.agg(sum(when(pred, 1L).otherwise(0L))).first()
-      (ck, if (row.isNullAt(0)) 0L else row.getLong(0))
+      lazyProbe(df) { ck =>
+        val row = ck.agg(sum(when(pred, 1L).otherwise(0L))).first()
+        if (row.isNullAt(0)) 0L else row.getLong(0)
+      }
     }
   }
 
@@ -117,9 +126,8 @@ object Materialize {
       predB: org.apache.spark.sql.Column): (DataFrame, Long, Long) = {
     import org.apache.spark.sql.functions.{sum, when}
     tagged(df, "materialize+probe2") {
-      val ck = lazyCheckpoint(df)
-      val row = ck.agg(sum(when(predA, 1L).otherwise(0L)),
-        sum(when(predB, 1L).otherwise(0L))).first()
+      val (ck, row) = lazyProbe(df)(_.agg(sum(when(predA, 1L).otherwise(0L)),
+        sum(when(predB, 1L).otherwise(0L))).first())
       (ck, if (row.isNullAt(0)) 0L else row.getLong(0),
         if (row.isNullAt(1)) 0L else row.getLong(1))
     }
@@ -134,13 +142,14 @@ object Materialize {
     * regression of q_path_ivm in round 11. */
   def counted(df: DataFrame): (DataFrame, Long) =
     tagged(df, "materialize+count") {
-      val ck = lazyCheckpoint(df)
-      rddOf(ck) match {
-        case Some(rdd) => (ck, rdd.count())
-        case None => // unreachable for checkpoint-backed frames; keep a
-          // working fallback rather than a MatchError
-          import org.apache.spark.sql.functions.{count, lit}
-          (ck, ck.agg(count(lit(1))).first().getLong(0))
+      lazyProbe(df) { ck =>
+        rddOf(ck) match {
+          case Some(rdd) => rdd.count()
+          case None => // unreachable for checkpoint-backed frames; keep a
+            // working fallback rather than a MatchError
+            import org.apache.spark.sql.functions.{count, lit}
+            ck.agg(count(lit(1))).first().getLong(0)
+        }
       }
     }
 

@@ -128,7 +128,7 @@ object ScaleCurve {
       // the dir name carries the GENERATOR version — the published
       // dataset is immutable, so a generator change must mint a new one
       val sf1Dir = ScaleData.generate(spark, "/root/testdata/sf0.1",
-        s"${sys.props("java.io.tmpdir")}/graft_sf1_v2", copies = 10)
+        graft.sources.AtomicStore.root("sf1_v2"), copies = 10)
       setup(sf1Dir)
       time(sf1Dir, 1.0, sf1Keys)
     }

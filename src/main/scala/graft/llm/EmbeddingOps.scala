@@ -128,32 +128,22 @@ object EmbeddingOps {
       .select(col("vec_id"), col("label"), col("sim"))
   }
 
-  // one prebuilt LSH index per embeddings dir per JVM; the on-disk copy
-  // survives the JVM so repeated sessions skip the hyperplane pass
-  private val prebuilt =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   /** The persisted random-hyperplane bucket index over
     * `<sfDir>/embeddings.parquet`: (vec_id, tbl, bkt) stored PARTITIONED
     * BY (tbl, bkt), so a probe's bucket lookups prune to `NumTables`
     * directories at scan time. Built once at ingest via AtomicStore
     * (crash-safe atomic publication); searches never recompute corpus
-    * hyperplane dot products. */
+    * hyperplane dot products. The root carries every build input:
+    * dataset dir + LSH geometry (the hyperplane seed is fixed). Reads
+    * come from the partitioned on-disk layout, not the in-memory
+    * lineage, so (tbl, bkt) pruning is real. */
   def indexForEmbeddings(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): DataFrame =
-    prebuilt.getOrElseUpdate(sfDir, {
-      // path carries every build input: dataset dir + LSH geometry (the
-      // hyperplane seed is fixed)
-      val base = s"${sys.props("java.io.tmpdir")}/graft_lsh_" +
-        graft.sources.AtomicStore.key(sfDir, NumTables.toString,
-          PlanesPerTable.toString)
-      val path = graft.sources.AtomicStore.materialize(base)(tmp =>
-        bucketIndex(graft.sources.Tables.embeddings(spark, sfDir))
-          .write.partitionBy("tbl", "bkt").parquet(tmp))
-      // serve reads from the partitioned on-disk layout, not the
-      // in-memory lineage, so (tbl, bkt) pruning is real
-      spark.read.parquet(path)
-    })
+    graft.sources.AtomicStore.opened(spark, graft.sources.AtomicStore.root(
+        "lsh", sfDir, NumTables.toString, PlanesPerTable.toString))(tmp =>
+      bucketIndex(graft.sources.Tables.embeddings(spark, sfDir))
+        .write.partitionBy("tbl", "bkt").parquet(tmp))(
+      spark.read.parquet(_))
 
   /** [[annTopKIndexed]] against [[indexForEmbeddings]] — the production
     * search path (one pruned index scan + one candidate ranking). */

@@ -47,30 +47,23 @@ object IvfIndex {
     Model(centroids, spark.read.parquet(s"$path/assigned"))
   }
 
-  // one prebuilt index per (embeddings dir, k) per JVM; the on-disk copy
-  // survives the JVM so repeated sessions skip the k-means fit entirely
-  private val prebuilt = scala.collection.concurrent.TrieMap.empty[String, Model]
-
   /** The prebuilt index over `<sfDir>/embeddings.parquet`: load it from the
     * deterministic index location, building + saving it first only if it
     * has never been materialized. Queries must come through here so the
-    * k-means fit stays a setup cost, never a per-query one.
+    * k-means fit stays a setup cost, never a per-query one; the on-disk
+    * copy survives the JVM, so repeated sessions skip the fit entirely.
     */
   def forEmbeddings(spark: org.apache.spark.sql.SparkSession, sfDir: String,
       k: Int = 16): Model =
-    prebuilt.getOrElseUpdate(s"$sfDir#$k", {
-      // path carries every build input: the dataset dir and k (the seed is
-      // fixed), keyed collision-resistantly (SHA-256, not 32-bit hashCode).
-      // AtomicStore publishes the two parquet writes with one rename, so a
-      // crash mid-save can never wedge a half-written index.
-      val base = s"${sys.props("java.io.tmpdir")}/graft_ivf_" +
-        s"${graft.sources.AtomicStore.key(sfDir)}_$k"
-      val path = graft.sources.AtomicStore.materialize(base)(tmp =>
-        save(build(graft.sources.Tables.embeddings(spark, sfDir), k), tmp))
-      // serve reads from the partitioned on-disk layout, not the in-memory
-      // lineage, so list_id pruning is real
-      load(spark, path)
-    })
+    // the root carries every build input: the dataset dir and k (the seed
+    // is fixed). AtomicStore publishes the two parquet writes with one
+    // rename, so a crash mid-save can never wedge a half-written index.
+    // Reads come from the partitioned on-disk layout, not the in-memory
+    // lineage, so list_id pruning is real.
+    graft.sources.AtomicStore.opened(spark,
+        graft.sources.AtomicStore.root("ivf", sfDir) + s"_$k")(tmp =>
+      save(build(graft.sources.Tables.embeddings(spark, sfDir), k), tmp))(
+      load(spark, _))
 
   /** Train the quantizer and assign every vector to a list (adds
     * `list_id`). Deterministic for a fixed seed and input. The fit is

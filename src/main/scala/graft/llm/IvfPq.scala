@@ -65,20 +65,14 @@ object IvfPq {
     Model(centroids, books, spark.read.parquet(s"$path/codes"))
   }
 
-  private val prebuilt = scala.collection.concurrent.TrieMap.empty[String, Model]
-
   /** The prebuilt persisted index over `<sfDir>/embeddings.parquet` —
     * built and atomically published once, served from the `list_id`-
     * partitioned on-disk layout so partition pruning is real. */
   def forEmbeddings(spark: SparkSession, sfDir: String, k: Int = 16): Model =
-    prebuilt.getOrElseUpdate(s"$sfDir#$k", {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_ivfpq_" +
-        graft.sources.AtomicStore.key(sfDir, k.toString,
-          PqIndex.M.toString, PqIndex.K.toString)
-      val path = graft.sources.AtomicStore.materialize(base)(tmp =>
-        save(build(graft.sources.Tables.embeddings(spark, sfDir), k), tmp))
-      load(spark, path)
-    })
+    graft.sources.AtomicStore.opened(spark, graft.sources.AtomicStore.root(
+        "ivfpq", sfDir, k.toString, PqIndex.M.toString, PqIndex.K.toString))(
+      tmp => save(build(graft.sources.Tables.embeddings(spark, sfDir), k), tmp))(
+      load(spark, _))
 
   // ---- appendable persisted lifecycle (the LshIndex contract) --------
 

@@ -151,8 +151,7 @@ object LlmOps extends QueryModule {
     // LshIndexSpec pins recall against brute force, the estimator's
     // accuracy, probe-identity across compaction, and removal ≡ rebuild.
     "q_dedup_lsh_index" -> ((s, d) => {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_lshidx_" +
-        graft.sources.AtomicStore.key(d, "rm")
+      val root = graft.sources.AtomicStore.root("lshidx", d, "rm")
       val docs = Tables.documents(s, d)
       if (LshIndex.segmentCount(root) == 0) {
         LshIndex.build(docs.filter(pmod(col("doc_id"), lit(2)) === 1), root)
@@ -217,8 +216,7 @@ object LlmOps extends QueryModule {
     // create+append+remove ≡ one-shot encode of the surviving vectors at
     // the fixed model, row- and probe-identically, through compaction.
     "q_sim_ivf_append" -> ((s, d) => {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_ivfapp_" +
-        graft.sources.AtomicStore.key(d, "rm")
+      val root = graft.sources.AtomicStore.root("ivfapp", d, "rm")
       val vecs = Tables.embeddings(s, d)
       if (IvfIndex.segmentCount(root) == 0) {
         IvfIndex.create(vecs.filter(pmod(col("vec_id"), lit(4)) < 2),
@@ -261,8 +259,7 @@ object LlmOps extends QueryModule {
     // the one-shot encode of the surviving vectors through compaction,
     // with pruning asserted on the compacted base.
     "q_sim_ivfpq_append" -> ((s, d) => {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_ivfpqapp_" +
-        graft.sources.AtomicStore.key(d, "rm")
+      val root = graft.sources.AtomicStore.root("ivfpqapp", d, "rm")
       val vecs = Tables.embeddings(s, d)
       if (IvfPq.segmentCount(root) == 0) {
         IvfPq.create(vecs.filter(pmod(col("vec_id"), lit(4)) < 2),
@@ -409,8 +406,7 @@ object LlmOps extends QueryModule {
     // net index state equals the plain corpus, so this lands BITWISE on
     // q_text_bm25's oracle.
     "q_text_bm25_indexed" -> ((s, d) => {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_invidx_" +
-        graft.sources.AtomicStore.key(d)
+      val root = graft.sources.AtomicStore.root("invidx", d)
       val docs = Tables.documents(s, d)
       if (InvertedIndex.segmentCount(root) == 0) {
         // deterministic junk batch: re-derivable, so the remove segment
@@ -450,8 +446,7 @@ object LlmOps extends QueryModule {
     // lands on q_text_tfidf's oracle bitwise while reading only the
     // query vocabulary's postings buckets
     "q_text_tfidf_indexed" -> ((s, d) => {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_invidx_" +
-        graft.sources.AtomicStore.key(d)
+      val root = graft.sources.AtomicStore.root("invidx", d)
       val docs = Tables.documents(s, d)
       if (InvertedIndex.segmentCount(root) == 0) {
         val junk = docs.filter(col("doc_id") < 32)
@@ -628,8 +623,7 @@ object LlmOps extends QueryModule {
     // ingest is one scan — proving write→parse is the identity on the
     // corpus against the plain parquet oracle.
     "q_ingest_jsonl" -> ((s, d) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_docs_jsonl_" +
-        graft.sources.AtomicStore.key(d)
+      val base = graft.sources.AtomicStore.root("docs_jsonl", d)
       val path = graft.sources.AtomicStore.materialize(base) { tmp =>
         Tables.documents(s, d).write.json(tmp)
       }

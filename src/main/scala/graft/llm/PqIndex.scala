@@ -112,20 +112,13 @@ object PqIndex {
     Model(books, spark.read.parquet(s"$path/codes"))
   }
 
-  // one prebuilt index per embeddings dir per JVM; the on-disk copy
-  // survives the JVM so repeated sessions skip the k-means fits
-  private val prebuilt = scala.collection.concurrent.TrieMap.empty[String, Model]
-
   /** The prebuilt PQ index over `<sfDir>/embeddings.parquet` (built and
     * atomically published once; searches never re-fit or re-encode). */
   def forEmbeddings(spark: SparkSession, sfDir: String): Model =
-    prebuilt.getOrElseUpdate(sfDir, {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_pq_" +
-        graft.sources.AtomicStore.key(sfDir, M.toString, K.toString)
-      val path = graft.sources.AtomicStore.materialize(base)(tmp =>
-        save(build(graft.sources.Tables.embeddings(spark, sfDir)), tmp))
-      load(spark, path)
-    })
+    graft.sources.AtomicStore.opened(spark, graft.sources.AtomicStore.root(
+        "pq", sfDir, M.toString, K.toString))(tmp =>
+      save(build(graft.sources.Tables.embeddings(spark, sfDir)), tmp))(
+      load(spark, _))
 
   // ---- appendable persisted lifecycle (the LshIndex contract) --------
 

@@ -1,5 +1,6 @@
 package graft.rdf
 
+import graft.sources.AtomicStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -240,9 +241,6 @@ object ExtVp {
     solved.reduce(Bgp.joinSolved)
   }
 
-  private val stores =
-    scala.collection.concurrent.TrieMap.empty[String, (Store, String)]
-
   /** The persisted ExtVP store for the canonical triples of `sfDir` —
     * reductions are parquet directories under one AtomicStore-published
     * root (crash-safe, built once per dataset), with the selectivity map
@@ -252,34 +250,30 @@ object ExtVp {
     * ingest-time reduction build. */
   def forDataset(spark: SparkSession, sfDir: String,
       threshold: Double = 0.9): Store =
-    stores.getOrElseUpdate(s"$sfDir#$threshold", {
-      val key = graft.sources.AtomicStore.key(sfDir, Triples.duckCte,
-        s"extvp-$threshold")
-      val base = s"${sys.props("java.io.tmpdir")}/graft_extvp_$key"
-      val path = graft.sources.AtomicStore.materialize(base) { tmp =>
-        val triples = Triples.build(spark, sfDir).persist()
-        val st = build(triples, threshold)
-        st.vp.foreach { case (p, df) =>
-          df.write.parquet(s"$tmp/vp/${enc(p)}") }
-        st.red.foreach { case ((p, q, k), df) =>
-          df.write.parquet(s"$tmp/red/${enc(p)}__${enc(q)}__$k") }
-        val json = st.sel.toSeq.sortBy(_._1.toString).map {
-          case ((p, q, k), s) => s"""["${enc(p)}","${enc(q)}","$k",$s]"""
-        }.mkString("[", ",", "]")
-        graft.sources.AtomicStore.writeString(s"$tmp/sel.json", json)
-        triples.unpersist(): Unit
-      }
-      val selRows = parseSel(
-        graft.sources.AtomicStore.readString(s"$path/sel.json"))
+    AtomicStore.opened(spark, AtomicStore.root("extvp",
+        sfDir, Triples.duckCte, s"extvp-$threshold")) { tmp =>
+      val triples = Triples.build(spark, sfDir).persist()
+      val st = build(triples, threshold)
+      st.vp.foreach { case (p, df) =>
+        df.write.parquet(s"$tmp/vp/${enc(p)}") }
+      st.red.foreach { case ((p, q, k), df) =>
+        df.write.parquet(s"$tmp/red/${enc(p)}__${enc(q)}__$k") }
+      val json = st.sel.toSeq.sortBy(_._1.toString).map {
+        case ((p, q, k), s) => s"""["${enc(p)}","${enc(q)}","$k",$s]"""
+      }.mkString("[", ",", "]")
+      AtomicStore.writeString(s"$tmp/sel.json", json)
+      triples.unpersist(): Unit
+    } { path =>
+      val selRows = parseSel(AtomicStore.readString(s"$path/sel.json"))
       val sel = selRows.map { case (p, q, k, s) => ((dec(p), dec(q), k), s) }.toMap
-      val vp = graft.sources.AtomicStore.list(s"$path/vp").map(f =>
+      val vp = AtomicStore.list(s"$path/vp").map(f =>
         dec(f.getPath.getName) ->
-          graft.sources.AtomicStore.readParquet(spark, f.getPath.toString)).toMap
+          AtomicStore.readParquet(spark, f.getPath.toString)).toMap
       val red = sel.keys.map { case (p, q, k) =>
-        (p, q, k) -> graft.sources.AtomicStore.readParquet(spark, s"$path/red/${enc(p)}__${enc(q)}__$k")
+        (p, q, k) -> AtomicStore.readParquet(spark, s"$path/red/${enc(p)}__${enc(q)}__$k")
       }.toMap
-      (Store(vp, red, sel), path)
-    })._1
+      Store(vp, red, sel)
+    }
 
   // predicate names are IRIs/terms — hex-encode for directory safety
   private def enc(p: String): String =

@@ -50,8 +50,7 @@ object RdfOps extends QueryModule {
     // Turtle parser — the oracle proves write→parse is the identity on
     // the triple set.
     "q_turtle_scan" -> ((s, d) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_ttl_" +
-        graft.sources.AtomicStore.key(d)
+      val base = graft.sources.AtomicStore.root("ttl", d)
       val path = graft.sources.AtomicStore.materialize(base) { tmp =>
         Turtle.write(Triples.build(s, d)
           .withColumn("o_is_iri", col("o").rlike("^[conr]:")), tmp)
@@ -67,8 +66,7 @@ object RdfOps extends QueryModule {
     // parser — write→parse is the identity on the triple set, proven
     // against the same plain-SELECT oracle as the Turtle loop.
     "q_jsonld_scan" -> ((s, d) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_jsonld_" +
-        graft.sources.AtomicStore.key(d)
+      val base = graft.sources.AtomicStore.root("jsonld", d)
       val path = graft.sources.AtomicStore.materialize(base) { tmp =>
         JsonLd.write(Triples.build(s, d)
           .withColumn("o_is_iri", col("o").rlike("^[conr]:"))
@@ -85,8 +83,7 @@ object RdfOps extends QueryModule {
     // default-graph subjects are top-level nodes, then read back by the
     // quads parser — write→parse is the identity on the quad set.
     "q_jsonld_quads" -> ((s, d) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_jsonldq_" +
-        graft.sources.AtomicStore.key(d)
+      val base = graft.sources.AtomicStore.root("jsonldq", d)
       val path = graft.sources.AtomicStore.materialize(base) { tmp =>
         JsonLd.writeQuads(Quads.build(s, d)
           .withColumn("o_is_iri", col("o").rlike("^[conr]:"))
@@ -102,8 +99,7 @@ object RdfOps extends QueryModule {
     // statements, read back by the shared Turtle grammar's TriG entry —
     // write→parse is the identity on the quad set.
     "q_trig_scan" -> ((s, d) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_trig_" +
-        graft.sources.AtomicStore.key(d)
+      val base = graft.sources.AtomicStore.root("trig", d)
       val path = graft.sources.AtomicStore.materialize(base) { tmp =>
         Trig.write(Quads.build(s, d)
           .withColumn("o_is_iri", col("o").rlike("^[conr]:")), tmp)
@@ -118,8 +114,7 @@ object RdfOps extends QueryModule {
     // per-file DOM parser and the namespace stripped, recovering the
     // exact triple set.
     "q_rdfxml_scan" -> ((s, d) => {
-      val base = s"${sys.props("java.io.tmpdir")}/graft_rdfxml_" +
-        graft.sources.AtomicStore.key(d)
+      val base = graft.sources.AtomicStore.root("rdfxml", d)
       val path = graft.sources.AtomicStore.materialize(base) { tmp =>
         RdfXml.write(Triples.build(s, d)
           .withColumn("o_is_iri", col("o").rlike("^[conr]:"))
@@ -286,10 +281,8 @@ object RdfOps extends QueryModule {
     // base+segments and must equal the recompute over the store head,
     // which the oracle expresses directly over the updated quad set.
     "q_bgp_view_store" -> ((s, d) => {
-      val store = s"${sys.props("java.io.tmpdir")}/graft_quadstore_vs_" +
-        graft.sources.AtomicStore.key(d)
-      val view = s"${sys.props("java.io.tmpdir")}/graft_viewstore_" +
-        graft.sources.AtomicStore.key(d)
+      val store = graft.sources.AtomicStore.root("quadstore_vs", d)
+      val view = graft.sources.AtomicStore.root("viewstore", d)
       QuadStore.init(Quads.build(s, d), store)
       // ONE atomic `;`-request (SPARQL 1.1 Protocol): the churn is a
       // single version commit, not one per operation — half the publish
@@ -322,10 +315,8 @@ object RdfOps extends QueryModule {
     // that passed the filter in an earlier round. The oracle recomputes
     // the filtered join over the churned slice.
     "q_bgp_view_filtered" -> ((s, d) => {
-      val store = s"${sys.props("java.io.tmpdir")}/graft_quadstore_vf_" +
-        graft.sources.AtomicStore.key(d)
-      val view = s"${sys.props("java.io.tmpdir")}/graft_view_vf_" +
-        graft.sources.AtomicStore.key(d)
+      val store = graft.sources.AtomicStore.root("quadstore_vf", d)
+      val view = graft.sources.AtomicStore.root("view_vf", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createFilteredFromSparql(s, store, view,
@@ -358,12 +349,9 @@ object RdfOps extends QueryModule {
     // never refolds the binding view; compaction runs agg-after-view so
     // the retention contract (syncAgg before compact(view)) holds.
     "q_bgp_agg_store" -> ((s, d) => {
-      val store = s"${sys.props("java.io.tmpdir")}/graft_quadstore_av_" +
-        graft.sources.AtomicStore.key(d)
-      val view = s"${sys.props("java.io.tmpdir")}/graft_view_av_" +
-        graft.sources.AtomicStore.key(d)
-      val agg = s"${sys.props("java.io.tmpdir")}/graft_agg_av_" +
-        graft.sources.AtomicStore.key(d)
+      val store = graft.sources.AtomicStore.root("quadstore_av", d)
+      val view = graft.sources.AtomicStore.root("view_av", d)
+      val agg = graft.sources.AtomicStore.root("agg_av", d)
       QuadStore.init(Quads.build(s, d), store)
       val pats = Seq(TP(V("cust"), C("mktsegment"), C("BUILDING")),
         TP(V("cust"), C("nation"), V("nat")))
@@ -392,12 +380,9 @@ object RdfOps extends QueryModule {
     // appearing only in the final readDecoded emission. The oracle
     // recomputes the view in string space over the churned slice.
     "q_bgp_view_encoded" -> ((s, d) => {
-      val store = s"${sys.props("java.io.tmpdir")}/graft_quadstore_ve_" +
-        graft.sources.AtomicStore.key(d)
-      val mirror = s"${sys.props("java.io.tmpdir")}/graft_mirror_ve_" +
-        graft.sources.AtomicStore.key(d)
-      val view = s"${sys.props("java.io.tmpdir")}/graft_encview_ve_" +
-        graft.sources.AtomicStore.key(d)
+      val store = graft.sources.AtomicStore.root("quadstore_ve", d)
+      val mirror = graft.sources.AtomicStore.root("mirror_ve", d)
+      val view = graft.sources.AtomicStore.root("encview_ve", d)
       QuadStore.init(Quads.build(s, d), store)
       EncodedMirror.sync(s, store, mirror): Unit
       if (EncodedView.lastSynced(view) == 0)
@@ -429,14 +414,10 @@ object RdfOps extends QueryModule {
     // joins. Same churn as q_bgp_agg_store, recomputed by the oracle in
     // string space.
     "q_bgp_agg_encoded" -> ((s, d) => {
-      val store = s"${sys.props("java.io.tmpdir")}/graft_quadstore_ae_" +
-        graft.sources.AtomicStore.key(d)
-      val mirror = s"${sys.props("java.io.tmpdir")}/graft_mirror_ae_" +
-        graft.sources.AtomicStore.key(d)
-      val view = s"${sys.props("java.io.tmpdir")}/graft_encview_ae_" +
-        graft.sources.AtomicStore.key(d)
-      val agg = s"${sys.props("java.io.tmpdir")}/graft_encagg_ae_" +
-        graft.sources.AtomicStore.key(d)
+      val store = graft.sources.AtomicStore.root("quadstore_ae", d)
+      val mirror = graft.sources.AtomicStore.root("mirror_ae", d)
+      val view = graft.sources.AtomicStore.root("encview_ae", d)
+      val agg = graft.sources.AtomicStore.root("encagg_ae", d)
       QuadStore.init(Quads.build(s, d), store)
       EncodedMirror.sync(s, store, mirror): Unit
       if (EncodedView.lastSynced(view) == 0)
@@ -473,12 +454,9 @@ object RdfOps extends QueryModule {
     // integer nationkey through create/sync/syncAgg. The oracle
     // recomputes the GROUP BY directly over the churned slice.
     "q_bgp_agg_answer" -> ((s, d) => {
-      val store = s"${sys.props("java.io.tmpdir")}/graft_quadstore_aa_" +
-        graft.sources.AtomicStore.key(d)
-      val view = s"${sys.props("java.io.tmpdir")}/graft_view_aa_" +
-        graft.sources.AtomicStore.key(d)
-      val agg = s"${sys.props("java.io.tmpdir")}/graft_agg_aa_" +
-        graft.sources.AtomicStore.key(d)
+      val store = graft.sources.AtomicStore.root("quadstore_aa", d)
+      val view = graft.sources.AtomicStore.root("view_aa", d)
+      val agg = graft.sources.AtomicStore.root("agg_aa", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createAggFromSparql(s, store, view, agg,
@@ -513,12 +491,9 @@ object RdfOps extends QueryModule {
     // GROUP BY over the churned slice to prove it. AVG rides as exact
     // integer SUM over live COUNT, divided once at read.
     "q_bgp_agg_minmax" -> ((s, d) => {
-      val store = s"${sys.props("java.io.tmpdir")}/graft_quadstore_mm_" +
-        graft.sources.AtomicStore.key(d)
-      val view = s"${sys.props("java.io.tmpdir")}/graft_view_mm_" +
-        graft.sources.AtomicStore.key(d)
-      val agg = s"${sys.props("java.io.tmpdir")}/graft_agg_mm_" +
-        graft.sources.AtomicStore.key(d)
+      val store = graft.sources.AtomicStore.root("quadstore_mm", d)
+      val view = graft.sources.AtomicStore.root("view_mm", d)
+      val agg = graft.sources.AtomicStore.root("agg_mm", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createAggFromSparql(s, store, view, agg,
@@ -562,10 +537,8 @@ object RdfOps extends QueryModule {
     // the store (ViewAnswer.answerStored, staleness-gated). The oracle
     // recomputes all three patterns directly over the churned slice.
     "q_bgp_view_answer" -> ((s, d) => {
-      val store = s"${sys.props("java.io.tmpdir")}/graft_quadstore_va_" +
-        graft.sources.AtomicStore.key(d)
-      val view = s"${sys.props("java.io.tmpdir")}/graft_view_va_" +
-        graft.sources.AtomicStore.key(d)
+      val store = graft.sources.AtomicStore.root("quadstore_va", d)
+      val view = graft.sources.AtomicStore.root("view_va", d)
       QuadStore.init(Quads.build(s, d), store)
       val pats = Seq(TP(V("cust"), C("name"), V("cname")),
         TP(V("cust"), C("mktsegment"), C("BUILDING")))
@@ -597,10 +570,8 @@ object RdfOps extends QueryModule {
     // folded). Read = bindings with support > 0 = the UNION recompute
     // over the store head, which the oracle expresses directly.
     "q_bgp_view_union" -> ((s, d) => {
-      val store = s"${sys.props("java.io.tmpdir")}/graft_quadstore_vu_" +
-        graft.sources.AtomicStore.key(d)
-      val view = s"${sys.props("java.io.tmpdir")}/graft_view_vu_" +
-        graft.sources.AtomicStore.key(d)
+      val store = graft.sources.AtomicStore.root("quadstore_vu", d)
+      val view = graft.sources.AtomicStore.root("view_vu", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createUnionFromSparql(s, store, view,
@@ -632,10 +603,8 @@ object RdfOps extends QueryModule {
     // zz3 arrives matched then loses its match (match→pad, the
     // retraction a plain equi-join would silently miss on null pads).
     "q_bgp_view_optional" -> ((s, d) => {
-      val store = s"${sys.props("java.io.tmpdir")}/graft_quadstore_vo_" +
-        graft.sources.AtomicStore.key(d)
-      val view = s"${sys.props("java.io.tmpdir")}/graft_view_vo_" +
-        graft.sources.AtomicStore.key(d)
+      val store = graft.sources.AtomicStore.root("quadstore_vo", d)
+      val view = graft.sources.AtomicStore.root("view_vo", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createOptionalFromSparql(s, store, view,
@@ -668,10 +637,8 @@ object RdfOps extends QueryModule {
     // severed. The oracle recomputes with a recursive CTE over the
     // final edge set.
     "q_bgp_view_path" -> ((s, d) => {
-      val store = s"${sys.props("java.io.tmpdir")}/graft_quadstore_vp_" +
-        graft.sources.AtomicStore.key(d)
-      val view = s"${sys.props("java.io.tmpdir")}/graft_view_vp_" +
-        graft.sources.AtomicStore.key(d)
+      val store = graft.sources.AtomicStore.root("quadstore_vp", d)
+      val view = graft.sources.AtomicStore.root("view_vp", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createPathFromSparql(s, store, view,
@@ -700,10 +667,8 @@ object RdfOps extends QueryModule {
     // oracle recomputes with a recursive CTE over the final composed
     // edges.
     "q_bgp_view_path_seq" -> ((s, d) => {
-      val store = s"${sys.props("java.io.tmpdir")}/graft_quadstore_vq_" +
-        graft.sources.AtomicStore.key(d)
-      val view = s"${sys.props("java.io.tmpdir")}/graft_view_vq_" +
-        graft.sources.AtomicStore.key(d)
+      val store = graft.sources.AtomicStore.root("quadstore_vq", d)
+      val view = graft.sources.AtomicStore.root("view_vq", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createPathSeqFromSparql(s, store, view,
@@ -735,10 +700,8 @@ object RdfOps extends QueryModule {
     // the retracted edge. Oracle recomputes with a recursive CTE over
     // the final composed edge set.
     "q_bgp_view_path_expr" -> ((s, d) => {
-      val store = s"${sys.props("java.io.tmpdir")}/graft_quadstore_vx_" +
-        graft.sources.AtomicStore.key(d)
-      val view = s"${sys.props("java.io.tmpdir")}/graft_view_vx_" +
-        graft.sources.AtomicStore.key(d)
+      val store = graft.sources.AtomicStore.root("quadstore_vx", d)
+      val view = graft.sources.AtomicStore.root("view_vx", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createPathExprFromSparql(s, store, view,
@@ -770,10 +733,8 @@ object RdfOps extends QueryModule {
     // must cascade through the composition and the outer closure.
     // Oracle: two stacked recursive CTEs over the churned slice.
     "q_bgp_view_path_nested" -> ((s, d) => {
-      val store = s"${sys.props("java.io.tmpdir")}/graft_quadstore_vz_" +
-        graft.sources.AtomicStore.key(d)
-      val view = s"${sys.props("java.io.tmpdir")}/graft_view_vz_" +
-        graft.sources.AtomicStore.key(d)
+      val store = graft.sources.AtomicStore.root("quadstore_vz", d)
+      val view = graft.sources.AtomicStore.root("view_vz", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createPathExprFromSparql(s, store, view,
@@ -833,8 +794,7 @@ object RdfOps extends QueryModule {
     // serialization boundary are oracled end-to-end, no driver-side
     // string surgery. Hostile-payload quoting is EndpointSpec's job.
     "q_sparql_endpoint" -> ((s, d) => {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_endpoint_" +
-        graft.sources.AtomicStore.key(d)
+      val root = graft.sources.AtomicStore.root("endpoint", d)
       val quads = Triples.build(s, d)
         .filter(col("s").startsWith("n:") || col("s").startsWith("r:"))
         .withColumn("g", lit(""))
@@ -863,8 +823,7 @@ object RdfOps extends QueryModule {
     // it. Same query and oracle as q_sparql_endpoint — the transport is
     // proven value-identical to the network-free protocol path.
     "q_sparql_http" -> ((s, d) => {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_httpep_" +
-        graft.sources.AtomicStore.key(d)
+      val root = graft.sources.AtomicStore.root("httpep", d)
       val quads = Triples.build(s, d)
         .filter(col("s").startsWith("n:") || col("s").startsWith("r:"))
         .withColumn("g", lit(""))
@@ -1435,8 +1394,7 @@ object RdfOps extends QueryModule {
     // idempotent, so repeated runs (bench runs=2) converge to the same
     // result while exercising a full snapshot publication each time.
     "q_sparql_update" -> ((s, d) => {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_quadstore_" +
-        graft.sources.AtomicStore.key(d)
+      val root = graft.sources.AtomicStore.root("quadstore", d)
       QuadStore.init(Quads.build(s, d), root)
       QuadStore.update(s, root, """INSERT DATA { <x:1> <label> "v" . }""")
       QuadStore.update(s, root,
@@ -1456,8 +1414,7 @@ object RdfOps extends QueryModule {
     // composed working graph. Exercises the full parse→apply→publish→
     // partition-pruned-read loop.
     "q_sparql_graphmgmt" -> ((s, d) => {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_quadstore_gm_" +
-        graft.sources.AtomicStore.key(d)
+      val root = graft.sources.AtomicStore.root("quadstore_gm", d)
       QuadStore.init(Quads.build(s, d), root)
       QuadStore.update(s, root, "COPY GRAPH <g:customer> TO GRAPH <g:work>")
       QuadStore.update(s, root, "ADD DEFAULT TO GRAPH <g:work>")
@@ -1476,8 +1433,7 @@ object RdfOps extends QueryModule {
     // reaches its stable end state regardless of execution order, and a
     // re-run's WHERE matches nothing (the rename is idempotent).
     "q_sparql_modify" -> ((s, d) => {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_quadstore_" +
-        graft.sources.AtomicStore.key(d)
+      val root = graft.sources.AtomicStore.root("quadstore", d)
       QuadStore.init(Quads.build(s, d), root)
       QuadStore.update(s, root,
         """DELETE { GRAPH <g:orders> { ?o <orderstatus> ?st . } }
@@ -1496,8 +1452,7 @@ object RdfOps extends QueryModule {
     // graph-wildcard admin idiom. Both ops match nothing on a re-run, so
     // bench runs converge.
     "q_sparql_update_graphvar" -> ((s, d) => {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_quadstore_gv_" +
-        graft.sources.AtomicStore.key(d)
+      val root = graft.sources.AtomicStore.root("quadstore_gv", d)
       QuadStore.init(Quads.build(s, d), root)
       QuadStore.update(s, root,
         """DELETE { GRAPH ?g { ?o <orderstatus> ?st . } }
@@ -1520,8 +1475,7 @@ object RdfOps extends QueryModule {
     // converge: statement 1 restores what 2 deleted, 2 deletes it again
     // and re-inserts an already-present set.
     "q_sparql_with" -> ((s, d) => {
-      val root = s"${sys.props("java.io.tmpdir")}/graft_quadstore_with_" +
-        graft.sources.AtomicStore.key(d)
+      val root = graft.sources.AtomicStore.root("quadstore_with", d)
       QuadStore.init(Quads.build(s, d), root)
       QuadStore.update(s, root,
         """WITH <g:flags> INSERT { ?c <flag> "bld" . }
@@ -1545,10 +1499,8 @@ object RdfOps extends QueryModule {
     // update-fresh data. Ops are idempotent, so repeated runs converge;
     // sync always lands before retention, honoring the mirror contract.
     "q_sparql_mirror" -> ((s, d) => {
-      val store = s"${sys.props("java.io.tmpdir")}/graft_quadstore_mir_" +
-        graft.sources.AtomicStore.key(d)
-      val mirror = s"${sys.props("java.io.tmpdir")}/graft_encmirror_" +
-        graft.sources.AtomicStore.key(d)
+      val store = graft.sources.AtomicStore.root("quadstore_mir", d)
+      val mirror = graft.sources.AtomicStore.root("encmirror", d)
       QuadStore.init(Quads.build(s, d), store)
       QuadStore.update(s, store, """INSERT DATA { <m:1> <mlabel> "v" . }""")
       QuadStore.update(s, store,
@@ -1754,8 +1706,7 @@ object RdfOps extends QueryModule {
     "q_sparql_service_live" -> ((s, d) => {
       // r11 suffix: the dataset gained the sparse <peer> predicate —
       // an existing pre-r11 store at the old path must not be reused
-      val root = s"${sys.props("java.io.tmpdir")}/graft_svclive_r11_" +
-        graft.sources.AtomicStore.key(d)
+      val root = graft.sources.AtomicStore.root("svclive_r11", d)
       val supTable = graft.sources.Tables.supplier(s, d)
       val suppliers = Triples.fromTable(supTable,
         concat(lit("sup:"), col("s_suppkey")), Seq(

@@ -1,5 +1,6 @@
 package graft.rdf
 
+import graft.sources.AtomicStore
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 
 /** Persisted triple storage, bucketed by subject.
@@ -58,19 +59,15 @@ object TripleStore {
     triples.write.mode(SaveMode.Overwrite).partitionBy("p").parquet(path)
 
   def loadVertical(spark: SparkSession, path: String): DataFrame =
-    graft.sources.AtomicStore.readParquet(spark, path)
-
-  // one encoded store per dataset per JVM; the on-disk copy outlives the
-  // JVM so later sessions skip the dictionary build entirely
-  private val encoded = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, DataFrame)]
+    AtomicStore.readParquet(spark, path)
 
   /** The dictionary-encoded id-triple store for a dataset: `(dict,
     * encoded)` read from the persisted load artifacts, building + saving
     * them first only if they were never materialized. This is the
     * reference's load phase (SURVEY.md §3.3: dictionary encoding runs in
     * MapReduce at load, never at query time) — queries must come through
-    * here so term→id encoding stays ingest-time work.
+    * here so term→id encoding stays ingest-time work. The on-disk copy
+    * outlives the JVM, so later sessions skip the dictionary build.
     *
     * The encoded table is persisted BUCKETED BY `sid` — composing both
     * reference techniques end-to-end: subject co-location (R10) over
@@ -80,72 +77,67 @@ object TripleStore {
     * re-registers the published files as an external bucketed table;
     * Spark recovers each file's bucket id from the bucketed file names.
     */
-  def encodedFor(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) =
-    encoded.getOrElseUpdate(sfDir, {
-      // keyed by dataset, corpus definition AND on-disk layout: a change
-      // to Triples.build (fingerprinted by its DuckDB rendering) or to the
-      // bucketing scheme must invalidate the store, not silently serve the
-      // previous corpus/layout (bucketed reads over un-bucketed files fail
-      // at scan time). SHA-256 key — a 32-bit hash could collide across
-      // datasets and serve the wrong store.
-      val key = graft.sources.AtomicStore.key(sfDir, Triples.duckCte,
-        s"bucketed-sid-$buckets")
-      val base = s"${sys.props("java.io.tmpdir")}/graft_idtriples_$key"
-      val path = graft.sources.AtomicStore.materialize(base) { tmp =>
-        val t = Triples.build(spark, sfDir)
-        val dict = Dictionary.build(spark, t)
-        dict.write.parquet(s"$tmp/dict")
-        // bucketBy requires a catalog table; the explicit path makes it
-        // external, so dropping the staging entry keeps the files for the
-        // atomic rename that publishes the store
-        val stage = s"graft_enc_stage_$key"
-        spark.sql(s"DROP TABLE IF EXISTS $stage")
-        Dictionary.encode(t, graft.sources.AtomicStore.readParquet(spark, s"$tmp/dict"))
-          .write.bucketBy(buckets, "sid").sortBy("sid")
-          .option("path", s"$tmp/enc").format("parquet")
-          .saveAsTable(stage)
-        spark.sql(s"DROP TABLE $stage")
-      }
+  def encodedFor(spark: SparkSession, sfDir: String): (DataFrame, DataFrame) = {
+    // keyed by dataset, corpus definition AND on-disk layout: a change
+    // to Triples.build (fingerprinted by its DuckDB rendering) or to the
+    // bucketing scheme must invalidate the store, not silently serve the
+    // previous corpus/layout (bucketed reads over un-bucketed files fail
+    // at scan time). SHA-256 key — a 32-bit hash could collide across
+    // datasets and serve the wrong store.
+    val key = AtomicStore.key(sfDir, Triples.duckCte,
+      s"bucketed-sid-$buckets")
+    AtomicStore.opened(spark, AtomicStore.root(s"idtriples_$key")) { tmp =>
+      val t = Triples.build(spark, sfDir)
+      val dict = Dictionary.build(spark, t)
+      dict.write.parquet(s"$tmp/dict")
+      // bucketBy requires a catalog table; the explicit path makes it
+      // external, so dropping the staging entry keeps the files for the
+      // atomic rename that publishes the store
+      val stage = s"graft_enc_stage_$key"
+      spark.sql(s"DROP TABLE IF EXISTS $stage")
+      Dictionary.encode(t, AtomicStore.readParquet(spark, s"$tmp/dict"))
+        .write.bucketBy(buckets, "sid").sortBy("sid")
+        .option("path", s"$tmp/enc").format("parquet")
+        .saveAsTable(stage)
+      spark.sql(s"DROP TABLE $stage")
+    } { path =>
       val table = s"graft_enc_$key"
       spark.sql(
         s"""CREATE TABLE IF NOT EXISTS $table (sid BIGINT, pid BIGINT, oid BIGINT)
            |USING PARQUET
            |CLUSTERED BY (sid) SORTED BY (sid) INTO $buckets BUCKETS
            |LOCATION '$path/enc'""".stripMargin)
+      // a rebuilt root has new file names under the same location
+      spark.catalog.refreshTable(table)
       // ingest-time ANALYZE: CBO sees the id-store's row count/NDVs
       // without caller opt-in (skipped when stats already present)
       graft.sources.Tables.analyze(spark, table)
-      (graft.sources.AtomicStore.readParquet(spark, s"$path/dict"), spark.table(table))
-    })
+      (AtomicStore.readParquet(spark, s"$path/dict"), spark.table(table))
+    }
+  }
 
   /** Matches `spark.sql.shuffle.partitions` (32) so bucketed scans line up
     * with shuffle partitioning and aggregations need no exchange. */
   private val buckets = 32
-
-  private val encodedQ = scala.collection.concurrent.TrieMap
-    .empty[String, (DataFrame, DataFrame)]
 
   /** The persisted dictionary-encoded QUADS store for `sfDir`:
     * (dict, encQuads(sid,pid,oid,gid)), built once per dataset
     * (AtomicStore-published, crash-safe) and partitioned by `gid` so
     * constant-GRAPH queries partition-prune — the dataset sibling of
     * [[encodedFor]]. The dictionary build (global term ranking) is the
-    * one expensive step and is exactly what this cache makes ingest-time
+    * one expensive step and is exactly what this store makes ingest-time
     * instead of per-query. */
   def quadsEncodedFor(spark: SparkSession,
       sfDir: String): (DataFrame, DataFrame) =
-    encodedQ.getOrElseUpdate(sfDir, {
-      val key = graft.sources.AtomicStore.key(sfDir, Triples.duckCte,
-        Quads.duckCte, "quads-gid")
-      val base = s"${sys.props("java.io.tmpdir")}/graft_idquads_$key"
-      val path = graft.sources.AtomicStore.materialize(base) { tmp =>
-        val q = Quads.build(spark, sfDir)
-        val dict = Dictionary.buildQuads(spark, q)
-        dict.write.parquet(s"$tmp/dict")
-        Dictionary.encodeQuads(q, graft.sources.AtomicStore.readParquet(spark, s"$tmp/dict"))
-          .write.partitionBy("gid").parquet(s"$tmp/enc")
-      }
-      (graft.sources.AtomicStore.readParquet(spark, s"$path/dict"),
-        graft.sources.AtomicStore.readParquet(spark, s"$path/enc").select("sid", "pid", "oid", "gid"))
-    })
+    AtomicStore.opened(spark, AtomicStore.root("idquads",
+        sfDir, Triples.duckCte, Quads.duckCte, "quads-gid")) { tmp =>
+      val q = Quads.build(spark, sfDir)
+      val dict = Dictionary.buildQuads(spark, q)
+      dict.write.parquet(s"$tmp/dict")
+      Dictionary.encodeQuads(q, AtomicStore.readParquet(spark, s"$tmp/dict"))
+        .write.partitionBy("gid").parquet(s"$tmp/enc")
+    } { path =>
+      (AtomicStore.readParquet(spark, s"$path/dict"),
+        AtomicStore.readParquet(spark, s"$path/enc").select("sid", "pid", "oid", "gid"))
+    }
 }

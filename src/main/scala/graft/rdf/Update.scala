@@ -702,7 +702,7 @@ object QuadStore {
     * above the byte gate bypass the cache entirely — at 100 TB a
     * snapshot must stay a lazy scan, not a materialized copy. */
   def readVersion(spark: SparkSession, root: String, v: Int): DataFrame = {
-    val sess = sessionId(spark)
+    val sess = graft.sources.AtomicStore.sessionId(spark)
     val enabled = cacheMaxBytes(spark) > 0
     (if (enabled) snapCache.synchronized(
        Option(snapCache.get((sess, root, v, vFingerprint(root, v)))))
@@ -761,7 +761,7 @@ object QuadStore {
       graph: String): DataFrame = {
     val maxBytes = cacheMaxBytes(spark)
     if (maxBytes > 0) {
-      val sess = sessionId(spark)
+      val sess = graft.sources.AtomicStore.sessionId(spark)
       val cached = snapCache.synchronized(
         Option(snapCache.get((sess, root, v, vFingerprint(root, v)))))
       val served = cached.getOrElse {
@@ -825,15 +825,6 @@ object QuadStore {
     new java.util.LinkedHashMap[(String, String, Int, String), DataFrame](
       32, 0.75f, true)
 
-  // one random UUID per live SparkSession (weak keys: a stopped
-  // session's mapping vanishes with it, and its UUID is never reused —
-  // unlike System.identityHashCode, which can collide across sessions)
-  private val sessionIds = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
-  private def sessionId(spark: SparkSession): String =
-    sessionIds.computeIfAbsent(spark,
-      _ => java.util.UUID.randomUUID.toString)
-
   /** The fingerprint of version `v` under `root`: its segment dir's
     * completion-marker publish token (base or delta — whichever exists). */
   private def vFingerprint(root: String, v: Int): String =
@@ -852,7 +843,7 @@ object QuadStore {
       segs.map(i => graft.sources.AtomicStore.sizeBytes(deltaPath(root, i))).sum
     if (bytes > maxBytes) return df
     val mat = graft.Materialize(df)
-    val sess = sessionId(spark)
+    val sess = graft.sources.AtomicStore.sessionId(spark)
     snapCache.synchronized {
       snapCache.put((sess, root, v, vFingerprint(root, v)), mat)
       import scala.jdk.CollectionConverters._

@@ -826,7 +826,9 @@ object ViewStore {
 
   /** All nodes' edge sets as they stood at synced version `v`:
     * (__n, src, dst), the base plus net segments folded by one
-    * last-op window — [[readAt]]'s fold over the edge chain. */
+    * last-op window — [[readAt]]'s fold over the edge chain. Same
+    * ownership rule as [[readAt]]: the frame belongs to the fold cache
+    * and must never be passed to [[graft.Materialize.release]]. */
   private def readEdgesAt(spark: SparkSession, root: String,
       v: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -836,8 +838,8 @@ object ViewStore {
     // same fold cache as [[readAt]] (separate key space): the edge state
     // is re-folded by every sync and compaction, and extends by its net
     // segments exactly like the binding fold
-    val key = (sessionId(spark), root + "#edges")
-    val cached = foldCache.synchronized(Option(foldCache.get(key)))
+    val key = (graft.sources.AtomicStore.sessionId(spark), root + "#edges")
+    val cached = foldCache.get(key)
       .filter(c => graft.sources.AtomicStore.markerToken(c.endPath) ==
         c.token && c.token.nonEmpty)
     def put(df: DataFrame): DataFrame = {
@@ -845,9 +847,7 @@ object ViewStore {
         .map { case (f, t) => edgeSegPath(root, f, t) }
         .getOrElse(edgeBasePath(root, baseV))
       val tok = graft.sources.AtomicStore.markerToken(end)
-      if (tok.nonEmpty) foldCache.synchronized {
-        foldCache.put(key, CachedFold(v, end, tok, df)): Unit
-      }
+      if (tok.nonEmpty) foldCache.put(key, CachedFold(v, end, tok, df))
       df
     }
     cached match {
@@ -1398,21 +1398,12 @@ object ViewStore {
   // blocks once unreferenced.
   private final case class CachedFold(v: Int, endPath: String,
       token: String, df: DataFrame)
+  // small on purpose: maintenance touches one root at a time, so a
+  // handful of recent roots is all the hit rate needs — a large LRU would
+  // pin every root's checkpoint blocks for the whole session (executor
+  // storage = driver heap in local mode)
   private val foldCache =
-    new java.util.LinkedHashMap[(String, String), CachedFold](16, 0.75f, true) {
-      // small on purpose: maintenance touches one root at a time, so a
-      // handful of recent roots is all the hit rate needs — a large LRU
-      // would pin every root's checkpoint blocks for the whole session
-      // (executor storage = driver heap in local mode)
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[(String, String), CachedFold]): Boolean =
-        size() > 8
-    }
-  private val sessionIds = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, String]())
-  private def sessionId(spark: SparkSession): String =
-    sessionIds.computeIfAbsent(spark,
-      _ => java.util.UUID.randomUUID.toString)
+    new graft.sources.Lru[(String, String), CachedFold](8)
 
   /** The chain entry that defines version `v` (newest entry ending at v):
     * a segment when one ends there, else the base. */
@@ -1456,15 +1447,23 @@ object ViewStore {
     * within one maintenance invocation the same state is folded several
     * times (sync bootstraps, compaction, the final read), and across
     * versions the cached fold advances by applying only the new net
-    * segments instead of re-folding the whole chain. */
+    * segments instead of re-folding the whole chain.
+    *
+    * Ownership: the returned frame BELONGS TO THE FOLD CACHE — later
+    * reads may be served from its checkpoint blocks. Never pass it, or a
+    * frame derived from it, to [[graft.Materialize.release]]: that
+    * unpersists the cache's truncated-lineage RDD and every later hit
+    * fails irrecoverably. The blocks are reclaimed by Spark's
+    * ContextCleaner once the entry leaves the LRU and nothing else
+    * reaches it. */
   def readAt(spark: SparkSession, viewRoot: String, v: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     if (mode(viewRoot) == "union")
       return readUnionCountsAt(spark, viewRoot, v)
         .drop(BgpView.SupportCol)
     val (baseV, segs) = chainAt(viewRoot, v)
-    val key = (sessionId(spark), viewRoot)
-    val cached = foldCache.synchronized(Option(foldCache.get(key)))
+    val key = (graft.sources.AtomicStore.sessionId(spark), viewRoot)
+    val cached = foldCache.get(key)
       // the fingerprint must still match ITS path — a wiped/recompacted
       // root reads as a miss, never as pre-wipe state
       .filter(c => graft.sources.AtomicStore.markerToken(c.endPath) ==
@@ -1472,9 +1471,7 @@ object ViewStore {
     def put(vv: Int, df: DataFrame): DataFrame = {
       val end = endPathOf(viewRoot, baseV, segs.filter(_._2 <= vv))
       val tok = graft.sources.AtomicStore.markerToken(end)
-      if (tok.nonEmpty) foldCache.synchronized {
-        foldCache.put(key, CachedFold(vv, end, tok, df)): Unit
-      }
+      if (tok.nonEmpty) foldCache.put(key, CachedFold(vv, end, tok, df))
       df
     }
     cached match {

@@ -167,18 +167,81 @@ object AtomicStore {
     } finally in.close()
   }
 
-  // (path, publish token) → inferred parquet schema. A schema-less
+  /** Where persisted roots live: `<JVM temp dir>/graft_<kind>_<key>`,
+    * with `key` = [[key]] over the build inputs (no suffix when there are
+    * none). The ONE place that decides a store's location — every
+    * build-once artifact, store root and view root is named here, so the
+    * `graft_*` prefix a leak check scans for cannot drift per module. */
+  def root(kind: String, inputs: String*): String =
+    s"${sys.props("java.io.tmpdir")}/graft_$kind" +
+      (if (inputs.isEmpty) "" else "_" + key(inputs: _*))
+
+  /** A guaranteed-unique id per live SparkSession, for caches that key
+    * session-bound frames (weak keys: a stopped session's mapping
+    * vanishes with it; unlike `System.identityHashCode`, ids never
+    * collide across sessions). */
+  private[graft] def sessionId(spark: SparkSession): String =
+    sessionIds.computeIfAbsent(spark, _ => java.util.UUID.randomUUID.toString)
+  private val sessionIds = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, String]())
+
+  // (session, root) → (publish token, opened handle). A handle is the
+  // session-bound view of a published root (frames over its files,
+  // catalog tables over its directories, driver-side models read from
+  // it); roots are content-keyed, so one root path never carries two
+  // handle types.
+  private val HandleCapacity = 32
+  private val handles = new Lru[(String, String), (String, Any)](HandleCapacity)
+
+  /** Materialize if needed, open, cache: the build-once store lifecycle
+    * in one call. `build(tempDir)` runs only when no complete store is
+    * published at `root`; `open(root)` turns the published files into a
+    * session handle, cached per (session, root). Every hit re-checks the
+    * root's publish token, so a root removed (a /tmp cleaner, a test's
+    * wipe) or re-published since the handle was opened is rebuilt and
+    * re-opened — a cached handle never serves files that are gone. */
+  def opened[H](spark: SparkSession, root: String)(build: String => Unit)(
+      open: String => H): H = {
+    val k = (sessionId(spark), root)
+    handles.get(k) match {
+      case Some((tok, h)) if tok.nonEmpty && tok == markerToken(root) =>
+        h.asInstanceOf[H]
+      case _ =>
+        materialize(root)(build)
+        val tok = markerToken(root)
+        val h = open(root)
+        handles.put(k, (tok, h))
+        h
+    }
+  }
+
+  // (path, fingerprint) → inferred parquet schema. A schema-less
   // spark.read.parquet launches a footer-sampling inference JOB per call;
   // the lifecycle reads fold chains of segments and re-open the same
   // immutable published directories many times per invocation, so the
   // inference jobs — not the data — dominated their job counts
   // (ProfileOne r12: 27-37 of ~150 jobs per path-view invocation were
-  // schema inference at the sandbox's ~0.1-0.3 s/job floor). Keyed on the
-  // publish token, so a wiped + re-published path can never serve a stale
-  // schema; entries are a few hundred bytes (schema metadata only, never
-  // data — every read still scans the parquet itself).
-  private val schemaCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), org.apache.spark.sql.types.StructType]()
+  // schema inference at the sandbox's ~0.1-0.3 s/job floor). The
+  // fingerprint is the publish token (or a source table's modification
+  // time, [[Tables.table]]), so a wiped + re-published path can never
+  // serve a stale schema; entries are a few hundred bytes (schema
+  // metadata only, never data — every read still scans the parquet).
+  private[sources] val SchemaCapacity = 4096
+  private val schemas =
+    new Lru[(String, String), org.apache.spark.sql.types.StructType](SchemaCapacity)
+
+  /** The schema of the parquet at `path` as of `fingerprint`, inferred
+    * (via `infer`) only on the first read of that fingerprint. */
+  private[sources] def schemaOf(path: String, fingerprint: String)(
+      infer: => org.apache.spark.sql.types.StructType)
+      : org.apache.spark.sql.types.StructType =
+    schemas.getOrElseUpdate((path, fingerprint))(infer)
+
+  /** Read parquet at `path` with its schema memoized per `fingerprint`. */
+  private[sources] def readFingerprinted(spark: SparkSession, path: String,
+      fingerprint: String): org.apache.spark.sql.DataFrame =
+    spark.read.schema(schemaOf(path, fingerprint)(
+      spark.read.parquet(path).schema)).parquet(path)
 
   /** Read a COMPLETE published artifact directory as parquet, with the
     * inferred schema cached per publish (the first read pays the one
@@ -187,11 +250,15 @@ object AtomicStore {
   def readParquet(spark: SparkSession, path: String)
       : org.apache.spark.sql.DataFrame = {
     val token = markerToken(path)
-    if (token.isEmpty) return spark.read.parquet(path)
-    if (schemaCache.size > 4096) schemaCache.clear() // unbounded-growth guard
-    val sch = schemaCache.computeIfAbsent((path, token),
-      _ => spark.read.parquet(path).schema)
-    spark.read.schema(sch).parquet(path)
+    if (token.isEmpty) spark.read.parquet(path)
+    else readFingerprinted(spark, path, token)
+  }
+
+  /** Modification time of `path` (-1 when absent). */
+  private[sources] def modificationTime(path: String): Long = {
+    val p = new Path(path)
+    try fsFor(p).getFileStatus(p).getModificationTime
+    catch { case _: java.io.FileNotFoundException => -1L }
   }
 
   /** Child entries of `path` (empty when absent) — the Hadoop-portable

@@ -29,21 +29,18 @@ object Tables {
     * scale-factor dirs differ on this flag) — cast those to TIMESTAMP. The
     * session timezone is pinned to UTC, so the cast preserves the instant
     * and time functions (unix_millis, date_trunc, window) apply uniformly.
+    *
+    * A schema-less spark.read.parquet launches a footer-sampling JOB per
+    * call, and lifecycle queries CONSTRUCT these frames on every
+    * invocation even when the store init never executes them (4 inference
+    * jobs per invocation at the ~0.1-0.3 s/job floor). So the schema is
+    * memoized in AtomicStore's schema LRU, fingerprinted by the path's
+    * modification time: a table regenerated in place re-infers.
     */
-  // path → inferred schema. The driver-generated tables are immutable for
-  // a session's lifetime, but a schema-less spark.read.parquet launches a
-  // footer-sampling JOB per call — and lifecycle queries CONSTRUCT these
-  // frames on every invocation even when the store init never executes
-  // them (4 inference jobs per invocation at the ~0.1-0.3 s/job floor).
-  // Metadata only: every read still scans the parquet files themselves.
-  private val tableSchemas = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.sql.types.StructType]()
-
   def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     val path = s"$sfDir/$name.parquet"
-    val sch = tableSchemas.computeIfAbsent(path,
-      _ => spark.read.parquet(path).schema)
-    val df = spark.read.schema(sch).parquet(path)
+    val df = AtomicStore.readFingerprinted(spark, path,
+      "mtime:" + AtomicStore.modificationTime(path))
     df.schema.fields.foldLeft(df) { (acc, f) =>
       if (f.dataType == TimestampNTZType)
         acc.withColumn(f.name, col(f.name).cast(TimestampType))

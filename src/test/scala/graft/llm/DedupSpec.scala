@@ -221,6 +221,18 @@ class DedupSpec extends SparkSpec {
       // the durable checkpoint actually wrote blocks to the directory
       assert(new java.io.File(dir).listFiles().nonEmpty,
         "reliable mode did not write to graft.checkpoint.dir")
+      // once the checkpoint files are written the probe's persisted
+      // blocks are dropped: connected components (one materialize+probe
+      // per round, final round returned unreleased) leaves no RDD held
+      val held = spark.sparkContext.getPersistentRDDs.keySet
+      val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L)).toDF("doc_a", "doc_b")
+      val cc = Dedup.connectedComponents(pairs)
+      assert(cc.select("label").distinct().count() === 2L)
+      val leaked = spark.sparkContext.getRDDStorageInfo
+        .filter(i => !held.contains(i.id) && i.numCachedPartitions > 0)
+      assert(leaked.isEmpty, "RDD blocks still held after connectedComponents: " +
+        leaked.map(i => s"${i.id}:${i.numCachedPartitions}").mkString(", "))
+      assert((spark.sparkContext.getPersistentRDDs.keySet -- held).isEmpty)
     } finally spark.conf.unset(graft.Materialize.DirProp)
   }
 
