@@ -38,16 +38,16 @@ object EncodedBgp {
     encodeResolved(patterns, idOf)
   }
 
-  /** One dictionary lookup for the constants of any number of pattern
-    * groups — a multi-block query (UNION branches, OPTIONALs) resolves all
-    * its constants in a single job instead of one per block. */
   /** The one definition of "constant" shared by resolution and the
     * allResolved check — they must never diverge. */
   private def constantsOf(patterns: Seq[TP]): Seq[String] =
     patterns.flatMap(tp => Seq(tp.s, tp.p, tp.o))
       .collect { case C(v: String) => v }.distinct
 
-  /** `extraTerms` lets the caller batch non-pattern constants (e.g.
+  /** One dictionary lookup for the constants of any number of pattern
+    * groups — a multi-block query (UNION branches, OPTIONALs) resolves all
+    * its constants in a single job instead of one per block.
+    * `extraTerms` lets the caller batch non-pattern constants (e.g.
     * property-path predicate IRIs and endpoints) into the same single
     * lookup job. */
   def resolveConstants(dict: DataFrame, patterns: Seq[TP],
@@ -90,15 +90,8 @@ object EncodedBgp {
     * [[Dictionary.hashIds]]) — build them once, query many times.
     */
   def solve(encoded: DataFrame, dict: DataFrame, patterns: Seq[TP],
-      collapseStars: Boolean = false): DataFrame =
-    solveResolved(encoded, dict, patterns,
-      resolveConstants(dict, patterns), collapseStars)
-
-  /** [[solve]] with the constant map supplied by the caller — multi-block
-    * queries resolve once and solve each block with the shared map. */
-  def solveResolved(encoded: DataFrame, dict: DataFrame, patterns: Seq[TP],
-      idOf: Map[String, Long], collapseStars: Boolean): DataFrame = {
-    val (pats, allResolved) = encodeResolved(patterns, idOf)
+      collapseStars: Boolean = false): DataFrame = {
+    val (pats, allResolved) = encodePatterns(dict, patterns)
     val t = asTriples(encoded)
     val solved =
       if (collapseStars) Bgp.solveStarCollapsed(t, pats) else Bgp.solve(t, pats)

@@ -3,8 +3,8 @@ package graft.rdf
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** RDF datasets: quads (s,p,o,g) — the default graph plus named graphs —
-  * and the solver for SPARQL GRAPH blocks.
+/** RDF datasets: quads (s,p,o,g) — the default graph plus named graphs.
+  * SPARQL GRAPH blocks solve over them in [[Sparql]]'s evaluator.
   *
   * The reference is single-graph (d-sparq's MongoDB store has no dataset
   * axis), so this is a capability extension, not reference parity: it
@@ -43,28 +43,4 @@ object Quads {
       |       WHEN s LIKE 'o:%' THEN 'g:orders'
       |       ELSE '' END AS g
       |FROM triples""".stripMargin
-
-  /** The default graph as a plain triples frame (what non-GRAPH patterns
-    * see). */
-  def defaultGraph(quads: DataFrame): DataFrame =
-    quads.filter(col("g") === DefaultGraph).select("s", "p", "o")
-
-  /** Solve a `GRAPH term { patterns }` block. A constant graph reduces to
-    * the plain solver over that graph's slice; a graph variable becomes a
-    * shared fourth pattern component, so all patterns of the block join on
-    * the SAME graph (SPARQL's per-graph matching), and the variable stays
-    * bound in the solutions. */
-  def solveGraphBlock(quads: DataFrame, patterns: Seq[TP],
-      graph: Term): DataFrame = {
-    require(patterns.nonEmpty, "empty GRAPH block")
-    graph match {
-      case C(g) =>
-        Bgp.solve(quads.filter(col("g") === g).select("s", "p", "o"), patterns)
-      case V(_) =>
-        val named = quads.filter(col("g") =!= DefaultGraph)
-        patterns.map(tp => Bgp.onePattern(named,
-            Seq("s" -> tp.s, "p" -> tp.p, "o" -> tp.o, "g" -> graph)))
-          .reduce(Bgp.joinSolved)
-    }
-  }
 }

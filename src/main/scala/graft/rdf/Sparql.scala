@@ -87,6 +87,18 @@ import org.apache.spark.sql.functions._
   *  - ORDER BY sorts ascending nulls-first / descending nulls-last;
   *    OFFSET applies before LIMIT (SPARQL 18.2.5 modifier order).
   *
+  * One evaluator answers every entry point. [[run]], [[runEncoded]],
+  * [[runQuads]], [[runQuadsEncoded]], [[runHttpFederated]] and
+  * [[runQuadsHttpFederated]] each parse the text, describe their store as
+  * one [[Dataset]] and evaluate it ([[execute]]). The dataset holds the
+  * default graph, the named graphs (none for a triples store, so FROM
+  * and GRAPH are rejected there), the [[TermSpace]] (strings, or
+  * dictionary ids with all of the query's constants resolved in one
+  * lookup), the BGP solver (plain, star-collapsed or ExtVP) and the
+  * SERVICE solver (registered endpoints or live HTTP endpoints). Pattern
+  * groups and paths solve in the dataset's term space and come out as
+  * terms, so everything above them lowers the same way for all six.
+  *
   * Also supported: FILTER [NOT] EXISTS blocks (semi/anti-join lowering),
   * `SERVICE [SILENT] <iri> { ... }` federation over registered endpoint
   * datasets (the `endpoints` map of [[run]]/[[runQuads]] — the body solves
@@ -166,10 +178,6 @@ object Sparql {
       argExpr: Option[Expr] = None)
     extends Expr
 
-  /** One group graph pattern: a BGP plus its property-path patterns,
-    * VALUES tables, BINDs, OPTIONALs, MINUSes and FILTERs (applied in that
-    * order within the block). Each VALUES entry is (variable names, rows
-    * of constants). */
   /** An OPTIONAL group body: triple patterns, property paths, and
     * block-scoped FILTERs. A filter may reference only variables bound
     * inside the OPTIONAL (then filtering the block before the left join
@@ -179,6 +187,10 @@ object Sparql {
   final case class OptBody(pats: Seq[TP],
       paths: Seq[(Term, Path, Term)], filters: Seq[Expr])
 
+  /** One group graph pattern: a BGP plus its property-path patterns,
+    * VALUES tables, BINDs, OPTIONALs, MINUSes and FILTERs (applied in that
+    * order within the block). Each VALUES entry is (variable names, rows
+    * of constants). */
   final case class Block(where: Seq[TP],
       optionals: Seq[OptBody],
       filters: Seq[Expr],
@@ -281,24 +293,17 @@ object Sparql {
       endpoints: Map[String, DataFrame] = Map.empty,
       extVp: Option[ExtVp.Store] = None): DataFrame = {
     val q = parse(text)
-    require(q.fromGraphs.isEmpty && q.fromNamed.isEmpty,
-      "FROM / FROM NAMED dataset clauses require a quads dataset — " +
-        "use Sparql.runQuads")
-    execute(q,
-      bgp => extVp match {
-        // the ExtVP reduction store serves any all-constant-predicate
-        // group (the overwhelmingly common SPARQL shape); a variable
-        // predicate falls back to the full-table solver — same results,
-        // just no reduction pruning for that group
-        case Some(st) if bgp.forall(_.p.isInstanceOf[C]) => ExtVp.solve(st, bgp)
-        case _ =>
-          if (collapseStars) Bgp.solveStarCollapsed(triples, bgp)
-          else Bgp.solve(triples, bgp)
-      },
-      (path, s, o) => solvePathOver(triples, path, s, o),
-      (_, _) => throw new IllegalArgumentException(
-        "GRAPH requires a quad dataset — use Sparql.runQuads"),
-      endpointSolver(endpoints))
+    val plain = bgpSolver(collapseStars)
+    // the ExtVP reduction store serves any all-constant-predicate group
+    // (the overwhelmingly common SPARQL shape); a variable predicate falls
+    // back to the full-table solver — same results, just no reduction
+    // pruning for that group. The store describes `triples`, the one graph
+    // of a triples dataset, so it never stands in for another frame.
+    val bgp = extVp.fold(plain)(st => (t: DataFrame, pats: Seq[TP]) =>
+      if (pats.forall(_.p.isInstanceOf[C])) ExtVp.solve(st, pats)
+      else plain(t, pats))
+    execute(q, triplesDataset(q, "runQuads", triples, Strings, bgp,
+      endpointSolver(endpoints)).scope)
   }
 
   /** [[run]] with SERVICE federation against LIVE HTTP endpoints
@@ -313,17 +318,9 @@ object Sparql {
       urls: Map[String, String],
       collapseStars: Boolean = false): DataFrame = {
     val q = parse(text)
-    require(q.fromGraphs.isEmpty && q.fromNamed.isEmpty,
-      "FROM / FROM NAMED dataset clauses require a quads dataset — " +
-        "use Sparql.runQuads")
-    execute(q,
-      bgp =>
-        if (collapseStars) Bgp.solveStarCollapsed(triples, bgp)
-        else Bgp.solve(triples, bgp),
-      (path, s, o) => solvePathOver(triples, path, s, o),
-      (_, _) => throw new IllegalArgumentException(
-        "GRAPH requires a quad dataset — use Sparql.runQuads"),
-      HttpEndpoint.serviceSolver(triples.sparkSession, urls))
+    execute(q, triplesDataset(q, "runQuads", triples, Strings,
+      bgpSolver(collapseStars),
+      HttpEndpoint.serviceSolver(triples.sparkSession, urls)).scope)
   }
 
   /** Render a SERVICE body back to SPARQL surface syntax for remote
@@ -427,7 +424,9 @@ object Sparql {
     * once per registered endpoint (a bounded, driver-known set — the
     * engine's service description) and the branches bag-union with ?ep
     * bound to each IRI; a body that already binds the same variable
-    * filters instead, SPARQL's same-variable rule. */
+    * filters instead, SPARQL's same-variable rule. An endpoint's terms
+    * are not in any local dictionary, so its body always solves in string
+    * space; from an id-space dataset it joins on the decoded bindings. */
   private def endpointSolver(endpoints: Map[String, DataFrame])
       : (Boolean, Term, Block) => Option[DataFrame] = {
     lazy val solve: (Boolean, Term, Block) => Option[DataFrame] = {
@@ -463,19 +462,12 @@ object Sparql {
         // frame that merely happens to carry a g column keeps the plain
         // triples semantics it always had
         case Some(ep) if ep.columns.toSet == Set("s", "p", "o", "g") =>
-          val dg = Quads.defaultGraph(ep)
-          lazy val sg: (Term, Block) => DataFrame =
-            solveGraphOverQuads(ep, slice => bgp => Bgp.solve(slice, bgp),
-              () => sg, solve)
-          Some(solveBranch(body, bgp => Bgp.solve(dg, bgp),
-            (path, s, o) => solvePathOver(dg, path, s, o), sg, solve))
-        case Some(ep) => Some(solveBranch(body,
-          bgp => Bgp.solve(ep, bgp),
-          (path, s, o) => solvePathOver(ep, path, s, o),
-          (_, _) => throw new IllegalArgumentException(
-            "GRAPH inside SERVICE needs a DATASET endpoint — register a " +
-              "quads frame with exactly the columns (s,p,o,g) for this IRI"),
-          solve))
+          Some(solveBranch(body,
+            quadsDataset(ep, Strings, None, Bgp.solve, solve).scope))
+        case Some(ep) => Some(solveBranch(body, Dataset(ep, Left(
+          "GRAPH inside SERVICE needs a DATASET endpoint — register a " +
+            "quads frame with exactly the columns (s,p,o,g) for this IRI"),
+          Strings, Bgp.solve, solve).scope))
         case None if silent => None
         case None => throw new IllegalArgumentException(
           s"SERVICE endpoint <$iri> is not registered — pass it in " +
@@ -509,42 +501,203 @@ object Sparql {
       bound.unionByName(unbound)
     }
 
-  /** The string-space GRAPH-block solver over a quads frame, shared by
-    * [[runQuads]] and the dataset-endpoint branch of [[endpointSolver]]
-    * (`bgpSlice` injects the engine's BGP solver for constant-graph
-    * slices — star collapsing, ExtVP, …). `self` is passed lazily so the
-    * returned function can recurse into NESTED GRAPH blocks. */
-  private def solveGraphOverQuads(quads: DataFrame,
-      bgpSlice: DataFrame => Seq[TP] => DataFrame,
-      self: () => (Term, Block) => DataFrame,
-      svc: (Boolean, Term, Block) => Option[DataFrame])
-      : (Term, Block) => DataFrame = {
-    // constant graph: the block's FULL group body (OPTIONAL, FILTER,
-    // BIND, paths, …) solves over that one graph's slice; a NESTED GRAPH
-    // re-scopes the active graph, so it recurses and its solutions join
-    // the body on shared variables — the spec's group-join semantics.
-    // Variable graph: every pattern group threads the ?g binding
-    // (same-active-graph via the shared join column); the solution then
-    // normalizes against the named-graph name set ([[normalizeGraphVar]]).
-    case (C(gv), inner) =>
-      val slice = quads.filter(col("g") === lit(gv)).select("s", "p", "o")
-      solveBranch(inner, bgpSlice(slice),
-        (path, ps, po) => solvePathOver(slice, path, ps, po),
-        self(), svc)
-    case (v @ V(gName), inner) =>
-      val solved = solveBranch(inner,
-        pats => Quads.solveGraphBlock(quads, pats, v),
-        (path, ps, po) => solvePathOverGraphs(quads, gName, path, ps, po),
-        self(), svc, graphVar = Some(gName))
-      normalizeGraphVar(solved, gName,
-        quads.filter(col("g") =!= Quads.DefaultGraph)
-          .select(col("g").as(gName)).distinct())
+  /** How a dataset's frames spell terms: as the strings themselves
+    * ([[Strings]]) or as dictionary ids ([[Ids]]). The space alone
+    * encodes pattern and path constants, gates a pattern group whose
+    * constants did not all resolve, and decodes solutions at emission —
+    * everything above the pattern groups (joins, FILTER, BIND,
+    * aggregation, modifiers) sees terms in either space. */
+  private sealed trait TermSpace {
+    /** The spelling of one constant term in this space. */
+    def spell(v: String): Any
+    /** The patterns in this space, and whether every constant resolved. */
+    def encode(pats: Seq[TP]): (Seq[TP], Boolean)
+    /** A solution's columns back to terms. */
+    def decode(solved: DataFrame): DataFrame
+    final def term(t: Term): Term = t match {
+      case C(v: String) => C(spell(v))
+      case other => other
+    }
+    final def path(p: Path): Path = mapPath(p, spell)
   }
+
+  private case object Strings extends TermSpace {
+    def spell(v: String): Any = v
+    def encode(pats: Seq[TP]): (Seq[TP], Boolean) = (pats, true)
+    def decode(solved: DataFrame): DataFrame = solved
+  }
+
+  /** Dictionary ids, with the query's constants resolved once
+    * ([[idSpace]]). */
+  private final case class Ids(dict: DataFrame, idOf: Map[String, Long])
+      extends TermSpace {
+    // An unresolved constant (a term occurring in no triple) spells as a
+    // sentinel id that matches nothing. A pattern group with one is gated
+    // to empty ([[Scope.bgp]]); a path is not gated, so each unresolved
+    // alternation branch or endpoint contributes no pairs — matching
+    // string-space semantics. Gating the WHOLE path would wrongly empty
+    // resolvable branches of `(<known>|<unknown>)+` and break `*`'s
+    // zero-hop. Sentinel collision with a real id is impossible for dense
+    // ids (≥ 1) and 2^-64 for hashed ids — the same audited assumption as
+    // Dictionary.hashIds. One inherent dictionary-semantics divergence
+    // remains: an out-of-dictionary constant path endpoint cannot appear
+    // in results (its zero-hop row has no term to decode to), where the
+    // string engine emits it.
+    def spell(v: String): Any = idOf.getOrElse(v, Long.MinValue)
+    def encode(pats: Seq[TP]): (Seq[TP], Boolean) =
+      EncodedBgp.encodeResolved(pats, idOf)
+    def decode(solved: DataFrame): DataFrame =
+      EncodedBgp.decode(solved, dict, solved.columns)
+  }
+
+  /** The id space of one query over `dict`: ONE dictionary-lookup job
+    * resolves every constant the query can spell — patterns and paths of
+    * every block (UNION branches, OPTIONAL, MINUS and EXISTS bodies,
+    * subqueries, GRAPH and SERVICE bodies) and, for a quads store, graph
+    * names of GRAPH and FROM clauses and the default-graph name (a triples
+    * store resolves them too, unused). MINUS must be in the batch: a
+    * MINUS-only constant absent from the map would gate the MINUS block to
+    * empty, silently returning a superset (nothing subtracted). */
+  private def idSpace(dict: DataFrame, q: Query): Ids = {
+    val blocks = allBlocks(q)
+    val bodies = blocks.flatMap(b =>
+      b.optionals ++ b.minuses ++ b.exists.map(_._2))
+    val pats = blocks.flatMap(_.where) ++ bodies.flatMap(_.pats)
+    val pathTerms = (blocks.flatMap(_.paths) ++ bodies.flatMap(_.paths))
+      .flatMap { case (s, path, o) =>
+        pathStrings(path) ++ Seq(s, o).collect { case C(v: String) => v } }
+    val graphTerms = blocks.flatMap(_.graphs.map(_._1))
+      .collect { case C(v: String) => v } ++
+      q.fromGraphs ++ q.fromNamed :+ Quads.DefaultGraph
+    Ids(dict, EncodedBgp.resolveConstants(dict, pats,
+      (pathTerms ++ graphTerms).distinct))
+  }
+
+  /** The RDF dataset one query evaluates over: the default graph's
+    * `(s, p, o)`, the named graphs' `(s, p, o, g)` (Left: why GRAPH is
+    * rejected — a triples store has none), both spelled in `space`; the
+    * BGP solver a pattern group runs over one graph's frame (plain,
+    * star-collapsed or ExtVP); and the SERVICE solver (registered
+    * endpoints or [[HttpEndpoint.serviceSolver]]). */
+  private final case class Dataset(default: DataFrame,
+      graphs: Either[String, DataFrame], space: TermSpace,
+      bgp: (DataFrame, Seq[TP]) => DataFrame,
+      service: (Boolean, Term, Block) => Option[DataFrame]) {
+
+    /** Patterns outside any GRAPH block match the default graph. */
+    def scope: Scope = Scope(this, default)
+
+    /** `GRAPH g { inner }`. A constant graph: the block's FULL group body
+      * (OPTIONAL, FILTER, BIND, paths, …) solves over that one graph's
+      * slice; a NESTED GRAPH re-scopes the active graph, so it recurses
+      * and its solutions join the body on shared variables — the spec's
+      * group-join semantics. A variable graph ranges over the NAMED
+      * graphs only (the dataset rule): every pattern group threads the ?g
+      * binding ([[Scope]]; subqueries under it correlate via
+      * [[adoptGraphVar]], their LIMIT/OFFSET applying per graph) and the
+      * solution normalizes against the named-graph name set
+      * ([[normalizeGraphVar]]). */
+    def graph(g: Term, inner: Block): DataFrame = {
+      val named = graphs.fold(why => throw new IllegalArgumentException(why),
+        identity)
+      g match {
+        case C(gv: String) => solveBranch(inner, Scope(this, named
+          .filter(col("g") === lit(space.spell(gv))).select("s", "p", "o")))
+        case C(other) => throw new IllegalArgumentException(
+          s"GRAPH constant must be an IRI, got $other")
+        case V(gName) =>
+          val inNamed =
+            named.filter(col("g") =!= lit(space.spell(Quads.DefaultGraph)))
+          val solved = solveBranch(inner, Scope(this, inNamed, Some(gName)))
+          normalizeGraphVar(solved, gName,
+            space.decode(inNamed.select(col("g").as(gName)).distinct()))
+      }
+    }
+  }
+
+  /** Where a group pattern solves: the `active` graph's `(s, p, o)` or,
+    * under `GRAPH ?g` (`graphVar`), the named graphs' `(s, p, o, g)` with
+    * the graph name threaded through every pattern group and path as ?g
+    * — one more join key, so a group's patterns match in one graph and
+    * closures never cross graphs. Either way the solutions come out as
+    * terms. */
+  private final case class Scope(ds: Dataset, active: DataFrame,
+      graphVar: Option[String] = None) {
+
+    def bgp(pats: Seq[TP]): DataFrame = {
+      val (encoded, resolved) = ds.space.encode(pats)
+      val solved = graphVar match {
+        case None => ds.bgp(active, encoded)
+        case Some(g) => encoded.map(tp => Bgp.onePattern(active,
+            Seq("s" -> tp.s, "p" -> tp.p, "o" -> tp.o, "g" -> V(g))))
+          .reduce(Bgp.joinSolved)
+      }
+      // a constant absent from the dictionary occurs in no triple: the
+      // group provably has no solutions
+      ds.space.decode(if (resolved) solved else solved.filter(lit(false)))
+    }
+
+    def path(path: Path, s: Term, o: Term): DataFrame = {
+      val (p, ps, po) =
+        (ds.space.path(path), ds.space.term(s), ds.space.term(o))
+      ds.space.decode(graphVar.fold(solvePathOver(active, p, ps, po))(
+        solvePathOverGraphs(active, _, p, ps, po)))
+    }
+  }
+
+  private def bgpSolver(collapseStars: Boolean)
+      : (DataFrame, Seq[TP]) => DataFrame =
+    if (collapseStars) Bgp.solveStarCollapsed else Bgp.solve
+
+  /** A triples store as a dataset: its one graph is the default graph, so
+    * FROM / FROM NAMED and GRAPH are rejected, naming the quads entry
+    * point. `space` is by-name: a rejected query runs no lookup. */
+  private def triplesDataset(q: Query, quadsEntry: String,
+      triples: DataFrame, space: => TermSpace,
+      bgp: (DataFrame, Seq[TP]) => DataFrame,
+      service: (Boolean, Term, Block) => Option[DataFrame]): Dataset = {
+    require(q.fromGraphs.isEmpty && q.fromNamed.isEmpty,
+      "FROM / FROM NAMED dataset clauses require a quads dataset — " +
+        s"use Sparql.$quadsEntry")
+    Dataset(triples,
+      Left(s"GRAPH requires a quad dataset — use Sparql.$quadsEntry"),
+      space, bgp, service)
+  }
+
+  /** A quads frame `(s, p, o, g)` as a dataset. Without a dataset
+    * description the default graph is [[Quads.DefaultGraph]] and every
+    * other graph is named. `from` = (FROM, FROM NAMED) describes the
+    * dataset EXACTLY (SPARQL 13.2): the default graph becomes the RDF
+    * MERGE of the FROM graphs — a set union, so multi-graph merges dedup
+    * (one distinct, only when needed) — and GRAPH ranges over the FROM
+    * NAMED graphs only (none when the description has no FROM NAMED). */
+  private def quadsDataset(quads: DataFrame, space: TermSpace,
+      from: Option[(Seq[String], Seq[String])],
+      bgp: (DataFrame, Seq[TP]) => DataFrame,
+      service: (Boolean, Term, Block) => Option[DataFrame]): Dataset = {
+    def in(gs: Seq[String]) =
+      quads.filter(col("g").isin(gs.map(space.spell): _*))
+    val default = from match {
+      case None => quads
+        .filter(col("g") === lit(space.spell(Quads.DefaultGraph)))
+        .select("s", "p", "o")
+      case Some((fromGraphs, _)) =>
+        val merged = in(fromGraphs).select("s", "p", "o")
+        if (fromGraphs.size > 1) merged.distinct() else merged
+    }
+    Dataset(default, Right(from.fold(quads)(d => in(d._2))), space, bgp,
+      service)
+  }
+
+  /** The query's own FROM / FROM NAMED description, if it has one. */
+  private def fromClauses(q: Query): Option[(Seq[String], Seq[String])] =
+    Some((q.fromGraphs, q.fromNamed))
+      .filter { case (f, n) => f.nonEmpty || n.nonEmpty }
 
   /** Parse and execute against a quads DataFrame(s,p,o,g) — an RDF
     * dataset. Patterns outside GRAPH match the default graph
     * ([[Quads.DefaultGraph]]); `GRAPH ?g`/`GRAPH <iri>` blocks match named
-    * graphs ([[Quads.solveGraphBlock]]). */
+    * graphs ([[Dataset.graph]]). */
   def runQuads(quads: DataFrame, text: String,
       collapseStars: Boolean = false,
       endpoints: Map[String, DataFrame] = Map.empty,
@@ -554,39 +707,9 @@ object Sparql {
     // SPARQL Protocol §2.1.4: a dataset given in the request
     // (default-graph-uri*/named-graph-uri*) takes PRECEDENCE over the
     // query's own FROM / FROM NAMED clauses
-    val (fromGraphs, fromNamed) = protocolDataset
-      .getOrElse((q.fromGraphs.toSeq, q.fromNamed.toSeq))
-    val hasDataset = protocolDataset.isDefined ||
-      fromGraphs.nonEmpty || fromNamed.nonEmpty
-    // FROM <g>*: the default graph becomes the RDF MERGE of the named
-    // slices — a set union, so multi-graph merges dedup (a graph is a set
-    // of triples; one distinct, only when the clause is present)
-    val dg =
-      if (!hasDataset) Quads.defaultGraph(quads)
-      else {
-        val merged = quads.filter(col("g").isin(fromGraphs: _*))
-          .select("s", "p", "o")
-        if (fromGraphs.size > 1) merged.distinct() else merged
-      }
-    // FROM NAMED <g>*: GRAPH blocks range over exactly that set (empty
-    // when dataset clauses are present without FROM NAMED)
-    val namedQuads =
-      if (!hasDataset) quads
-      else quads.filter(col("g").isin(fromNamed: _*))
-    def bgpOver(t: DataFrame)(pats: Seq[TP]): DataFrame =
-      if (collapseStars) Bgp.solveStarCollapsed(t, pats) else Bgp.solve(t, pats)
-    // SERVICE ignores the active graph (its dataset is the endpoint's), so
-    // ONE solver threads through GRAPH bodies and the outer block alike
-    val svc = endpointSolver(endpoints)
-    // the shared GRAPH-block solver ([[solveGraphOverQuads]]): constant
-    // graphs slice + recurse for nesting, variable graphs thread ?g
-    // through every pattern group and normalize against the named-graph
-    // name set (subqueries under GRAPH ?var correlate via
-    // [[adoptGraphVar]], their LIMIT/OFFSET applying per graph).
-    lazy val solveGraph: (Term, Block) => DataFrame =
-      solveGraphOverQuads(namedQuads, bgpOver, () => solveGraph, svc)
-    execute(q, bgpOver(dg),
-      (path, s, o) => solvePathOver(dg, path, s, o), solveGraph, svc)
+    execute(q, quadsDataset(quads, Strings,
+      protocolDataset.orElse(fromClauses(q)), bgpSolver(collapseStars),
+      endpointSolver(endpoints)).scope)
   }
 
   /** [[runQuads]] with SERVICE federation against LIVE HTTP endpoints —
@@ -601,14 +724,8 @@ object Sparql {
     require(q.fromGraphs.isEmpty && q.fromNamed.isEmpty,
       "combine FROM / FROM NAMED with live federation via runQuads's " +
         "protocolDataset parameter — not supported on this entry point")
-    val dg = Quads.defaultGraph(quads)
-    def bgpOver(t: DataFrame)(pats: Seq[TP]): DataFrame =
-      if (collapseStars) Bgp.solveStarCollapsed(t, pats) else Bgp.solve(t, pats)
-    val svc = HttpEndpoint.serviceSolver(quads.sparkSession, urls)
-    lazy val solveGraph: (Term, Block) => DataFrame =
-      solveGraphOverQuads(quads, bgpOver, () => solveGraph, svc)
-    execute(q, bgpOver(dg),
-      (path, s, o) => solvePathOver(dg, path, s, o), solveGraph, svc)
+    execute(q, quadsDataset(quads, Strings, None, bgpSolver(collapseStars),
+      HttpEndpoint.serviceSolver(quads.sparkSession, urls)).scope)
   }
 
   /** Parse and execute against the dictionary-encoded id-triple store —
@@ -630,53 +747,9 @@ object Sparql {
       collapseStars: Boolean = false,
       endpoints: Map[String, DataFrame] = Map.empty): DataFrame = {
     val q = parse(text)
-    require(q.fromGraphs.isEmpty && q.fromNamed.isEmpty,
-      "FROM / FROM NAMED dataset clauses require a quads dataset — " +
-        "use Sparql.runQuads")
-    // ONE dictionary-lookup job for the whole query — every UNION branch,
-    // OPTIONAL and MINUS block and property path shares the resolved
-    // constant map. MINUS must be in the batch: a MINUS-only constant
-    // absent from the map would make solveResolved see allResolved=false
-    // and gate the MINUS block to empty, silently returning a superset
-    // (nothing subtracted).
-    val blocks = allBlocks(q)
-    val allPats = blocks.flatMap(b =>
-      b.where ++ b.optionals.flatMap(_.pats) ++ b.minuses.flatMap(_.pats) ++
-        b.exists.flatMap(_._2.pats))
-    val pathTerms = blocks.flatMap(b =>
-      b.paths ++ b.optionals.flatMap(_.paths) ++ b.minuses.flatMap(_.paths) ++
-        b.exists.flatMap(_._2.paths)).flatMap { case (s, path, o) =>
-      pathStrings(path) ++ Seq(s, o).collect { case C(v: String) => v }
-    }
-    val idOf = EncodedBgp.resolveConstants(dict, allPats, pathTerms)
-    val idTriples = EncodedBgp.asTriples(enc)
-    def solvePathEnc(path: Path, s: Term, o: Term): DataFrame = {
-      // an unresolved constant (a term occurring in no triple) maps to a
-      // sentinel id that matches nothing, so each unresolved alternation
-      // branch or endpoint contributes no pairs — matching string-space
-      // semantics. Gating the WHOLE path on any unresolved constant would
-      // wrongly empty resolvable branches of `(<known>|<unknown>)+` and
-      // break `*`'s zero-hop. Sentinel collision with a real id is
-      // impossible for dense ids (≥ 1) and 2^-64 for hashed ids — the
-      // same audited assumption as Dictionary.hashIds. One inherent
-      // dictionary-semantics divergence remains: an out-of-dictionary
-      // constant endpoint cannot appear in results (its zero-hop row has
-      // no term to decode to), where the string engine emits it.
-      def tr(t: Term): Term = t match {
-        case C(v: String) => C(idOf.getOrElse(v, Long.MinValue))
-        case other => other
-      }
-      val idPath = mapPath(path, v => idOf.getOrElse(v, Long.MinValue))
-      val solved = solvePathOver(idTriples, idPath, tr(s), tr(o))
-      EncodedBgp.decode(solved, dict, solved.columns)
-    }
-    execute(q,
-      bgp => EncodedBgp.solveResolved(enc, dict, bgp, idOf, collapseStars),
-      solvePathEnc,
-      (_, _) => throw new IllegalArgumentException(
-        "GRAPH over the encoded store needs the quads store — " +
-          "use Sparql.runQuadsEncoded"),
-      endpointSolver(endpoints))
+    execute(q, triplesDataset(q, "runQuadsEncoded", EncodedBgp.asTriples(enc),
+      idSpace(dict, q), bgpSolver(collapseStars),
+      endpointSolver(endpoints)).scope)
   }
 
   /** Parse and execute against a dictionary-encoded QUADS store
@@ -690,100 +763,11 @@ object Sparql {
   def runQuadsEncoded(encQuads: DataFrame, dict: DataFrame, text: String,
       collapseStars: Boolean = false,
       endpoints: Map[String, DataFrame] = Map.empty): DataFrame = {
-    // SERVICE solves in string space over the registered frames and joins
-    // on decoded bindings — same boundary rule as [[runEncoded]]
-    val svc = endpointSolver(endpoints)
     val q = parse(text)
-    // ONE dictionary-lookup job for the whole query: pattern + path
-    // constants of every block (GRAPH bodies included via allBlocks),
-    // graph IRIs of GRAPH clauses, dataset clauses, and the default-graph
-    // marker term
-    val blocks = allBlocks(q)
-    val allPats = blocks.flatMap(b =>
-      b.where ++ b.optionals.flatMap(_.pats) ++ b.minuses.flatMap(_.pats) ++
-        b.exists.flatMap(_._2.pats))
-    val pathTerms = blocks.flatMap(b =>
-      b.paths ++ b.optionals.flatMap(_.paths) ++ b.minuses.flatMap(_.paths) ++
-        b.exists.flatMap(_._2.paths)).flatMap { case (s, path, o) =>
-      pathStrings(path) ++ Seq(s, o).collect { case C(v: String) => v }
-    }
-    val graphTerms = blocks.flatMap(_.graphs.map(_._1))
-      .collect { case C(v: String) => v } ++
-      q.fromGraphs ++ q.fromNamed :+ Quads.DefaultGraph
-    val idOf = EncodedBgp.resolveConstants(dict, allPats,
-      (pathTerms ++ graphTerms).distinct)
-    def gidOf(t: String): Long = idOf.getOrElse(t, Long.MinValue)
-    val defaultGid = gidOf(Quads.DefaultGraph)
-    val hasDataset = q.fromGraphs.nonEmpty || q.fromNamed.nonEmpty
-    // FROM <g>*: RDF merge of the named slices (set union, as in runQuads)
-    val dgIds =
-      if (!hasDataset) encQuads.filter(col("gid") === defaultGid)
-        .select("sid", "pid", "oid")
-      else {
-        val merged = encQuads
-          .filter(col("gid").isin(q.fromGraphs.map(gidOf): _*))
-          .select("sid", "pid", "oid")
-        if (q.fromGraphs.size > 1) merged.distinct() else merged
-      }
-    val namedQ =
-      if (!hasDataset) encQuads
-      else encQuads.filter(col("gid").isin(q.fromNamed.map(gidOf): _*))
-    def bgpOver(ids: DataFrame)(pats: Seq[TP]): DataFrame =
-      EncodedBgp.solveResolved(ids, dict, pats, idOf, collapseStars)
-    def pathOver(ids: DataFrame)(path: Path, s: Term, o: Term): DataFrame = {
-      // sentinel-id semantics documented at [[runEncoded]]'s solvePathEnc
-      def tr(t: Term): Term = t match {
-        case C(v: String) => C(idOf.getOrElse(v, Long.MinValue))
-        case other => other
-      }
-      val idPath = mapPath(path, v => idOf.getOrElse(v, Long.MinValue))
-      val solved = solvePathOver(EncodedBgp.asTriples(ids), idPath,
-        tr(s), tr(o))
-      EncodedBgp.decode(solved, dict, solved.columns)
-    }
-    def solveGraph(g: Term, inner: Block): DataFrame = g match {
-      case C(gv: String) =>
-        val slice = namedQ.filter(col("gid") === gidOf(gv))
-          .select("sid", "pid", "oid")
-        // nested GRAPH re-scopes the active graph → recurse; solutions
-        // join the body on shared (decoded) variables
-        solveBranch(inner, bgpOver(slice), pathOver(slice), solveGraph, svc)
-      case C(other) => throw new IllegalArgumentException(
-        s"GRAPH constant must be an IRI, got $other")
-      case v @ V(gName) =>
-        val named = namedQ.filter(col("gid") =!= defaultGid)
-        // variable graph: gid is a fourth pattern component, decoded with
-        // the bindings
-        def bgpVar(pats: Seq[TP]): DataFrame = {
-          val (eps, allResolved) = EncodedBgp.encodeResolved(pats, idOf)
-          val named4 = named.select(col("sid").as("s"), col("pid").as("p"),
-            col("oid").as("o"), col("gid").as("g"))
-          val solved = eps.map(tp => Bgp.onePattern(named4,
-              Seq("s" -> tp.s, "p" -> tp.p, "o" -> tp.o, "g" -> v)))
-            .reduce(Bgp.joinSolved)
-          val gated = if (allResolved) solved else solved.filter(lit(false))
-          EncodedBgp.decode(gated, dict, gated.columns)
-        }
-        def pathVar(path: Path, ps: Term, po: Term): DataFrame = {
-          val named4 = named.select(col("gid").as("g"), col("sid").as("s"),
-            col("pid").as("p"), col("oid").as("o"))
-          def tr(t: Term): Term = t match {
-            case C(vv: String) => C(idOf.getOrElse(vv, Long.MinValue))
-            case other => other
-          }
-          val idPath = mapPath(path, vv => idOf.getOrElse(vv, Long.MinValue))
-          val solved = solvePathOverGraphsOn(named4, gName, idPath,
-            tr(ps), tr(po))
-          EncodedBgp.decode(solved, dict, solved.columns)
-        }
-        val solved = solveBranch(inner, bgpVar, pathVar, solveGraph, svc,
-          graphVar = Some(gName))
-        // same three-way ?g normalization as the string engine
-        // ([[normalizeGraphVar]]), against the DECODED name set
-        normalizeGraphVar(solved, gName, EncodedBgp.decode(
-          named.select(col("gid").as(gName)).distinct(), dict, Seq(gName)))
-    }
-    execute(q, bgpOver(dgIds), pathOver(dgIds), solveGraph, svc)
+    val quads = encQuads.select(col("sid").as("s"), col("pid").as("p"),
+      col("oid").as("o"), col("gid").as("g"))
+    execute(q, quadsDataset(quads, idSpace(dict, q), fromClauses(q),
+      bgpSolver(collapseStars), endpointSolver(endpoints)).scope)
   }
 
   /** Evaluate a path pattern over a triples frame, seeding the closure at
@@ -817,22 +801,14 @@ object Sparql {
     pathSolution(withZero, s, o)
   }
 
-  /** [[solvePathOver]] under `GRAPH ?g`: pairs solve per named graph
-    * ([[Paths.evalPathGraphs]] — `g` is one more equi-join key, so closures
-    * and sequences never cross graphs) and the graph name stays bound as
-    * `?g` in the solution, which is exactly the same-active-graph join
-    * variable the rest of the block threads. */
-  private def solvePathOverGraphs(allQuads: DataFrame, gName: String,
-      path: Path, s: Term, o: Term): DataFrame =
-    // GRAPH ?var ranges over NAMED graphs only (the dataset rule) — the
-    // default graph must contribute neither edges nor zero-hop terms
-    solvePathOverGraphsOn(allQuads.filter(col("g") =!= Quads.DefaultGraph),
-      gName, path, s, o)
-
-  /** Core of [[solvePathOverGraphs]] over PRE-FILTERED named quads —
-    * shared by the string and the dictionary-encoded engines (the latter
-    * passes id-typed quads, an id-mapped path and id constants). */
-  private def solvePathOverGraphsOn(quads: DataFrame, gName: String,
+  /** [[solvePathOver]] under `GRAPH ?g`, over the named graphs' quads
+    * only (GRAPH ?var ranges over NAMED graphs — the default graph must
+    * contribute neither edges nor zero-hop terms): pairs solve per named
+    * graph ([[Paths.evalPathGraphs]] — `g` is one more equi-join key, so
+    * closures and sequences never cross graphs) and the graph name stays
+    * bound as `?g` in the solution, which is exactly the same-active-graph
+    * join variable the rest of the block threads. */
+  private def solvePathOverGraphs(quads: DataFrame, gName: String,
       path: Path, s: Term, o: Term): DataFrame = {
     val edges = (path, s, o) match {
       case (PPlus(q), C(v), V(_)) =>
@@ -942,32 +918,16 @@ object Sparql {
       PNps(m(fwd), m(inv))
   }
 
-  /** Lower a parsed query given a BGP solver that returns string-space
-    * bindings and a path solver; everything above those (BIND, OPTIONAL,
-    * FILTER, UNION, aggregation, solution modifiers) is solver-independent.
-    */
-  /** Default SERVICE solver: this execution path has no endpoint
-    * registry, so any SERVICE block (SILENT or not) errors loudly. */
-  private val rejectService: (Boolean, Term, Block) => Option[DataFrame] =
-    (_, ep, _) => throw new IllegalArgumentException(
-      s"SERVICE $ep is not supported on this execution path — pass " +
-        "`endpoints` to Sparql.run / Sparql.runQuads")
-
-  private def execute(q: Query, solveBgp: Seq[TP] => DataFrame,
-      solvePath: (Path, Term, Term) => DataFrame,
-      solveGraph: (Term, Block) => DataFrame,
-      solveService: (Boolean, Term, Block) => Option[DataFrame] =
-        rejectService,
-      graphVar: Option[String] = None): DataFrame = {
+  /** The one evaluator: lower a parsed query in a [[Scope]] of its
+    * [[Dataset]]. The scope's pattern groups and paths come out as terms,
+    * so everything above them (BIND, OPTIONAL, FILTER, UNION,
+    * aggregation, solution modifiers) is independent of the term space
+    * and the dataset shape. */
+  private def execute(q: Query, scope: Scope): DataFrame = {
     // DESCRIBE has its own result shape (a graph about the named
     // resources) and may have no WHERE at all
-    q.describe.foreach { terms =>
-      return describeResult(q, terms, solveBgp, solvePath, solveGraph,
-        solveService)
-    }
-    val solved =
-      q.branches.map(solveBranch(_, solveBgp, solvePath, solveGraph,
-        solveService, graphVar))
+    q.describe.foreach { terms => return describeResult(q, terms, scope) }
+    val solved = q.branches.map(solveBranch(_, scope))
     var df = solved.reduce(_.unionByName(_, allowMissingColumns = true))
     // ASK = "does any solution exist": limit(1) stops the scan at the
     // first match, the aggregate makes it a 1-row boolean frame
@@ -1077,7 +1037,7 @@ object Sparql {
     // when the per-graph window below will slice, it re-applies the same
     // keys inside its own per-partition sort — a global orderBy here
     // would add a redundant full-relation range exchange + sort
-    val graphWindow = graphVar.filter(g => df.columns.contains(g) &&
+    val graphWindow = scope.graphVar.filter(g => df.columns.contains(g) &&
       (q.limit.nonEmpty || q.offset.nonEmpty))
     if (orderCols.nonEmpty && graphWindow.isEmpty)
       df = df.orderBy(orderCols: _*)
@@ -1317,22 +1277,17 @@ object Sparql {
     * instead of null-padding into an inner join that would drop its
     * solutions. Alternatives multiply across union members (product of
     * branch counts — bounded by the query text, typically 2–3). */
-  private def solveBranch(b: Block, solveBgp: Seq[TP] => DataFrame,
-      solvePath: (Path, Term, Term) => DataFrame,
-      solveGraph: (Term, Block) => DataFrame,
-      solveService: (Boolean, Term, Block) => Option[DataFrame] =
-        rejectService,
-      graphVar: Option[String] = None): DataFrame = {
+  private def solveBranch(b: Block, scope: Scope): DataFrame = {
     val simple: Seq[Sol] =
-      (if (b.where.nonEmpty) Seq(Sol(solveBgp(b.where), Set.empty)) else Nil) ++
-      b.paths.map { case (s, path, o) => Sol(solvePath(path, s, o), Set.empty) } ++
+      (if (b.where.nonEmpty) Seq(Sol(scope.bgp(b.where), Set.empty)) else Nil) ++
+      b.paths.map { case (s, path, o) => Sol(scope.path(path, s, o), Set.empty) } ++
       b.graphs.map { case (g, inner) =>
-        Sol(solveGraph(g, inner), maybeNullVars(inner)) } ++
+        Sol(scope.ds.graph(g, inner), maybeNullVars(inner)) } ++
       // SERVICE: the endpoint-solved body joins like any pattern group; a
       // None (SILENT + unregistered) contributes the unit solution, i.e.
       // no Sol at all
       b.services.flatMap { case (silent, iri, body) =>
-        solveService(silent, iri, body).map(df =>
+        scope.ds.service(silent, iri, body).map(df =>
           Sol(df, maybeNullVars(body) intersect df.columns.toSet))
       } ++
       // subqueries evaluate independently (own projection, aggregation,
@@ -1342,21 +1297,19 @@ object Sparql {
       // paths), and adoptGraphVar keeps the column through projection
       // and grouping, so the outer compatJoin re-correlates on it.
       b.subqueries.map { sq =>
-        val sq2 = graphVar.fold(sq)(adoptGraphVar(sq, _))
-        val solved = execute(sq2, solveBgp, solvePath, solveGraph,
-          solveService, graphVar)
+        val sq2 = scope.graphVar.fold(sq)(adoptGraphVar(sq, _))
+        val solved = execute(sq2, scope)
         // the threaded active-graph variable is solver-bound on every
         // row of an anchored branch (adoptGraphVar enforces the anchor)
         // — never null, so it must not trip the unbound-join guard
         Sol(solved,
-          solved.columns.toSet -- definiteProjection(sq2) -- graphVar)
+          solved.columns.toSet -- definiteProjection(sq2) -- scope.graphVar)
       }
     var alts: Seq[Sol] =
       if (simple.isEmpty) Nil else Seq(simple.reduce(compatJoin))
     b.unions.foreach { member =>
       val branchSols = member.map { blk =>
-        val solved = solveBranch(blk, solveBgp, solvePath, solveGraph,
-          solveService, graphVar)
+        val solved = solveBranch(blk, scope)
         Sol(solved, maybeNullVars(blk) intersect solved.columns.toSet)
       }
       alts =
@@ -1465,12 +1418,16 @@ object Sparql {
       df.join(renamed, cond, joinType)
         .drop(shared.map(v => s"__blk_$v"): _*)
     }
-    b.optionals.foreach { case OptBody(pats, paths, fs) =>
-      val pieces = (if (pats.nonEmpty) Seq(solveBgp(pats)) else Nil) ++
-        paths.map { case (ps, path, po) => solvePath(path, ps, po) }
-      val body = pieces.reduce(Bgp.joinSolved)
+    // OPTIONAL / MINUS / EXISTS bodies: patterns and property paths
+    // joined on shared variables, before the block filters
+    def joinedBody(body: OptBody): DataFrame =
+      ((if (body.pats.nonEmpty) Seq(scope.bgp(body.pats)) else Nil) ++
+        body.paths.map { case (ps, path, po) => scope.path(path, ps, po) })
+        .reduce(Bgp.joinSolved)
+    b.optionals.foreach { ob =>
+      val body = joinedBody(ob)
       val (inner, correlated) =
-        fs.partition(f => exprVars(f).forall(body.columns.contains))
+        ob.filters.partition(f => exprVars(f).forall(body.columns.contains))
       val solved = solveFiltered(body, inner, "OPTIONAL")
       val before = df.columns.toSet
       df =
@@ -1483,16 +1440,8 @@ object Sparql {
       // OPTIONAL-introduced columns are unbound on unmatched rows
       maybeNull ++= df.columns.toSet -- before
     }
-    // MINUS / EXISTS bodies solve exactly like OPTIONAL bodies (patterns
-    // and property paths joined on shared variables, block filters
-    // applied), then subtract / semi-join
-    def solveBody(body: OptBody, what: String): DataFrame = {
-      val pieces = (if (body.pats.nonEmpty) Seq(solveBgp(body.pats)) else Nil) ++
-        body.paths.map { case (ps, path, po) => solvePath(path, ps, po) }
-      solveFiltered(pieces.reduce(Bgp.joinSolved), body.filters, what)
-    }
     b.minuses.foreach { body =>
-      val blk = solveBody(body, "MINUS")
+      val blk = solveFiltered(joinedBody(body), body.filters, "MINUS")
       // possibly-unbound shared vars run the compatibility MINUS: each
       // mask group subtracts on exactly its bound shared variables, and
       // the group binding none survives (empty domain intersection)
@@ -1505,9 +1454,7 @@ object Sparql {
           .map("?" + _).mkString(", ")}"
       }.mkString("; "))
     b.exists.foreach { case (positive, body) =>
-      val pieces = (if (body.pats.nonEmpty) Seq(solveBgp(body.pats)) else Nil) ++
-        body.paths.map { case (ps, path, po) => solvePath(path, ps, po) }
-      val raw = pieces.reduce(Bgp.joinSolved)
+      val raw = joinedBody(body)
       val (inner, correlated) =
         body.filters.partition(f => exprVars(f).forall(raw.columns.contains))
       val blk = solveFiltered(raw, inner, "EXISTS")
@@ -1700,20 +1647,15 @@ object Sparql {
     * is a distributed semi-join of the full triple set against the
     * distinct bindings — no driver-side collection of subjects. */
   private def describeResult(q: Query, terms: Seq[Term],
-      solveBgp: Seq[TP] => DataFrame,
-      solvePath: (Path, Term, Term) => DataFrame,
-      solveGraph: (Term, Block) => DataFrame,
-      solveService: (Boolean, Term, Block) => Option[DataFrame] =
-        rejectService): DataFrame = {
-    val all = solveBgp(Seq(TP(V("s"), V("p"), V("o"))))
+      scope: Scope): DataFrame = {
+    val all = scope.bgp(Seq(TP(V("s"), V("p"), V("o"))))
     val consts = terms.collect { case C(v) => v }
     val vars = terms.collect { case V(n) => n }
     val parts = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     if (consts.nonEmpty) parts += all.filter(col("s").isin(consts: _*))
     if (vars.nonEmpty) {
       require(q.branches.nonEmpty, "DESCRIBE ?var needs a WHERE clause")
-      val bindings = q.branches
-        .map(solveBranch(_, solveBgp, solvePath, solveGraph, solveService))
+      val bindings = q.branches.map(solveBranch(_, scope))
         .reduce(_.unionByName(_, allowMissingColumns = true))
       val unbound = vars.filterNot(bindings.columns.contains)
       require(unbound.isEmpty, "DESCRIBE variables not bound in WHERE: " +
@@ -1731,7 +1673,7 @@ object Sparql {
     * as a filter over the aggregated frame. Aggregates referenced only by
     * HAVING or ORDER BY (not SELECTed) compute as hidden columns in the
     * SAME hash aggregate — no second pass — and drop after use: HAVING's
-    * here, ORDER BY's in [[solve]] via the returned env + drop list. */
+    * here, ORDER BY's in [[execute]] via the returned env + drop list. */
   private def aggregate(q: Query, solved: DataFrame)
       : (DataFrame, Map[EAgg, String], Seq[String]) = {
     val aliasOf: Map[EAgg, String] = q.selectAggs.map(_.swap).toMap
@@ -1819,7 +1761,6 @@ object Sparql {
       s"unsupported aggregate: $other")
   }
 
-  /** Variables an expression references (for BIND dependency ordering). */
   /** A FILTER expression as a row-local boolean Column over bound
     * binding columns — the maintained-view hook ([[ViewStore]]'s
     * "filtered" mode): a constant row-local predicate commutes with the
@@ -1833,6 +1774,7 @@ object Sparql {
     * fragment parser's binding check). */
   private[rdf] def filterVars(e: Expr): Seq[String] = exprVars(e).distinct
 
+  /** Variables an expression references (for BIND dependency ordering). */
   private def exprVars(e: Expr): Seq[String] = e match {
     case EVar(n) => Seq(n)
     case EBound(v) => Seq(v)
@@ -2431,9 +2373,9 @@ object Sparql {
       if (p.peek() != "}") {
         // further group members follow the union: it is a nested member of
         // a plain block (SPARQL GroupGraphPattern), joined on shared vars
-        val rest = blockBody(p, prefixes)
+        val b = blockBody(p, prefixes, leading = Some(bs.toSeq))
         p.expect("}")
-        Seq(rest.copy(unions = bs.toSeq +: rest.unions))
+        Seq(b)
       } else {
         p.expect("}")
         // a single braced group is a plain nested group, not a union: wrap
@@ -2492,8 +2434,10 @@ object Sparql {
   }
 
   /** Triples / paths / OPTIONAL / MINUS / FILTER / BIND / VALUES members
-    * up to (not consuming) `}`. */
-  private def blockBody(p: P, prefixes: Map[String, String]): Block = {
+    * up to (not consuming) `}`; `leading` is a `{ group } [UNION ...]`
+    * member the caller already consumed. */
+  private def blockBody(p: P, prefixes: Map[String, String],
+      leading: Option[Seq[Block]] = None): Block = {
     val where = scala.collection.mutable.ArrayBuffer.empty[TP]
     val paths = scala.collection.mutable.ArrayBuffer.empty[(Term, Path, Term)]
     val optionals = scala.collection.mutable.ArrayBuffer.empty[OptBody]
@@ -2504,7 +2448,7 @@ object Sparql {
       .ArrayBuffer.empty[(Boolean, OptBody)]
     val subqueries = scala.collection.mutable.ArrayBuffer.empty[Query]
     val graphs = scala.collection.mutable.ArrayBuffer.empty[(Term, Block)]
-    val unions = scala.collection.mutable.ArrayBuffer.empty[Seq[Block]]
+    val unions = scala.collection.mutable.ArrayBuffer.from(leading)
     val services =
       scala.collection.mutable.ArrayBuffer.empty[(Boolean, Term, Block)]
     def bracedPatterns(): Seq[TP] = {
@@ -2591,7 +2535,7 @@ object Sparql {
         val inner = blockBody(p, prefixes)
         p.expect("}")
         // a VARIABLE graph threads ?g through every pattern group of its
-        // body (see runQuads); property paths carry the correlation too
+        // body (see Dataset.graph); property paths carry the correlation too
         // (per-graph pair sets with ?g bound — solvePathOverGraphs), and
         // subqueries keep ?g through their projection/grouping
         // (adoptGraphVar — their own solve-time validation). An
@@ -2600,7 +2544,7 @@ object Sparql {
         if (gt.isInstanceOf[V]) {
           // a NESTED graph re-scopes the active graph, so it cannot
           // anchor the outer ?g; a body made only of nested graphs is
-          // fine (runQuads then crosses the solution with the named-graph
+          // fine (the evaluator then crosses the solution with the named-graph
           // name set — the spec's unconstrained ?g range), but a body
           // whose only other members are OPTIONAL/MINUS/EXISTS/FILTER
           // still needs a direct anchor to thread ?g through them
