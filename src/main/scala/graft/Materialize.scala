@@ -153,6 +153,50 @@ object Materialize {
       }
     }
 
+  /** Semi-naive fixpoint: the round loop behind every accumulating
+    * recursive operator (path closures, DRed re-derivation, closure
+    * insertion, BFS). Round 0 materializes `seed`; round r ≥ 1
+    * materializes `step(frontier, known, r)`, where `frontier` is round
+    * r-1's rows and `known` is everything derived so far. Each round is
+    * ONE fused checkpoint+count job ([[counted]]); the loop stops at the
+    * first empty frontier.
+    *
+    * `known` starts as `base`, or as the seed round itself without one,
+    * and grows by a LAZY left-deep union of every later non-empty
+    * frontier: each leaf is checkpointed, so consumers scan block sets
+    * with no recompute, and no round pays a job to re-checkpoint the
+    * accumulated union. Returns `known` and the frontiers appended to
+    * its start, in round order.
+    *
+    * No round cap: every step anti-joins `known` on the row's key
+    * (directly, or through a candidate set that does), so a non-empty
+    * frontier adds keys not yet known. Keys come from a finite set — the
+    * input graph's nodes or node pairs — so only finitely many rounds
+    * can be non-empty, and the first empty one ends the loop. A step
+    * that can re-emit a known key breaks that argument and must not run
+    * through here. */
+  private[graft] def semiNaive(seed: DataFrame, base: Option[DataFrame] = None)(
+      step: (DataFrame, DataFrame, Int) => DataFrame)
+      : (DataFrame, Seq[DataFrame]) = {
+    val (first, n0) = counted(seed)
+    var known = base.getOrElse(first)
+    val appended = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    def append(f: DataFrame): Unit = {
+      known = known.unionByName(f)
+      appended += f
+    }
+    if (base.nonEmpty && n0 > 0L) append(first)
+    var (frontier, n, round) = (first, n0, 0)
+    while (n > 0L) {
+      round += 1
+      val (next, m) = counted(step(frontier, known, round))
+      if (m > 0L) append(next)
+      frontier = next
+      n = m
+    }
+    (known, appended.toSeq)
+  }
+
   /** [[apply]] unless the frame is ALREADY cheap to re-read: a
     * deterministic project/filter/limit chain over an existing
     * checkpoint, a local relation, or a bare parquet scan. Re-reading

@@ -359,8 +359,14 @@ object Dedup {
     * each round is two shuffles (join + aggregate). The driver loop only
     * checks a converged flag per round (the standard shape for iterative
     * graph algorithms on Spark; no data ever collects to the driver).
+    *
+    * No round cap: a node's label only ever changes to a strictly smaller
+    * one, and labels come from the finite set of node ids, so some round
+    * changes nothing and the loop ends. (Labels are replaced, not
+    * accumulated, so this is not [[graft.Materialize.semiNaive]]'s
+    * shape.)
     */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
+  def connectedComponents(pairs: DataFrame): DataFrame = {
     // undirected edge list, both directions — persisted: every propagation
     // round re-reads it, and without the persist each round would recompute
     // the whole upstream pair-finding pipeline (e.g. MinHash LSH)
@@ -377,8 +383,7 @@ object Dedup {
     // every label. Round 0's frontier is every node.
     var frontier = labels
     var converged = false
-    var i = 0
-    while (!converged && i < maxIter) {
+    while (!converged) {
       val cand = edges
         .join(frontier.select(col("doc_id").as("dst"), col("label")), "dst")
         .select(col("src").as("doc_id"), col("label"))
@@ -426,13 +431,8 @@ object Dedup {
       labels = updated
       frontier = updated.filter(col("__changed"))
       converged = changed == 0
-      i += 1
     }
     edges.unpersist()
-    // silent non-convergence would mean under-deduplication downstream
-    require(converged,
-      s"connected components did not converge in $maxIter rounds — " +
-        "raise maxIter (a component's diameter exceeds it)")
     // the returned frame is the final round's checkpointed projection —
     // already fully computed; callers release it via Materialize.release
     // once they have folded it into their own result

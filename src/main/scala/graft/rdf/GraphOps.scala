@@ -72,9 +72,11 @@ object GraphOps extends QueryModule {
     * eagerly materialized ([[graft.Materialize]]) so the plan stays
     * constant-depth instead of growing per round. The settled set is
     * (node, dist) — never the edge list — so its anti-join side stays
-    * narrow. Rounds stop at the first empty frontier (a driver-side
-    * emptiness probe on the ALREADY-materialized frame — no recompute),
-    * bounded by `maxDepth` as a cycle guard.
+    * narrow. The round loop is [[graft.Materialize.semiNaive]]: each
+    * frontier is checkpointed and probed in one job, and rounds stop at
+    * the first empty frontier — the anti-join against the settled set
+    * already stops cycles. `maxDepth` is a distance limit: nodes farther
+    * than it are left out.
     *
     * Determinism: a node's distance is the round number that first reached
     * it — partition order can't perturb an integer round count.
@@ -85,25 +87,13 @@ object GraphOps extends QueryModule {
       .persist()
     val spark = edges.sparkSession
     import spark.implicits._
-    var dist = graft.Materialize(
-      Seq((source, 0)).toDF("node", "dist"))
-    var frontier = dist
-    var frontierEmpty = false
-    var d = 0
-    while (d < maxDepth && !frontierEmpty) {
-      d += 1
-      val next = frontier.join(und, frontier("node") === und("src"))
+    val (dist, _) = graft.Materialize.semiNaive(
+        Seq((source, 0)).toDF("node", "dist")) { (frontier, dist, d) =>
+      if (d > maxDepth) frontier.limit(0)
+      else frontier.join(und, frontier("node") === und("src"))
         .select(col("dst").as("node")).distinct()
         .join(dist, Seq("node"), "left_anti")
         .withColumn("dist", lit(d))
-      // counted(): checkpoint + emptiness probe in ONE scheduler job;
-      // `dist` stays a LAZY union of materialized per-round frontiers —
-      // every leaf is checkpointed, so the anti-join above scans blocks
-      // with no recompute
-      val (f2, n) = graft.Materialize.counted(next)
-      frontier = f2
-      frontierEmpty = n == 0L
-      if (n > 0) dist = dist.unionByName(f2)
     }
     und.unpersist()
     dist
@@ -519,6 +509,13 @@ object GraphOps extends QueryModule {
       pageRankMicro(entityEdges(s, d), iters = 3)
         .orderBy(col("node"))),
 
+    // shortest hop distances from region 0 over the undirected entity
+    // graph — reaches exactly region 0's component (nations at 1 hop,
+    // their customers at 2, those customers' orders at 3)
+    "q_graph_bfs" -> ((s, d) =>
+      bfs(entityEdges(s, d), source = "r:0", maxDepth = 8)
+        .orderBy(col("node"))),
+
     // connected components over the UNDIRECTED entity graph, via the same
     // generic min-label-propagation engine the near-dup clusterer uses
     // ([[graft.llm.Dedup.connectedComponents]]) — this query is what makes
@@ -527,13 +524,6 @@ object GraphOps extends QueryModule {
     // compute the exact same labels non-recursively, while Spark runs the
     // general fixpoint loop. Label = lexicographic min node id in the
     // component (identical bytewise string MIN in both engines).
-    // shortest hop distances from region 0 over the undirected entity
-    // graph — reaches exactly region 0's component (nations at 1 hop,
-    // their customers at 2, those customers' orders at 3)
-    "q_graph_bfs" -> ((s, d) =>
-      bfs(entityEdges(s, d), source = "r:0", maxDepth = 8)
-        .orderBy(col("node"))),
-
     "q_graph_cc" -> ((s, d) => {
       val comps = graft.llm.Dedup.connectedComponents(
         entityEdges(s, d)

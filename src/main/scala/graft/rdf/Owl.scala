@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *    classic OWL blow-up; picking the MINIMUM member is deterministic
   *    and join-free to verify).
   *  - TransitiveProperty: per-predicate closure via the semi-naive
-  *    [[Paths.transitiveClosure]] (log-diameter rounds).
+  *    [[Paths.transitiveClosure]] (diameter rounds).
   *  - inverseOf / SymmetricProperty: map-side emissions, one scan.
   */
 object Owl {

@@ -1,20 +1,8 @@
 package graft.rdf
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Property-path evaluation: SPARQL `p+` (one-or-more) reachability over
-  * an edge set, the graph-traversal operator BGP joins can't express at a
-  * fixed depth.
-  *
-  * Semi-naive iteration (the distributed datalog pattern): each round
-  * joins only the FRONTIER (paths discovered last round) against the edge
-  * list, anti-joins away already-known pairs, and stops when the frontier
-  * is empty. Work per round is O(new paths), not O(all paths) — the
-  * difference between this converging and re-deriving everything every
-  * round. Rounds = longest simple path; each is two shuffles (join +
-  * dedup). Driver sees only per-round emptiness checks, never data.
-  */
 /** SPARQL 1.1 property-path expression algebra (the post-parse AST the
   * [[Sparql]] parser lowers path syntax into; [[Paths.evalPath]] evaluates
   * it to a (src, dst) pair set over any (s,p,o) triples frame).
@@ -43,86 +31,82 @@ final case class PInv(p: Path) extends Path
   * edge at all, per the grammar's translation to alt of the two parts). */
 final case class PNps(fwd: Seq[Any], inv: Seq[Any]) extends Path
 
+/** Property-path evaluation: SPARQL `p+` (one-or-more) reachability over
+  * an edge set, the graph-traversal operator BGP joins can't express at a
+  * fixed depth, plus its incremental maintenance and the [[Path]] algebra
+  * evaluator built on it.
+  *
+  * Semi-naive iteration (the distributed datalog pattern, run by
+  * [[graft.Materialize.semiNaive]]): each round joins only the FRONTIER
+  * (paths discovered last round) against the edge list, anti-joins away
+  * already-known pairs, and stops when the frontier is empty. Work per
+  * round is O(new paths), not O(all paths) — the difference between this
+  * converging and re-deriving everything every round. A pair first
+  * appears in the round of its SHORTEST path, so rounds = the longest
+  * shortest path plus the final empty one; each is two shuffles (join +
+  * dedup). Driver sees only per-round emptiness checks, never data.
+  */
 object Paths {
 
   /** All (src, dst) pairs connected by 1+ hops over `edges(src, dst)`. */
-  def transitiveClosure(edges: DataFrame, maxIter: Int = 20): DataFrame =
-    closure(edges, maxIter, identity)
+  def transitiveClosure(edges: DataFrame): DataFrame =
+    closure(edges, identity)
 
   /** [[transitiveClosure]] restricted to the given source nodes: the
     * frontier STARTS at the seeds, so work per round is O(reachable from
     * seeds) instead of O(all pairs) — the scale path for a constant-subject
     * `p+` pattern (a full closure filtered afterward computes every other
     * node's reachability just to discard it). */
-  def closureFrom(edges: DataFrame, seeds: Seq[Any],
-      maxIter: Int = 20): DataFrame =
-    closure(edges, maxIter, _.filter(col("src").isin(seeds: _*)))
+  def closureFrom(edges: DataFrame, seeds: Seq[Any]): DataFrame =
+    closure(edges, _.filter(col("src").isin(seeds: _*)))
 
   /** [[transitiveClosure]] over per-graph edge sets `(g, src, dst)`: `g`
     * rides as one more equi-join key, so no derived pair ever composes
     * edges from two graphs — the SPARQL active-graph rule for paths under
     * `GRAPH ?var`, expressed as a wider join key rather than a per-graph
     * loop (one distributed fixpoint covers every named graph at once). */
-  def transitiveClosureGraphs(edges: DataFrame, maxIter: Int = 20): DataFrame =
-    closure(edges, maxIter, identity, keys = Seq("g"))
+  def transitiveClosureGraphs(edges: DataFrame): DataFrame =
+    closure(edges, identity, keys = Seq("g"))
 
   /** [[closureFrom]] with the per-graph key: reachability from the seed
     * sources, independently inside each graph. */
-  def closureFromGraphs(edges: DataFrame, seeds: Seq[Any],
-      maxIter: Int = 20): DataFrame =
-    closure(edges, maxIter, _.filter(col("src").isin(seeds: _*)),
-      keys = Seq("g"))
+  def closureFromGraphs(edges: DataFrame, seeds: Seq[Any]): DataFrame =
+    closure(edges, _.filter(col("src").isin(seeds: _*)), keys = Seq("g"))
 
-  private def closure(edges: DataFrame, maxIter: Int,
-      init: DataFrame => DataFrame, keys: Seq[String] = Nil): DataFrame = {
-    // Spark's Union constraint rewriting (UnionBase.rewriteConstraints)
-    // can throw "key not found: <attr>" when unioning localCheckpoint
-    // frames whose origin constraints reference attributes pruned from the
-    // pre-checkpoint plan (observed with edges derived from the
-    // dictionary-encode join tree). The closure's unions gain nothing from
-    // constraint propagation — every frame is checkpointed — and the
-    // iteration is eager, so the setting can be scoped to this call.
-    val spark = edges.sparkSession
+  /** Run `f` with Catalyst constraint propagation off. Spark's Union
+    * constraint rewriting (UnionBase.rewriteConstraints) can throw "key
+    * not found: <attr>" when unioning localCheckpoint frames whose origin
+    * constraints reference attributes pruned from the pre-checkpoint plan
+    * (observed with edges derived from the dictionary-encode join tree).
+    * The fixpoints' unions gain nothing from constraint propagation —
+    * every frame is checkpointed — and the iteration is eager, so the
+    * setting can be scoped to the call. */
+  private def withoutConstraintPropagation[A](spark: SparkSession)(
+      f: => A): A = {
     val flag = "spark.sql.constraintPropagation.enabled"
     val prev = spark.conf.get(flag)
     spark.conf.set(flag, "false")
-    try {
+    try f finally spark.conf.set(flag, prev)
+  }
+
+  private def closure(edges: DataFrame, init: DataFrame => DataFrame,
+      keys: Seq[String] = Nil): DataFrame =
+    withoutConstraintPropagation(edges.sparkSession) {
       val cols = keys :+ "src" :+ "dst"
       val e = edges.select(cols.map(col): _*).distinct().persist()
-      // `all` stays a LAZY union of materialized frontiers: every leaf
-      // is checkpointed, so consumers scan ≤maxIter block sets with no
-      // recompute — re-checkpointing the accumulated union each round
-      // (the previous shape) paid one extra eager job per round, the
-      // dominant fixed cost of every lifecycle sync at gate scale.
-      // [[graft.Materialize.counted]] fuses each round's checkpoint with
-      // its emptiness probe — one scheduler job per round, not two.
-      var (all, n0) = graft.Materialize.counted(init(e))
-      var delta = all
-      var deltaEmpty = n0 == 0L
-      var i = 0
-      while (i < maxIter && !deltaEmpty) {
-        val joinCond = keys.map(k => col(s"d.$k") === col(s"e.$k"))
-          .foldLeft(col("d.dst") === col("e.src"))(_ && _)
-        val (next, n) = graft.Materialize.counted(
-          delta.as("d").join(e.as("e"), joinCond)
-            .select(keys.map(k => col(s"d.$k").as(k)) ++
-              Seq(col("d.src").as("src"), col("e.dst").as("dst")): _*)
-            .distinct()
-            // only genuinely new pairs survive into the next frontier
-            .join(all, cols, "left_anti"))
-        if (n > 0) all = all.unionByName(next)
-        delta = next
-        deltaEmpty = n == 0L
-        i += 1
+      val joinCond = keys.map(k => col(s"d.$k") === col(s"e.$k"))
+        .foldLeft(col("d.dst") === col("e.src"))(_ && _)
+      val (all, _) = graft.Materialize.semiNaive(init(e)) { (delta, all, _) =>
+        delta.as("d").join(e.as("e"), joinCond)
+          .select(keys.map(k => col(s"d.$k").as(k)) ++
+            Seq(col("d.src").as("src"), col("e.dst").as("dst")): _*)
+          .distinct()
+          // only genuinely new pairs survive into the next frontier
+          .join(all, cols, "left_anti")
       }
       e.unpersist()
-      // silent truncation would return a subset that LOOKS complete
-      require(deltaEmpty,
-        s"transitive closure did not converge in $maxIter rounds — " +
-          "raise maxIter (a path is longer than it)")
       all
-    } finally spark.conf.set(flag, prev)
-  }
+    }
 
   /** Incrementally maintained transitive closure: advance a materialized
     * [[transitiveClosure]] under an edge churn `(adds, dels)` without
@@ -159,12 +143,11 @@ object Paths {
     * `dels` ⊆ `oldEdges`; both (src, dst) sets.
     */
   def maintainClosure(closure: DataFrame, oldEdges: DataFrame,
-      adds: DataFrame, dels: DataFrame, maxIter: Int = 20): DataFrame =
+      adds: DataFrame, dels: DataFrame): DataFrame =
     // needDeltas=false: skips the net-delta anti-joins AND their
     // materialization job — a caller that only wants the new closure
     // paid two scheduler jobs for frames it immediately discarded
-    maintainClosureImpl(closure, oldEdges, adds, dels, maxIter,
-      needDeltas = false)._1
+    maintainClosureImpl(closure, oldEdges, adds, dels, needDeltas = false)._1
 
   /** [[maintainClosure]] also returning the NET closure-level change as
     * `(closure, pairAdds, pairDels)` — disjoint frames, a pair deleted by
@@ -172,32 +155,23 @@ object Paths {
     * persisted path view's sync consumes this to write O(|Δclosure|)
     * segments instead of diffing two closure snapshots. */
   def maintainClosureDelta(closure: DataFrame, oldEdges: DataFrame,
-      adds: DataFrame, dels: DataFrame,
-      maxIter: Int = 20): (DataFrame, DataFrame, DataFrame) =
-    maintainClosureImpl(closure, oldEdges, adds, dels, maxIter,
-      needDeltas = true)
+      adds: DataFrame, dels: DataFrame): (DataFrame, DataFrame, DataFrame) =
+    maintainClosureImpl(closure, oldEdges, adds, dels, needDeltas = true)
 
   private def maintainClosureImpl(closure: DataFrame, oldEdges: DataFrame,
-      adds: DataFrame, dels: DataFrame, maxIter: Int,
-      needDeltas: Boolean): (DataFrame, DataFrame, DataFrame) = {
-    val spark = closure.sparkSession
-    // same scoped setting as closure(): the loop unions checkpointed
-    // frames, where constraint rewriting can throw on pruned origins
-    val flag = "spark.sql.constraintPropagation.enabled"
-    val prev = spark.conf.get(flag)
-    spark.conf.set(flag, "false")
-    try {
+      adds: DataFrame, dels: DataFrame,
+      needDeltas: Boolean): (DataFrame, DataFrame, DataFrame) =
+    withoutConstraintPropagation(closure.sparkSession) {
       val cols = Seq("src", "dst")
       val sel = (df: DataFrame) => df.select(cols.map(col): _*)
-      // the loop below re-reads BOTH inputs every round (over/kept/
-      // witnessed all join against them): materialize once so a caller's
-      // lazy closure (a segment-fold view read) or derived edge set
-      // (a sequence view's composed-edge join) doesn't re-execute per
-      // round
+      // the rounds below re-read BOTH inputs (over/kept/witnessed all
+      // join against them): materialize once so a caller's lazy closure
+      // (a segment-fold view read) or derived edge set (a sequence view's
+      // composed-edge join) doesn't re-execute per round
       // reuse(): a caller handing in frames that are already checkpoint-
       // or scan-backed (the view store's artifact reads) skips two jobs
       var cur = graft.Materialize.reuse(sel(closure))
-      var edges = graft.Materialize.reuse(sel(oldEdges))
+      val edges = graft.Materialize.reuse(sel(oldEdges))
       // ONE fused job materializes BOTH delta sides and answers both
       // emptiness probes (probed2): the old shape paid an isEmpty job per
       // side plus a reuse() checkpoint of the add side, and left the
@@ -206,19 +180,12 @@ object Paths {
         sel(dels).withColumn("__op", lit("d"))
           .unionByName(sel(adds).withColumn("__op", lit("a"))),
         col("__op") === "d", col("__op") === "a")
-      // edge-level no-op churn (the store changed, this view's predicates
-      // didn't): the closure is untouched — skip every loop AND the
-      // net-delta job
-      if (nDel == 0L && nAdd == 0L)
-        return (cur, cur.limit(0), cur.limit(0))
       var pairDels = cur.limit(0)
       var pairAdds = cur.limit(0)
       if (nDel > 0L) {
         val delsM = dFeed.filter(col("__op") === "d")
           .select(cols.map(col): _*)
         val d = delsM.select(col("src").as("u"), col("dst").as("v"))
-        edges = edges
-          .join(delsM.hint("broadcast"), cols, "left_anti")
         // {(x, u, v)}: x reaches the deleted edge's tail (or IS it)
         val lefts = d.select(col("u").as("x"), col("u"), col("v"))
           .unionByName(cur.select(col("src").as("x"), col("dst").as("u"))
@@ -237,9 +204,10 @@ object Paths {
         val kept = graft.Materialize(cur.join(over, cols, "left_anti"))
         // surviving out-edges of suspect sources — the only edges a
         // re-derivation can start with
-        val eAff = graft.Materialize(edges.join(
-          over.select("src").distinct().hint("broadcast"),
-          Seq("src"), "left_semi"))
+        val eAff = graft.Materialize(
+          edges.join(delsM.hint("broadcast"), cols, "left_anti")
+            .join(over.select("src").distinct().hint("broadcast"),
+              Seq("src"), "left_semi"))
         def witnessed(cand: DataFrame, base: DataFrame): DataFrame = {
           val via = cand.join(
             eAff.select(col("src"), col("dst").as("m")), Seq("src"))
@@ -249,25 +217,12 @@ object Paths {
               Seq("m", "dst"), "left_semi").select(cols.map(col): _*))
             .distinct()
         }
-        // `red` accumulates as a LAZY union of materialized frontiers
-        // (each leaf checkpointed — no recompute); [[graft.Materialize
-        // .counted]] fuses each round's checkpoint with its emptiness
-        // probe — one scheduler job per round, not two
-        var (red, nRed) = graft.Materialize.counted(witnessed(over, kept))
-        var frontier = red
-        var frontierEmpty = nRed == 0L
-        var i = 0
-        while (i < maxIter && !frontierEmpty) {
-          val cand = over.join(red, cols, "left_anti")
-          val (next, n) = graft.Materialize.counted(witnessed(cand, frontier))
-          if (n > 0) red = red.unionByName(next)
-          frontier = next
-          frontierEmpty = n == 0L
-          i += 1
+        // candidates are the suspects not yet re-derived, so each round
+        // recovers only new pairs
+        val (red, _) = graft.Materialize.semiNaive(witnessed(over, kept)) {
+          (frontier, red, _) =>
+            witnessed(over.join(red, cols, "left_anti"), frontier)
         }
-        require(frontierEmpty,
-          s"closure re-derivation did not converge in $maxIter rounds — " +
-            "raise maxIter (the affected region is deeper than it)")
         // lazy: over and red are checkpoint-backed, so the anti-join is a
         // delta-bounded plan; it is consumed only by the final tagged
         // net-delta materialization (or not at all when needDeltas=false)
@@ -276,7 +231,6 @@ object Paths {
       }
       if (nAdd > 0L) {
         val a = dFeed.filter(col("__op") === "a").select(cols.map(col): _*)
-        edges = edges.unionByName(a)
         val base = cur // post-deletion closure: already transitively closed
         // one added edge, old closed segments composed on the left…
         val leftExt = a.unionByName(
@@ -290,39 +244,26 @@ object Paths {
             .select(col("src"), col("dst").as("m"))
             .join(base.select(col("src").as("m"), col("dst")), Seq("m"))
             .select(cols.map(col): _*)).distinct()
-        // `all` accumulates as a LAZY union of materialized frames;
-        // counted() fuses each round's checkpoint + emptiness probe
-        var all = cur
-        val frontiers = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        var (frontier, nFr) = graft.Materialize.counted(
-          rightExt(leftExt).join(all, cols, "left_anti"))
-        var frontierEmpty = nFr == 0L
-        var i = 0
-        while (i < maxIter && !frontierEmpty) {
-          frontiers += frontier
-          all = all.unionByName(frontier)
+        val (all, frontiers) = graft.Materialize.semiNaive(
+            rightExt(leftExt).join(base, cols, "left_anti"),
+            base = Some(base)) { (frontier, all, _) =>
           // paths with one MORE added edge: frontier ∘ adds ∘ (C ∪ id)
           val viaAdd = frontier.select(col("src"), col("dst").as("m"))
             .join(a.select(col("src").as("m"), col("dst"))
               .hint("broadcast"), Seq("m"))
             .select(cols.map(col): _*)
-          val (next, n) = graft.Materialize.counted(
-            rightExt(viaAdd).join(all, cols, "left_anti"))
-          frontier = next
-          frontierEmpty = n == 0L
-          i += 1
+          rightExt(viaAdd).join(all, cols, "left_anti")
         }
-        require(frontierEmpty,
-          s"closure extension did not converge in $maxIter rounds — " +
-            "raise maxIter (a path crosses more added edges than it)")
-        if (frontiers.nonEmpty)
-          pairAdds = frontiers.reduce(_.unionByName(_))
+        if (frontiers.nonEmpty) pairAdds = frontiers.reduce(_.unionByName(_))
         cur = all
       }
-      // a pair the DRed phase dropped and the insertion phase recovered
-      // was present before AND after — it nets out of both delta sides
-      if (!needDeltas) (cur, cur.limit(0), cur.limit(0))
+      // edge-level no-op churn (the store changed, this view's predicates
+      // didn't) leaves the closure untouched and skips the net-delta job
+      if (!needDeltas || (nDel == 0L && nAdd == 0L))
+        (cur, cur.limit(0), cur.limit(0))
       else {
+        // a pair the DRed phase dropped and the insertion phase recovered
+        // was present before AND after — it nets out of both delta sides.
         // ONE tagged checkpoint materializes BOTH net sides — two
         // separate Materialize calls paid two scheduler jobs for frames
         // every caller consumes exactly once each
@@ -335,17 +276,14 @@ object Paths {
           net.filter(col("__op") === "a").select(cols.map(col): _*),
           net.filter(col("__op") === "d").select(cols.map(col): _*))
       }
-    } finally spark.conf.set(flag, prev)
-  }
+    }
 
   /** SPARQL `pred+` over the triples table: reachability through edges
     * labeled with any of the given predicates. */
-  def predicatePlus(triples: DataFrame, preds: Seq[String],
-      maxIter: Int = 20): DataFrame =
+  def predicatePlus(triples: DataFrame, preds: Seq[String]): DataFrame =
     transitiveClosure(
       triples.filter(col("p").isin(preds: _*))
-        .select(col("s").as("src"), col("o").as("dst")),
-      maxIter)
+        .select(col("s").as("src"), col("o").as("dst")))
 
   /** Evaluate a [[Path]] expression to its (src, dst) pair set.
     *
@@ -361,13 +299,13 @@ object Paths {
     * no driver data paths; `+`/`*` reuse [[transitiveClosure]]'s semi-naive
     * frontier iteration, so work per round is O(new pairs) at any scale.
     */
-  def evalPath(triples: DataFrame, path: Path, maxIter: Int = 20): DataFrame =
+  def evalPath(triples: DataFrame, path: Path): DataFrame =
     path match {
       case PEdge(p) =>
         triples.filter(col("p") === lit(p))
           .select(col("s").as("src"), col("o").as("dst"))
       case PInv(q) =>
-        evalPath(triples, q, maxIter)
+        evalPath(triples, q)
           .select(col("dst").as("src"), col("src").as("dst"))
       case alt: PAlt =>
         // an alternation of DISTINCT plain predicates collapses to ONE
@@ -381,19 +319,19 @@ object Paths {
         if (preds.size == leaves.size && preds.distinct.size == preds.size)
           triples.filter(col("p").isin(preds: _*))
             .select(col("s").as("src"), col("o").as("dst"))
-        else leaves.map(evalPath(triples, _, maxIter)).reduce(_.unionByName(_))
+        else leaves.map(evalPath(triples, _)).reduce(_.unionByName(_))
       case PSeq(l, r) =>
-        val a = evalPath(triples, l, maxIter).as("l")
-        val b = evalPath(triples, r, maxIter).as("r")
+        val a = evalPath(triples, l).as("l")
+        val b = evalPath(triples, r).as("r")
         a.join(b, col("l.dst") === col("r.src"))
           .select(col("l.src").as("src"), col("r.dst").as("dst"))
-      case PPlus(q) => transitiveClosure(evalPath(triples, q, maxIter), maxIter)
+      case PPlus(q) => transitiveClosure(evalPath(triples, q))
       case PStar(q) =>
         zeroHop(triples)
-          .unionByName(transitiveClosure(evalPath(triples, q, maxIter), maxIter))
+          .unionByName(transitiveClosure(evalPath(triples, q)))
           .distinct()
       case POpt(q) =>
-        zeroHop(triples).unionByName(evalPath(triples, q, maxIter)).distinct()
+        zeroHop(triples).unionByName(evalPath(triples, q)).distinct()
       case PNps(fwd, inv) =>
         // one scan per present direction, each a NOT-IN predicate filter
         // that reaches the source (no join, no shuffle); union is
@@ -416,13 +354,12 @@ object Paths {
     * all named graphs at once instead of a driver loop over graph names
     * (which at 100 TB with millions of named graphs would serialize the
     * whole query on the driver). */
-  def evalPathGraphs(quads: DataFrame, path: Path,
-      maxIter: Int = 20): DataFrame = path match {
+  def evalPathGraphs(quads: DataFrame, path: Path): DataFrame = path match {
     case PEdge(p) =>
       quads.filter(col("p") === lit(p))
         .select(col("g"), col("s").as("src"), col("o").as("dst"))
     case PInv(q) =>
-      evalPathGraphs(quads, q, maxIter)
+      evalPathGraphs(quads, q)
         .select(col("g"), col("dst").as("src"), col("src").as("dst"))
     case alt: PAlt =>
       // same one-scan IN-collapse as evalPath (bag-exact for distinct
@@ -432,24 +369,20 @@ object Paths {
       if (preds.size == leaves.size && preds.distinct.size == preds.size)
         quads.filter(col("p").isin(preds: _*))
           .select(col("g"), col("s").as("src"), col("o").as("dst"))
-      else leaves.map(evalPathGraphs(quads, _, maxIter))
-        .reduce(_.unionByName(_))
+      else leaves.map(evalPathGraphs(quads, _)).reduce(_.unionByName(_))
     case PSeq(l, r) =>
-      val a = evalPathGraphs(quads, l, maxIter).as("l")
-      val b = evalPathGraphs(quads, r, maxIter).as("r")
+      val a = evalPathGraphs(quads, l).as("l")
+      val b = evalPathGraphs(quads, r).as("r")
       a.join(b, col("l.dst") === col("r.src") && col("l.g") === col("r.g"))
         .select(col("l.g").as("g"), col("l.src").as("src"),
           col("r.dst").as("dst"))
-    case PPlus(q) =>
-      transitiveClosureGraphs(evalPathGraphs(quads, q, maxIter), maxIter)
+    case PPlus(q) => transitiveClosureGraphs(evalPathGraphs(quads, q))
     case PStar(q) =>
       zeroHopGraphs(quads)
-        .unionByName(
-          transitiveClosureGraphs(evalPathGraphs(quads, q, maxIter), maxIter))
+        .unionByName(transitiveClosureGraphs(evalPathGraphs(quads, q)))
         .distinct()
     case POpt(q) =>
-      zeroHopGraphs(quads).unionByName(evalPathGraphs(quads, q, maxIter))
-        .distinct()
+      zeroHopGraphs(quads).unionByName(evalPathGraphs(quads, q)).distinct()
     case PNps(fwd, inv) =>
       val parts =
         (if (fwd.isEmpty) Nil

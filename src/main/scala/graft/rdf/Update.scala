@@ -530,12 +530,14 @@ object Update {
     }
 
     private def quad(g: String): (String, String, String, String) =
-      (groundTerm(), groundTerm(), groundTerm(), g)
+      (groundTerm(), ground(verb()), groundTerm(), g)
 
     private def maybeDot(): Unit =
       if (toks.headOption.contains(".")) toks = toks.tail
 
-    private def groundTerm(): String = term() match {
+    private def groundTerm(): String = ground(term())
+
+    private def ground(t: Term): String = t match {
       case C(v) => v.toString
       case V(n) => throw new IllegalArgumentException(
         s"INSERT/DELETE DATA take ground terms only, got ?$n")
@@ -552,17 +554,24 @@ object Update {
           expectKw("GRAPH")
           val g = term()
           expect("{")
-          while (peek != "}") { out += ((TP(term(), term(), term()), g)); maybeDot() }
+          while (peek != "}") { out += ((TP(term(), verb(), term()), g)); maybeDot() }
           expect("}")
           maybeDot()
         } else {
-          out += ((TP(term(), term(), term()), C(Quads.DefaultGraph)))
+          out += ((TP(term(), verb(), term()), C(Quads.DefaultGraph)))
           maybeDot()
         }
       }
       expect("}")
       out.toSeq
     }
+
+    /** A predicate: `a` abbreviates rdf:type in verb position (grammar
+      * rule 106), as in the query parser. */
+    private def verb(): Term =
+      if (peek == "a") {
+        next(); C("http://www.w3.org/1999/02/22-rdf-syntax-ns#type")
+      } else term()
 
     /** A single RDF term (no lists/paths — update blocks are flat). */
     private def term(): Term = {

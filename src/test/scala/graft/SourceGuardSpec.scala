@@ -5,7 +5,9 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-level guards for the persisted-store design: one place decides
   * where roots live, and the build-once store modules keep no private
   * handle cache of their own (those go through `AtomicStore.opened`,
-  * which re-checks the root's publish token on every hit). */
+  * which re-checks the root's publish token on every hit). Also for the
+  * fixpoints: no round cap, and the path closures' rounds all run
+  * through `Materialize.semiNaive`. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val main = new java.io.File("src/main/scala/graft")
@@ -40,5 +42,28 @@ class SourceGuardSpec extends AnyFunSuite {
     }
     assert(offenders.isEmpty,
       s"per-module handle caches are back in: ${offenders.mkString(", ")}")
+  }
+
+  test("no fixpoint loop carries a round cap") {
+    val capped = sources(main).filter(f => text(f).contains("maxIter")).map(rel)
+    assert(capped.isEmpty, s"round caps are back in: ${capped.mkString(", ")}")
+  }
+
+  test("every Paths round runs through the shared semi-naive driver") {
+    val paths = new java.io.File(main, "rdf/Paths.scala")
+    assert(paths.isFile, "rdf/Paths.scala moved — update this guard")
+    assert(!text(paths).contains("while ("),
+      "rdf/Paths.scala runs its own round loop")
+  }
+
+  test("rdf/ reaches into llm/ only for connected components") {
+    val rdf = sources(new java.io.File(main, "rdf"))
+    assert(rdf.nonEmpty)
+    val users = rdf.filter(f => text(f).contains("graft.llm")).map(rel)
+    assert(users === Seq("rdf/GraphOps.scala", "rdf/Owl.scala"))
+    val other = rdf.flatMap(f =>
+      "graft\\.llm\\.[\\w.]+".r.findAllIn(text(f)).toSeq)
+      .filterNot(_ == "graft.llm.Dedup.connectedComponents")
+    assert(other.isEmpty, s"rdf/ uses more of llm/: ${other.mkString(", ")}")
   }
 }

@@ -2745,6 +2745,14 @@ class SparqlSpec extends SparkSpec {
     // idempotent: nothing more to drop
     assert(QuadStore.vacuum(root, keep = 2) === Seq.empty)
 
+    // `a` abbreviates rdf:type in predicate position, as in queries
+    val rdfType = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
+    assert(Update.parse("INSERT DATA { <s> a <C> . }") ===
+      Update.InsertData(Seq(("s", rdfType, "C", Quads.DefaultGraph))))
+    assert(Update.parse("DELETE WHERE { ?s a <C> }") ===
+      Update.DeleteWhere(
+        Seq((TP(V("s"), C(rdfType), C("C")), C(Quads.DefaultGraph)))))
+
     // out-of-fragment updates reject loudly
     intercept[IllegalArgumentException](
       Update.parse("""INSERT DATA { ?s <p> "x" . }"""))
