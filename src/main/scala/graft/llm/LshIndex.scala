@@ -2,6 +2,7 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.sources.SegmentedStore
 
 /** A PERSISTED, APPENDABLE MinHash-LSH index — the near-dup complement
   * of the Bloom-filter exact-dedup ingest path
@@ -13,24 +14,14 @@ import org.apache.spark.sql.functions._
   * 100 TB corpus by probing buckets — never recomputing the corpus's
   * signatures, never self-joining it.
   *
-  * Layout under `root`: `seg00001`, `seg00002`, … — one immutable
-  * segment per [[build]]/[[append]], each holding `bands` (band, bh,
-  * doc_id) and `sigs` (doc_id, sig[64]) parquet — plus at most one live
-  * `baseNNNNN`, the fold [[compact]] publishes. Readers take the highest
-  * complete base and every segment numbered ABOVE it; a crashed write
-  * leaves an unmarked directory that readers never see and a retry
-  * completes idempotently (the AtomicStore contract shared by every
-  * persisted artifact in this engine).
-  *
+  * Layout under `root`: one immutable segment per [[build]]/[[append]],
+  * each holding `bands` (band, bh, doc_id) and `sigs` (doc_id, sig[64])
+  * parquet, plus the base [[compact]] folds them into — the
+  * [[graft.sources.SegmentedStore]] contract: which entries readers
+  * fold, how a batch is numbered, and publish-then-drop compaction (a
+  * crash between the two leaves a larger-but-consistent index).
   * Without compaction each ingest batch adds one segment to every
-  * probe's union forever — the same unbounded-plan-growth defect
-  * [[graft.rdf.EncodedMirror.compact]] solves for the mirror, with the
-  * same publish-then-drop discipline: the folded base lands (readers
-  * immediately prefer it, the covered segments become dead weight), the
-  * superseded entries are deleted after, so a crash between the two
-  * leaves a larger-but-consistent index. A batch appended concurrently
-  * with a compaction numbers above the fold ([[append]] counts bases)
-  * and survives it untouched.
+  * probe's union forever.
   *
   * Probing estimates Jaccard as the fraction of agreeing minhash
   * components (the unbiased MinHash estimator, ±1/√64 ≈ 0.125 std at
@@ -45,34 +36,6 @@ import org.apache.spark.sql.functions._
   */
 object LshIndex {
 
-  private val SegRe = "seg(\\d{5,})".r
-  private val BaseRe = "base(\\d{5,})".r
-
-  private def segPath(root: String, n: Int) = f"$root%s/seg$n%05d"
-  private def basePath(root: String, n: Int) = f"$root%s/base$n%05d"
-
-  private def complete(root: String, re: scala.util.matching.Regex) =
-    graft.sources.AtomicStore.list(root).flatMap { f =>
-      f.getPath.getName match {
-        case re(n)
-          if graft.sources.AtomicStore.isComplete(f.getPath.toString) =>
-            Some(n.toInt)
-        case _ => None
-      }
-    }.sorted
-
-  private def segments(root: String): Seq[Int] = complete(root, SegRe)
-  private def bases(root: String): Seq[Int] = complete(root, BaseRe)
-
-  /** The entries a reader folds RIGHT NOW: the highest complete base (if
-    * any) plus the segments numbered above it — superseded entries a
-    * crashed compaction left behind are invisible. */
-  private def liveEntries(root: String): Seq[String] = {
-    val b = bases(root).maxOption
-    b.map(basePath(root, _)).toSeq ++
-      segments(root).filter(n => b.forall(n > _)).map(segPath(root, _))
-  }
-
   private def writeSegment(docs: DataFrame, dest: String,
       sign: Int = 1): Unit =
     graft.sources.AtomicStore.materialize(dest) { tmp =>
@@ -83,27 +46,24 @@ object LshIndex {
           s"${Dedup.Rows})))")).as(Seq("band", "bh")))
       banded.withColumn("sign", lit(sign)).write.parquet(s"$tmp/bands")
       sigs.withColumn("sign", lit(sign)).write.parquet(s"$tmp/sigs")
-      if (sign < 0) graft.sources.SegmentedStore.flagSigned(tmp)
+      if (sign < 0) SegmentedStore.flagSigned(tmp)
       sigs.unpersist(): Unit
     }
 
   /** Index a corpus from scratch as segment 1. Idempotent per root. */
   def build(docs: DataFrame, root: String): Unit =
-    writeSegment(docs, segPath(root, 1))
+    writeSegment(docs, SegmentedStore.segPath(root, 1))
 
   /** Live entry count — a compacted base counts as 1 (0 = no index
     * yet). This is the depth of every probe's union fold. */
-  def segmentCount(root: String): Int = liveEntries(root).size
+  def segmentCount(root: String): Int = SegmentedStore.liveCount(root)
 
   /** Index an ARRIVING batch as the next segment — the corpus's existing
     * segments are untouched (their signatures never recompute). The
-    * batch should already be registered under corpus-unique doc_ids.
-    * Numbering counts BASES too: after a compaction folded seg 1..k into
-    * base k, the next batch must land at k+1 (a reused low number would
-    * sit below the base and be invisible to readers). */
+    * batch should already be registered under corpus-unique doc_ids. */
   def append(docs: DataFrame, root: String): Int = {
-    val n = (segments(root) ++ bases(root)).maxOption.getOrElse(0) + 1
-    writeSegment(docs, segPath(root, n))
+    val n = SegmentedStore.nextN(root)
+    writeSegment(docs, SegmentedStore.segPath(root, n))
     n
   }
 
@@ -114,16 +74,16 @@ object LshIndex {
     * a retracted doc stops seeding candidates without touching any
     * existing segment. */
   def remove(docs: DataFrame, root: String): Int = {
-    val n = (segments(root) ++ bases(root)).maxOption.getOrElse(0) + 1
-    writeSegment(docs, segPath(root, n), sign = -1)
+    val n = SegmentedStore.nextN(root)
+    writeSegment(docs, SegmentedStore.segPath(root, n), sign = -1)
     n
   }
 
   private def readAll(spark: SparkSession, root: String,
       name: String): DataFrame = {
-    val live = liveEntries(root)
+    val live = SegmentedStore.liveEntries(root)
     require(live.nonEmpty, s"no LSH index under $root — build() first")
-    graft.sources.SegmentedStore.readFolded(spark, live, name).drop("sign")
+    SegmentedStore.readFolded(spark, live, name).drop("sign")
   }
 
   /** The doc_ids currently indexed (live net fold — a removed doc is
@@ -133,32 +93,18 @@ object LshIndex {
     readAll(spark, root, "sigs").select("doc_id").distinct()
 
   /** Fold every live entry into ONE new base, then drop the superseded
-    * entries — the index's vacuum, [[graft.rdf.EncodedMirror.compact]]'s
-    * publish-then-drop discipline. Probe results are identical before
-    * and after (the fold is a plain union of immutable rows; LshIndexSpec
-    * pins it). Returns the live entry count after (1, or 0-cost no-op
-    * when already single-entry). */
-  def compact(spark: SparkSession, root: String): Int = {
-    val live = liveEntries(root)
-    require(live.nonEmpty, s"no LSH index under $root — build() first")
-    if (live.size <= 1) return live.size
-    val top = (segments(root) ++ bases(root)).max
-    graft.sources.AtomicStore.materialize(basePath(root, top)) { tmp =>
+    * entries — the index's vacuum ([[SegmentedStore.compactWith]]).
+    * Probe results are identical before and after (the fold is a plain
+    * union of immutable rows; LshIndexSpec pins it). Returns the live
+    * entry count after (1, or a no-op when already single-entry). */
+  def compact(spark: SparkSession, root: String): Int =
+    SegmentedStore.compactWith(root) { (live, tmp) =>
       // the read fold's net rows — removed docs leave the artifact here
-      graft.sources.SegmentedStore.readFolded(spark, live, "bands")
+      SegmentedStore.readFolded(spark, live, "bands")
         .write.parquet(s"$tmp/bands")
-      graft.sources.SegmentedStore.readFolded(spark, live, "sigs")
+      SegmentedStore.readFolded(spark, live, "sigs")
         .write.parquet(s"$tmp/sigs")
     }
-    // the new base is published — everything at or below its number is
-    // dead weight to readers; delete segments ≤ top and older bases.
-    // A segment appended AFTER the fold started numbers > top and stays.
-    segments(root).filter(_ <= top).foreach(n =>
-      graft.sources.AtomicStore.delete(segPath(root, n)))
-    bases(root).filter(_ < top).foreach(n =>
-      graft.sources.AtomicStore.delete(basePath(root, n)))
-    liveEntries(root).size
-  }
 
   /** Compact when the fold depth exceeds `maxSegments` — the retention
     * policy an ingest loop calls after each [[append]], keeping probe

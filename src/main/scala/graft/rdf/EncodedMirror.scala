@@ -18,13 +18,13 @@ import org.apache.spark.sql.functions._
   *    last synced version and the head — O(|delta|), computed from the
   *    delta segments without rescanning the base) into ONE encoded
   *    segment of (sid,pid,oid,gid,op) rows plus one dictionary segment of
-  *    genuinely-new terms. Segments are AtomicStore-published and carry
-  *    their COVERAGE in the name: a bootstrap/compaction writes a base
-  *    `b{v}` (the full state at v), an incremental sync writes
-  *    `s{from}_{to}` — so a replayed or crashed sync is a no-op, and a
-  *    pathological race of two syncers that observed different `from`
-  *    versions produces a detectably NON-CONTIGUOUS chain that [[encoded]]
-  *    rejects loudly instead of silently resurrecting deleted quads.
+  *    genuinely-new terms. The encoded segments under `enc/` are one
+  *    [[graft.sources.VersionChain]]: a bootstrap/compaction writes a
+  *    base (the full state at v), an incremental sync a coverage-named
+  *    segment, so a replayed or crashed sync is a no-op and two racing
+  *    syncers leave a chain [[encoded]] rejects loudly instead of
+  *    silently resurrecting deleted quads. The dictionary under `dict/`
+  *    is append-only, one `s{v}` per dictionary-growing sync.
   *  - [[encoded]] reads the newest base plus the later segments with the
   *    same constant-depth last-op-per-quad fold as the store's flat
   *    replay.
@@ -37,38 +37,25 @@ import org.apache.spark.sql.functions._
   */
 object EncodedMirror {
 
+  import graft.sources.VersionChain.Rows
+
   private def encDir(root: String) = s"$root/enc"
   private def dictDir(root: String) = s"$root/dict"
-  private def basePath(dir: String, v: Int) = f"$dir%s/b$v%05d"
-  private def segPath(dir: String, from: Int, to: Int) =
-    f"$dir%s/s$from%05d" + f"_$to%05d"
   private def dictSegPath(dir: String, v: Int) = f"$dir%s/s$v%05d"
-  // {5,}: %05d PADS to five digits but grows past them at version
-  // 100000 — an exact-width match would silently ignore newer segments,
-  // freezing lastSynced and serving stale data with no error
-  private val BaseRe = "b(\\d{5,})".r
-  private val SegRe = "s(\\d{5,})_(\\d{5,})".r
   private val DictRe = "s(\\d{5,})".r
 
-  /** Complete (kind, from, to) entries under enc/: bases as (b, v, v). */
-  private def entries(root: String): Seq[(String, Int, Int)] =
-    graft.sources.AtomicStore.list(encDir(root)).flatMap { f =>
-      val complete =
-        () => graft.sources.AtomicStore.isComplete(f.getPath.toString)
-      f.getPath.getName match {
-        case BaseRe(v) if complete() => Some(("b", v.toInt, v.toInt))
-        case SegRe(a, b) if complete() => Some(("s", a.toInt, b.toInt))
-        case _ => None
-      }
+  /** Complete dictionary segments as (version, listed path). */
+  private def dictSegs(root: String): Seq[(Int, String)] =
+    graft.sources.AtomicStore.listComplete(dictDir(root)) {
+      case DictRe(v) => v.toInt
     }
 
   /** Highest store version folded into the mirror (0 = never synced). */
-  def lastSynced(root: String): Int =
-    entries(root).map(_._3).maxOption.getOrElse(0)
+  def lastSynced(root: String): Int = Rows.lastSynced(encDir(root))
 
   /** Live segment count (bases + deltas) — the fold width a maintenance
     * job bounds with [[compact]]. */
-  def segmentCount(root: String): Int = entries(root).size
+  def segmentCount(root: String): Int = Rows.segmentCount(encDir(root))
 
   /** Fold the store's changes since the last sync into the mirror;
     * returns the store version the mirror now reflects. Idempotent and
@@ -107,8 +94,8 @@ object EncodedMirror {
     graft.Materialize.release(newTerms)
     val full = dict(spark, root)
     val dest =
-      if (last == 0) basePath(encDir(root), cur)
-      else segPath(encDir(root), last, cur)
+      if (last == 0) Rows.basePath(encDir(root), cur)
+      else Rows.segPath(encDir(root), last, cur)
     graft.sources.AtomicStore.materialize(dest) { tmp =>
       Dictionary.encodeQuads(adds, full).withColumn("op", lit("a"))
         .unionByName(
@@ -132,11 +119,8 @@ object EncodedMirror {
 
   /** The mirror's dictionary: union of the append-only segments. */
   def dict(spark: SparkSession, root: String): DataFrame = {
-    val segs = graft.sources.AtomicStore.list(dictDir(root)).collect {
-      case f if DictRe.matches(f.getPath.getName) &&
-        graft.sources.AtomicStore.isComplete(f.getPath.toString) =>
-        graft.sources.AtomicStore.readParquet(spark, f.getPath.toString)
-    }
+    val segs = dictSegs(root).map(e =>
+      graft.sources.AtomicStore.readParquet(spark, e._2))
     if (segs.isEmpty)
       spark.range(0).select(col("id").cast("string").as("term"), col("id"))
     else segs.reduce(_.unionByName(_)).distinct()
@@ -144,11 +128,9 @@ object EncodedMirror {
 
   /** The mirror's CURRENT id-quads (sid,pid,oid,gid): the newest base
     * plus the later segments, folded last-op-per-quad — same
-    * constant-depth shape as the store's flat replay. The segment chain
-    * above the base must be CONTIGUOUS (each `from` equals the previous
-    * `to`); a gap or overlap means two syncers raced with different
-    * views and is rejected loudly (delete the mirror and resync) rather
-    * than silently resurrecting deleted quads. */
+    * constant-depth shape as the store's flat replay. A gapped or
+    * overlapping chain (two syncers raced) is rejected loudly: delete
+    * the mirror and resync. */
   def encoded(spark: SparkSession, root: String): DataFrame =
     encodedAt(spark, root, lastSynced(root))
 
@@ -171,39 +153,16 @@ object EncodedMirror {
       where: Option[Column]): DataFrame = {
     val keys = Seq("sid", "pid", "oid", "gid")
     val pre = (df: DataFrame) => where.fold(df)(df.filter)
-    val es = entries(root)
-    require(es.nonEmpty, s"no synced mirror under $root — sync() first")
-    val base = es.collect { case ("b", _, t) if t <= v => t }
-      .maxOption.getOrElse(throw new IllegalStateException(
-        s"mirror under $root has no base at or below $v — compacted " +
-          "past it? sync consumers before compact()"))
-    val chain = es.filter(e => e._1 == "s" && e._3 > base && e._3 <= v)
-      .sortBy(_._3)
-    require(chain.lastOption.map(_._3).getOrElse(base) == v,
-      s"mirror chain under $root does not reach $v — not a synced " +
-        "version boundary")
-    chain.foldLeft(base) { case (prev, (_, from, to)) =>
-      require(from == prev,
-        s"non-contiguous mirror chain under $root: segment s$from-$to " +
-          s"follows version $prev — racing syncs? delete the mirror and " +
-          "resync from the store")
-      to
-    }: Unit
+    val link = Rows.at(encDir(root), v)
+    val frames = Rows.frames(spark, encDir(root), link).map(pre)
     // an empty chain (fresh bootstrap, or right after compact) means the
     // base IS the state — it's adds-only by construction, so the
     // last-op-per-quad fold would be a store-wide shuffle computing the
     // identity; skip it
-    if (chain.isEmpty)
-      return pre(graft.sources.AtomicStore.readParquet(spark, basePath(encDir(root), base)))
-        .select(keys.map(col): _*)
-    val frames =
-      pre(graft.sources.AtomicStore.readParquet(spark, basePath(encDir(root), base)))
-        .withColumn("__seq", lit(base)) +:
-      chain.map { case (_, from, to) =>
-        pre(graft.sources.AtomicStore.readParquet(spark, segPath(encDir(root), from, to)))
-          .withColumn("__seq", lit(to))
-      }
-    frames.reduce(_.unionByName(_))
+    if (link.segs.isEmpty) return frames.head.select(keys.map(col): _*)
+    frames.zip(link.base +: link.segs.map(_._2))
+      .map { case (df, t) => df.withColumn("__seq", lit(t)) }
+      .reduce(_.unionByName(_))
       .groupBy(keys.map(col): _*)
       .agg(max(struct(col("__seq"),
         when(col("op") === "a", lit(1)).otherwise(lit(0)).as("__rank")))
@@ -233,21 +192,10 @@ object EncodedMirror {
     val pre = (df: DataFrame) => where.fold(df)(df.filter)
     val cur = lastSynced(root)
     require(cur > from, s"nothing to fold: mirror at $cur, from=$from")
-    val segs = entries(root)
-      .filter(e => e._1 == "s" && e._2 >= from && e._3 > from)
-      .sortBy(_._3)
-    segs.foldLeft(from) { case (at, (_, f, t)) =>
-      require(f == at, s"mirror segments under $root do not cover " +
-        s"$from..$cur contiguously (s$f..$t after $at) — compacted " +
-        "past a consumer's sync point? sync consumers before compact()")
-      t
-    }: Unit
-    require(segs.lastOption.exists(_._3 == cur),
-      s"mirror segments under $root stop before $cur")
-    val folded = segs.map { case (_, f, t) =>
-        pre(graft.sources.AtomicStore.readParquet(spark, segPath(encDir(root), f, t)))
-          .withColumn("__seq", lit(t))
-      }.reduce(_.unionByName(_))
+    val segs = Rows.since(encDir(root), from)
+    val folded = Rows.segFrames(spark, encDir(root), segs).zip(segs)
+      .map { case (df, (_, t)) => pre(df).withColumn("__seq", lit(t)) }
+      .reduce(_.unionByName(_))
       .groupBy(keys.map(col): _*)
       .agg(max(struct(col("__seq"),
         when(col("op") === "a", lit(1)).otherwise(lit(0)).as("__rank")))
@@ -272,26 +220,15 @@ object EncodedMirror {
     * last-synced version, then drop the superseded entries — the
     * mirror's vacuum. Run it on the same maintenance cadence as the
     * store's [[QuadStore.vacuum]]; without it each sync adds one (cheap,
-    * constant-depth) segment to every read's fold forever. Ordering
-    * makes every intermediate state readable: the new base is
-    * marker-published FIRST (readers immediately prefer it, old entries
-    * become dead weight), the old entries are deleted after — a crash
-    * between the two leaves a larger-but-consistent mirror. */
+    * constant-depth) segment to every read's fold forever. Publish-
+    * then-prune ([[graft.sources.VersionChain.compact]]), for the
+    * dictionary too. */
   def compact(spark: SparkSession, root: String): Int = {
     val last = lastSynced(root)
     require(last > 0, s"no synced mirror under $root — sync() first")
-    val es = entries(root)
-    if (es.size <= 1) return last
-    val state = encoded(spark, root).withColumn("op", lit("a"))
-    graft.sources.AtomicStore.materialize(basePath(encDir(root), last))(
-      tmp => state.write.parquet(tmp))
-    es.foreach {
-      case ("b", v, _) if v < last =>
-        graft.sources.AtomicStore.delete(basePath(encDir(root), v))
-      case ("s", from, to) if to <= last =>
-        graft.sources.AtomicStore.delete(segPath(encDir(root), from, to))
-      case _ => ()
-    }
+    if (segmentCount(root) <= 1) return last
+    Rows.compact(encDir(root), last)(tmp =>
+      encoded(spark, root).withColumn("op", lit("a")).write.parquet(tmp))
     // fold the dictionary segments too, publish-then-drop: the folded
     // union lands at s{last} FIRST, the superseded segments go after, so
     // every intermediate state is a superset of the encoded terms
@@ -305,23 +242,15 @@ object EncodedMirror {
     // deleting it would silently orphan its encoded rows. Folding is
     // skipped when s{last} already exists (a new-terms sync at exactly
     // `last`) — rare, since steady-state syncs write no dict segment.
-    val dictSegs = graft.sources.AtomicStore.list(dictDir(root)).flatMap {
-      f => f.getPath.getName match {
-        case DictRe(n)
-          if n.toInt <= last &&
-            graft.sources.AtomicStore.isComplete(f.getPath.toString) =>
-          Some(n.toInt -> f.getPath.toString)
-        case _ => None
-      }
-    }
-    if (dictSegs.size > 1 && !dictSegs.exists(_._1 == last)) {
-      val folded = dictSegs.map(e => graft.sources.AtomicStore.readParquet(spark, e._2))
+    val folding = dictSegs(root).filter(_._1 <= last)
+    if (folding.size > 1 && !folding.exists(_._1 == last)) {
+      val folded = folding
+        .map(e => graft.sources.AtomicStore.readParquet(spark, e._2))
         .reduce(_.unionByName(_)).distinct()
       graft.sources.AtomicStore.materialize(
         dictSegPath(dictDir(root), last))(
         tmp => folded.write.parquet(tmp))
-      dictSegs.filter(_._1 != last).foreach(e =>
-        graft.sources.AtomicStore.delete(e._2))
+      folding.foreach(e => graft.sources.AtomicStore.delete(e._2))
     }
     last
   }

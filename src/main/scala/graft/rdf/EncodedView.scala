@@ -13,10 +13,10 @@ import org.apache.spark.sql.functions._
   * decode only at emission ([[readDecoded]]).
   *
   * Same lifecycle contracts as [[ViewStore]]: one-shot armored
-  * definition, coverage-named segments, contiguity-gated reads,
-  * compaction — plus the mirror-side retention rule: sync views BEFORE
-  * compacting the mirror (a pruned change range fails loudly in
-  * `changesSince`, never a silently stale view).
+  * definition, and the view and its summaries each one
+  * [[graft.sources.VersionChain]] — plus the mirror-side retention
+  * rule: sync views BEFORE compacting the mirror (a pruned change range
+  * fails loudly in `changesSince`, never a silently stale view).
   *
   * Pattern constants encode as `xxhash64(term)` — the mirror's PURE id
   * function — so encoding a definition needs no dictionary read, and a
@@ -24,48 +24,15 @@ import org.apache.spark.sql.functions._
   */
 object EncodedView {
 
-  private def basePath(root: String, v: Int) = f"$root%s/b$v%05d"
-  private def segPath(root: String, from: Int, to: Int) =
-    f"$root%s/s$from%05d" + f"_$to%05d"
-  // {5,}: %05d pads to five digits but grows past them at version
-  // 100000 — exact-width would silently freeze the fold
-  private val BaseRe = "b(\\d{5,})".r
-  private val SegRe = "s(\\d{5,})_(\\d{5,})".r
-
-  private def entries(root: String): Seq[(String, Int, Int)] =
-    graft.sources.AtomicStore.list(root).flatMap { f =>
-      val complete =
-        () => graft.sources.AtomicStore.isComplete(f.getPath.toString)
-      f.getPath.getName match {
-        case BaseRe(v) if complete() => Some(("b", v.toInt, v.toInt))
-        case SegRe(a, b) if complete() => Some(("s", a.toInt, b.toInt))
-        case _ => None
-      }
-    }
+  import graft.sources.VersionChain.Rows
+  import MetaCodec._
 
   /** Highest mirror version the view reflects (0 = never created). */
-  def lastSynced(root: String): Int =
-    entries(root).map(_._3).maxOption.getOrElse(0)
+  def lastSynced(root: String): Int = Rows.lastSynced(root)
 
-  def segmentCount(root: String): Int = entries(root).size
+  def segmentCount(root: String): Int = Rows.segmentCount(root)
 
   // ---- definition metadata (string-space, shared with ViewStore) -----
-
-  private def b64(s: String): String =
-    java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
-  private def unb64(s: String): String =
-    new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
-  private def termEnc(t: Term): String = t match {
-    case V(n) => "V:" + b64(n)
-    case C(v: String) => "C:" + b64(v)
-    case C(other) => throw new IllegalArgumentException(
-      s"definitions are STRING patterns (ids derive by hash), got $other")
-  }
-  private def termDec(s: String): Term = s.splitAt(2) match {
-    case ("V:", b) => V(unb64(b))
-    case ("C:", b) => C(unb64(b))
-    case _ => throw new IllegalArgumentException(s"bad term encoding: $s")
-  }
 
   private def writeMeta(root: String, graph: String,
       patterns: Seq[TP]): Unit = {
@@ -142,7 +109,7 @@ object EncodedView {
     // difference between slice-sized and mirror-sized work each time
     val old = graft.Materialize(slice(EncodedMirror.encodedAt(spark,
       mirrorRoot, cur, Some(col("gid") === gid)), gid))
-    try graft.sources.AtomicStore.materialize(basePath(viewRoot, cur)) {
+    try graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) {
       tmp => BgpView.compute(old, enc).write.parquet(tmp)
     } finally graft.Materialize.release(old)
     cur
@@ -181,33 +148,11 @@ object EncodedView {
         slice(dels, gid), enc)
       val segment = va.withColumn("__op", lit("a"))
         .unionByName(vd.withColumn("__op", lit("d")))
-      graft.sources.AtomicStore.materialize(segPath(viewRoot, last, cur)) {
+      graft.sources.AtomicStore.materialize(Rows.segPath(viewRoot, last, cur)) {
         tmp => segment.write.parquet(tmp)
       }
     } finally graft.Materialize.release(old)
     cur
-  }
-
-  /** Newest base ≤ v + the contiguous segments reaching exactly v —
-    * loud on gaps/overlaps, on a compaction that rewrote past v, and
-    * on a v no sync landed on. */
-  private def chainAt(root: String, v: Int): (Int, Seq[(Int, Int)]) = {
-    val es = entries(root)
-    require(es.nonEmpty, s"no view under $root")
-    val baseV = es.collect { case ("b", b, _) if b <= v => b }
-      .maxOption.getOrElse(throw new IllegalArgumentException(
-        s"no view base at or below $v under $root — compacted past it?"))
-    val segs = es.collect {
-      case ("s", f, t) if t > baseV && t <= v => (f, t)
-    }.sortBy(_._2)
-    val reached = segs.foldLeft(baseV) { case (at, (f, t)) =>
-      require(f == at, s"view chain gap under $root: segment s$f..$t " +
-        s"does not extend $at — concurrent syncs? rebuild with create()")
-      t
-    }
-    require(reached == v, s"$v is not a synced boundary of $root " +
-      s"(chain reaches $reached)")
-    (baseV, segs)
   }
 
   /** The maintained ID-BINDING view: base + segments, one
@@ -217,23 +162,8 @@ object EncodedView {
 
   /** TIME-TRAVEL id read: the view at pinned mirror version `v`
     * (the [[ViewStore.readAt]] contract, in id space). */
-  def readAt(spark: SparkSession, viewRoot: String, v: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (baseV, segs) = chainAt(viewRoot, v)
-    val base = graft.sources.AtomicStore.readParquet(spark, basePath(viewRoot, baseV))
-    if (segs.isEmpty) return base
-    val cols = base.columns.toSeq
-    val all = base.withColumn("__v", lit(baseV))
-      .withColumn("__op", lit("a"))
-      .unionByName(segs.map { case (f, t) =>
-        graft.sources.AtomicStore.readParquet(spark, segPath(viewRoot, f, t)).withColumn("__v", lit(t))
-      }.reduce(_.unionByName(_)))
-    val w = Window.partitionBy(cols.map(col): _*)
-      .orderBy(col("__v").desc)
-    all.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1 && col("__op") === "a")
-      .select(cols.map(col): _*)
-  }
+  def readAt(spark: SparkSession, viewRoot: String, v: Int): DataFrame =
+    Rows.foldLastOp(spark, viewRoot, Rows.at(viewRoot, v))
 
   /** [[read]] decoded at emission through the mirror's dictionary —
     * the only place term strings appear. One join per binding column
@@ -251,24 +181,11 @@ object EncodedView {
     }.select(cols.map(col): _*)
   }
 
-  /** Fold everything into a fresh base at the synced head — publish
-    * first, then drop the subsumed entries (every intermediate state
-    * reads consistently). */
-  def compact(spark: SparkSession, viewRoot: String): Unit = {
-    val before = entries(viewRoot)
-    val head = lastSynced(viewRoot)
-    val baseV = before.collect { case ("b", v, _) => v }.max
-    if (head > baseV)
-      graft.sources.AtomicStore.materialize(basePath(viewRoot, head)) {
-        tmp => read(spark, viewRoot).write.parquet(tmp)
-      }
-    before.filter { case (k, _, t) => t < head || k == "s" }.foreach {
-      case ("b", v, _) =>
-        graft.sources.AtomicStore.delete(basePath(viewRoot, v))
-      case (_, f, t) =>
-        graft.sources.AtomicStore.delete(segPath(viewRoot, f, t))
-    }
-  }
+  /** Fold everything into a fresh base at the synced head
+    * ([[graft.sources.VersionChain.compact]]). */
+  def compact(spark: SparkSession, viewRoot: String): Unit =
+    Rows.compact(viewRoot, lastSynced(viewRoot))(tmp =>
+      read(spark, viewRoot).write.parquet(tmp))
 
   def compactIfDeep(spark: SparkSession, viewRoot: String,
       maxChain: Int = 8): Boolean =
@@ -306,7 +223,7 @@ object EncodedView {
     require(!groupVars.contains(countCol),
       "the count column must not collide with a group variable")
     writeMetaAgg(aggRoot, groupVars, countCol)
-    graft.sources.AtomicStore.materialize(basePath(aggRoot, v)) { tmp =>
+    graft.sources.AtomicStore.materialize(Rows.basePath(aggRoot, v)) { tmp =>
       read(spark, viewRoot).groupBy(groupVars.map(col): _*)
         .agg(count(lit(1)).as(countCol)).write.parquet(tmp)
     }
@@ -326,26 +243,14 @@ object EncodedView {
     require(aggLast > 0, s"no summary under $aggRoot — createAgg() first")
     val viewLast = lastSynced(viewRoot)
     if (viewLast <= aggLast) return aggLast
-    val vsegs = entries(viewRoot)
-      .collect { case ("s", f, t) if f >= aggLast => (f, t) }.sortBy(_._2)
-    val covered = vsegs.foldLeft(aggLast) { case (at, (f, t)) =>
-      require(f == at, s"view segment chain gap above $aggLast under " +
-        s"$viewRoot: s$f..$t does not extend $at")
-      t
-    }
-    require(covered == viewLast,
-      s"view segments cover $aggLast..$covered but the view is at " +
-        s"$viewLast — compacted past the summary's last sync? syncAgg " +
-        "before compact(view), or rebuild with createAgg()")
+    val vsegs = Rows.since(viewRoot, aggLast)
     val sgn = when(col("__op") === "a", 1L).otherwise(-1L)
-    val delta = vsegs.map { case (f, t) =>
-        graft.sources.AtomicStore.readParquet(spark, segPath(viewRoot, f, t))
-      }.reduce(_.unionByName(_))
+    val delta = Rows.segFrames(spark, viewRoot, vsegs).reduce(_.unionByName(_))
       .select(gv.map(col) :+ sgn.as("__sgn"): _*)
       .groupBy(gv.map(col): _*).agg(sum("__sgn").as(countCol))
       .filter(col(countCol) =!= 0L)
     graft.sources.AtomicStore.materialize(
-      segPath(aggRoot, aggLast, viewLast)) { tmp =>
+      Rows.segPath(aggRoot, aggLast, viewLast)) { tmp =>
       delta.write.parquet(tmp)
     }
     viewLast
@@ -355,9 +260,7 @@ object EncodedView {
     * per group over summary-sized frames. */
   def readAgg(spark: SparkSession, aggRoot: String): DataFrame = {
     val (gv, countCol) = definitionAgg(aggRoot)
-    val (baseV, segs) = chainAt(aggRoot, lastSynced(aggRoot))
-    (graft.sources.AtomicStore.readParquet(spark, basePath(aggRoot, baseV)) +:
-      segs.map { case (f, t) => graft.sources.AtomicStore.readParquet(spark, segPath(aggRoot, f, t)) })
+    Rows.frames(spark, aggRoot, Rows.at(aggRoot, lastSynced(aggRoot)))
       .reduce(_.unionByName(_))
       .groupBy(gv.map(col): _*).agg(sum(countCol).as(countCol))
       .filter(col(countCol) =!= 0L)
@@ -378,21 +281,9 @@ object EncodedView {
   }
 
   /** Fold the summary chain into a fresh base at its synced head. */
-  def compactAgg(spark: SparkSession, aggRoot: String): Unit = {
-    val before = entries(aggRoot)
-    val head = lastSynced(aggRoot)
-    val baseV = before.collect { case ("b", v, _) => v }.max
-    if (head > baseV)
-      graft.sources.AtomicStore.materialize(basePath(aggRoot, head)) {
-        tmp => readAgg(spark, aggRoot).write.parquet(tmp)
-      }
-    before.filter { case (k, _, t) => t < head || k == "s" }.foreach {
-      case ("b", v, _) =>
-        graft.sources.AtomicStore.delete(basePath(aggRoot, v))
-      case (_, f, t) =>
-        graft.sources.AtomicStore.delete(segPath(aggRoot, f, t))
-    }
-  }
+  def compactAgg(spark: SparkSession, aggRoot: String): Unit =
+    Rows.compact(aggRoot, lastSynced(aggRoot))(tmp =>
+      readAgg(spark, aggRoot).write.parquet(tmp))
 
   def compactAggIfDeep(spark: SparkSession, aggRoot: String,
       maxChain: Int = 8): Boolean =

@@ -20,11 +20,9 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object ViewCatalog {
 
+  import MetaCodec.{b64, unb64}
+
   private def file(root: String) = s"$root/catalog.tsv"
-  private def b64(s: String): String =
-    java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
-  private def unb64(s: String): String =
-    new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
 
   /** Registered view roots, registration order, deduplicated. */
   def roots(catalogRoot: String): Seq[String] =

@@ -4,18 +4,17 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** A PERSISTED materialized BGP view kept in sync with a delta-log
-  * [[QuadStore]] — [[BgpView]]'s delta-join rule given the same
-  * operational lifecycle as [[EncodedMirror]]: coverage-named,
-  * AtomicStore-published segments, loud contiguity checks, and a
-  * compaction path.
+  * [[QuadStore]] — [[BgpView]]'s delta-join rule given a persisted
+  * lifecycle. The view, its summaries and a path view's edge sets are
+  * each one [[graft.sources.VersionChain]] (naming, contiguity checks,
+  * publish-then-prune compaction live there):
   *
-  * Layout under `viewRoot`:
   *  - `meta.tsv` — the view definition (graph slice + patterns),
-  *    written ONCE at [[create]]; lastSynced is derived from segment
+  *    written ONCE at [[create]]; lastSynced is derived from entry
   *    names, never from mutable metadata (crash-safe by construction).
-  *  - `b{v}` — a full view snapshot at store version v.
-  *  - `s{from}_{to}` — the view-level net change between store versions
-  *    (op 'a'/'d' rows over the binding columns).
+  *  - the `b`/`s` chain — full snapshots and the view-level net change
+  *    between store versions (op 'a'/'d' rows over the binding columns).
+  *  - the `e`/`es` chain (path views) — per-node edge sets, below.
   *
   * Scale shape: [[sync]] writes O(|Δview|) — the base view (which can be
   * corpus-sized) is folded at READ time with one constant-depth
@@ -30,51 +29,17 @@ import org.apache.spark.sql.functions._
   */
 object ViewStore {
 
-  private def basePath(root: String, v: Int) = f"$root%s/b$v%05d"
-  private def segPath(root: String, from: Int, to: Int) =
-    f"$root%s/s$from%05d" + f"_$to%05d"
-  // {5,}: %05d pads to five digits but grows past them at version
-  // 100000 — exact-width would silently freeze the fold (mirror lesson)
-  private val BaseRe = "b(\\d{5,})".r
-  private val SegRe = "s(\\d{5,})_(\\d{5,})".r
-
-  /** Complete (kind, from, to) entries, bases as (b, v, v). */
-  private def entries(root: String): Seq[(String, Int, Int)] =
-    graft.sources.AtomicStore.list(root).flatMap { f =>
-      val complete =
-        () => graft.sources.AtomicStore.isComplete(f.getPath.toString)
-      f.getPath.getName match {
-        case BaseRe(v) if complete() => Some(("b", v.toInt, v.toInt))
-        case SegRe(a, b) if complete() => Some(("s", a.toInt, b.toInt))
-        case _ => None
-      }
-    }
+  import graft.sources.VersionChain.{Edges, Rows}
+  import MetaCodec._
 
   /** Highest store version the view reflects (0 = never created). */
-  def lastSynced(root: String): Int =
-    entries(root).map(_._3).maxOption.getOrElse(0)
+  def lastSynced(root: String): Int = Rows.lastSynced(root)
 
   /** Live entry count (bases + segments) — the read-side fold width a
     * maintenance job bounds with [[compact]]. */
-  def segmentCount(root: String): Int = entries(root).size
+  def segmentCount(root: String): Int = Rows.segmentCount(root)
 
   // ---- view definition metadata: one-shot, base64-armored TSV --------
-
-  private def b64(s: String): String =
-    java.util.Base64.getEncoder.encodeToString(s.getBytes("UTF-8"))
-  private def unb64(s: String): String =
-    new String(java.util.Base64.getDecoder.decode(s), "UTF-8")
-  private def termEnc(t: Term): String = t match {
-    case V(n) => "V:" + b64(n)
-    case C(v: String) => "C:" + b64(v)
-    case C(other) => throw new IllegalArgumentException(
-      s"ViewStore persists string-space views only, got constant $other")
-  }
-  private def termDec(s: String): Term = s.splitAt(2) match {
-    case ("V:", b) => V(unb64(b))
-    case ("C:", b) => C(unb64(b))
-    case _ => throw new IllegalArgumentException(s"bad term encoding: $s")
-  }
 
   private def writeMeta(root: String, graph: String,
       patterns: Seq[TP]): Unit = {
@@ -452,7 +417,7 @@ object ViewStore {
         s"no store under $storeRoot — init() before createFiltered()"))
     writeMetaFiltered(viewRoot, graph, text)
     val cond = fs.map(Sparql.filterColumn).reduce(_ && _)
-    graft.sources.AtomicStore.materialize(basePath(viewRoot, cur)) { tmp =>
+    graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) { tmp =>
       BgpView.compute(slice(spark, storeRoot, cur, graph), pats)
         .filter(cond).write.parquet(tmp)
     }
@@ -693,7 +658,7 @@ object ViewStore {
       throw new IllegalArgumentException(
         s"no store under $storeRoot — init() before create()"))
     writeMeta(viewRoot, graph, patterns)
-    graft.sources.AtomicStore.materialize(basePath(viewRoot, cur)) { tmp =>
+    graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) { tmp =>
       BgpView.compute(slice(spark, storeRoot, cur, graph), patterns)
         .write.parquet(tmp)
     }
@@ -709,7 +674,7 @@ object ViewStore {
       throw new IllegalArgumentException(
         s"no store under $storeRoot — init() before create()"))
     writeMetaQuads(viewRoot, patterns)
-    graft.sources.AtomicStore.materialize(basePath(viewRoot, cur)) { tmp =>
+    graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) { tmp =>
       BgpView.computeQuads(QuadStore.readVersion(spark, storeRoot, cur),
         patterns).write.parquet(tmp)
     }
@@ -741,7 +706,7 @@ object ViewStore {
       throw new IllegalArgumentException(
         s"no store under $storeRoot — init() before createUnion()"))
     writeMetaUnion(viewRoot, graph, branches)
-    graft.sources.AtomicStore.materialize(basePath(viewRoot, cur)) { tmp =>
+    graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) { tmp =>
       BgpView.computeUnionCounts(slice(spark, storeRoot, cur, graph),
         branches).write.parquet(tmp)
     }
@@ -758,7 +723,7 @@ object ViewStore {
       throw new IllegalArgumentException(
         s"no store under $storeRoot — init() before createOptional()"))
     writeMetaOptional(viewRoot, graph, left, right)
-    graft.sources.AtomicStore.materialize(basePath(viewRoot, cur)) { tmp =>
+    graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) { tmp =>
       BgpView.computeOptional(slice(spark, storeRoot, cur, graph),
         left, right).write.parquet(tmp)
     }
@@ -786,43 +751,10 @@ object ViewStore {
   // Every composed node then nets exactly from its children's persisted
   // old sets + deltas. Sync never touches the store slice at all.
 
-  private def edgeBasePath(root: String, v: Int) = f"$root%s/e$v%05d"
-  private def edgeSegPath(root: String, from: Int, to: Int) =
-    f"$root%s/es$from%05d" + f"_$to%05d"
-  private val EdgeBaseRe = "e(\\d{5,})".r
-  private val EdgeSegRe = "es(\\d{5,})_(\\d{5,})".r
-
-  private def edgeEntries(root: String): Seq[(String, Int, Int)] =
-    graft.sources.AtomicStore.list(root).flatMap { f =>
-      val complete =
-        () => graft.sources.AtomicStore.isComplete(f.getPath.toString)
-      f.getPath.getName match {
-        case EdgeBaseRe(v) if complete() => Some(("e", v.toInt, v.toInt))
-        case EdgeSegRe(a, b) if complete() => Some(("es", a.toInt, b.toInt))
-        case _ => None
-      }
-    }
-
-  /** The edge-set chain capped at version `v`: newest base ≤ v plus the
-    * contiguous segments up to exactly v; None when the view predates
-    * the edge artifact (legacy — [[bootstrapEdges]] migrates it). */
-  private def edgeChainAt(root: String,
-      v: Int): Option[(Int, Seq[(Int, Int)])] = {
-    val es = edgeEntries(root)
-    val baseV = es.collect { case ("e", b, _) if b <= v => b }
-      .maxOption.getOrElse(return None)
-    val segs = es.collect {
-      case ("es", f, t) if t > baseV && t <= v => (f, t)
-    }.sortBy(_._2)
-    val reached = segs.foldLeft(baseV) { case (at, (f, t)) =>
-      require(f == at, s"edge-set chain gap under $root: segment " +
-        s"es$f..$t does not extend $at — rebuild with create()")
-      t
-    }
-    require(reached == v, s"edge-set chain under $root reaches " +
-      s"$reached, not the synced version $v — rebuild with create()")
-    Some((baseV, segs))
-  }
+  /** Does the view carry the edge-set artifact? Views created before it
+    * existed do not ([[bootstrapEdges]] migrates them at their next
+    * non-empty sync). */
+  private def hasEdges(root: String): Boolean = Edges.lastSynced(root) > 0
 
   /** All nodes' edge sets as they stood at synced version `v`:
     * (__n, src, dst), the base plus net segments folded by one
@@ -831,10 +763,7 @@ object ViewStore {
     * and must never be passed to [[graft.Materialize.release]]. */
   private def readEdgesAt(spark: SparkSession, root: String,
       v: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (baseV, segs) = edgeChainAt(root, v).getOrElse(
-      throw new IllegalStateException(
-        s"no edge-set artifact under $root at $v"))
+    val link = Edges.at(root, v)
     // same fold cache as [[readAt]] (separate key space): the edge state
     // is re-folded by every sync and compaction, and extends by its net
     // segments exactly like the binding fold
@@ -843,35 +772,19 @@ object ViewStore {
       .filter(c => graft.sources.AtomicStore.markerToken(c.endPath) ==
         c.token && c.token.nonEmpty)
     def put(df: DataFrame): DataFrame = {
-      val end = segs.lastOption
-        .map { case (f, t) => edgeSegPath(root, f, t) }
-        .getOrElse(edgeBasePath(root, baseV))
+      val end = Edges.endPath(root, link)
       val tok = graft.sources.AtomicStore.markerToken(end)
       if (tok.nonEmpty) foldCache.put(key, CachedFold(v, end, tok, df))
       df
     }
     cached match {
       case Some(c) if c.v == v => c.df
-      case Some(c) if c.v < v && segs.exists(_._1 == c.v) =>
+      case Some(c) if c.v < v && link.segs.exists(_._1 == c.v) =>
         put(graft.Materialize(applySegs(spark, c.df, root,
-          segs.filter(_._1 >= c.v), edgeSegPath)))
+          link.segs.filter(_._1 >= c.v), Edges)))
       case _ =>
-        val base = graft.sources.AtomicStore.readParquet(spark,
-          edgeBasePath(root, baseV))
-        if (segs.isEmpty) return put(base)
-        val cols = Seq("__n", "src", "dst")
-        val all = base.withColumn("__v", lit(baseV))
-          .withColumn("__op", lit("a"))
-          .unionByName(segs.map { case (f, t) =>
-            graft.sources.AtomicStore.readParquet(spark,
-              edgeSegPath(root, f, t)).withColumn("__v", lit(t))
-          }.reduce(_.unionByName(_)))
-        val w = Window.partitionBy(cols.map(col): _*)
-          .orderBy(col("__v").desc)
-        put(graft.Materialize(
-          all.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1 && col("__op") === "a")
-            .select(cols.map(col): _*)))
+        val folded = Edges.foldLastOp(spark, root, link)
+        put(if (link.segs.isEmpty) folded else graft.Materialize(folded))
     }
   }
 
@@ -961,8 +874,8 @@ object ViewStore {
   private def bootstrapEdges(spark: SparkSession, storeRoot: String,
       viewRoot: String, v: Int, graph: String,
       nodes: Vector[ENode]): Unit =
-    if (edgeChainAt(viewRoot, v).isEmpty)
-      graft.sources.AtomicStore.materialize(edgeBasePath(viewRoot, v)) {
+    if (!hasEdges(viewRoot))
+      graft.sources.AtomicStore.materialize(Edges.basePath(viewRoot, v)) {
         tmp => nodeSetsFrame(slice(spark, storeRoot, v, graph), nodes)
           .write.parquet(tmp)
       }: Unit
@@ -1094,11 +1007,11 @@ object ViewStore {
     writeMetaPathExpr(viewRoot, graph, sv, dv, text)
     // per-node composed edge sets first — the closure bootstraps from
     // the published root set, and sync maintains both incrementally
-    graft.sources.AtomicStore.materialize(edgeBasePath(viewRoot, cur)) {
+    graft.sources.AtomicStore.materialize(Edges.basePath(viewRoot, cur)) {
       tmp => nodeSetsFrame(slice(spark, storeRoot, cur, graph),
         edgeNodes(inner)).write.parquet(tmp)
     }
-    graft.sources.AtomicStore.materialize(basePath(viewRoot, cur)) { tmp =>
+    graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) { tmp =>
       Paths.transitiveClosure(rootEdgeSet(spark, viewRoot, cur))
         .select(col("src").as(sv), col("dst").as(dv))
         .write.parquet(tmp)
@@ -1142,11 +1055,11 @@ object ViewStore {
       throw new IllegalArgumentException(
         s"no store under $storeRoot — init() before createPathSeq()"))
     writeMetaPathSeq(viewRoot, graph, srcVar, dstVar, steps)
-    graft.sources.AtomicStore.materialize(edgeBasePath(viewRoot, cur)) {
+    graft.sources.AtomicStore.materialize(Edges.basePath(viewRoot, cur)) {
       tmp => nodeSetsFrame(slice(spark, storeRoot, cur, graph),
         edgeNodes(stepsTree(steps))).write.parquet(tmp)
     }
-    graft.sources.AtomicStore.materialize(basePath(viewRoot, cur)) { tmp =>
+    graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) { tmp =>
       Paths.transitiveClosure(rootEdgeSet(spark, viewRoot, cur))
         .select(col("src").as(srcVar), col("dst").as(dstVar))
         .write.parquet(tmp)
@@ -1174,7 +1087,7 @@ object ViewStore {
       throw new IllegalArgumentException(
         s"no store under $storeRoot — init() before createPath()"))
     writeMetaPath(viewRoot, graph, srcVar, dstVar, fwd, inv)
-    graft.sources.AtomicStore.materialize(basePath(viewRoot, cur)) { tmp =>
+    graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) { tmp =>
       Paths.transitiveClosure(
           pathEdges(slice(spark, storeRoot, cur, graph), fwd, inv))
         .select(col("src").as(srcVar), col("dst").as(dstVar))
@@ -1219,13 +1132,13 @@ object ViewStore {
       // is checked per chain; legacy views without the artifact skip
       // (they bootstrap at their next non-empty sync, gap-free)
       if (Seq("pathseq", "pathexpr").contains(mode(viewRoot)) &&
-          edgeChainAt(viewRoot, last).isDefined)
+          hasEdges(viewRoot))
         graft.sources.AtomicStore.materialize(
-            edgeSegPath(viewRoot, last, cur)) { tmp =>
+            Edges.segPath(viewRoot, last, cur)) { tmp =>
           spark.range(0).select(lit(0).as("__n"), lit("").as("src"),
             lit("").as("dst"), lit("").as("__op")).write.parquet(tmp)
         }
-      graft.sources.AtomicStore.materialize(segPath(viewRoot, last, cur)) {
+      graft.sources.AtomicStore.materialize(Rows.segPath(viewRoot, last, cur)) {
         tmp => empty.repartition(1).write.parquet(tmp)
       }
       return cur
@@ -1279,10 +1192,10 @@ object ViewStore {
         // segment (write-then-read: one job where checkpoint-then-write
         // paid two)
         graft.sources.AtomicStore.materialize(
-            edgeSegPath(viewRoot, last, cur)) {
+            Edges.segPath(viewRoot, last, cur)) {
           tmp => edgeSeg.repartition(1).write.parquet(tmp)
         }
-        val segM = graft.sources.AtomicStore.readParquet(spark, edgeSegPath(viewRoot, last, cur))
+        val segM = graft.sources.AtomicStore.readParquet(spark, Edges.segPath(viewRoot, last, cur))
         val eAdds = segM.filter(col("__n") === 0 && col("__op") === "a")
           .select("src", "dst")
         val eDels = segM.filter(col("__n") === 0 && col("__op") === "d")
@@ -1334,47 +1247,10 @@ object ViewStore {
     // makes gaps loudly detectable at read. Segments are O(|churn|), so
     // ONE output file: the repartition shuffles only delta-sized bytes
     // while the delta computation keeps its full scan parallelism.
-    graft.sources.AtomicStore.materialize(segPath(viewRoot, last, cur)) {
+    graft.sources.AtomicStore.materialize(Rows.segPath(viewRoot, last, cur)) {
       tmp => segment.repartition(1).write.parquet(tmp)
     }
     cur
-  }
-
-  /** Newest base + the contiguous segment chain above it; rejects a
-    * gapped or overlapping chain loudly (two racing syncers from
-    * different `from` versions, or a segment replayed against a base
-    * that already covers its range). EVERY read path — [[read]] and
-    * [[readCounts]] alike — goes through this, so summaries can never
-    * silently diverge from the binding fold. */
-  private def chain(viewRoot: String): (Int, Seq[(Int, Int)]) =
-    chainAt(viewRoot, lastSynced(viewRoot))
-
-  /** The chain capped at a PINNED synced version `v` — the time-travel
-    * read's spine: newest base ≤ v plus the contiguous segments up to
-    * exactly v. Loud when compaction rewrote past v (no base at or
-    * below it) or v is not a sync boundary — never a silently
-    * approximate historical answer. */
-  private def chainAt(viewRoot: String,
-      v: Int): (Int, Seq[(Int, Int)]) = {
-    val es = entries(viewRoot)
-    require(es.nonEmpty, s"no view under $viewRoot")
-    val baseV = es.collect { case ("b", b, _) if b <= v => b }
-      .maxOption.getOrElse(throw new IllegalArgumentException(
-        s"no view base at or below $v under $viewRoot — compacted past " +
-          "it? historical reads live within the retention window"))
-    val segs = es.collect {
-      case ("s", f, t) if t > baseV && t <= v => (f, t)
-    }.sortBy(_._2)
-    val reached = segs.foldLeft(baseV) { case (at, (f, t)) =>
-      require(f == at, s"view chain gap under $viewRoot: segment " +
-        s"s$f..$t does not extend $at — concurrent syncs from " +
-        "different versions? rebuild with create()")
-      t
-    }
-    require(reached == v,
-      s"$v is not a synced boundary of $viewRoot (chain reaches " +
-        s"$reached) — pin a version some sync landed on")
-    (baseV, segs)
   }
 
   /** The maintained view: newest base plus the ordered segment chain,
@@ -1405,13 +1281,6 @@ object ViewStore {
   private val foldCache =
     new graft.sources.Lru[(String, String), CachedFold](8)
 
-  /** The chain entry that defines version `v` (newest entry ending at v):
-    * a segment when one ends there, else the base. */
-  private def endPathOf(root: String, baseV: Int,
-      segs: Seq[(Int, Int)]): String =
-    segs.lastOption.map { case (f, t) => segPath(root, f, t) }
-      .getOrElse(basePath(root, baseV))
-
   /** Apply a batch of NET segments to a folded state: per-binding last
     * op wins (the window runs over the TINY segment batch only), touched
     * bindings leave the state, surviving adds re-enter. Null-safe keys:
@@ -1419,13 +1288,12 @@ object ViewStore {
     * together — the anti-join must too. */
   private def applySegs(spark: SparkSession, state: DataFrame,
       root: String, segs: Seq[(Int, Int)],
-      pathOf: (String, Int, Int) => String = segPath): DataFrame = {
+      chain: graft.sources.VersionChain = Rows): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val cols = state.columns.toSeq
-    val ops = segs.map { case (f, t) =>
-      graft.sources.AtomicStore.readParquet(spark, pathOf(root, f, t))
-        .withColumn("__v", lit(t))
-    }.reduce(_.unionByName(_))
+    val ops = chain.segFrames(spark, root, segs).zip(segs)
+      .map { case (df, (_, t)) => df.withColumn("__v", lit(t)) }
+      .reduce(_.unionByName(_))
     val w = Window.partitionBy(cols.map(col): _*).orderBy(col("__v").desc)
     val last = ops.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") === 1)
@@ -1457,49 +1325,34 @@ object ViewStore {
     * ContextCleaner once the entry leaves the LRU and nothing else
     * reaches it. */
   def readAt(spark: SparkSession, viewRoot: String, v: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     if (mode(viewRoot) == "union")
       return readUnionCountsAt(spark, viewRoot, v)
         .drop(BgpView.SupportCol)
-    val (baseV, segs) = chainAt(viewRoot, v)
+    val link = Rows.at(viewRoot, v)
     val key = (graft.sources.AtomicStore.sessionId(spark), viewRoot)
     val cached = foldCache.get(key)
       // the fingerprint must still match ITS path — a wiped/recompacted
       // root reads as a miss, never as pre-wipe state
       .filter(c => graft.sources.AtomicStore.markerToken(c.endPath) ==
         c.token && c.token.nonEmpty)
-    def put(vv: Int, df: DataFrame): DataFrame = {
-      val end = endPathOf(viewRoot, baseV, segs.filter(_._2 <= vv))
+    def put(df: DataFrame): DataFrame = {
+      val end = Rows.endPath(viewRoot, link)
       val tok = graft.sources.AtomicStore.markerToken(end)
-      if (tok.nonEmpty) foldCache.put(key, CachedFold(vv, end, tok, df))
+      if (tok.nonEmpty) foldCache.put(key, CachedFold(v, end, tok, df))
       df
     }
     cached match {
       case Some(c) if c.v == v => c.df
-      case Some(c) if c.v < v && segs.exists(_._1 == c.v) =>
+      case Some(c) if c.v < v && link.segs.exists(_._1 == c.v) =>
         // contiguous extension: exactly the (c.v, v] sub-chain
-        val ext = segs.filter(_._1 >= c.v)
-        put(v, graft.Materialize(applySegs(spark, c.df, viewRoot, ext)))
+        val ext = link.segs.filter(_._1 >= c.v)
+        put(graft.Materialize(applySegs(spark, c.df, viewRoot, ext)))
       case _ =>
-        val base = graft.sources.AtomicStore.readParquet(spark,
-          basePath(viewRoot, baseV))
         // a bare base is already a cheap one-file scan — cache it lazy
         // (extensions anti-join against the scan; Materialize.reuse-class
         // argument), where a checkpoint would cost a job for nothing
-        if (segs.isEmpty) return put(v, base)
-        val cols = base.columns.toSeq
-        val all = base.withColumn("__v", lit(baseV))
-          .withColumn("__op", lit("a"))
-          .unionByName(segs.map { case (f, t) =>
-            graft.sources.AtomicStore.readParquet(spark,
-              segPath(viewRoot, f, t)).withColumn("__v", lit(t))
-          }.reduce(_.unionByName(_)))
-        val w = Window.partitionBy(cols.map(col): _*)
-          .orderBy(col("__v").desc)
-        put(v, graft.Materialize(
-          all.withColumn("__rn", row_number().over(w))
-            .filter(col("__rn") === 1 && col("__op") === "a")
-            .select(cols.map(col): _*)))
+        val folded = Rows.foldLastOp(spark, viewRoot, link)
+        put(if (link.segs.isEmpty) folded else graft.Materialize(folded))
     }
   }
 
@@ -1511,12 +1364,9 @@ object ViewStore {
 
   private def readUnionCountsAt(spark: SparkSession, viewRoot: String,
       v: Int): DataFrame = {
-    val (baseV, segs) = chainAt(viewRoot, v)
-    val base = graft.sources.AtomicStore.readParquet(spark, basePath(viewRoot, baseV))
-    val bcols = base.columns.filterNot(_ == BgpView.SupportCol).toSeq
-    (base +: segs.map { case (f, t) =>
-      graft.sources.AtomicStore.readParquet(spark, segPath(viewRoot, f, t)) })
-      .reduce(_.unionByName(_))
+    val frames = Rows.frames(spark, viewRoot, Rows.at(viewRoot, v))
+    val bcols = frames.head.columns.filterNot(_ == BgpView.SupportCol).toSeq
+    frames.reduce(_.unionByName(_))
       .groupBy(bcols.map(col): _*)
       .agg(sum(BgpView.SupportCol).as(BgpView.SupportCol))
       .filter(col(BgpView.SupportCol) > 0L)
@@ -1542,15 +1392,12 @@ object ViewStore {
         .agg(count(lit(1)).as(countCol))
     // same contiguity gate as read(): a gapped/overlapping chain would
     // otherwise sum ±1 signs over the wrong segment set SILENTLY
-    val (baseV, segs) = chain(viewRoot)
+    val frames =
+      Rows.frames(spark, viewRoot, Rows.at(viewRoot, lastSynced(viewRoot)))
     val gcols = groupVars.map(col)
-    val signed = (graft.sources.AtomicStore.readParquet(spark, basePath(viewRoot, baseV))
-      .select(gcols :+ lit(1L).as("__sgn"): _*) +:
-      segs.map { case (f, t) =>
-        graft.sources.AtomicStore.readParquet(spark, segPath(viewRoot, f, t))
-          .select(gcols :+ when(col("__op") === "a", 1L)
-            .otherwise(-1L).as("__sgn"): _*)
-      }).reduce(_.unionByName(_))
+    val signed = (frames.head.select(gcols :+ lit(1L).as("__sgn"): _*) +:
+      frames.tail.map(_.select(gcols :+ when(col("__op") === "a", 1L)
+        .otherwise(-1L).as("__sgn"): _*))).reduce(_.unionByName(_))
     signed.groupBy(gcols: _*).agg(sum("__sgn").as(countCol))
       .filter(col(countCol) =!= 0L)
   }
@@ -1566,51 +1413,18 @@ object ViewStore {
     } else false
 
   /** Fold the chain into a fresh base at the synced head and drop the
-    * replaced entries — bounds read-side fold width, exactly the
-    * mirror's compaction contract. */
+    * replaced entries ([[graft.sources.VersionChain.compact]]) — bounds
+    * read-side fold width. A path view's edge-set chain compacts
+    * alongside, at the same head. */
   def compact(spark: SparkSession, viewRoot: String): Unit = {
     val head = lastSynced(viewRoot)
-    compactWith(viewRoot)(
-      if (mode(viewRoot) == "union") readUnionCounts(spark, viewRoot)
-      else read(spark, viewRoot))
-    // the edge-set chain compacts alongside the binding chain — same
-    // fold-to-base-at-head, same entry sweep (legacy views without the
-    // artifact have nothing to fold)
+    Rows.compact(viewRoot, head)(tmp =>
+      (if (mode(viewRoot) == "union") readUnionCounts(spark, viewRoot)
+       else read(spark, viewRoot)).write.parquet(tmp))
     if (Seq("pathseq", "pathexpr").contains(mode(viewRoot)) &&
-        edgeChainAt(viewRoot, head).isDefined) {
-      val es = edgeEntries(viewRoot)
-      val baseV = es.collect { case ("e", v, _) => v }.max
-      if (head > baseV)
-        graft.sources.AtomicStore.materialize(
-            edgeBasePath(viewRoot, head)) { tmp =>
-          readEdgesAt(spark, viewRoot, head).write.parquet(tmp)
-        }
-      es.filter { case (k, _, t) => t < head || k == "es" }.foreach {
-        case ("e", v, _) =>
-          graft.sources.AtomicStore.delete(edgeBasePath(viewRoot, v))
-        case (_, f, t) =>
-          graft.sources.AtomicStore.delete(edgeSegPath(viewRoot, f, t))
-      }
-    }
-  }
-
-  private def compactWith(root: String)(folded: => DataFrame): Unit = {
-    val before = entries(root)
-    val head = lastSynced(root)
-    val baseV = before.collect { case ("b", v, _) => v }.max
-    if (head > baseV)
-      graft.sources.AtomicStore.materialize(basePath(root, head)) {
-        tmp => folded.write.parquet(tmp)
-      }
-    // even when already based at head, sweep crash leftovers below it
-    // everything the new base subsumes goes: older bases, and every
-    // segment INCLUDING the one ending at head
-    before.filter { case (k, _, t) => t < head || k == "s" }.foreach {
-      case ("b", v, _) =>
-        graft.sources.AtomicStore.delete(basePath(root, v))
-      case (_, f, t) =>
-        graft.sources.AtomicStore.delete(segPath(root, f, t))
-    }
+        hasEdges(viewRoot))
+      Edges.compact(viewRoot, head)(tmp =>
+        readEdgesAt(spark, viewRoot, head).write.parquet(tmp))
   }
 
   // ---- persisted AGGREGATE views: the summary's own segment lifecycle
@@ -1738,7 +1552,7 @@ object ViewStore {
     writeMetaAgg(aggRoot, groupVars, countCol, sums, exts)
     val keys = fineKeys(groupVars, exts)
     val psums = persistedSums(sums, exts)
-    graft.sources.AtomicStore.materialize(basePath(aggRoot, v)) { tmp =>
+    graft.sources.AtomicStore.materialize(Rows.basePath(aggRoot, v)) { tmp =>
       val base =
         if (psums.isEmpty && exts.isEmpty)
           readCounts(spark, viewRoot, groupVars, countCol)
@@ -1770,17 +1584,7 @@ object ViewStore {
     require(aggLast > 0, s"no aggregate view under $aggRoot — createAgg()")
     val viewLast = lastSynced(viewRoot)
     if (viewLast <= aggLast) return aggLast
-    val vsegs = entries(viewRoot)
-      .collect { case ("s", f, t) if f >= aggLast => (f, t) }.sortBy(_._2)
-    val covered = vsegs.foldLeft(aggLast) { case (at, (f, t)) =>
-      require(f == at, s"view segment chain gap above $aggLast under " +
-        s"$viewRoot: s$f..$t does not extend $at")
-      t
-    }
-    require(covered == viewLast,
-      s"view segments cover $aggLast..$covered but the view is at " +
-        s"$viewLast — compacted past the summary's last sync? syncAgg " +
-        "before compact(view), or rebuild with createAgg()")
+    val vsegs = Rows.since(viewRoot, aggLast)
     val gcols = gv.map(col)
     val sgn = when(col("__op") === "a", 1L).otherwise(-1L)
     // a group whose COUNT nets to zero can still carry a nonzero SUM
@@ -1788,16 +1592,14 @@ object ViewStore {
     // drop-empty-delta filter must test every measure, not just the count
     val live = sums.map { case (o, _) => col(o) =!= 0L }
       .foldLeft(col(countCol) =!= 0L)(_ || _)
-    val delta = vsegs.map { case (f, t) =>
-        graft.sources.AtomicStore.readParquet(spark, segPath(viewRoot, f, t))
-      }.reduce(_.unionByName(_))
+    val delta = Rows.segFrames(spark, viewRoot, vsegs).reduce(_.unionByName(_))
       .select(gcols ++ (sgn.as("__sgn") +: sums.map { case (o, s) =>
         (sgn * longMeasure(s)).as(o) }): _*)
       .groupBy(gcols: _*).agg(sum("__sgn").as(countCol),
         sums.map { case (o, _) => sum(o).as(o) }: _*)
       .filter(live)
     graft.sources.AtomicStore.materialize(
-      segPath(aggRoot, aggLast, viewLast)) { tmp =>
+      Rows.segPath(aggRoot, aggLast, viewLast)) { tmp =>
       // summary deltas are O(distinct changed groups): one output file
       delta.repartition(1).write.parquet(tmp)
     }
@@ -1817,7 +1619,7 @@ object ViewStore {
   def readAggAt(spark: SparkSession, aggRoot: String,
       v: Int): DataFrame = {
     val (gv, countCol, sums, exts) = definitionAgg(aggRoot)
-    val (baseV, segs) = chainAt(aggRoot, v)
+    val link = Rows.at(aggRoot, v)
     val keys = fineKeys(gv, exts)
     val psums = persistedSums(sums, exts)
     // level 1: net support + sums per persisted (group[, value]) combo.
@@ -1825,9 +1627,7 @@ object ViewStore {
     // still carry a nonzero SUM delta (a binding swapped for one with
     // the same extremum value but a different sum value); dropping it
     // would lose that contribution. Liveness gates only what follows.
-    val fine = (graft.sources.AtomicStore.readParquet(spark, basePath(aggRoot, baseV)) +:
-      segs.map { case (f, t) => graft.sources.AtomicStore.readParquet(spark, segPath(aggRoot, f, t)) })
-      .reduce(_.unionByName(_))
+    val fine = Rows.frames(spark, aggRoot, link).reduce(_.unionByName(_))
       .groupBy(keys.map(col): _*).agg(sum(countCol).as(countCol),
         psums.map { case (o, _) => sum(o).as(o) }: _*)
     if (exts.isEmpty)
@@ -1951,17 +1751,15 @@ object ViewStore {
     val (gv, countCol, sums, exts) = definitionAgg(aggRoot)
     val keys = fineKeys(gv, exts)
     val psums = persistedSums(sums, exts)
-    compactWith(aggRoot) {
-      val (baseV, segs) = chainAt(aggRoot, lastSynced(aggRoot))
+    val head = lastSynced(aggRoot)
+    Rows.compact(aggRoot, head) { tmp =>
       val live = psums.map { case (o, _) => col(o) =!= 0L }
         .foldLeft(col(countCol) =!= 0L)(_ || _)
-      (graft.sources.AtomicStore.readParquet(spark, basePath(aggRoot, baseV)) +:
-        segs.map { case (f, t) =>
-          graft.sources.AtomicStore.readParquet(spark, segPath(aggRoot, f, t)) })
+      Rows.frames(spark, aggRoot, Rows.at(aggRoot, head))
         .reduce(_.unionByName(_))
         .groupBy(keys.map(col): _*).agg(sum(countCol).as(countCol),
           psums.map { case (o, _) => sum(o).as(o) }: _*)
-        .filter(live)
+        .filter(live).write.parquet(tmp)
     }
   }
 }

@@ -269,6 +269,16 @@ object AtomicStore {
     if (!fs.exists(p)) Seq.empty else fs.listStatus(p).toIndexedSeq
   }
 
+  /** The COMPLETE children of `path` whose name `parse` accepts, with
+    * their listed paths — the one listing the versioned stores read
+    * through (an unmarked crash leftover is never listed). */
+  def listComplete[A](path: String)(
+      parse: PartialFunction[String, A]): Seq[(A, String)] =
+    list(path).flatMap { f =>
+      val p = f.getPath.toString
+      parse.lift(f.getPath.getName).filter(_ => isComplete(p)).map(_ -> p)
+    }
+
   /** Recursive delete through the Hadoop filesystem; absent paths no-op. */
   def delete(path: String): Unit = {
     val p = new Path(path)

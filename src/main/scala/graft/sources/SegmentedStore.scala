@@ -93,13 +93,8 @@ object SegmentedStore {
   def basePath(root: String, n: Int): String = f"$root%s/base$n%05d"
 
   private def complete(root: String, re: scala.util.matching.Regex) =
-    AtomicStore.list(root).flatMap { f =>
-      f.getPath.getName match {
-        case re(n) if AtomicStore.isComplete(f.getPath.toString) =>
-          Some(n.toInt)
-        case _ => None
-      }
-    }.sorted
+    AtomicStore.listComplete(root) { case re(n) => n.toInt }
+      .map(_._1).sorted
 
   def segments(root: String): Seq[Int] = complete(root, SegRe)
   def bases(root: String): Seq[Int] = complete(root, BaseRe)
@@ -123,20 +118,25 @@ object SegmentedStore {
     (segments(root) ++ bases(root)).maxOption.getOrElse(0) + 1
 
   /** Fold every live entry into ONE new base via `write(liveEntries,
-    * tmpDir)`, then drop the superseded entries — publish-then-drop, so
-    * a crash between the two leaves a larger-but-consistent store.
-    * Returns the live entry count after. */
+    * tmpDir)`, then drop the entries the newest base subsumes —
+    * publish-then-drop, so a crash between the two leaves a
+    * larger-but-consistent store whose leftovers the next call drops
+    * (even when nothing is left to fold). Returns the live entry count
+    * after. */
   def compactWith(root: String)(
       write: (Seq[String], String) => Unit): Int = {
     val live = liveEntries(root)
     require(live.nonEmpty, s"no segmented store under $root")
-    if (live.size <= 1) return live.size
-    val top = (segments(root) ++ bases(root)).max
-    AtomicStore.materialize(basePath(root, top))(tmp => write(live, tmp))
-    segments(root).filter(_ <= top).foreach(n =>
-      AtomicStore.delete(segPath(root, n)))
-    bases(root).filter(_ < top).foreach(n =>
-      AtomicStore.delete(basePath(root, n)))
+    if (live.size > 1) {
+      val top = (segments(root) ++ bases(root)).max
+      AtomicStore.materialize(basePath(root, top))(tmp => write(live, tmp))
+    }
+    bases(root).maxOption.foreach { top =>
+      segments(root).filter(_ <= top).foreach(n =>
+        AtomicStore.delete(segPath(root, n)))
+      bases(root).filter(_ < top).foreach(n =>
+        AtomicStore.delete(basePath(root, n)))
+    }
     liveEntries(root).size
   }
 }

@@ -5,9 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Source-level guards for the persisted-store design: one place decides
   * where roots live, and the build-once store modules keep no private
   * handle cache of their own (those go through `AtomicStore.opened`,
-  * which re-checks the root's publish token on every hit). Also for the
-  * fixpoints: no round cap, and the path closures' rounds all run
-  * through `Materialize.semiNaive`. */
+  * which re-checks the root's publish token on every hit). The
+  * coverage-named stores list, check and compact their entries only
+  * through `sources.VersionChain`. Also for the fixpoints: no round cap,
+  * and the path closures' rounds all run through `Materialize.semiNaive`. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val main = new java.io.File("src/main/scala/graft")
@@ -65,5 +66,31 @@ class SourceGuardSpec extends AnyFunSuite {
       "graft\\.llm\\.[\\w.]+".r.findAllIn(text(f)).toSeq)
       .filterNot(_ == "graft.llm.Dedup.connectedComponents")
     assert(other.isEmpty, s"rdf/ uses more of llm/: ${other.mkString(", ")}")
+  }
+
+  test("versioned stores keep no private entry listing") {
+    val entryRe = """\\d\{5,\}""".r
+    val chained = Seq("rdf/ViewStore.scala", "rdf/EncodedView.scala",
+      "rdf/EncodedMirror.scala", "llm/LshIndex.scala")
+    chained.foreach { p =>
+      val f = new java.io.File(main, p)
+      assert(f.isFile, s"store module $p moved — update this guard")
+      assert(!text(f).contains("isComplete"),
+        s"$p gates entries on completeness itself")
+    }
+    // every entry-name regex outside the two listing owners, by name:
+    // the quad store's one-version-per-entry listing and the mirror's
+    // append-only dictionary are different shapes from the chain
+    val named = sources(main)
+      .filterNot(f => Set("sources/VersionChain.scala",
+        "sources/SegmentedStore.scala")(rel(f)))
+      .flatMap(f => text(f).linesIterator
+        .filter(l => entryRe.findFirstIn(l).isDefined)
+        .map(l => rel(f) -> "val (\\w+)".r.findFirstMatchIn(l)
+          .map(_.group(1)).getOrElse(l.trim)))
+    assert(named.toSet === Set(
+      "rdf/Update.scala" -> "VersionRe", "rdf/Update.scala" -> "DeltaRe",
+      "rdf/EncodedMirror.scala" -> "DictRe",
+      "llm/IvfIndex.scala" -> "RefitModelRe"))
   }
 }
