@@ -10,11 +10,15 @@ import org.apache.spark.sql.functions._
   *
   * Operation semantics (SPARQL 1.1 Update §3.1):
   *  - `INSERT DATA { quads }` — ground quads only; graphs are SETS, so
-  *    already-present quads are not duplicated (lowered to a broadcast
-  *    anti-join of the tiny literal block against the store, never a
-  *    global distinct).
-  *  - `DELETE DATA { quads }` — exact ground-quad removal (broadcast
-  *    anti-join).
+  *    already-present quads are not duplicated.
+  *  - `DELETE DATA { quads }` — exact ground-quad removal; tombstones
+  *    for absent quads change nothing.
+  *  A request made only of these two is resolved on the driver: one
+  *  broadcast-semi probe of the store against the request's distinct
+  *  quads finds the present ones, and [[groundNet]] folds the ops over
+  *  them into the net change. A request with any other op lowers every
+  *  op through [[deltaSeq]] (a broadcast presence check per INSERT DATA,
+  *  a tombstone block per DELETE DATA), never a global distinct.
   *  - `DELETE WHERE { patterns }` — the pattern is both the match and
   *    the delete template: solve the conjunction (shared variables join
   *    across patterns, `GRAPH <g>` blocks match that named graph),
@@ -63,10 +67,11 @@ object Update {
   case object AllNamed extends Target
   case object AllGraphs extends Target
   final case class OneGraph(g: String) extends Target
-  /** Ground quads: (s, p, o, g) with [[Quads.DefaultGraph]] for the
+  /** A ground quad: (s, p, o, g) with [[Quads.DefaultGraph]] for the
     * default graph. */
-  final case class InsertData(quads: Seq[(String, String, String, String)]) extends Op
-  final case class DeleteData(quads: Seq[(String, String, String, String)]) extends Op
+  type Quad = (String, String, String, String)
+  final case class InsertData(quads: Seq[Quad]) extends Op
+  final case class DeleteData(quads: Seq[Quad]) extends Op
   /** Patterns with their target graph: `C(iri)` for a constant graph
     * (`C(Quads.DefaultGraph)` outside GRAPH blocks), `V(name)` for
     * `GRAPH ?var` — the variable ranges over the store's NAMED graphs
@@ -211,6 +216,38 @@ object Update {
       acc = composeDeltas(acc, d)
     }
     acc
+  }
+
+  /** The candidate set of an ALL-GROUND request — every op `INSERT DATA`
+    * or `DELETE DATA` — as its distinct quads in request order; `None`
+    * when any op needs the store to compute its effect. */
+  def groundCandidates(ops: Seq[Op]): Option[Seq[Quad]] = {
+    val blocks = ops.collect {
+      case InsertData(qs) => qs
+      case DeleteData(qs) => qs
+    }
+    if (ops.nonEmpty && blocks.size == ops.size) Some(blocks.flatten.distinct)
+    else None
+  }
+
+  /** The NET change of an all-ground request, computed on the driver:
+    * `present` is the subset of its [[groundCandidates]] the snapshot
+    * holds; folding the ops over it in request order (insert adds its
+    * quads, delete removes them) gives the end state E of the candidates,
+    * and the request's net change is `(E ∖ present, present ∖ E)` — the
+    * same sets [[deltaSeq]] screened to net form publishes, since
+    * replaying any delta (A, D) gives S′ = (S ∖ D) ∪ A. Both sides come
+    * back in candidate order. */
+  def groundNet(ops: Seq[Op], present: Set[Quad]): (Seq[Quad], Seq[Quad]) = {
+    val cands = groundCandidates(ops).getOrElse(throw new IllegalArgumentException(
+      "groundNet takes INSERT DATA / DELETE DATA requests only"))
+    val end = ops.foldLeft(present) {
+      case (st, InsertData(qs)) => st ++ qs
+      case (st, DeleteData(qs)) => st -- qs
+      case (st, _) => st
+    }
+    (cands.filter(q => end(q) && !present(q)),
+      cands.filter(q => present(q) && !end(q)))
   }
 
   /** Compute an operation's [[Delta]] against `current`. The store may be
@@ -512,25 +549,25 @@ object Update {
       else { if (peekKw("GRAPH")) next(); graphIri() }
 
     /** `{ quads }` — ground terms only. */
-    private def groundBlock(): Seq[(String, String, String, String)] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[(String, String, String, String)]
+    private def groundBlock(): Seq[Quad] = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[Quad]
       expect("{")
       while (peek != "}") {
         if (peekKw("GRAPH")) {
           expectKw("GRAPH")
           val g = groundTerm()
           expect("{")
-          while (peek != "}") { out += quad(g); maybeDot() }
+          while (peek != "}") { out ++= groundTriples(g); maybeDot() }
           expect("}")
-        } else { out += quad(Quads.DefaultGraph); maybeDot() }
+        } else { out ++= groundTriples(Quads.DefaultGraph); maybeDot() }
       }
       expect("}")
       require(out.nonEmpty, "empty data block")
       out.toSeq
     }
 
-    private def quad(g: String): (String, String, String, String) =
-      (groundTerm(), ground(verb()), groundTerm(), g)
+    private def groundTriples(g: String): Seq[Quad] =
+      sameSubject().map(tp => (ground(tp.s), ground(tp.p), ground(tp.o), g))
 
     private def maybeDot(): Unit =
       if (toks.headOption.contains(".")) toks = toks.tail
@@ -554,16 +591,34 @@ object Update {
           expectKw("GRAPH")
           val g = term()
           expect("{")
-          while (peek != "}") { out += ((TP(term(), verb(), term()), g)); maybeDot() }
+          while (peek != "}") { out ++= sameSubject().map((_, g)); maybeDot() }
           expect("}")
           maybeDot()
         } else {
-          out += ((TP(term(), verb(), term()), C(Quads.DefaultGraph)))
+          out ++= sameSubject().map((_, C(Quads.DefaultGraph)))
           maybeDot()
         }
       }
       expect("}")
       out.toSeq
+    }
+
+    /** One same-subject group, `s p o (, o)* (; (p o (, o)*)?)*` —
+      * object lists after `,` and predicate-object lists after `;`
+      * (grammar rules 75–79), as triples in written order. */
+    private def sameSubject(): Seq[TP] = {
+      val s = term()
+      val out = Seq.newBuilder[TP]
+      def objects(p: Term): Unit = {
+        out += TP(s, p, term())
+        while (peek == ",") { next(); out += TP(s, p, term()) }
+      }
+      objects(verb())
+      while (peek == ";") {
+        next()
+        if (!Set(";", ".", "}").contains(peek)) objects(verb())
+      }
+      out.result()
     }
 
     /** A predicate: `a` abbreviates rdf:type in verb position (grammar
@@ -609,15 +664,21 @@ object Update {
   * Scale notes: an update writes O(|delta|) bytes — a one-quad
   * `INSERT DATA` against a 100 TB store appends a few-KB segment, never a
   * rewritten snapshot (the old copy-on-write path cost O(|store|) per
-  * statement). The store is still SCANNED once per update for the
-  * set-semantics presence check, but scan-only. Delta replay adds one
-  * anti-join + union per segment to read plans, with the tiny segment
-  * sides broadcast off their file stats; [[vacuum]] is the compaction
-  * step that folds a delta chain back into a base, bounding replay depth
-  * — run it on the same cadence as Delta/Iceberg table maintenance.
-  * Bases are written `partitionBy("g")`, so constant-GRAPH queries
-  * partition-prune. Single writer assumed (concurrent writers race on the
-  * same successor version; the loser's rename is discarded).
+  * statement). Updates still SCAN the store for set-semantics presence
+  * checks, scan-only and never shuffled: an all-ground request
+  * (`INSERT DATA` / `DELETE DATA` only) scans it once, one broadcast
+  * probe for its candidate quads; any other request scans it once per
+  * presence check or pattern solve, plus once for the net screen. Delta
+  * replay adds one anti-join + union per segment to read plans, with
+  * the tiny segment sides broadcast off their file stats; [[vacuum]] is
+  * the compaction step that folds a delta chain back into a base,
+  * bounding replay depth — run it on the same cadence as Delta/Iceberg
+  * table maintenance. Bases are written `partitionBy("g")`, so
+  * constant-GRAPH queries partition-prune. Concurrent writers are safe:
+  * writers racing for the same successor version serialize through
+  * [[occPublish]] — exactly one wins the slot, and each loser recomputes
+  * its delta against the winner's state and publishes at the next
+  * version, so no update is dropped.
   */
 object QuadStore {
 
@@ -1042,17 +1103,20 @@ object QuadStore {
   private def netSidecar(root: String, v: Int): Boolean =
     graft.sources.AtomicStore.exists(s"${deltaPath(root, v)}/$NetSidecar")
 
-  /** Screen a delta to its NET form against `current`:
-    * netAdds = adds ∖ state, netDels = (dels ∩ state) ∖ adds — replay
-    * equivalence is exact (a del-then-re-add of a present quad nets to
-    * nothing on both sides), and the result satisfies the [[NetSidecar]]
-    * contract. The broadcast-semi screen stays LAZY so it fuses into the
-    * publish's single write job (the store side is the snapshot cache's
-    * checkpoint at gate scale; at worst two scan-only passes — never a
-    * shuffle). Deltas carrying clears pass through unscreened (their
-    * readers use the snapshot-diff fallback anyway). */
-  private def netDelta(current: DataFrame,
-      d: Update.Delta): Update.Delta = {
+  /** Screen the delta `mkDelta` computes against `current` to its NET
+    * form against that same snapshot: netAdds = adds ∖ state, netDels =
+    * (dels ∩ state) ∖ adds — replay equivalence is exact (a
+    * del-then-re-add of a present quad nets to nothing on both sides),
+    * and the result satisfies the [[NetSidecar]] contract, which buys
+    * every downstream [[changes]] call a snapshot-free segment read (the
+    * sync hot path). The broadcast-semi screen stays LAZY so it fuses
+    * into the publish's single write job (the store side is the snapshot
+    * cache's checkpoint at gate scale; at worst two scan-only passes —
+    * never a shuffle). Deltas carrying clears pass through unscreened
+    * (their readers use the snapshot-diff fallback anyway). */
+  private def screened(mkDelta: DataFrame => Update.Delta)(
+      current: DataFrame): Update.Delta = {
+    val d = mkDelta(current)
     if (d.clears.nonEmpty) return d
     val keys = Seq("s", "p", "o", "g")
     val adds = d.adds.select(keys.map(col): _*).distinct()
@@ -1123,13 +1187,17 @@ object QuadStore {
     v
   }
 
-  /** Optimistic-concurrency write loop: recompute `d` against the
+  /** Optimistic-concurrency write loop: recompute the delta against the
     * CURRENT state and try to publish it as the next version, retrying
     * while racing writers win the slot — Delta-Lake-style OCC over the
     * same marker protocol, so concurrent updaters serialize without a
-    * lock service and no operation is ever silently dropped. */
+    * lock service and no operation is ever silently dropped. `mkNet`
+    * must return the NET change against the snapshot it is given (see
+    * [[NetSidecar]]) whenever the delta has no clears: [[screened]] makes
+    * any delta net, the ground path ([[groundDelta]]) is net by
+    * construction. Each attempt reads its snapshot once. */
   private[rdf] def occPublish(spark: SparkSession, root: String,
-      mkDelta: DataFrame => Update.Delta): Int = {
+      mkNet: DataFrame => Update.Delta): Int = {
     val maxAttempts = 50
     var attempt = 0
     while (attempt < maxAttempts) {
@@ -1137,11 +1205,7 @@ object QuadStore {
       val cur = currentVersion(root).getOrElse(
         throw new IllegalArgumentException(
           s"no store under $root — init() before update()"))
-      // screen to NET form before publishing: one extra broadcast-semi
-      // store scan at write time buys every downstream [[changes]] call
-      // a snapshot-free segment read (the sync hot path)
-      val d = netDelta(readVersion(spark, root, cur),
-        mkDelta(readVersion(spark, root, cur)))
+      val d = mkNet(readVersion(spark, root, cur))
       if (publishDeltaAt(spark, d, root, cur + 1,
           net = d.clears.isEmpty)) return cur + 1
     }
@@ -1159,17 +1223,39 @@ object QuadStore {
     * untouched — SPARQL 1.1 Protocol's request-level success-or-failure.
     * O(Σ|delta|) bytes written; safe under concurrent writers (OCC
     * retry, [[occPublish]]). Returns the new version number. */
-  def update(spark: SparkSession, root: String, text: String): Int = {
-    val ops = Update.parseAll(text)
-    occPublish(spark, root, cur => Update.deltaSeq(cur, ops))
-  }
+  def update(spark: SparkSession, root: String, text: String): Int =
+    updateOps(spark, root, Update.parseAll(text))
 
   /** [[update]] over PRE-PARSED operations — the protocol layer rewrites
     * ops (the `using-graph-uri` request dataset) before applying; same
-    * atomic one-version commit. */
+    * atomic one-version commit. An all-ground request (`INSERT DATA` /
+    * `DELETE DATA` only) takes [[groundDelta]]; any other op lowers the
+    * whole request through [[Update.deltaSeq]]. */
   def updateOps(spark: SparkSession, root: String,
       ops: Seq[Update.Op]): Int =
-    occPublish(spark, root, cur => Update.deltaSeq(cur, ops))
+    occPublish(spark, root, Update.groundCandidates(ops) match {
+      case Some(cands) => groundDelta(ops, cands)
+      case None => screened(Update.deltaSeq(_, ops))
+    })
+
+  /** The net delta of an all-ground request from ONE presence probe: the
+    * snapshot is scanned once against the BROADCAST candidate quads, the
+    * ≤ |candidates| present ones come back to the driver, and
+    * [[Update.groundNet]] folds the request over them. The published
+    * segment holds the same sets as [[screened]] over [[Update.deltaSeq]]
+    * — one store scan and one collect instead of a semi-join and an
+    * anti-join per op plus the net re-screen. */
+  private def groundDelta(ops: Seq[Update.Op],
+      cands: Seq[Update.Quad]): DataFrame => Update.Delta = { current =>
+    val spark = current.sparkSession
+    import spark.implicits._
+    val keys = Seq("s", "p", "o", "g")
+    val present = current
+      .join(broadcast(cands.toDF(keys: _*)), keys, "left_semi")
+      .as[Update.Quad].collect().toSet
+    val (adds, dels) = Update.groundNet(ops, present)
+    Update.Delta(adds.toDF(keys: _*), dels.toDF(keys: _*), Nil)
+  }
 
   /** Append a quads frame as one delta segment, set-semantically: only
     * quads NOT already in the store land in the segment (the same
@@ -1178,8 +1264,10 @@ object QuadStore {
     * is already present produces an EMPTY segment — which makes this the
     * idempotent micro-batch sink primitive: an at-least-once replay of
     * the same batch appends nothing (see
-    * [[graft.streaming.StreamOps.quadStoreSink]]). Returns the new
-    * version. Safe under concurrent writers (OCC retry). */
+    * [[graft.streaming.StreamOps.quadStoreSink]]). The segment is net
+    * by construction (distinct block minus present quads, no
+    * tombstones), so it publishes unscreened. Returns the new version.
+    * Safe under concurrent writers (OCC retry). */
   def appendQuads(spark: SparkSession, root: String,
       quads: DataFrame): Int = {
     val keys = Seq("s", "p", "o", "g")

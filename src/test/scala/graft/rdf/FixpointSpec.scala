@@ -118,44 +118,6 @@ class FixpointSpec extends SparkSpec {
 
   // ---- driver actions per call ----
 
-  /** Driver actions the eager part of `run` takes, found by job group: one
-    * per SQL execution plus one per job outside any. Raw job counts are
-    * not stable: the number of jobs adaptive execution submits inside one
-    * execution varies between runs of the same call. */
-  private def actions(run: => Any): Int = {
-    val sc = spark.sparkContext
-    val group = s"fixpoint-${System.nanoTime()}"
-    val marker = s"$group-marker"
-    // (job group, SQL execution id or job id) of every job started
-    val started =
-      new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          j: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val p = Option(j.properties)
-        def prop(k: String) = p.flatMap(x => Option(x.getProperty(k)))
-        started.add((prop("spark.jobGroup.id").orNull,
-          prop("spark.sql.execution.id").getOrElse(s"job-${j.jobId}"))): Unit
-      }
-    }
-    def seen(g: String) =
-      started.toArray(Array.empty[(String, String)]).filter(_._1 == g)
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, group)
-      try run finally sc.clearJobGroup()
-      // listener events arrive in order: once the marker job is seen,
-      // every earlier job of the group has been
-      sc.setJobGroup(marker, "marker")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      val deadline = System.currentTimeMillis() + 30000
-      while (seen(marker).isEmpty && System.currentTimeMillis() < deadline)
-        Thread.sleep(20)
-      assert(seen(marker).nonEmpty)
-      seen(group).map(_._2).distinct.length
-    } finally sc.removeSparkListener(listener)
-  }
-
   test("round actions: transitiveClosure on a 5-edge chain") {
     val edges = chain(5).toDF("src", "dst")
     assert(actions(Paths.transitiveClosure(edges)) === ActionsClosure)

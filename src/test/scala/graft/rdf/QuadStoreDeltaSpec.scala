@@ -102,6 +102,21 @@ class QuadStoreDeltaSpec extends SparkSpec {
     assert(wrote === (1 to 6).map(i => s"w:$i").toSet)
   }
 
+  test("a three-op ground request takes two actions: probe and publish") {
+    val root = java.nio.file.Files.createTempDirectory("qsactions").toString
+    QuadStore.init(Quads.build(spark, sf0001), root)
+    // the head snapshot is cached the way a view sync leaves it, so the
+    // count is the update's own work
+    QuadStore.read(spark, root)
+    val n = actions(QuadStore.update(spark, root,
+      """INSERT DATA { GRAPH <g:customer> { <c:new> <name> "New" .
+        |  <c:new> <mktsegment> "AUTOMOBILE" . } } ;
+        |DELETE DATA { GRAPH <g:customer> { <c:1> <mktsegment> "BUILDING" . } } ;
+        |INSERT DATA { GRAPH <g:customer> { <c:1> <mktsegment> "MACHINERY" . } }"""
+        .stripMargin))
+    assert(n <= 2, s"ground request took $n actions")
+  }
+
   test("readVersionGraph ≡ filtered readVersion, with partition pruning") {
     val root = java.nio.file.Files.createTempDirectory("qsslice").toString
     QuadStore.init(Quads.build(spark, sf0001), root)
