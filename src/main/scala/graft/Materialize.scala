@@ -110,26 +110,28 @@ object Materialize {
     * cached computation the probe counted — see [[lazyProbe]].) */
   def probed(df: DataFrame,
       pred: org.apache.spark.sql.Column): (DataFrame, Long) = {
-    import org.apache.spark.sql.functions.{sum, when}
-    tagged(df, "materialize+probe") {
-      lazyProbe(df) { ck =>
-        val row = ck.agg(sum(when(pred, 1L).otherwise(0L))).first()
-        if (row.isNullAt(0)) 0L else row.getLong(0)
-      }
-    }
+    val (ck, ns) = probedN(df, pred)
+    (ck, ns.head)
   }
 
-  /** [[probed]] with TWO predicates in the same single pass — one
-    * scheduler job materializes the blocks and returns both counts
-    * (e.g. a change feed's add AND delete counts). */
-  def probed2(df: DataFrame, predA: org.apache.spark.sql.Column,
-      predB: org.apache.spark.sql.Column): (DataFrame, Long, Long) = {
-    import org.apache.spark.sql.functions.{sum, when}
-    tagged(df, "materialize+probe2") {
-      val (ck, row) = lazyProbe(df)(_.agg(sum(when(predA, 1L).otherwise(0L)),
-        sum(when(predB, 1L).otherwise(0L))).first())
-      (ck, if (row.isNullAt(0)) 0L else row.getLong(0),
-        if (row.isNullAt(1)) 0L else row.getLong(1))
+  /** [[probed]] with any number of predicates in the same single pass —
+    * one scheduler job materializes the blocks and returns one count per
+    * predicate (e.g. a change feed's add, delete and chain counts). The
+    * counts fold over the checkpoint RDD itself, as [[counted]] does: a
+    * global aggregate would add a shuffle stage, and a job with it. */
+  def probedN(df: DataFrame, preds: org.apache.spark.sql.Column*)
+      : (DataFrame, IndexedSeq[Long]) = {
+    import org.apache.spark.sql.functions.{lit, when}
+    tagged(df, "materialize+probe") {
+      val n = preds.size
+      val (ck, sums) = lazyProbe(df) { ck =>
+        ck.select(preds.map(p => when(p, lit(1L)).otherwise(lit(0L))): _*)
+          .queryExecution.toRdd
+          .aggregate(new Array[Long](n))(
+            (acc, row) => { for (i <- 0 until n) acc(i) += row.getLong(i); acc },
+            (a, b) => { for (i <- 0 until n) a(i) += b(i); a })
+      }
+      (ck, sums.toIndexedSeq)
     }
   }
 

@@ -109,8 +109,9 @@ object EncodedView {
     // difference between slice-sized and mirror-sized work each time
     val old = graft.Materialize(slice(EncodedMirror.encodedAt(spark,
       mirrorRoot, cur, Some(col("gid") === gid)), gid))
-    try graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) {
-      tmp => BgpView.compute(old, enc).write.parquet(tmp)
+    try graft.sources.AtomicStore.materializeParquet(
+        Rows.basePath(viewRoot, cur)) {
+      BgpView.compute(old, enc)
     } finally graft.Materialize.release(old)
     cur
   }
@@ -148,8 +149,9 @@ object EncodedView {
         slice(dels, gid), enc)
       val segment = va.withColumn("__op", lit("a"))
         .unionByName(vd.withColumn("__op", lit("d")))
-      graft.sources.AtomicStore.materialize(Rows.segPath(viewRoot, last, cur)) {
-        tmp => segment.write.parquet(tmp)
+      graft.sources.AtomicStore.materializeParquet(
+          Rows.segPath(viewRoot, last, cur)) {
+        segment
       }
     } finally graft.Materialize.release(old)
     cur
@@ -223,9 +225,9 @@ object EncodedView {
     require(!groupVars.contains(countCol),
       "the count column must not collide with a group variable")
     writeMetaAgg(aggRoot, groupVars, countCol)
-    graft.sources.AtomicStore.materialize(Rows.basePath(aggRoot, v)) { tmp =>
+    graft.sources.AtomicStore.materializeParquet(Rows.basePath(aggRoot, v)) {
       read(spark, viewRoot).groupBy(groupVars.map(col): _*)
-        .agg(count(lit(1)).as(countCol)).write.parquet(tmp)
+        .agg(count(lit(1)).as(countCol))
     }
     v
   }
@@ -249,9 +251,9 @@ object EncodedView {
       .select(gv.map(col) :+ sgn.as("__sgn"): _*)
       .groupBy(gv.map(col): _*).agg(sum("__sgn").as(countCol))
       .filter(col(countCol) =!= 0L)
-    graft.sources.AtomicStore.materialize(
-      Rows.segPath(aggRoot, aggLast, viewLast)) { tmp =>
-      delta.write.parquet(tmp)
+    graft.sources.AtomicStore.materializeParquet(
+      Rows.segPath(aggRoot, aggLast, viewLast)) {
+      delta
     }
     viewLast
   }

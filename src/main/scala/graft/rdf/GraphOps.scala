@@ -128,14 +128,17 @@ object GraphOps extends QueryModule {
     * partitioning; frames are eagerly materialized per round
     * ([[graft.Materialize]]) so the plan stays constant-depth, and the
     * loop stops at the first round that peels nothing (a count on the
-    * already-materialized frame). Peeling converges in O(degeneracy)
-    * rounds — single digits on real graphs; `maxRounds` is a cycle
-    * guard, and exhausting it is a LOUD error rather than a silently
-    * partial core.
+    * already-materialized frame). Every round before the first stable
+    * one removes at least one edge, so the loop ends within |edges|
+    * rounds without a cap — a path peels from both ends, about two nodes
+    * a round. `maxRounds` (default: none) is for callers that must
+    * match an externally bounded unroll; exhausting it is a LOUD error
+    * rather than a silently partial core.
     *
     * Determinism: membership of the k-core is unique (the fixpoint does
     * not depend on peel order), so partitioning can't perturb it. */
-  def kcore(edges: DataFrame, k: Int, maxRounds: Int = 50): DataFrame = {
+  def kcore(edges: DataFrame, k: Int,
+      maxRounds: Int = Int.MaxValue): DataFrame = {
     // counted(): each round's checkpoint job doubles as its edge count —
     // one scheduler job per round instead of two
     var (e, m) = graft.Materialize.counted(

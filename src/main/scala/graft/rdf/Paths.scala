@@ -119,9 +119,9 @@ object Paths {
     *  1. OVER-DELETE every pair with SOME derivation through a deleted
     *     edge. For reachability that set is exact WITHOUT iteration: any
     *     path through deleted edge (u,v) decomposes as x→*u, (u,v), v→*y,
-    *     so suspects = {(x,y) : ∃(u,v)∈dels, (x=u ∨ x→*u) ∧ (y=v ∨
-    *     v→*y)} — two joins against the old closure with the deleted
-    *     edges broadcast, and suspects ⊆ C by C's transitivity.
+    *     so suspects = (C ∪ id) ∘ dels ∘ (C ∪ id) — two joins against the
+    *     old closure C ([[throughClosure]]), and suspects ⊆ C by C's
+    *     transitivity.
     *  2. RE-DERIVE the suspects still reachable over surviving edges,
     *     semi-naive: (x,y) survives iff some surviving edge (x,m) has
     *     m = y, or continues into a KEPT pair (round 0) or an
@@ -129,25 +129,37 @@ object Paths {
     *     pass through a newly recovered pair, so joining the frontier
     *     only is complete). Rounds ≤ the affected region's diameter.
     *
-    * Insertions extend semi-naive from the ADDED edges with old segments
-    * pre-composed — x →* u, (u,v) ∈ adds, v →* y, identities included —
-    * so rounds are bounded by the number of added edges on a path, not
-    * the path's length.
+    * Insertions seed with the same composition through the (post-DRed)
+    * closure C′: (C′ ∪ id) ∘ adds ∘ (C′ ∪ id) ∖ C′ is every new pair
+    * whose path uses ONE added edge. Each later semi-naive round adds one
+    * more added edge to the path, so rounds are the chain depth of the
+    * added edges, not the path's length — and ZERO past the seed when
+    * K = {(v, u) : v an added edge's head, u an added edge's tail,
+    * v = u or (v, u) ∈ C} is empty. Proof sketch: on a shortest path
+    * that uses two or more added edges, take two consecutive ones,
+    * (u₁, v₁) then (u₂, v₂). The stretch v₁ →* u₂ between them uses
+    * only surviving old edges, so v₁ = u₂ or (v₁, u₂) ∈ C′ ⊆ C, and
+    * (v₁, u₂) ∈ K. So with K = ∅ no new pair needs two added edges, and
+    * the seed is the whole insertion. K is counted in the churn probe's
+    * own pass, over C and over any superset of the added edges (both
+    * only over-approximate it, which merely runs the loop).
     *
-    * Scale shape: the deleted/added edge sets ride broadcast; per-round
+    * Scale shape: the churned edge sets ride broadcast; per-round
     * frontiers are affected-region-sized and broadcast into scans of the
     * closure where possible. The over-delete and kept-set anti-joins
     * shuffle the closure once each — DRed's intrinsic cost, still far
-    * under the diameter-many |C| shuffles of a recompute. Contract (the
+    * under the diameter-many |C| shuffles of a recompute. The old edge
+    * set is read only when DRed runs. Contract (the
     * [[QuadStore.changes]] guarantee): `adds` disjoint from `oldEdges`,
     * `dels` ⊆ `oldEdges`; both (src, dst) sets.
     */
   def maintainClosure(closure: DataFrame, oldEdges: DataFrame,
       adds: DataFrame, dels: DataFrame): DataFrame =
-    // needDeltas=false: skips the net-delta anti-joins AND their
-    // materialization job — a caller that only wants the new closure
-    // paid two scheduler jobs for frames it immediately discarded
-    maintainClosureImpl(closure, oldEdges, adds, dels, needDeltas = false)._1
+    // needDeltas=false: skips the net-delta checkpoint when both phases
+    // run — a caller that only wants the new closure would pay a
+    // scheduler job for frames it immediately discards
+    maintainClosureImpl(closure, oldEdges, churnOf(adds, dels),
+      sel(adds), needDeltas = false)._1
 
   /** [[maintainClosure]] also returning the NET closure-level change as
     * `(closure, pairAdds, pairDels)` — disjoint frames, a pair deleted by
@@ -156,125 +168,158 @@ object Paths {
     * segments instead of diffing two closure snapshots. */
   def maintainClosureDelta(closure: DataFrame, oldEdges: DataFrame,
       adds: DataFrame, dels: DataFrame): (DataFrame, DataFrame, DataFrame) =
-    maintainClosureImpl(closure, oldEdges, adds, dels, needDeltas = true)
+    maintainClosureImpl(closure, oldEdges, churnOf(adds, dels), sel(adds),
+      needDeltas = true)
+
+  /** [[maintainClosureDelta]] over an edge churn given as tagged rows
+    * `(src, dst, __op)` — `a` net adds, `d` net deletes — still lazy, so
+    * the churn probe materializes it: a caller that derives the churn
+    * itself (the path view's presence probe of the old slice) pays no
+    * job of its own. `candAdds` is any superset of the adds; K is counted
+    * over it. */
+  private[rdf] def maintainClosureChurn(closure: DataFrame,
+      oldEdges: DataFrame, churn: DataFrame, candAdds: DataFrame)
+      : (DataFrame, DataFrame, DataFrame) =
+    maintainClosureImpl(closure, oldEdges, churn, sel(candAdds),
+      needDeltas = true)
+
+  private val pair = Seq("src", "dst")
+  private def sel(df: DataFrame): DataFrame = df.select(pair.map(col): _*)
+
+  private def churnOf(adds: DataFrame, dels: DataFrame): DataFrame =
+    sel(dels).withColumn("__op", lit("d"))
+      .unionByName(sel(adds).withColumn("__op", lit("a")))
+
+  /** (C ∪ id) ∘ X ∘ (C ∪ id): every (x, y) with x = s or (x, s) ∈ C,
+    * (s, d) ∈ X, and y = d or (d, y) ∈ C — the pairs whose path passes
+    * an X edge. X is delta-sized and rides broadcast into the first
+    * closure scan. */
+  private def throughClosure(x: DataFrame, c: DataFrame,
+      bcastLeft: Boolean): DataFrame =
+    thenClosure(x.unionByName(
+      c.select(col("src"), col("dst").as("m"))
+        .join(x.select(col("src").as("m"), col("dst")).hint("broadcast"),
+          Seq("m"))
+        .select(pair.map(col): _*)), c, bcastLeft)
+
+  /** X ∘ (C ∪ id), distinct. `bcast` broadcasts X into the closure scan:
+    * right for an insertion's frontiers, whose left ends are new paths'
+    * sources, but not for DRed's suspects, which hold every predecessor
+    * of a deleted edge and can span a dense region. */
+  private def thenClosure(x: DataFrame, c: DataFrame,
+      bcast: Boolean): DataFrame =
+    x.unionByName((if (bcast) x.hint("broadcast") else x)
+        .select(col("src"), col("dst").as("m"))
+        .join(c.select(col("src").as("m"), col("dst")), Seq("m"))
+        .select(pair.map(col): _*))
+      .distinct()
 
   private def maintainClosureImpl(closure: DataFrame, oldEdges: DataFrame,
-      adds: DataFrame, dels: DataFrame,
+      churn: DataFrame, candAdds: DataFrame,
       needDeltas: Boolean): (DataFrame, DataFrame, DataFrame) =
     withoutConstraintPropagation(closure.sparkSession) {
-      val cols = Seq("src", "dst")
-      val sel = (df: DataFrame) => df.select(cols.map(col): _*)
-      // the rounds below re-read BOTH inputs (over/kept/witnessed all
-      // join against them): materialize once so a caller's lazy closure
-      // (a segment-fold view read) or derived edge set (a sequence view's
-      // composed-edge join) doesn't re-execute per round
-      // reuse(): a caller handing in frames that are already checkpoint-
-      // or scan-backed (the view store's artifact reads) skips two jobs
+      // the phases below re-read the closure (over/kept/seed all join
+      // against it): reuse() keeps a caller's checkpoint- or scan-backed
+      // frame (the view store's fold read) and materializes anything else
       var cur = graft.Materialize.reuse(sel(closure))
-      val edges = graft.Materialize.reuse(sel(oldEdges))
-      // ONE fused job materializes BOTH delta sides and answers both
-      // emptiness probes (probed2): the old shape paid an isEmpty job per
-      // side plus a reuse() checkpoint of the add side, and left the
-      // delete side to recompute per consumer (it feeds three joins)
-      val (dFeed, nDel, nAdd) = graft.Materialize.probed2(
-        sel(dels).withColumn("__op", lit("d"))
-          .unionByName(sel(adds).withColumn("__op", lit("a"))),
-        col("__op") === "d", col("__op") === "a")
-      var pairDels = cur.limit(0)
-      var pairAdds = cur.limit(0)
+      // ONE probe materializes the churn together with the chain pairs K
+      // and answers all three counts
+      val heads = candAdds.select(col("dst").as("src"))
+      val tails = candAdds.select(col("src").as("dst")).hint("broadcast")
+      val chains = heads
+        .join(tails, col("src") === col("dst"), "left_semi")
+        .select(col("src"), col("src").as("dst"))
+        .unionByName(cur.join(heads.hint("broadcast"), Seq("src"), "left_semi")
+          .join(tails, Seq("dst"), "left_semi"))
+      val (feed, counts) = graft.Materialize.probedN(
+        churn.select(col("src"), col("dst"), col("__op"))
+          .unionByName(chains.withColumn("__op", lit("k"))),
+        col("__op") === "a", col("__op") === "d", col("__op") === "k")
+      val Seq(nAdd, nDel, nChain) = counts
+      // edges are null-free; saying so keeps every use of a side's plan
+      // identical, so its broadcasts are shared where inferred not-null
+      // filters would make them differ
+      def side(op: String) = feed
+        .filter(col("__op") === op && col("src").isNotNull &&
+          col("dst").isNotNull)
+        .select(pair.map(col): _*)
+      var pairDels: Option[DataFrame] = None
+      var pairAdds: Option[DataFrame] = None
       if (nDel > 0L) {
-        val delsM = dFeed.filter(col("__op") === "d")
-          .select(cols.map(col): _*)
-        val d = delsM.select(col("src").as("u"), col("dst").as("v"))
-        // {(x, u, v)}: x reaches the deleted edge's tail (or IS it)
-        val lefts = d.select(col("u").as("x"), col("u"), col("v"))
-          .unionByName(cur.select(col("src").as("x"), col("dst").as("u"))
-            .join(d.hint("broadcast"), Seq("u"))
-            .select(col("x"), col("u"), col("v")))
-        // … × {y : y = v ∨ v →* y}. `lefts` is affected-region-sized
-        // (Δ-descended, not Δ-sized) — this join's shuffle is DRed's
-        // intrinsic cost, proportional to the severed region
+        val delsM = side("d")
+        val edges = graft.Materialize.reuse(sel(oldEdges))
+        // the suspects' shuffle is DRed's intrinsic cost, proportional to
+        // the severed region
         val over = graft.Materialize(
-          lefts.select(col("x").as("src"), col("v").as("dst"))
-            .unionByName(lefts.select(col("x"), col("v"))
-              .join(cur.select(col("src").as("v"), col("dst").as("y")),
-                Seq("v"))
-              .select(col("x").as("src"), col("y").as("dst")))
-            .distinct())
-        val kept = graft.Materialize(cur.join(over, cols, "left_anti"))
+          throughClosure(delsM, cur, bcastLeft = false))
+        val kept = graft.Materialize(cur.join(over, pair, "left_anti"))
         // surviving out-edges of suspect sources — the only edges a
         // re-derivation can start with
         val eAff = graft.Materialize(
-          edges.join(delsM.hint("broadcast"), cols, "left_anti")
+          edges.join(delsM.hint("broadcast"), pair, "left_anti")
             .join(over.select("src").distinct().hint("broadcast"),
               Seq("src"), "left_semi"))
-        def witnessed(cand: DataFrame, base: DataFrame): DataFrame = {
+        def witnessed(cand: DataFrame, reached: DataFrame): DataFrame = {
           val via = cand.join(
             eAff.select(col("src"), col("dst").as("m")), Seq("src"))
-          via.filter(col("m") === col("dst")).select(cols.map(col): _*)
+          via.filter(col("m") === col("dst")).select(pair.map(col): _*)
             .unionByName(via.join(
-              base.select(col("src").as("m"), col("dst")),
-              Seq("m", "dst"), "left_semi").select(cols.map(col): _*))
+              reached.select(col("src").as("m"), col("dst")),
+              Seq("m", "dst"), "left_semi").select(pair.map(col): _*))
             .distinct()
         }
         // candidates are the suspects not yet re-derived, so each round
         // recovers only new pairs
         val (red, _) = graft.Materialize.semiNaive(witnessed(over, kept)) {
           (frontier, red, _) =>
-            witnessed(over.join(red, cols, "left_anti"), frontier)
+            witnessed(over.join(red, pair, "left_anti"), frontier)
         }
         // lazy: over and red are checkpoint-backed, so the anti-join is a
-        // delta-bounded plan; it is consumed only by the final tagged
-        // net-delta materialization (or not at all when needDeltas=false)
-        pairDels = over.join(red, cols, "left_anti")
+        // delta-bounded plan its one consumer runs
+        pairDels = Some(over.join(red, pair, "left_anti"))
         cur = graft.Materialize(kept.unionByName(red))
       }
       if (nAdd > 0L) {
-        val a = dFeed.filter(col("__op") === "a").select(cols.map(col): _*)
+        val a = side("a")
         val base = cur // post-deletion closure: already transitively closed
-        // one added edge, old closed segments composed on the left…
-        val leftExt = a.unionByName(
-          base.select(col("src"), col("dst").as("m"))
-            .join(a.select(col("src").as("m"), col("dst"))
-              .hint("broadcast"), Seq("m"))
-            .select(cols.map(col): _*))
-        // …and on the right: frontier broadcast into the closure scan
-        def rightExt(f: DataFrame): DataFrame =
-          f.unionByName(f.hint("broadcast")
-            .select(col("src"), col("dst").as("m"))
-            .join(base.select(col("src").as("m"), col("dst")), Seq("m"))
-            .select(cols.map(col): _*)).distinct()
-        val (all, frontiers) = graft.Materialize.semiNaive(
-            rightExt(leftExt).join(base, cols, "left_anti"),
-            base = Some(base)) { (frontier, all, _) =>
-          // paths with one MORE added edge: frontier ∘ adds ∘ (C ∪ id)
-          val viaAdd = frontier.select(col("src"), col("dst").as("m"))
-            .join(a.select(col("src").as("m"), col("dst"))
-              .hint("broadcast"), Seq("m"))
-            .select(cols.map(col): _*)
-          rightExt(viaAdd).join(all, cols, "left_anti")
-        }
-        if (frontiers.nonEmpty) pairAdds = frontiers.reduce(_.unionByName(_))
-        cur = all
+        val seed = throughClosure(a, base, bcastLeft = true)
+          .join(base, pair, "left_anti")
+        val added =
+          // K = ∅: the seed is the whole insertion (scaladoc) — it stays
+          // lazy, and its one consumer computes it
+          if (nChain == 0L) seed
+          else {
+            val (_, frontiers) = graft.Materialize.semiNaive(seed,
+                base = Some(base)) { (frontier, all, _) =>
+              // paths with one MORE added edge: frontier ∘ adds ∘ (C ∪ id)
+              val viaAdd = frontier.select(col("src"), col("dst").as("m"))
+                .join(a.select(col("src").as("m"), col("dst"))
+                  .hint("broadcast"), Seq("m"))
+                .select(pair.map(col): _*)
+              thenClosure(viaAdd, base, bcast = true)
+                .join(all, pair, "left_anti")
+            }
+            frontiers.reduceOption(_.unionByName(_)).getOrElse(seed.limit(0))
+          }
+        pairAdds = Some(added)
+        cur = base.unionByName(added)
       }
-      // edge-level no-op churn (the store changed, this view's predicates
-      // didn't) leaves the closure untouched and skips the net-delta job
-      if (!needDeltas || (nDel == 0L && nAdd == 0L))
-        (cur, cur.limit(0), cur.limit(0))
-      else {
+      val none = cur.limit(0)
+      (pairAdds, pairDels) match {
+        case _ if !needDeltas => (cur, none, none)
         // a pair the DRed phase dropped and the insertion phase recovered
         // was present before AND after — it nets out of both delta sides.
-        // ONE tagged checkpoint materializes BOTH net sides — two
-        // separate Materialize calls paid two scheduler jobs for frames
-        // every caller consumes exactly once each
-        val net = graft.Materialize(
-          pairAdds.join(pairDels, cols, "left_anti")
-            .withColumn("__op", lit("a"))
-            .unionByName(pairDels.join(pairAdds, cols, "left_anti")
-              .withColumn("__op", lit("d"))))
-        (cur,
-          net.filter(col("__op") === "a").select(cols.map(col): _*),
-          net.filter(col("__op") === "d").select(cols.map(col): _*))
+        // ONE tagged checkpoint materializes BOTH net sides
+        case (Some(pa), Some(pd)) =>
+          val net = graft.Materialize(
+            pa.join(pd, pair, "left_anti").withColumn("__op", lit("a"))
+              .unionByName(pd.join(pa, pair, "left_anti")
+                .withColumn("__op", lit("d"))))
+          (cur,
+            net.filter(col("__op") === "a").select(pair.map(col): _*),
+            net.filter(col("__op") === "d").select(pair.map(col): _*))
+        // one phase ran (or none): its pairs are already net
+        case (pa, pd) => (cur, pa.getOrElse(none), pd.getOrElse(none))
       }
     }
 

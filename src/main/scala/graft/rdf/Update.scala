@@ -16,9 +16,10 @@ import org.apache.spark.sql.functions._
   *  A request made only of these two is resolved on the driver: one
   *  broadcast-semi probe of the store against the request's distinct
   *  quads finds the present ones, and [[groundNet]] folds the ops over
-  *  them into the net change. A request with any other op lowers every
-  *  op through [[deltaSeq]] (a broadcast presence check per INSERT DATA,
-  *  a tombstone block per DELETE DATA), never a global distinct.
+  *  them into the net change. A request with any other op lowers through
+  *  [[deltaSeq]], each run of ground ops first folded into at most one
+  *  DELETE DATA and one INSERT DATA ([[foldGround]]): a tombstone block
+  *  and a broadcast presence check per run, never a global distinct.
   *  - `DELETE WHERE { patterns }` — the pattern is both the match and
   *    the delete template: solve the conjunction (shared variables join
   *    across patterns, `GRAPH <g>` blocks match that named graph),
@@ -199,9 +200,10 @@ object Update {
     * [[composeDeltas]] into one delta — so a request publishes ONE
     * version atomically, and any mid-sequence failure (unbound template
     * variable, empty block) surfaces before anything is committed.
-    * Requests are human-written and short, so the per-op plan growth here
-    * is bounded; a machine-generated thousand-op request should be split
-    * by the caller. */
+    * Each op's plan reads the previous state, so the plan grows with
+    * every lowered op; runs of ground ops lower as at most two
+    * ([[foldGround]]), and a request that alternates ground and pattern
+    * ops op by op still grows per op. */
   def deltaSeq(current: DataFrame, ops: Seq[Op]): Delta = {
     require(ops.nonEmpty, "empty update request")
     val spark = current.sparkSession
@@ -210,12 +212,37 @@ object Update {
       Seq.empty[(String, String, String, String)].toDF("s", "p", "o", "g")
     var state = current
     var acc = Delta(none, none, Nil)
-    ops.foreach { op =>
+    foldGround(ops).foreach { op =>
       val d = delta(state, op)
       state = applyDelta(state, d)
       acc = composeDeltas(acc, d)
     }
     acc
+  }
+
+  /** Fold each maximal run of consecutive `INSERT DATA` / `DELETE DATA`
+    * ops into at most one `DELETE DATA` D followed by one `INSERT DATA`
+    * A, on the driver: an insert of q adds q to A and drops it from D, a
+    * delete the reverse. Exact, since replaying the pair gives
+    * S′ = (S ∖ D) ∪ A, and each quad's last op in the run decides which
+    * side holds it. Empty sides are dropped; other ops pass through in
+    * place. */
+  def foldGround(ops: Seq[Op]): Seq[Op] = {
+    val out = Seq.newBuilder[Op]
+    val adds = scala.collection.mutable.LinkedHashSet.empty[Quad]
+    val dels = scala.collection.mutable.LinkedHashSet.empty[Quad]
+    def flush(): Unit = {
+      if (dels.nonEmpty) out += DeleteData(dels.toSeq)
+      if (adds.nonEmpty) out += InsertData(adds.toSeq)
+      dels.clear(); adds.clear()
+    }
+    ops.foreach {
+      case InsertData(qs) => adds ++= qs; dels --= qs
+      case DeleteData(qs) => dels ++= qs; adds --= qs
+      case op => flush(); out += op
+    }
+    flush()
+    out.result()
   }
 
   /** The candidate set of an ALL-GROUND request — every op `INSERT DATA`
@@ -1157,17 +1184,17 @@ object QuadStore {
       case Update.OneGraph(g) => g
     }.map(g => (null: String, null: String, null: String, g, "g"))
       .toDF("s", "p", "o", "g", "op")
-    graft.sources.AtomicStore.materializeExclusive(deltaPath(root, v)) { tmp =>
+    val rows = clearRows
+      .unionByName(d.dels.withColumn("op", lit("d")))
+      .unionByName(d.adds.withColumn("op", lit("a")))
+    graft.sources.AtomicStore.materializeExclusive(deltaPath(root, v),
+        rows.schema) { tmp =>
       // segments are O(|update|) by construction: ONE output file keeps
       // the task count, the segment listing, and every later read flat —
       // the repartition shuffles only delta-sized bytes while the
       // upstream store scan keeps its full parallelism (coalesce would
       // narrow it to the write's single task)
-      clearRows
-        .unionByName(d.dels.withColumn("op", lit("d")))
-        .unionByName(d.adds.withColumn("op", lit("a")))
-        .repartition(1)
-        .write.parquet(tmp)
+      rows.repartition(1).write.parquet(tmp)
       clearsSidecarWrite(tmp, d.clears)
       if (net && d.clears.isEmpty)
         graft.sources.AtomicStore.writeString(s"$tmp/$NetSidecar", "")

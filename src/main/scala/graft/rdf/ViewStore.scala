@@ -417,9 +417,9 @@ object ViewStore {
         s"no store under $storeRoot — init() before createFiltered()"))
     writeMetaFiltered(viewRoot, graph, text)
     val cond = fs.map(Sparql.filterColumn).reduce(_ && _)
-    graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) { tmp =>
+    graft.sources.AtomicStore.materializeParquet(Rows.basePath(viewRoot, cur)) {
       BgpView.compute(slice(spark, storeRoot, cur, graph), pats)
-        .filter(cond).write.parquet(tmp)
+        .filter(cond)
     }
     cur
   }
@@ -658,9 +658,8 @@ object ViewStore {
       throw new IllegalArgumentException(
         s"no store under $storeRoot — init() before create()"))
     writeMeta(viewRoot, graph, patterns)
-    graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) { tmp =>
+    graft.sources.AtomicStore.materializeParquet(Rows.basePath(viewRoot, cur)) {
       BgpView.compute(slice(spark, storeRoot, cur, graph), patterns)
-        .write.parquet(tmp)
     }
     cur
   }
@@ -674,9 +673,9 @@ object ViewStore {
       throw new IllegalArgumentException(
         s"no store under $storeRoot — init() before create()"))
     writeMetaQuads(viewRoot, patterns)
-    graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) { tmp =>
+    graft.sources.AtomicStore.materializeParquet(Rows.basePath(viewRoot, cur)) {
       BgpView.computeQuads(QuadStore.readVersion(spark, storeRoot, cur),
-        patterns).write.parquet(tmp)
+        patterns)
     }
     cur
   }
@@ -684,6 +683,12 @@ object ViewStore {
   /** The per-direction edge scan of a path view — a SET (the closure's
     * domain), so alternation duplicates collapse. */
   private def pathEdges(t: DataFrame, fwd: Seq[String],
+      inv: Seq[String]): DataFrame =
+    pathDerivations(t, fwd, inv).distinct()
+
+  /** One (src, dst) row per triple-direction deriving a path-view edge:
+    * a bag, one row per alternative that derives the edge. */
+  private def pathDerivations(t: DataFrame, fwd: Seq[String],
       inv: Seq[String]): DataFrame = {
     val parts =
       (if (fwd.isEmpty) Nil
@@ -692,7 +697,42 @@ object ViewStore {
       (if (inv.isEmpty) Nil
        else Seq(t.filter(col("p").isin(inv: _*))
          .select(col("o").as("src"), col("s").as("dst"))))
-    parts.reduce(_.unionByName(_)).distinct()
+    parts.reduce(_.unionByName(_))
+  }
+
+  /** A path view's NET edge churn under the net triple churn
+    * `(tAdds, tDels)` of the old slice `oldT`, as lazy tagged rows
+    * `(src, dst, __op)`, plus the candidate added edges. Triple-level net
+    * is not edge-level net under alternation: an edge survives while ANY
+    * alternative still derives it. So the old slice is probed once
+    * against the BROADCAST candidate edges of the feed, and each
+    * candidate edge counts its derivations: `o` in the old slice, `a`
+    * from added triples, `d` from deleted ones. Deleted triples are old
+    * ones (the [[QuadStore.changes]] contract), so o − d derivations
+    * survive, and an edge is
+    *  - added iff an added triple derives it and no old triple did;
+    *  - deleted iff a deleted triple derived it and no surviving or
+    *    added triple still does.
+    * The grouping is candidate-sized; no full old or new edge set is
+    * built, let alone anti-joined. */
+  private def pathChurn(oldT: DataFrame, tAdds: DataFrame, tDels: DataFrame,
+      fwd: Seq[String], inv: Seq[String]): (DataFrame, DataFrame) = {
+    val pair = Seq("src", "dst")
+    val candAdds = pathDerivations(tAdds, fwd, inv)
+    val cand = candAdds.withColumn("__op", lit("a")).unionByName(
+      pathDerivations(tDels, fwd, inv).withColumn("__op", lit("d")))
+    val old = pathDerivations(oldT, fwd, inv)
+      .join(broadcast(cand.select(pair.map(col): _*)), pair, "left_semi")
+      .withColumn("__op", lit("o"))
+    val n = (op: String) => sum(when(col("__op") === op, 1L).otherwise(0L))
+    val churn = cand.unionByName(old).groupBy(pair.map(col): _*)
+      .agg(n("a").as("a"), n("d").as("d"), n("o").as("o"))
+      .select(col("src"), col("dst"),
+        when(col("a") > 0 && col("o") === 0, lit("a"))
+          .when(col("d") > 0 && col("a") === 0 && col("o") === col("d"),
+            lit("d")).as("__op"))
+      .filter(col("__op").isNotNull)
+    (churn, candAdds)
   }
 
   /** Bootstrap a UNION view — branches of conjunctive BGPs over the same
@@ -706,9 +746,9 @@ object ViewStore {
       throw new IllegalArgumentException(
         s"no store under $storeRoot — init() before createUnion()"))
     writeMetaUnion(viewRoot, graph, branches)
-    graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) { tmp =>
+    graft.sources.AtomicStore.materializeParquet(Rows.basePath(viewRoot, cur)) {
       BgpView.computeUnionCounts(slice(spark, storeRoot, cur, graph),
-        branches).write.parquet(tmp)
+        branches)
     }
     cur
   }
@@ -723,9 +763,9 @@ object ViewStore {
       throw new IllegalArgumentException(
         s"no store under $storeRoot — init() before createOptional()"))
     writeMetaOptional(viewRoot, graph, left, right)
-    graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) { tmp =>
+    graft.sources.AtomicStore.materializeParquet(Rows.basePath(viewRoot, cur)) {
       BgpView.computeOptional(slice(spark, storeRoot, cur, graph),
-        left, right).write.parquet(tmp)
+        left, right)
     }
     cur
   }
@@ -875,9 +915,9 @@ object ViewStore {
       viewRoot: String, v: Int, graph: String,
       nodes: Vector[ENode]): Unit =
     if (!hasEdges(viewRoot))
-      graft.sources.AtomicStore.materialize(Edges.basePath(viewRoot, v)) {
-        tmp => nodeSetsFrame(slice(spark, storeRoot, v, graph), nodes)
-          .write.parquet(tmp)
+      graft.sources.AtomicStore.materializeParquet(
+          Edges.basePath(viewRoot, v)) {
+        nodeSetsFrame(slice(spark, storeRoot, v, graph), nodes)
       }: Unit
 
   /** Net per-node edge deltas from the store's net triple deltas, ALL
@@ -961,7 +1001,8 @@ object ViewStore {
           // the nested closure maintains by the SAME DRed/semi-naive
           // rule the root uses, seeded by the child's net deltas; when
           // the subtree is untouched the loop never runs at all. The
-          // returned net pair deltas are already checkpointed frames.
+          // returned net pair deltas are checkpoints or lazy plans over
+          // them.
           if (da(l).isEmpty && dd(l).isEmpty) {
             da(i) = None; dd(i) = None
           } else {
@@ -1007,14 +1048,14 @@ object ViewStore {
     writeMetaPathExpr(viewRoot, graph, sv, dv, text)
     // per-node composed edge sets first — the closure bootstraps from
     // the published root set, and sync maintains both incrementally
-    graft.sources.AtomicStore.materialize(Edges.basePath(viewRoot, cur)) {
-      tmp => nodeSetsFrame(slice(spark, storeRoot, cur, graph),
-        edgeNodes(inner)).write.parquet(tmp)
+    graft.sources.AtomicStore.materializeParquet(
+        Edges.basePath(viewRoot, cur)) {
+      nodeSetsFrame(slice(spark, storeRoot, cur, graph),
+        edgeNodes(inner))
     }
-    graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) { tmp =>
+    graft.sources.AtomicStore.materializeParquet(Rows.basePath(viewRoot, cur)) {
       Paths.transitiveClosure(rootEdgeSet(spark, viewRoot, cur))
         .select(col("src").as(sv), col("dst").as(dv))
-        .write.parquet(tmp)
     }
     cur
   }
@@ -1055,14 +1096,14 @@ object ViewStore {
       throw new IllegalArgumentException(
         s"no store under $storeRoot — init() before createPathSeq()"))
     writeMetaPathSeq(viewRoot, graph, srcVar, dstVar, steps)
-    graft.sources.AtomicStore.materialize(Edges.basePath(viewRoot, cur)) {
-      tmp => nodeSetsFrame(slice(spark, storeRoot, cur, graph),
-        edgeNodes(stepsTree(steps))).write.parquet(tmp)
+    graft.sources.AtomicStore.materializeParquet(
+        Edges.basePath(viewRoot, cur)) {
+      nodeSetsFrame(slice(spark, storeRoot, cur, graph),
+        edgeNodes(stepsTree(steps)))
     }
-    graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) { tmp =>
+    graft.sources.AtomicStore.materializeParquet(Rows.basePath(viewRoot, cur)) {
       Paths.transitiveClosure(rootEdgeSet(spark, viewRoot, cur))
         .select(col("src").as(srcVar), col("dst").as(dstVar))
-        .write.parquet(tmp)
     }
     cur
   }
@@ -1087,11 +1128,10 @@ object ViewStore {
       throw new IllegalArgumentException(
         s"no store under $storeRoot — init() before createPath()"))
     writeMetaPath(viewRoot, graph, srcVar, dstVar, fwd, inv)
-    graft.sources.AtomicStore.materialize(Rows.basePath(viewRoot, cur)) { tmp =>
+    graft.sources.AtomicStore.materializeParquet(Rows.basePath(viewRoot, cur)) {
       Paths.transitiveClosure(
           pathEdges(slice(spark, storeRoot, cur, graph), fwd, inv))
         .select(col("src").as(srcVar), col("dst").as(dstVar))
-        .write.parquet(tmp)
     }
     cur
   }
@@ -1133,13 +1173,14 @@ object ViewStore {
       // (they bootstrap at their next non-empty sync, gap-free)
       if (Seq("pathseq", "pathexpr").contains(mode(viewRoot)) &&
           hasEdges(viewRoot))
-        graft.sources.AtomicStore.materialize(
-            Edges.segPath(viewRoot, last, cur)) { tmp =>
+        graft.sources.AtomicStore.materializeParquet(
+            Edges.segPath(viewRoot, last, cur)) {
           spark.range(0).select(lit(0).as("__n"), lit("").as("src"),
-            lit("").as("dst"), lit("").as("__op")).write.parquet(tmp)
+            lit("").as("dst"), lit("").as("__op"))
         }
-      graft.sources.AtomicStore.materialize(Rows.segPath(viewRoot, last, cur)) {
-        tmp => empty.repartition(1).write.parquet(tmp)
+      graft.sources.AtomicStore.materializeParquet(
+          Rows.segPath(viewRoot, last, cur)) {
+        empty.repartition(1)
       }
       return cur
     }
@@ -1176,10 +1217,11 @@ object ViewStore {
         // write — ONE fused job checkpoints the feed and answers both
         // side-emptiness probes (the old shape paid the checkpoint plus
         // an isEmpty job per side)
-        val (feed, nA, nD) = graft.Materialize.probed2(
+        val (feed, counts) = graft.Materialize.probedN(
           t(adds).withColumn("__op", lit("a"))
             .unionByName(t(dels).withColumn("__op", lit("d"))),
           col("__op") === "a", col("__op") === "d")
+        val Seq(nA, nD) = counts
         val tAdds = feed.filter(col("__op") === "a").select("s", "p", "o")
         val tDels = feed.filter(col("__op") === "d").select("s", "p", "o")
         val (edgeSeg, oldE) = maintainEdgeSets(spark, viewRoot, last,
@@ -1191,9 +1233,9 @@ object ViewStore {
         // closure maintenance below re-reads the published one-file
         // segment (write-then-read: one job where checkpoint-then-write
         // paid two)
-        graft.sources.AtomicStore.materialize(
+        graft.sources.AtomicStore.materializeParquet(
             Edges.segPath(viewRoot, last, cur)) {
-          tmp => edgeSeg.repartition(1).write.parquet(tmp)
+          edgeSeg.repartition(1)
         }
         val segM = graft.sources.AtomicStore.readParquet(spark, Edges.segPath(viewRoot, last, cur))
         val eAdds = segM.filter(col("__n") === 0 && col("__op") === "a")
@@ -1211,19 +1253,12 @@ object ViewStore {
         val (graph, sv, dv, fwd, inv) = definitionPath(viewRoot)
         val t = tOf(graph)
         val oldT = slice(spark, storeRoot, last, graph)
-        val oldE = pathEdges(oldT, fwd, inv)
-        val newT = oldT.join(t(dels).hint("broadcast"),
-            Seq("s", "p", "o"), "left_anti").unionByName(t(adds))
-        // triple-level net ≠ edge-level net under alternation: an edge
-        // survives while ANY alternative predicate still derives it
-        val eAdds = pathEdges(t(adds), fwd, inv)
-          .join(oldE, Seq("src", "dst"), "left_anti")
-        val eDels = pathEdges(t(dels), fwd, inv)
-          .join(pathEdges(newT, fwd, inv), Seq("src", "dst"), "left_anti")
-        val (_, pa, pd) = Paths.maintainClosureDelta(
+        val (churn, candAdds) = pathChurn(oldT, t(adds), t(dels), fwd, inv)
+        // the old edge set stays lazy: only a DRed phase reads it
+        val (_, pa, pd) = Paths.maintainClosureChurn(
           read(spark, viewRoot)
             .select(col(sv).as("src"), col(dv).as("dst")),
-          oldE, eAdds, eDels)
+          pathEdges(oldT, fwd, inv), churn, candAdds)
         val named = (df: DataFrame) =>
           df.select(col("src").as(sv), col("dst").as(dv))
         opRows((named(pa), named(pd)))
@@ -1247,8 +1282,9 @@ object ViewStore {
     // makes gaps loudly detectable at read. Segments are O(|churn|), so
     // ONE output file: the repartition shuffles only delta-sized bytes
     // while the delta computation keeps its full scan parallelism.
-    graft.sources.AtomicStore.materialize(Rows.segPath(viewRoot, last, cur)) {
-      tmp => segment.repartition(1).write.parquet(tmp)
+    graft.sources.AtomicStore.materializeParquet(
+        Rows.segPath(viewRoot, last, cur)) {
+      segment.repartition(1)
     }
     cur
   }
@@ -1552,14 +1588,12 @@ object ViewStore {
     writeMetaAgg(aggRoot, groupVars, countCol, sums, exts)
     val keys = fineKeys(groupVars, exts)
     val psums = persistedSums(sums, exts)
-    graft.sources.AtomicStore.materialize(Rows.basePath(aggRoot, v)) { tmp =>
-      val base =
-        if (psums.isEmpty && exts.isEmpty)
-          readCounts(spark, viewRoot, groupVars, countCol)
-        else read(spark, viewRoot).groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as(countCol), psums.map { case (o, s) =>
-            sum(longMeasure(s)).as(o) }: _*)
-      base.write.parquet(tmp)
+    graft.sources.AtomicStore.materializeParquet(Rows.basePath(aggRoot, v)) {
+      if (psums.isEmpty && exts.isEmpty)
+        readCounts(spark, viewRoot, groupVars, countCol)
+      else read(spark, viewRoot).groupBy(keys.map(col): _*)
+        .agg(count(lit(1)).as(countCol), psums.map { case (o, s) =>
+          sum(longMeasure(s)).as(o) }: _*)
     }
     v
   }
@@ -1598,10 +1632,10 @@ object ViewStore {
       .groupBy(gcols: _*).agg(sum("__sgn").as(countCol),
         sums.map { case (o, _) => sum(o).as(o) }: _*)
       .filter(live)
-    graft.sources.AtomicStore.materialize(
-      Rows.segPath(aggRoot, aggLast, viewLast)) { tmp =>
+    graft.sources.AtomicStore.materializeParquet(
+      Rows.segPath(aggRoot, aggLast, viewLast)) {
       // summary deltas are O(distinct changed groups): one output file
-      delta.repartition(1).write.parquet(tmp)
+      delta.repartition(1)
     }
     viewLast
   }

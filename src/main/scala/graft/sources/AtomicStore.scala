@@ -2,7 +2,8 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFileSystem, FileStatus, FileSystem, Path}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Crash- and concurrency-safe materialization for build-once persisted
   * artifacts (ANN indexes, encoded triple stores, quad-store versions).
@@ -53,29 +54,53 @@ object AtomicStore {
   /** Ensure a complete store exists at `path`, building it via
     * `build(tempDir)` if absent or partial. Returns `path`. */
   def materialize(path: String)(build: String => Unit): String = {
+    published(path)(build)
+    path
+  }
+
+  /** [[materialize]] of a DataFrame written as plain parquet: `df` is
+    * built only when no complete store exists. When THIS writer's build
+    * is the one published, its schema goes into the [[readParquet]] memo
+    * under the new publish token, so the first read of a fresh base or
+    * segment runs no schema-inference job. */
+  def materializeParquet(path: String)(df: => DataFrame): String = {
+    var schema: Option[StructType] = None
+    published(path) { tmp =>
+      val d = df
+      schema = Some(d.schema)
+      d.write.parquet(tmp)
+    }.foreach(token => schema.foreach(seedSchema(path, token, _)))
+    path
+  }
+
+  /** The new publish token iff THIS call built the store now published
+    * at `path`; None when a complete store already existed or a racing
+    * writer won. */
+  private def published(path: String)(build: String => Unit): Option[String] = {
     val dest = new Path(path)
     val fs = fsFor(dest)
-    if (!complete(fs, dest)) {
-      // partial or pre-marker-format leftovers: rebuild from scratch
-      fs.delete(dest, true)
-      val tmp = new Path(path + ".build." + java.util.UUID.randomUUID().toString.take(8))
-      try {
-        build(tmp.toString)
-        stampMarker(fs, tmp)
-        // rename-if-absent: a racing winner leaves dest in place and our
-        // rename either returns false or (HDFS mv-into-dir semantics)
-        // lands tmp INSIDE dest — detect the stray and discard it, then
-        // demand the winner's store is complete
-        if (fs.exists(dest) || !fs.rename(tmp, dest)) {
-          require(complete(fs, dest), s"failed to materialize store at $path")
-        } else {
-          val stray = new Path(dest, tmp.getName)
-          if (fs.exists(stray)) fs.delete(stray, true)
-          require(complete(fs, dest), s"failed to materialize store at $path")
-        }
-      } finally fs.delete(tmp, true) // no-op when the rename won
-    }
-    path
+    if (complete(fs, dest)) return None
+    // partial or pre-marker-format leftovers: rebuild from scratch
+    fs.delete(dest, true)
+    val tmp = new Path(path + ".build." + java.util.UUID.randomUUID().toString.take(8))
+    try {
+      build(tmp.toString)
+      val token = stampMarker(fs, tmp)
+      // rename-if-absent: a racing winner leaves dest in place and our
+      // rename either returns false or (HDFS mv-into-dir semantics)
+      // lands tmp INSIDE dest — detect the stray and discard it, then
+      // demand the winner's store is complete
+      if (fs.exists(dest) || !fs.rename(tmp, dest)) {
+        require(complete(fs, dest), s"failed to materialize store at $path")
+        None
+      } else {
+        val stray = new Path(dest, tmp.getName)
+        if (fs.exists(stray)) fs.delete(stray, true)
+        require(complete(fs, dest), s"failed to materialize store at $path")
+        // the published marker carries our token only if we won
+        Some(token).filter(_ == markerToken(path))
+      }
+    } finally fs.delete(tmp, true): Unit // no-op when the rename won
   }
 
   /** [[materialize]] that also reports OWNERSHIP: true iff OUR build is
@@ -86,8 +111,11 @@ object AtomicStore {
     * be silently dropped, it must retry at the next version with a
     * recomputed delta (see QuadStore.update's OCC loop). Detection: a
     * writer-unique nonce file travels inside the build and is checked at
-    * the published destination. */
-  def materializeExclusive(path: String)(build: String => Unit): Boolean = {
+    * the published destination. `written`, the schema `build` writes as
+    * plain parquet at the root, is recorded as [[materializeParquet]]
+    * records it. */
+  def materializeExclusive(path: String, written: StructType)(
+      build: String => Unit): Boolean = {
     val dest = new Path(path)
     val fs = fsFor(dest)
     if (complete(fs, dest)) return false
@@ -111,7 +139,7 @@ object AtomicStore {
       build(tmp.toString)
       require(fs.createNewFile(new Path(tmp, nonce)),
         s"cannot stamp writer nonce in $tmp")
-      stampMarker(fs, tmp)
+      val token = stampMarker(fs, tmp)
       if (fs.exists(dest) || !fs.rename(tmp, dest)) {
         require(complete(fs, dest), s"failed to materialize store at $path")
       } else {
@@ -119,20 +147,23 @@ object AtomicStore {
         if (fs.exists(stray)) fs.delete(stray, true)
         require(complete(fs, dest), s"failed to materialize store at $path")
       }
-      fs.exists(new Path(dest, nonce))
+      val won = fs.exists(new Path(dest, nonce))
+      if (won) seedSchema(path, token, written)
+      won
     } finally fs.delete(tmp, true): Unit
   }
 
   /** Stamp the completion marker with a random UUID as CONTENT — the
-    * publish token [[markerToken]] fingerprints on. Mtime would be the
-    * cheaper fingerprint, but filesystems with coarse (1 s) granularity
-    * can wipe + re-publish within one tick and hand a cache the same
-    * (path, mtime) key for different bytes. */
-  private def stampMarker(fs: FileSystem, dir: Path): Unit = {
+    * publish token [[markerToken]] fingerprints on — and return it.
+    * Mtime would be the cheaper fingerprint, but filesystems with coarse
+    * (1 s) granularity can wipe + re-publish within one tick and hand a
+    * cache the same (path, mtime) key for different bytes. */
+  private def stampMarker(fs: FileSystem, dir: Path): String = {
+    val token = java.util.UUID.randomUUID().toString
     val out = fs.create(new Path(dir, Marker), false)
-    try out.write(
-      java.util.UUID.randomUUID().toString.getBytes("UTF-8"))
+    try out.write(token.getBytes("UTF-8"))
     finally out.close()
+    token
   }
 
   private def complete(fs: FileSystem, dest: Path): Boolean =
@@ -228,13 +259,27 @@ object AtomicStore {
   // metadata only, never data — every read still scans the parquet).
   private[sources] val SchemaCapacity = 4096
   private val schemas =
-    new Lru[(String, String), org.apache.spark.sql.types.StructType](SchemaCapacity)
+    new Lru[(String, String), StructType](SchemaCapacity)
+
+  /** Record the schema a winning publish wrote at `path` under its
+    * token. Parquet reads every column back nullable, nested ones too. */
+  private def seedSchema(path: String, token: String,
+      written: StructType): Unit = {
+    import org.apache.spark.sql.types.{ArrayType, DataType, MapType}
+    def nullable(t: DataType): DataType = t match {
+      case s: StructType => StructType(s.fields.map(f =>
+        f.copy(dataType = nullable(f.dataType), nullable = true)))
+      case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+      case MapType(k, v, _) => MapType(nullable(k), nullable(v), true)
+      case other => other
+    }
+    schemas.put((path, token), nullable(written).asInstanceOf[StructType])
+  }
 
   /** The schema of the parquet at `path` as of `fingerprint`, inferred
     * (via `infer`) only on the first read of that fingerprint. */
   private[sources] def schemaOf(path: String, fingerprint: String)(
-      infer: => org.apache.spark.sql.types.StructType)
-      : org.apache.spark.sql.types.StructType =
+      infer: => StructType): StructType =
     schemas.getOrElseUpdate((path, fingerprint))(infer)
 
   /** Read parquet at `path` with its schema memoized per `fingerprint`. */

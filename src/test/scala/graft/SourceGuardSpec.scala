@@ -8,7 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * which re-checks the root's publish token on every hit). The
   * coverage-named stores list, check and compact their entries only
   * through `sources.VersionChain`. Also for the fixpoints: no round cap,
-  * and the path closures' rounds all run through `Materialize.semiNaive`. */
+  * the path closures' rounds all run through `Materialize.semiNaive`,
+  * their composition through the closure is written once, and the path
+  * view's edge delta is a probe, not anti-joins of whole edge sets. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val main = new java.io.File("src/main/scala/graft")
@@ -55,6 +57,36 @@ class SourceGuardSpec extends AnyFunSuite {
     assert(paths.isFile, "rdf/Paths.scala moved — update this guard")
     assert(!text(paths).contains("while ("),
       "rdf/Paths.scala runs its own round loop")
+  }
+
+  test("Paths composes through the closure in one place") {
+    // (C ∪ id) ∘ X ∘ (C ∪ id): C ∘ X (the closure's dst renamed to the
+    // join key) only in throughClosure, X ∘ C (its src renamed) only in
+    // thenClosure; DRed's over-delete and the insertion seed both call it
+    val t = text(new java.io.File(main, "rdf/Paths.scala"))
+    def count(re: String) = re.r.findAllIn(t).size
+    val closure = "\\b(c|cur|base|closure)\\.select\\("
+    assert(count(closure + """col\("src"\), col\("dst"\)\.as\("m"\)""") === 1)
+    assert(count(closure + """col\("src"\)\.as\("m"\), col\("dst"\)""") === 1)
+    assert(count("""def throughClosure\(""") === 1)
+    assert(count("""throughClosure\(""") === 3,
+      "the over-delete and the insertion seed compose through one helper")
+  }
+
+  test("the path view's edge delta anti-joins no full edge set") {
+    val t = text(new java.io.File(main, "rdf/ViewStore.scala"))
+    def between(from: String, to: String): String = {
+      val i = t.indexOf(from)
+      assert(i >= 0, s"`$from` moved — update this guard")
+      t.substring(i, t.indexOf(to, i + from.length))
+    }
+    val branch = between("case \"path\" =>", "case \"")
+    val churn = between("private def pathChurn(", "  /** ")
+    assert(branch.contains("pathChurn("))
+    assert(!branch.contains("left_anti") && !churn.contains("left_anti"),
+      "the path sync anti-joins to get its edge delta")
+    assert(!churn.contains("pathEdges("),
+      "the edge delta builds a full (distinct) edge set")
   }
 
   test("rdf/ reaches into llm/ only for connected components") {

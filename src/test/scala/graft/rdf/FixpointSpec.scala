@@ -64,6 +64,13 @@ class FixpointSpec extends SparkSpec {
     assert(got === Set((node(0), "name", "far"), ("z", "knows", node(0))))
   }
 
+  test("kcore peels a 120-node chain to an empty 2-core") {
+    // the ends peel one node each per round: ~60 rounds, past any small cap
+    val c = (0 until 119).map(i => f"n$i%03d" -> f"n${i + 1}%03d")
+    val got = GraphOps.kcore((c ++ c.map(_.swap)).toDF("src", "dst"), k = 2)
+    assert(got.isEmpty)
+  }
+
   test("p* over a 24-hop chain through Sparql.run") {
     val c = chain(24)
     val got = Sparql.run(triples(c, "p"), "SELECT ?a ?b WHERE { ?a <p>* ?b . }")
@@ -133,6 +140,18 @@ class FixpointSpec extends SparkSpec {
       ActionsMaintain)
   }
 
+  test("round actions: insert-only maintainClosureDelta, one unchained edge") {
+    // no path can use two added edges (K = ∅): only the churn probe runs
+    // (its checkpoint's stage execution and its count fold); the seed
+    // stays lazy for the caller's one consumer
+    val old = chain(4)
+    val closure = closureOf(old).toSeq.toDF("src", "dst")
+    val adds = Seq(node(4) -> node(5)).toDF("src", "dst")
+    val none = Seq.empty[(String, String)].toDF("src", "dst")
+    assert(actions(Paths.maintainClosureDelta(closure, old.toDF("src", "dst"),
+      adds, none)) === ActionsInsert)
+  }
+
   test("round actions: bfs") {
     val edges = chain(5).toDF("src", "dst")
     assert(actions(GraphOps.bfs(edges, node(0), maxDepth = 8)) === ActionsBfs)
@@ -146,7 +165,8 @@ class FixpointSpec extends SparkSpec {
   // measured with one fused checkpoint+count per round; a change here
   // means a round gained or lost a driver action
   private val ActionsClosure = 12
-  private val ActionsMaintain = 12
+  private val ActionsMaintain = 9
+  private val ActionsInsert = 2
   private val ActionsBfs = 13
   private val ActionsCc = 10
 }

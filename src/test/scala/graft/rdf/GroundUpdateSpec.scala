@@ -143,6 +143,36 @@ class GroundUpdateSpec extends SparkSpec {
     commitAndCheck(root, chain(64), folded)
   }
 
+  test("foldGround folds each ground run into one delete and one insert") {
+    val (a, b, c) = (("s:a", "p", "1", ""), ("s:b", "p", "2", "g:x"),
+      ("s:c", "p", "3", ""))
+    val where = Update.DeleteWhere(Seq((TP(C("s:a"), V("p"), V("o")),
+      C(Quads.DefaultGraph))))
+    assert(Update.foldGround(Seq(Update.InsertData(Seq(a, b)),
+      Update.DeleteData(Seq(a, c)), Update.InsertData(Seq(c)), where,
+      Update.DeleteData(Seq(b)), Update.InsertData(Seq(b)))) === Seq(
+      Update.DeleteData(Seq(a)), Update.InsertData(Seq(b, c)), where,
+      Update.InsertData(Seq(b))))
+  }
+
+  test("40 INSERT DATA ops then a DELETE WHERE lower as one ground run") {
+    val root = java.nio.file.Files.createTempDirectory("qsfold").toString
+    val v = QuadStore.init(Seq(("x:1", "label", "old", ""),
+      ("x:2", "label", "keep", "")).toDF("s", "p", "o", "g"), root)
+    val r = new scala.util.Random(20261019L)
+    val inserts = Seq.fill(40)(Seq.fill(1 + r.nextInt(2))(
+      (s"x:${1 + r.nextInt(4)}", "label", s"v${r.nextInt(30)}",
+        if (r.nextBoolean()) "" else "g:extra")))
+    val text = request(inserts.map(true -> _)) +
+      " ;\nDELETE WHERE { <x:1> <label> ?o }"
+    val snap = QuadStore.readVersion(spark, root, v)
+    val want = inserts.foldLeft(set(snap))(_ ++ _)
+      .filterNot { case (s, p, _, g) =>
+        s == "x:1" && p == "label" && g == Quads.DefaultGraph }
+    assert(QuadStore.update(spark, root, text) === v + 1)
+    assert(set(QuadStore.readVersion(spark, root, v + 1)) === want)
+  }
+
   test("a request that nets to nothing publishes an empty segment") {
     val root = java.nio.file.Files.createTempDirectory("qsnetzero").toString
     val view = java.nio.file.Files.createTempDirectory("qsnetzerov").toString
