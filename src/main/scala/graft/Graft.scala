@@ -194,8 +194,10 @@ object Graft {
     rdf.Sparql.runHttpFederated(t, text, urls)
 
   // ---- persisted materialized views (binding + summary) ----
-  /** Materialize a conjunctive SPARQL view over a store; incremental
-    * thereafter via [[viewSync]]. */
+  /** Materialize the maintained view a SPARQL text defines — a BGP, with
+    * FILTERs, GRAPH blocks or one OPTIONAL, a UNION of BGPs, or one
+    * `?s (path)+ ?o` ([[rdf.ViewStore.classify]]) — over a store;
+    * incremental thereafter via [[viewSync]]. */
   def viewCreate(spark: SparkSession, storeRoot: String, viewRoot: String,
       text: String, graph: String = ""): Int =
     rdf.ViewStore.createFromSparql(spark, storeRoot, viewRoot, text, graph)

@@ -12,11 +12,12 @@ import org.apache.spark.sql.functions._
   * ([[EncodedMirror.changesSince]]); reads fold id-binding segments and
   * decode only at emission ([[readDecoded]]).
   *
-  * Same lifecycle contracts as [[ViewStore]]: one-shot armored
-  * definition, and the view and its summaries each one
-  * [[graft.sources.VersionChain]] — plus the mirror-side retention
-  * rule: sync views BEFORE compacting the mirror (a pruned change range
-  * fails loudly in `changesSince`, never a silently stale view).
+  * Same lifecycle contracts as [[ViewStore]]: one-shot definition
+  * (ViewStore's own pair, kind "encoded"), and the view and its
+  * summaries each one [[graft.sources.VersionChain]] — plus the
+  * mirror-side retention rule: sync views BEFORE compacting the mirror
+  * (a pruned change range fails loudly in `changesSince`, never a
+  * silently stale view).
   *
   * Pattern constants encode as `xxhash64(term)` — the mirror's PURE id
   * function — so encoding a definition needs no dictionary read, and a
@@ -32,31 +33,15 @@ object EncodedView {
 
   def segmentCount(root: String): Int = Rows.segmentCount(root)
 
-  // ---- definition metadata (string-space, shared with ViewStore) -----
-
-  private def writeMeta(root: String, graph: String,
-      patterns: Seq[TP]): Unit = {
-    require(patterns.nonEmpty, "empty view definition")
-    val lines = s"encgraph\t${b64(graph)}" +: patterns.map(tp =>
-      Seq(termEnc(tp.s), termEnc(tp.p), termEnc(tp.o)).mkString("\t"))
-    graft.sources.AtomicStore.writeString(s"$root/meta.tsv",
-      lines.mkString("\n"))
-  }
-
-  /** The persisted definition: (graph, STRING patterns). */
-  def definition(root: String): (String, Seq[TP]) = {
-    val lines = graft.sources.AtomicStore.readString(s"$root/meta.tsv")
-      .split("\n").toSeq
-    val g = lines.head.split("\t", -1) match {
-      case Array("encgraph", b) => unb64(b)
-      case _ => throw new IllegalArgumentException(
-        s"not an encoded view under $root")
+  /** The persisted definition: (graph, STRING patterns) — the one
+    * [[ViewStore.readDefinition]], kind "encoded". */
+  def definition(root: String): (String, Seq[TP]) =
+    ViewStore.readDefinition(root) match {
+      case ViewStore.Definition("encoded", g, ViewStore.TripleBgp(p)) =>
+        (g, p)
+      case d => throw new IllegalArgumentException(
+        s"not an id-space view under $root: a ${d.kind} view")
     }
-    (g, lines.tail.map { l =>
-      val Array(s, p, o) = l.split("\t")
-      TP(termDec(s), termDec(p), termDec(o))
-    })
-  }
 
   // ---- id encoding of the definition ----------------------------------
 
@@ -100,7 +85,8 @@ object EncodedView {
       patterns: Seq[TP], graph: String = ""): Int = {
     val cur = EncodedMirror.lastSynced(mirrorRoot)
     require(cur > 0, s"no synced mirror under $mirrorRoot — sync() first")
-    writeMeta(viewRoot, graph, patterns)
+    ViewStore.writeDefinition(viewRoot, "encoded", graph,
+      ViewStore.render(patterns.map((_, C(Quads.DefaultGraph))))): Unit
     val enc = encodePatterns(spark, patterns)
     val gid = gidOf(spark, graph)
     // the gid filter rides BELOW the mirror's last-op fold (pushdown in

@@ -21,6 +21,12 @@ object RdfOps extends QueryModule {
         lit(":15:30\"^^<http://www.w3.org/2001/XMLSchema#dateTime>"))
         .as("o"))
 
+  /** A root of a persisted-view key: keyed by [[ViewStore.Format]]
+    * as well, so a view, its summary and the store or mirror it
+    * reflects are never reopened from an older build's roots. */
+  private def viewKeyRoot(kind: String, d: String): String =
+    graft.sources.AtomicStore.root(kind, d, ViewStore.Format)
+
   val queries: Map[String, Q] = Map(
     "q_triples_build" -> ((s, d) => {
       Triples.build(s, d).orderBy(col("s"), col("p"), col("o"))
@@ -281,8 +287,8 @@ object RdfOps extends QueryModule {
     // base+segments and must equal the recompute over the store head,
     // which the oracle expresses directly over the updated quad set.
     "q_bgp_view_store" -> ((s, d) => {
-      val store = graft.sources.AtomicStore.root("quadstore_vs", d)
-      val view = graft.sources.AtomicStore.root("viewstore", d)
+      val store = viewKeyRoot("quadstore_vs", d)
+      val view = viewKeyRoot("viewstore", d)
       QuadStore.init(Quads.build(s, d), store)
       // ONE atomic `;`-request (SPARQL 1.1 Protocol): the churn is a
       // single version commit, not one per operation — half the publish
@@ -315,8 +321,8 @@ object RdfOps extends QueryModule {
     // that passed the filter in an earlier round. The oracle recomputes
     // the filtered join over the churned slice.
     "q_bgp_view_filtered" -> ((s, d) => {
-      val store = graft.sources.AtomicStore.root("quadstore_vf", d)
-      val view = graft.sources.AtomicStore.root("view_vf", d)
+      val store = viewKeyRoot("quadstore_vf", d)
+      val view = viewKeyRoot("view_vf", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createFilteredFromSparql(s, store, view,
@@ -349,9 +355,9 @@ object RdfOps extends QueryModule {
     // never refolds the binding view; compaction runs agg-after-view so
     // the retention contract (syncAgg before compact(view)) holds.
     "q_bgp_agg_store" -> ((s, d) => {
-      val store = graft.sources.AtomicStore.root("quadstore_av", d)
-      val view = graft.sources.AtomicStore.root("view_av", d)
-      val agg = graft.sources.AtomicStore.root("agg_av", d)
+      val store = viewKeyRoot("quadstore_av", d)
+      val view = viewKeyRoot("view_av", d)
+      val agg = viewKeyRoot("agg_av", d)
       QuadStore.init(Quads.build(s, d), store)
       val pats = Seq(TP(V("cust"), C("mktsegment"), C("BUILDING")),
         TP(V("cust"), C("nation"), V("nat")))
@@ -380,9 +386,9 @@ object RdfOps extends QueryModule {
     // appearing only in the final readDecoded emission. The oracle
     // recomputes the view in string space over the churned slice.
     "q_bgp_view_encoded" -> ((s, d) => {
-      val store = graft.sources.AtomicStore.root("quadstore_ve", d)
-      val mirror = graft.sources.AtomicStore.root("mirror_ve", d)
-      val view = graft.sources.AtomicStore.root("encview_ve", d)
+      val store = viewKeyRoot("quadstore_ve", d)
+      val mirror = viewKeyRoot("mirror_ve", d)
+      val view = viewKeyRoot("encview_ve", d)
       QuadStore.init(Quads.build(s, d), store)
       EncodedMirror.sync(s, store, mirror): Unit
       if (EncodedView.lastSynced(view) == 0)
@@ -414,10 +420,10 @@ object RdfOps extends QueryModule {
     // joins. Same churn as q_bgp_agg_store, recomputed by the oracle in
     // string space.
     "q_bgp_agg_encoded" -> ((s, d) => {
-      val store = graft.sources.AtomicStore.root("quadstore_ae", d)
-      val mirror = graft.sources.AtomicStore.root("mirror_ae", d)
-      val view = graft.sources.AtomicStore.root("encview_ae", d)
-      val agg = graft.sources.AtomicStore.root("encagg_ae", d)
+      val store = viewKeyRoot("quadstore_ae", d)
+      val mirror = viewKeyRoot("mirror_ae", d)
+      val view = viewKeyRoot("encview_ae", d)
+      val agg = viewKeyRoot("encagg_ae", d)
       QuadStore.init(Quads.build(s, d), store)
       EncodedMirror.sync(s, store, mirror): Unit
       if (EncodedView.lastSynced(view) == 0)
@@ -454,9 +460,9 @@ object RdfOps extends QueryModule {
     // integer nationkey through create/sync/syncAgg. The oracle
     // recomputes the GROUP BY directly over the churned slice.
     "q_bgp_agg_answer" -> ((s, d) => {
-      val store = graft.sources.AtomicStore.root("quadstore_aa", d)
-      val view = graft.sources.AtomicStore.root("view_aa", d)
-      val agg = graft.sources.AtomicStore.root("agg_aa", d)
+      val store = viewKeyRoot("quadstore_aa", d)
+      val view = viewKeyRoot("view_aa", d)
+      val agg = viewKeyRoot("agg_aa", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createAggFromSparql(s, store, view, agg,
@@ -491,9 +497,9 @@ object RdfOps extends QueryModule {
     // GROUP BY over the churned slice to prove it. AVG rides as exact
     // integer SUM over live COUNT, divided once at read.
     "q_bgp_agg_minmax" -> ((s, d) => {
-      val store = graft.sources.AtomicStore.root("quadstore_mm", d)
-      val view = graft.sources.AtomicStore.root("view_mm", d)
-      val agg = graft.sources.AtomicStore.root("agg_mm", d)
+      val store = viewKeyRoot("quadstore_mm", d)
+      val view = viewKeyRoot("view_mm", d)
+      val agg = viewKeyRoot("agg_mm", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createAggFromSparql(s, store, view, agg,
@@ -537,8 +543,8 @@ object RdfOps extends QueryModule {
     // the store (ViewAnswer.answerStored, staleness-gated). The oracle
     // recomputes all three patterns directly over the churned slice.
     "q_bgp_view_answer" -> ((s, d) => {
-      val store = graft.sources.AtomicStore.root("quadstore_va", d)
-      val view = graft.sources.AtomicStore.root("view_va", d)
+      val store = viewKeyRoot("quadstore_va", d)
+      val view = viewKeyRoot("view_va", d)
       QuadStore.init(Quads.build(s, d), store)
       val pats = Seq(TP(V("cust"), C("name"), V("cname")),
         TP(V("cust"), C("mktsegment"), C("BUILDING")))
@@ -570,8 +576,8 @@ object RdfOps extends QueryModule {
     // folded). Read = bindings with support > 0 = the UNION recompute
     // over the store head, which the oracle expresses directly.
     "q_bgp_view_union" -> ((s, d) => {
-      val store = graft.sources.AtomicStore.root("quadstore_vu", d)
-      val view = graft.sources.AtomicStore.root("view_vu", d)
+      val store = viewKeyRoot("quadstore_vu", d)
+      val view = viewKeyRoot("view_vu", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createUnionFromSparql(s, store, view,
@@ -603,8 +609,8 @@ object RdfOps extends QueryModule {
     // zz3 arrives matched then loses its match (match→pad, the
     // retraction a plain equi-join would silently miss on null pads).
     "q_bgp_view_optional" -> ((s, d) => {
-      val store = graft.sources.AtomicStore.root("quadstore_vo", d)
-      val view = graft.sources.AtomicStore.root("view_vo", d)
+      val store = viewKeyRoot("quadstore_vo", d)
+      val view = viewKeyRoot("view_vo", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createOptionalFromSparql(s, store, view,
@@ -637,8 +643,8 @@ object RdfOps extends QueryModule {
     // severed. The oracle recomputes with a recursive CTE over the
     // final edge set.
     "q_bgp_view_path" -> ((s, d) => {
-      val store = graft.sources.AtomicStore.root("quadstore_vp", d)
-      val view = graft.sources.AtomicStore.root("view_vp", d)
+      val store = viewKeyRoot("quadstore_vp", d)
+      val view = viewKeyRoot("view_vp", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createPathFromSparql(s, store, view,
@@ -658,17 +664,17 @@ object RdfOps extends QueryModule {
     // The persisted SEQUENCE-path view in the gate: the closure of the
     // COMPOSED edge set `(<region>/^<region>)+` — same-region nation
     // pairs (n —region→ r ←region— n'), real base data in the default
-    // graph. Step edges are joins, so their deltas run the conjunctive
-    // rule (seqEdgeCands) before the closure's DRed rule. Two churn
-    // rounds, each SYNCED: round 1 grows two zz cliques ({n1,n2} via
-    // r1, {n3,n4} via r2); round 2 puts n2 in BOTH regions (the closure
-    // must derive n1→n3 through a genuine 2-hop) and retracts n4's only
-    // region (DRed drops every n4 pair, including its self-pair). The
-    // oracle recomputes with a recursive CTE over the final composed
-    // edges.
+    // graph. Step edges are joins, so their deltas run the persisted
+    // edge sets' join rule (ViewStore.maintainEdgeSets, EJoin) before
+    // the closure's DRed rule. Two churn rounds, each SYNCED: round 1
+    // grows two zz cliques ({n1,n2} via r1, {n3,n4} via r2); round 2 puts
+    // n2 in BOTH regions (the closure must derive n1→n3 through a genuine
+    // 2-hop) and retracts n4's only region (DRed drops every n4 pair,
+    // including its self-pair). The oracle recomputes with a recursive
+    // CTE over the final composed edges.
     "q_bgp_view_path_seq" -> ((s, d) => {
-      val store = graft.sources.AtomicStore.root("quadstore_vq", d)
-      val view = graft.sources.AtomicStore.root("view_vq", d)
+      val store = viewKeyRoot("quadstore_vq", d)
+      val view = viewKeyRoot("view_vq", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createPathSeqFromSparql(s, store, view,
@@ -700,8 +706,8 @@ object RdfOps extends QueryModule {
     // the retracted edge. Oracle recomputes with a recursive CTE over
     // the final composed edge set.
     "q_bgp_view_path_expr" -> ((s, d) => {
-      val store = graft.sources.AtomicStore.root("quadstore_vx", d)
-      val view = graft.sources.AtomicStore.root("view_vx", d)
+      val store = viewKeyRoot("quadstore_vx", d)
+      val view = viewKeyRoot("view_vx", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createPathExprFromSparql(s, store, view,
@@ -733,8 +739,8 @@ object RdfOps extends QueryModule {
     // must cascade through the composition and the outer closure.
     // Oracle: two stacked recursive CTEs over the churned slice.
     "q_bgp_view_path_nested" -> ((s, d) => {
-      val store = graft.sources.AtomicStore.root("quadstore_vz", d)
-      val view = graft.sources.AtomicStore.root("view_vz", d)
+      val store = viewKeyRoot("quadstore_vz", d)
+      val view = viewKeyRoot("view_vz", d)
       QuadStore.init(Quads.build(s, d), store)
       if (ViewStore.lastSynced(view) == 0)
         ViewStore.createPathExprFromSparql(s, store, view,

@@ -345,8 +345,7 @@ object Sparql {
     require(body.where.nonEmpty, "empty SERVICE body")
     def term(t: Term, objPos: Boolean): String = t match {
       case V(n) => s"?$n"
-      case C(v: String) if objPos =>
-        "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
+      case C(v: String) if objPos => quote(v)
       case C(v: String) =>
         require(!v.contains(">") && !v.exists(_.isWhitespace),
           s"term '$v' is not renderable as an IRI")
@@ -3091,6 +3090,10 @@ object Sparql {
     p.expect(")")
     args.toSeq
   }
+
+  /** `v` as a `"…"` literal that [[unquote]] reads back exactly. */
+  private[rdf] def quote(v: String): String =
+    "\"" + v.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
 
   private def unquote(t: String): String =
     t.stripPrefix("\"").stripSuffix("\"")

@@ -33,7 +33,9 @@ object ViewCatalog {
   /** Add a view root (idempotent). The view must already exist — a
     * typo'd root would otherwise poison every later [[answer]]. */
   def register(catalogRoot: String, viewRoot: String): Unit = {
-    ViewStore.mode(viewRoot): Unit // loud if there is no view here
+    // loud if there is no string-space view here (a typo'd root, a
+    // summary, an id-space view)
+    ViewStore.definitionOf(viewRoot): Unit
     val now = (roots(catalogRoot) :+ viewRoot).distinct
     graft.sources.AtomicStore.writeString(file(catalogRoot),
       now.map(b64).mkString("\n"))
@@ -51,9 +53,11 @@ object ViewCatalog {
     val cur = QuadStore.currentVersion(storeRoot).getOrElse(
       throw new IllegalArgumentException(s"no store under $storeRoot"))
     roots(catalogRoot).filter { r =>
-      ViewStore.mode(r) == "triple" &&
-        ViewStore.definition(r)._1 == graph &&
-        ViewStore.lastSynced(r) == cur
+      ViewStore.definitionOf(r) match {
+        case ViewStore.Definition(_, g, _: ViewStore.TripleBgp) =>
+          g == graph && ViewStore.lastSynced(r) == cur
+        case _ => false
+      }
     }
   }
 
@@ -81,7 +85,7 @@ object ViewCatalog {
     * both must already exist. */
   def registerAgg(catalogRoot: String, viewRoot: String,
       aggRoot: String): Unit = {
-    ViewStore.mode(viewRoot): Unit
+    ViewStore.definitionOf(viewRoot): Unit
     ViewStore.definitionAgg(aggRoot): Unit // loud if not a summary
     val now = (aggPairs(catalogRoot) :+ ((viewRoot, aggRoot))).distinct
     graft.sources.AtomicStore.writeString(aggFile(catalogRoot),

@@ -9,9 +9,11 @@ import org.apache.spark.sql.functions._
   * each one [[graft.sources.VersionChain]] (naming, contiguity checks,
   * publish-then-prune compaction live there):
   *
-  *  - `meta.tsv` — the view definition (graph slice + patterns),
-  *    written ONCE at [[create]]; lastSynced is derived from entry
-  *    names, never from mutable metadata (crash-safe by construction).
+  *  - `meta.tsv` — the view definition: its kind, graph slice and
+  *    defining SPARQL text ([[writeDefinition]]), written ONCE at
+  *    create and re-classified on every open ([[classify]]);
+  *    lastSynced is derived from entry names, never from mutable
+  *    metadata (crash-safe by construction).
   *  - the `b`/`s` chain — full snapshots and the view-level net change
   *    between store versions (op 'a'/'d' rows over the binding columns).
   *  - the `e`/`es` chain (path views) — per-node edge sets, below.
@@ -39,258 +41,169 @@ object ViewStore {
     * maintenance job bounds with [[compact]]. */
   def segmentCount(root: String): Int = Rows.segmentCount(root)
 
-  // ---- view definition metadata: one-shot, base64-armored TSV --------
+  // ---- the view definition: (kind, graph, SPARQL text) ---------------
 
-  private def writeMeta(root: String, graph: String,
-      patterns: Seq[TP]): Unit = {
-    val lines = s"graph\t${b64(graph)}" +:
-      patterns.map(tp =>
-        Seq(termEnc(tp.s), termEnc(tp.p), termEnc(tp.o)).mkString("\t"))
-    graft.sources.AtomicStore.writeString(s"$root/meta.tsv",
-      lines.mkString("\n"))
+  /** The `meta.tsv` definition format. Content-keyed roots that hold a
+    * view take it as a key input, so a root an older format wrote is
+    * never reopened under this one. */
+  val Format = "kind-graph-sparql"
+
+  /** A maintainable view shape: what [[classify]] finds in a defining
+    * text, and what create, sync, read and compact dispatch on. */
+  sealed trait Shape { def kind: String }
+  /** A plain conjunctive BGP — the graph-slice view. */
+  final case class TripleBgp(patterns: Seq[TP]) extends Shape {
+    def kind = "triple"
+  }
+  /** Plain and `GRAPH term { BGP }` patterns; a plain pattern addresses
+    * the default graph, a variable graph term binds as a view column. */
+  final case class QuadBgp(patterns: Seq[(TP, Term)]) extends Shape {
+    def kind = "quads"
+  }
+  /** A BGP plus row-local FILTERs over its own variables: they commute
+    * with the counting delta rule, so one predicate restricts the
+    * bootstrap and every delta feed. */
+  final case class FilteredBgp(patterns: Seq[TP],
+      filters: Seq[Sparql.Expr]) extends Shape {
+    def kind = "filtered"
+  }
+  /** Two or more `{ BGP } UNION { BGP }` branches over one variable set,
+    * persisted as support counts. */
+  final case class UnionBgp(branches: Seq[Seq[TP]]) extends Shape {
+    def kind = "union"
+  }
+  /** A BGP plus exactly one `OPTIONAL { BGP }`. */
+  final case class OptionalBgp(left: Seq[TP], right: Seq[TP])
+      extends Shape {
+    def kind = "optional"
+  }
+  /** `?src (p1|…|^q1|…)+ ?dst`: the closure of a LINEAR predicate
+    * alternation, whose edge delta is the alternation over the change
+    * feed. */
+  final case class AltPath(src: String, dst: String, tree: Path)
+      extends Shape {
+    def kind = "path"
+    /** The alternation's forward and inverse predicates. */
+    val (fwd, inv): (Seq[String], Seq[String]) = linearAlt(tree).get
+  }
+  /** `?src (EXPR)+ ?dst` over any tree of sequences, alternations,
+    * (inverse) edges and nested `+` closures: the tree's per-node edge
+    * sets persist beside the closure. */
+  final case class ExprPath(src: String, dst: String, tree: Path)
+      extends Shape {
+    def kind = "pathexpr"
   }
 
-  private def writeMetaQuads(root: String,
-      patterns: Seq[(TP, Term)]): Unit = {
-    val lines = "mode\tquads" +:
-      patterns.map { case (tp, g) =>
-        Seq(termEnc(tp.s), termEnc(tp.p), termEnc(tp.o), termEnc(g))
-          .mkString("\t")
-      }
-    graft.sources.AtomicStore.writeString(s"$root/meta.tsv",
-      lines.mkString("\n"))
-  }
+  /** A view root's definition: its stored kind, graph slice and the
+    * shape its text classifies to, as that kind. */
+  final case class Definition(kind: String, graph: String, shape: Shape)
 
-  /** Is this a quad-pattern (GRAPH-aware) view? */
-  def isQuadView(root: String): Boolean = mode(root) == "quads"
-
-  /** The view's maintenance mode: "triple" (the original conjunctive
-    * slice view), "quads", "agg", "union", "optional" or "path" — every
-    * lifecycle entry point dispatches on this, so one `sync`/`read`/
-    * `compact` surface serves all view shapes. */
-  def mode(root: String): String = {
-    val head = graft.sources.AtomicStore.readString(s"$root/meta.tsv")
-      .split("\n").head.split("\t", -1)
-    if (head(0) == "graph") "triple" else head(1)
-  }
-
-  /** The persisted TRIPLE-view definition: (graph slice, patterns). */
-  def definition(root: String): (String, Seq[TP]) = {
-    val lines = graft.sources.AtomicStore.readString(s"$root/meta.tsv")
-      .split("\n").toSeq
-    // -1: the default graph encodes to an EMPTY field, which a plain
-    // split would drop
-    val g = lines.head.split("\t", -1) match {
-      case Array("graph", b) => unb64(b)
-      case _ => throw new IllegalArgumentException(
-        s"not a triple-slice view under $root — use definitionQuads")
-    }
-    val pats = lines.tail.map { l =>
-      val Array(s, p, o) = l.split("\t")
-      TP(termDec(s), termDec(p), termDec(o))
-    }
-    (g, pats)
-  }
-
-  /** The persisted QUAD-view definition. */
-  def definitionQuads(root: String): Seq[(TP, Term)] = {
-    val lines = graft.sources.AtomicStore.readString(s"$root/meta.tsv")
-      .split("\n").toSeq
-    require(lines.head == "mode\tquads",
-      s"not a quad view under $root — use definition")
-    lines.tail.map { l =>
-      val Array(s, p, o, g) = l.split("\t")
-      (TP(termDec(s), termDec(p), termDec(o)), termDec(g))
-    }
-  }
-
-  // ---- beyond the conjunctive fragment: union / optional / path ------
-
-  private def writeMetaUnion(root: String, graph: String,
-      branches: Seq[Seq[TP]]): Unit = {
-    val lines = s"mode\tunion\t${b64(graph)}" +:
-      branches.zipWithIndex.flatMap { case (pats, i) =>
-        pats.map(tp => (Seq(i.toString) ++
-          Seq(termEnc(tp.s), termEnc(tp.p), termEnc(tp.o))).mkString("\t"))
-      }
-    graft.sources.AtomicStore.writeString(s"$root/meta.tsv",
-      lines.mkString("\n"))
-  }
-
-  /** The persisted UNION-view definition: (graph slice, branches). */
-  def definitionUnion(root: String): (String, Seq[Seq[TP]]) = {
-    val lines = graft.sources.AtomicStore.readString(s"$root/meta.tsv")
-      .split("\n").toSeq
-    val g = lines.head.split("\t", -1) match {
-      case Array("mode", "union", b) => unb64(b)
-      case _ => throw new IllegalArgumentException(
-        s"not a union view under $root")
-    }
-    val branches = lines.tail.map { l =>
-      val Array(i, s, p, o) = l.split("\t")
-      (i.toInt, TP(termDec(s), termDec(p), termDec(o)))
-    }.groupBy(_._1).toSeq.sortBy(_._1).map(_._2.map(_._2))
-    (g, branches)
-  }
-
-  private def writeMetaOptional(root: String, graph: String,
-      left: Seq[TP], right: Seq[TP]): Unit = {
-    val enc = (tag: String, pats: Seq[TP]) => pats.map(tp =>
-      (Seq(tag) ++ Seq(termEnc(tp.s), termEnc(tp.p), termEnc(tp.o)))
-        .mkString("\t"))
-    val lines = s"mode\toptional\t${b64(graph)}" +:
-      (enc("L", left) ++ enc("R", right))
-    graft.sources.AtomicStore.writeString(s"$root/meta.tsv",
-      lines.mkString("\n"))
-  }
-
-  /** The persisted OPTIONAL-view definition: (graph, left, right). */
-  def definitionOptional(root: String): (String, Seq[TP], Seq[TP]) = {
-    val lines = graft.sources.AtomicStore.readString(s"$root/meta.tsv")
-      .split("\n").toSeq
-    val g = lines.head.split("\t", -1) match {
-      case Array("mode", "optional", b) => unb64(b)
-      case _ => throw new IllegalArgumentException(
-        s"not an optional view under $root")
-    }
-    val pats = lines.tail.map { l =>
-      val Array(tag, s, p, o) = l.split("\t")
-      (tag, TP(termDec(s), termDec(p), termDec(o)))
-    }
-    (g, pats.collect { case ("L", tp) => tp },
-      pats.collect { case ("R", tp) => tp })
-  }
-
-  private def writeMetaPath(root: String, graph: String, srcVar: String,
-      dstVar: String, fwd: Seq[String], inv: Seq[String]): Unit = {
-    val lines = Seq(
-      s"mode\tpath\t${b64(graph)}",
-      (Seq("vars", b64(srcVar), b64(dstVar))).mkString("\t"),
-      (Seq("fwd") ++ fwd.map(b64)).mkString("\t"),
-      (Seq("inv") ++ inv.map(b64)).mkString("\t"))
-    graft.sources.AtomicStore.writeString(s"$root/meta.tsv",
-      lines.mkString("\n"))
-  }
-
-  /** The persisted PATH-view definition:
-    * (graph, srcVar, dstVar, forward preds, inverse preds). */
-  def definitionPath(root: String)
-      : (String, String, String, Seq[String], Seq[String]) = {
-    val lines = graft.sources.AtomicStore.readString(s"$root/meta.tsv")
-      .split("\n").toSeq
-    val g = lines.head.split("\t", -1) match {
-      case Array("mode", "path", b) => unb64(b)
-      case _ => throw new IllegalArgumentException(
-        s"not a path view under $root")
-    }
-    val byTag = lines.tail.map { l =>
-      val parts = l.split("\t", -1).toSeq
-      (parts.head, parts.tail)
-    }.toMap
-    val Seq(sv, dv) = byTag("vars").map(unb64)
-    (g, sv, dv, byTag("fwd").map(unb64), byTag("inv").map(unb64))
-  }
-
-  private def writeMetaPathSeq(root: String, graph: String, srcVar: String,
-      dstVar: String, steps: Seq[(Seq[String], Seq[String])]): Unit = {
-    val lines = Seq(
-      s"mode\tpathseq\t${b64(graph)}",
-      (Seq("vars", b64(srcVar), b64(dstVar))).mkString("\t")) ++
-      steps.map { case (fwd, inv) =>
-        (Seq("step", fwd.size.toString) ++ fwd.map(b64) ++ inv.map(b64))
-          .mkString("\t")
-      }
-    graft.sources.AtomicStore.writeString(s"$root/meta.tsv",
-      lines.mkString("\n"))
-  }
-
-  /** The persisted SEQUENCE-path-view definition:
-    * (graph, srcVar, dstVar, steps), each step a (forward, inverse)
-    * predicate alternation. */
-  def definitionPathSeq(root: String)
-      : (String, String, String, Seq[(Seq[String], Seq[String])]) = {
-    val lines = graft.sources.AtomicStore.readString(s"$root/meta.tsv")
-      .split("\n").toSeq
-    val g = lines.head.split("\t", -1) match {
-      case Array("mode", "pathseq", b) => unb64(b)
-      case _ => throw new IllegalArgumentException(
-        s"not a sequence-path view under $root")
-    }
-    val Seq(sv, dv) = lines(1).split("\t", -1).toSeq match {
-      case Seq("vars", a, b) => Seq(unb64(a), unb64(b))
-      case other => throw new IllegalArgumentException(
-        s"corrupt pathseq meta under $root: $other")
-    }
-    val steps = lines.drop(2).map { l =>
-      l.split("\t", -1).toSeq match {
-        case Seq("step", n, rest @ _*) =>
-          val (f, i) = rest.splitAt(n.toInt)
-          (f.map(unb64), i.map(unb64))
-        case other => throw new IllegalArgumentException(
-          s"corrupt pathseq step under $root: $other")
-      }
-    }
-    (g, sv, dv, steps)
-  }
-
-  private def writeMetaPathExpr(root: String, graph: String,
-      srcVar: String, dstVar: String, text: String): Unit = {
-    val lines = Seq(
-      s"mode\tpathexpr\t${b64(graph)}",
-      Seq("vars", b64(srcVar), b64(dstVar)).mkString("\t"),
-      Seq("text", b64(text)).mkString("\t"))
-    graft.sources.AtomicStore.writeString(s"$root/meta.tsv",
-      lines.mkString("\n"))
-  }
-
-  /** The persisted GENERAL path-view definition: (graph, srcVar, dstVar,
-    * inner path tree). The stored form is the defining SPARQL text — the
-    * parser stays the single source of truth for its meaning. */
-  def definitionPathExpr(root: String): (String, String, String, Path) = {
-    val lines = graft.sources.AtomicStore.readString(s"$root/meta.tsv")
-      .split("\n").toSeq
-    val g = lines.head.split("\t", -1) match {
-      case Array("mode", "pathexpr", b) => unb64(b)
-      case _ => throw new IllegalArgumentException(
-        s"not a pathexpr view under $root")
-    }
-    val byTag = lines.tail.map { l =>
-      val parts = l.split("\t", -1).toSeq
-      (parts.head, parts.tail)
-    }.toMap
-    val Seq(sv, dv) = byTag("vars").map(unb64)
-    val (psv, pdv, inner) = pathExprFromSparql(unb64(byTag("text").head))
-    require(psv == sv && pdv == dv, s"corrupt pathexpr meta under $root")
-    (g, sv, dv, inner)
-  }
-
-  /** The GENERAL path-view fragment from SPARQL text:
-    * `SELECT … WHERE { ?src (EXPR)+ ?dst }` where EXPR is ANY tree of
-    * sequences, alternations and (inverse) edges — `((p/q)|r)+`, nested
-    * shapes, anything whose edge set is joins-and-unions (the round-10
-    * generalization; [[pathFromSparql]] and [[pathSeqFromSparql]] are its
-    * linear special cases). Closures (`+ * ?`) and negated property sets
-    * INSIDE the expression keep the loud rejection: their edge sets are
-    * themselves closures / complements, not joins. */
-  def pathExprFromSparql(text: String): (String, String, Path) = {
+  /** Classify a defining SPARQL text. The maintainable fragment is one
+    * SELECT with no solution modifiers or aggregation, projecting the
+    * full binding, whose body is a BGP with at most one of: row-local
+    * FILTERs, GRAPH-wrapped BGPs, one `OPTIONAL { BGP }` — or two or
+    * more plain `UNION` branches, or exactly one `?src (EXPR)+ ?dst`
+    * path. Anything else is rejected loudly: the delta rules maintain
+    * these shapes, and richer ones compose DOWNSTREAM of the
+    * materialization (as reads over it, or via IncrementalAgg on its
+    * delta). */
+  def classify(text: String): Shape = {
     val q = Sparql.parse(text)
-    require(q.branches.size == 1 && !q.ask && q.construct.isEmpty &&
-      q.describe.isEmpty, "view definitions are single-block SELECTs")
-    val b = q.branches.head
-    require(b.where.isEmpty && b.paths.size == 1,
-      "a maintainable path view is exactly one path pattern")
-    bareBody(b, "a maintainable path view is exactly one path pattern",
-      allowPaths = true)
-    noModifiers(q)
-    val (sv, dv, inner) = b.paths.head match {
-      case (V(s), PPlus(in), V(d)) => (s, d, in)
-      case (_, p, _) => throw new IllegalArgumentException(
-        s"a maintainable path view is `?src (expr)+ ?dst`, got $p")
+    require(!q.ask && q.construct.isEmpty && q.describe.isEmpty,
+      "view definitions are SELECTs")
+    require(!q.distinct && q.orderKeys.isEmpty && q.limit.isEmpty &&
+      q.offset.isEmpty && q.selectAggs.isEmpty && q.groupVars.isEmpty &&
+      q.having.isEmpty && q.selectBinds.isEmpty &&
+      q.trailingValues.isEmpty,
+      "view definitions take no solution modifiers or aggregation")
+    val shape =
+      if (q.branches.size > 1) unionShape(q.branches)
+      else bodyShape(q.branches.head)
+    val vars = shape match {
+      case TripleBgp(p) => tpVars(p)
+      case QuadBgp(p) => tpVars(p.map(_._1)) ++
+        p.map(_._2).collect { case V(n) => n }
+      case FilteredBgp(p, _) => tpVars(p)
+      case UnionBgp(bs) => tpVars(bs.head)
+      case OptionalBgp(l, r) => tpVars(l ++ r)
+      case AltPath(s, d, _) => Seq(s, d)
+      case ExprPath(s, d, _) => Seq(s, d)
     }
-    validatePathExpr(inner)
-    require(sv != dv, "path view endpoints must be distinct variables")
-    fullBinding(q, Seq(sv, dv).sorted)
-    (sv, dv, inner)
+    require(q.projection == Seq("*") || q.projection.toSet == vars.toSet,
+      s"the materialized view holds the FULL binding (${
+        vars.distinct.sorted.mkString(", ")}) — project or aggregate " +
+        "over the view's reads, or via IncrementalAgg on its delta")
+    shape
+  }
+
+  /** The pattern groups a block holds beyond its plain BGP, by name. */
+  private def members(b: Sparql.Block): Seq[String] = Seq(
+    "OPTIONAL" -> b.optionals, "FILTER" -> b.filters, "MINUS" -> b.minuses,
+    "VALUES" -> b.values, "BIND" -> b.binds, "path" -> b.paths,
+    "EXISTS" -> b.exists, "subquery" -> b.subqueries, "GRAPH" -> b.graphs,
+    "nested UNION" -> b.unions, "SERVICE" -> b.services)
+    .collect { case (name, xs) if xs.nonEmpty => name }
+
+  private def bodyShape(b: Sparql.Block): Shape = members(b) match {
+    case Seq() => TripleBgp(bgp(b.where))
+    case Seq("FILTER") =>
+      val vars = tpVars(b.where)
+      b.filters.foreach { f =>
+        val free = Sparql.filterVars(f).filterNot(vars.contains)
+        require(free.isEmpty,
+          s"FILTER references ${free.map("?" + _).mkString(", ")} which " +
+            "the view's BGP does not bind — constant row-local " +
+            "constraints only")
+      }
+      FilteredBgp(bgp(b.where), b.filters)
+    case Seq("GRAPH") =>
+      QuadBgp(b.where.map(inDefault) ++ b.graphs.flatMap { case (g, in) =>
+        require(members(in).isEmpty,
+          "GRAPH blocks in view definitions take bare BGP bodies")
+        bgp(in.where).map(tp => (tp, g))
+      })
+    case Seq("OPTIONAL") =>
+      require(b.optionals.size == 1, "exactly one OPTIONAL block")
+      val ob = b.optionals.head
+      require(ob.pats.nonEmpty && ob.paths.isEmpty && ob.filters.isEmpty,
+        "the OPTIONAL body of a maintainable view is a bare BGP")
+      OptionalBgp(bgp(b.where), ob.pats)
+    case Seq("path") =>
+      require(b.where.isEmpty && b.paths.size == 1,
+        "a maintainable path view is exactly one path pattern")
+      b.paths.head match {
+        case (V(s), PPlus(inner), V(d)) =>
+          require(s != d, "path view endpoints must be distinct variables")
+          if (linearAlt(inner).isDefined) AltPath(s, d, inner)
+          else { validatePathExpr(inner); ExprPath(s, d, inner) }
+        case (_, p, _) => throw new IllegalArgumentException(
+          s"a maintainable path view is `?src (expr)+ ?dst`, got $p — " +
+            "`*`'s zero-hop row set and constant endpoints compose " +
+            "downstream of the materialization")
+      }
+    case other => throw new IllegalArgumentException(
+      s"a maintainable view body is a BGP plus at most one of FILTER, " +
+        s"GRAPH, OPTIONAL or one path — got ${other.mkString(" + ")}; " +
+        "compose the rest downstream of the materialization")
+  }
+
+  private def unionShape(branches: Seq[Sparql.Block]): Shape = {
+    val bs = branches.map { b =>
+      require(members(b).isEmpty, "each union branch of a maintainable " +
+        "view is a plain BGP — anything richer composes downstream of " +
+        "the materialization")
+      bgp(b.where)
+    }
+    val per = bs.map(tpVars(_).toSet)
+    require(per.forall(_ == per.head),
+      "union view branches must bind the same variable set, got " +
+        per.map(_.toSeq.sorted.mkString("{", ",", "}")).mkString(" vs "))
+    UnionBgp(bs)
+  }
+
+  private def bgp(pats: Seq[TP]): Seq[TP] = {
+    require(pats.nonEmpty, "a view definition's BGP blocks are non-empty")
+    pats
   }
 
   private def validatePathExpr(p: Path): Unit = p match {
@@ -298,9 +211,9 @@ object ViewStore {
     case PInv(PEdge(_: String)) =>
     case PSeq(l, r) => validatePathExpr(l); validatePathExpr(r)
     case PAlt(l, r) => validatePathExpr(l); validatePathExpr(r)
-    // a NESTED one-or-more (round 11): its pair set persists as one
-    // more tree node and maintains by the closure's own DRed/semi-naive
-    // rule over the inner operand's deltas — `(p+/q)|r` and friends
+    // a NESTED one-or-more: its pair set persists as one more tree node
+    // and maintains by the closure's own DRed/semi-naive rule over the
+    // inner operand's deltas — `(p+/q)|r` and friends
     case PPlus(in) => validatePathExpr(in)
     case other => throw new IllegalArgumentException(
       s"a maintainable path expression composes sequences, alternations, " +
@@ -308,336 +221,302 @@ object ViewStore {
         "(`*`/`?`/negated sets compose downstream of the materialization)")
   }
 
-  /** Extract a maintainable pattern set from SPARQL text: a single
-    * `SELECT * WHERE { <plain BGP> }` (or a projection naming every
-    * pattern variable). Anything beyond the BGP fragment — OPTIONAL,
-    * FILTER, UNION, paths, GRAPH, aggregation, modifiers — is rejected
-    * loudly: the delta-join rule maintains conjunctive views; richer
-    * shapes compose DOWNSTREAM of the materialization (filters as reads
-    * over it, projections/aggregates via IncrementalAgg on the delta). */
-  def patternsFromSparql(text: String): Seq[TP] = {
-    val q = Sparql.parse(text)
-    require(q.branches.size == 1 && !q.ask && q.construct.isEmpty &&
-      q.describe.isEmpty, "view definitions are single-block SELECTs")
-    val b = q.branches.head
-    require(b.optionals.isEmpty && b.filters.isEmpty && b.minuses.isEmpty &&
-      b.values.isEmpty && b.binds.isEmpty && b.paths.isEmpty &&
-      b.exists.isEmpty && b.subqueries.isEmpty && b.graphs.isEmpty &&
-      b.unions.isEmpty && b.services.isEmpty && b.where.nonEmpty,
-      "a maintainable view body is a plain BGP — compose OPTIONAL/" +
-        "FILTER/UNION/paths/aggregation downstream of the materialization")
-    require(!q.distinct && q.orderKeys.isEmpty && q.limit.isEmpty &&
-      q.offset.isEmpty && q.selectAggs.isEmpty && q.groupVars.isEmpty &&
-      q.having.isEmpty && q.selectBinds.isEmpty,
-      "view definitions take no solution modifiers or aggregation")
-    val vars = b.where.flatMap(tp => Seq(tp.s, tp.p, tp.o))
+  /** (forward, inverse) predicates of a LINEAR alternation `p|…|^q|…`
+    * — linear in the triples, so its edge delta is the alternation
+    * applied to the change feed; None for any other tree. */
+  private def linearAlt(p: Path): Option[(Seq[String], Seq[String])] =
+    p match {
+      case PEdge(v: String) => Some((Seq(v), Nil))
+      case PInv(PEdge(v: String)) => Some((Nil, Seq(v)))
+      case PAlt(l, r) =>
+        for ((lf, li) <- linearAlt(l); (rf, ri) <- linearAlt(r))
+          yield (lf ++ rf, li ++ ri)
+      case _ => None
+    }
+
+  private def tpVars(pats: Seq[TP]): Seq[String] =
+    pats.flatMap(tp => Seq(tp.s, tp.p, tp.o))
       .collect { case V(n) => n }.distinct
-    require(q.projection == Seq("*") || q.projection.toSet == vars.toSet,
-      s"the materialized view holds the FULL binding (${
-        vars.mkString(", ")}) — project or aggregate over the view's " +
-        "reads, or via IncrementalAgg on its delta")
-    b.where
+
+  private def inDefault(tp: TP): (TP, Term) = (tp, C(Quads.DefaultGraph))
+
+  /** `shape` as a `kind` view. Where two kinds accept one text — a
+    * GRAPH-free BGP is a triple, quads or id-space view; a linear
+    * alternation a path or pathexpr view — the stored kind says which. */
+  private def as(kind: String, shape: Shape): Shape = (kind, shape) match {
+    case (k, s) if k == s.kind => s
+    case ("encoded", s: TripleBgp) => s
+    case ("quads", TripleBgp(p)) => QuadBgp(p.map(inDefault))
+    case ("pathexpr", AltPath(s, d, t)) => ExprPath(s, d, t)
+    case (k, s) => notA(k, s)
   }
 
-  /** [[create]] from SPARQL text ([[patternsFromSparql]]'s fragment). */
-  def createFromSparql(spark: SparkSession, storeRoot: String,
-      viewRoot: String, text: String, graph: String = ""): Int =
-    create(spark, storeRoot, viewRoot, patternsFromSparql(text), graph)
+  private def notA(kind: String, s: Shape): Nothing =
+    throw new IllegalArgumentException(
+      s"the definition is a ${s.kind} view, not a $kind view")
 
-  /** The FILTERED-view fragment: a plain conjunctive BGP plus constant
-    * row-local FILTER constraints over its own variables — "customers
-    * in BUILDING with acctbal > X" as a maintained view. Row-local
-    * filters COMMUTE with the counting delta rule (a binding passes or
-    * fails independent of every other row), so the same predicate
-    * restricts the bootstrap and every delta feed identically; anything
-    * richer (EXISTS, aggregates, unbound vars) stays a loud rejection. */
-  def filteredPatternsFromSparql(
-      text: String): (Seq[TP], Seq[Sparql.Expr]) = {
-    val q = Sparql.parse(text)
-    require(q.branches.size == 1 && !q.ask && q.construct.isEmpty &&
-      q.describe.isEmpty, "view definitions are single-block SELECTs")
-    val b = q.branches.head
-    require(b.optionals.isEmpty && b.minuses.isEmpty &&
-      b.values.isEmpty && b.binds.isEmpty && b.paths.isEmpty &&
-      b.exists.isEmpty && b.subqueries.isEmpty && b.graphs.isEmpty &&
-      b.unions.isEmpty && b.services.isEmpty && b.where.nonEmpty,
-      "a maintainable filtered view is a plain BGP plus row-local " +
-        "FILTERs — compose OPTIONAL/UNION/paths/aggregation downstream " +
-        "of the materialization")
-    require(b.filters.nonEmpty,
-      "no FILTER in the definition — use createFromSparql for plain " +
-        "conjunctive views")
-    noModifiers(q)
-    val vars = tpVars(b.where)
-    b.filters.foreach { f =>
-      val free = Sparql.filterVars(f).filterNot(vars.contains)
-      require(free.isEmpty,
-        s"FILTER references ${free.map("?" + _).mkString(", ")} which " +
-          "the view's BGP does not bind — constant row-local " +
-          "constraints only")
+  /** A pattern-form definition as SPARQL text. Every constant renders
+    * as an escaped `"…"` literal, which [[Sparql]] reads back to the same
+    * string in subject, predicate, object and GRAPH position;
+    * default-graph patterns render outside any GRAPH block. */
+  private[rdf] def render(patterns: Seq[(TP, Term)]): String = {
+    def term(t: Term): String = t match {
+      case V(n) if n.matches("(_:)?[A-Za-z_]\\w*") =>
+        if (n.startsWith("_:")) n else "?" + n
+      case C(v: String) => Sparql.quote(v)
+      case other => throw new IllegalArgumentException(
+        s"persisted view definitions are STRING patterns over named " +
+          s"variables, got $other")
     }
-    require(q.projection == Seq("*") || q.projection.toSet == vars.toSet,
-      s"the materialized view holds the FULL binding (${
-        vars.mkString(", ")}) — project or aggregate over the view's " +
-        "reads, or via IncrementalAgg on its delta")
-    (b.where, b.filters)
+    patterns.map { case (tp, g) =>
+      val pat = Seq(tp.s, tp.p, tp.o).map(term).mkString("", " ", " .")
+      if (g == C(Quads.DefaultGraph)) pat else s"GRAPH ${term(g)} { $pat }"
+    }.mkString("SELECT * WHERE { ", " ", " }")
   }
 
-  // the filtered view's meta persists the DEFINITION TEXT — the filter
-  // expressions re-parse from it at every sync (the pathexpr precedent)
-  private def writeMetaFiltered(root: String, graph: String,
-      text: String): Unit =
+  /** Persist a view definition — the ONE writer of a view's `meta.tsv`:
+    * a single line `view <kind> <graph> <text>`, graph and text
+    * base64-armored. The text is classified as a `kind` view before
+    * anything is written. */
+  private[rdf] def writeDefinition(root: String, kind: String,
+      graph: String, text: String): Definition = {
+    val d = Definition(kind, graph, as(kind, classify(text)))
     graft.sources.AtomicStore.writeString(s"$root/meta.tsv",
-      Seq("mode", "filtered", b64(graph), b64(text)).mkString("\t"))
-
-  /** The persisted FILTERED-view definition:
-    * (graph slice, patterns, filter expressions). */
-  def definitionFiltered(
-      root: String): (String, Seq[TP], Seq[Sparql.Expr]) = {
-    val head = graft.sources.AtomicStore.readString(s"$root/meta.tsv")
-      .split("\n").head.split("\t", -1)
-    head match {
-      case Array("mode", "filtered", g, t) =>
-        val (pats, fs) = filteredPatternsFromSparql(unb64(t))
-        (unb64(g), pats, fs)
-      case _ => throw new IllegalArgumentException(
-        s"not a filtered view under $root")
-    }
+      Seq("view", kind, b64(graph), b64(text)).mkString("\t"))
+    d
   }
 
-  /** Bootstrap a FILTERED view — [[filteredPatternsFromSparql]]'s
-    * fragment; segments are net a/d binding rows, the conjunctive delta
-    * rule's output restricted by the same row-local predicate that
-    * restricts the bootstrap. */
-  def createFilteredFromSparql(spark: SparkSession, storeRoot: String,
-      viewRoot: String, text: String, graph: String = ""): Int = {
-    val (pats, fs) = filteredPatternsFromSparql(text)
+  /** The ONE reader: re-classifies the stored text, so the parser stays
+    * the single source of truth for a definition's meaning. A summary's
+    * `meta.tsv`, or one written in an older format, is a loud error
+    * naming the root — no older format is read. */
+  private[rdf] def readDefinition(root: String): Definition =
+    graft.sources.AtomicStore.readString(s"$root/meta.tsv")
+      .split("\t", -1) match {
+      case Array("view", kind, g, t) =>
+        Definition(kind, unb64(g), as(kind, classify(unb64(t))))
+      case Array("mode", "agg" | "aggx" | "aggenc", _*) =>
+        throw new IllegalArgumentException(
+          s"$root holds an aggregate summary, not a view")
+      case _ => throw new IllegalArgumentException(
+        s"$root holds no view definition this build can read (a " +
+          "meta.tsv from before the kind/graph/SPARQL-text format?) — " +
+          "remove the root and create the view again")
+    }
+
+  /** [[readDefinition]] for the string-space lifecycle: an id-space
+    * root ([[EncodedView]]) is rejected by name. */
+  private[rdf] def definitionOf(root: String): Definition = {
+    val d = readDefinition(root)
+    require(d.kind != "encoded", s"$root is an id-space view — create, " +
+      "sync and read it through EncodedView")
+    d
+  }
+
+  /** The view's stored kind: "triple", "quads", "filtered", "union",
+    * "optional", "path", "pathexpr" — or "encoded" for an id-space
+    * [[EncodedView]] root. */
+  def mode(root: String): String = readDefinition(root).kind
+
+  /** Is this a quad-pattern (GRAPH-aware) view? */
+  def isQuadView(root: String): Boolean = mode(root) == "quads"
+
+  /** The persisted TRIPLE-view definition: (graph slice, patterns). */
+  def definition(root: String): (String, Seq[TP]) =
+    definitionOf(root) match {
+      case Definition(_, g, TripleBgp(p)) => (g, p)
+      case d => throw new IllegalArgumentException(
+        s"$root is a ${d.kind} view, not a triple-slice view")
+    }
+
+  /** The persisted QUAD-view definition. */
+  def definitionQuads(root: String): Seq[(TP, Term)] =
+    definitionOf(root).shape match {
+      case QuadBgp(p) => p
+      case s => throw new IllegalArgumentException(
+        s"$root is a ${s.kind} view, not a quad view")
+    }
+
+  // ---- the fragments as projections of the classified text ------------
+
+  /** The conjunctive fragment: `SELECT * WHERE { <plain BGP> }` (or a
+    * projection naming every pattern variable). */
+  def patternsFromSparql(text: String): Seq[TP] = classify(text) match {
+    case TripleBgp(p) => p
+    case s => notA("triple", s)
+  }
+
+  /** The FILTERED fragment: a BGP plus row-local FILTERs over its own
+    * variables → (patterns, filters). */
+  def filteredPatternsFromSparql(
+      text: String): (Seq[TP], Seq[Sparql.Expr]) = classify(text) match {
+    case FilteredBgp(p, fs) => (p, fs)
+    case s => notA("filtered", s)
+  }
+
+  /** The QUAD fragment: plain patterns address the default graph,
+    * `GRAPH term { BGP }` blocks carry their graph term. */
+  def quadPatternsFromSparql(text: String): Seq[(TP, Term)] =
+    as("quads", classify(text)) match {
+      case QuadBgp(p) => p
+      case s => notA("quads", s)
+    }
+
+  /** The UNION fragment: two or more top-level `{ BGP } UNION { BGP }`
+    * branches over the SAME variable set. */
+  def unionBranchesFromSparql(text: String): Seq[Seq[TP]] =
+    classify(text) match {
+      case UnionBgp(bs) => bs
+      case s => notA("union", s)
+    }
+
+  /** The OPTIONAL fragment: a BGP plus one `OPTIONAL { BGP }` →
+    * (left, right). */
+  def optionalFromSparql(text: String): (Seq[TP], Seq[TP]) =
+    classify(text) match {
+      case OptionalBgp(l, r) => (l, r)
+      case s => notA("optional", s)
+    }
+
+  /** The PATH fragment: `?src (p1|…|^q1|…)+ ?dst` →
+    * (srcVar, dstVar, forward preds, inverse preds). */
+  def pathFromSparql(text: String)
+      : (String, String, Seq[String], Seq[String]) = classify(text) match {
+    case p: AltPath => (p.src, p.dst, p.fwd, p.inv)
+    case s => notA("path", s)
+  }
+
+  /** `?src (s1/s2/…)+ ?dst` with each step a linear alternation →
+    * (srcVar, dstVar, steps as (forward, inverse) predicates). It is a
+    * pathexpr view; nested closures inside a step stay rejected. */
+  def pathSeqFromSparql(text: String)
+      : (String, String, Seq[(Seq[String], Seq[String])]) = {
+    val (s, d, tree) = pathExprFromSparql(text)
+    def steps(p: Path): Seq[Path] = p match {
+      case PSeq(l, r) => steps(l) ++ steps(r)
+      case other => Seq(other)
+    }
+    (s, d, steps(tree).map(st => linearAlt(st).getOrElse(
+      throw new IllegalArgumentException(
+        s"each step of a sequence path is a linear alternation, got $st"))))
+  }
+
+  /** The GENERAL path fragment: `?src (EXPR)+ ?dst` →
+    * (srcVar, dstVar, EXPR). */
+  def pathExprFromSparql(text: String): (String, String, Path) =
+    as("pathexpr", classify(text)) match {
+      case ExprPath(s, d, t) => (s, d, t)
+      case s => notA("pathexpr", s)
+    }
+
+  // ---- create --------------------------------------------------------
+
+  /** Bootstrap a view at the store's current version as a `kind` view of
+    * `text`: persists the definition, then publishes the base — a
+    * pathexpr view's per-node edge sets first, since its closure
+    * bootstraps from the published root set. Idempotent: an existing
+    * complete base at the same version is kept. */
+  private def createView(spark: SparkSession, storeRoot: String,
+      viewRoot: String, kind: String, graph: String, text: String): Int = {
     val cur = QuadStore.currentVersion(storeRoot).getOrElse(
       throw new IllegalArgumentException(
-        s"no store under $storeRoot — init() before createFiltered()"))
-    writeMetaFiltered(viewRoot, graph, text)
-    val cond = fs.map(Sparql.filterColumn).reduce(_ && _)
-    graft.sources.AtomicStore.materializeParquet(Rows.basePath(viewRoot, cur)) {
-      BgpView.compute(slice(spark, storeRoot, cur, graph), pats)
-        .filter(cond)
+        s"no store under $storeRoot — init() before create()"))
+    val d = writeDefinition(viewRoot, kind, graph, text)
+    lazy val t = slice(spark, storeRoot, cur, graph)
+    d.shape match {
+      case e: ExprPath =>
+        graft.sources.AtomicStore.materializeParquet(
+            Edges.basePath(viewRoot, cur)) {
+          nodeSetsFrame(t, edgeNodes(e.tree))
+        }: Unit
+      case _ =>
+    }
+    graft.sources.AtomicStore.materializeParquet(
+        Rows.basePath(viewRoot, cur)) {
+      d.shape match {
+        case TripleBgp(p) => BgpView.compute(t, p)
+        case QuadBgp(p) => BgpView.computeQuads(
+          QuadStore.readVersion(spark, storeRoot, cur), p)
+        case FilteredBgp(p, fs) => BgpView.compute(t, p)
+          .filter(fs.map(Sparql.filterColumn).reduce(_ && _))
+        case UnionBgp(bs) => BgpView.computeUnionCounts(t, bs)
+        case OptionalBgp(l, r) => BgpView.computeOptional(t, l, r)
+        case p: AltPath => named(Paths.transitiveClosure(
+          pathEdges(t, p.fwd, p.inv)), p.src, p.dst)
+        case ExprPath(s, dst, _) => named(Paths.transitiveClosure(
+          rootEdgeSet(spark, viewRoot, cur)), s, dst)
+      }
     }
     cur
   }
 
-  /** The QUAD-view fragment from SPARQL text: plain patterns address
-    * the default graph, `GRAPH term { patterns }` blocks carry their
-    * graph term (constant or variable — a variable binds as a view
-    * column). The same conjunctive-only discipline as
-    * [[patternsFromSparql]]: graph blocks take bare BGP bodies, and
-    * everything else is rejected loudly. */
-  def quadPatternsFromSparql(text: String): Seq[(TP, Term)] = {
-    val q = Sparql.parse(text)
-    require(q.branches.size == 1 && !q.ask && q.construct.isEmpty &&
-      q.describe.isEmpty, "view definitions are single-block SELECTs")
-    val b = q.branches.head
-    require(b.optionals.isEmpty && b.filters.isEmpty && b.minuses.isEmpty &&
-      b.values.isEmpty && b.binds.isEmpty && b.paths.isEmpty &&
-      b.exists.isEmpty && b.subqueries.isEmpty && b.unions.isEmpty &&
-      b.services.isEmpty,
-      "a maintainable view body is a conjunction of plain and GRAPH-" +
-        "wrapped BGPs — compose the rest downstream of the materialization")
-    val fromGraphs = b.graphs.flatMap { case (g, inner) =>
-      require(inner.where.nonEmpty && inner.optionals.isEmpty &&
-        inner.filters.isEmpty && inner.minuses.isEmpty &&
-        inner.values.isEmpty && inner.binds.isEmpty &&
-        inner.paths.isEmpty && inner.exists.isEmpty &&
-        inner.subqueries.isEmpty && inner.graphs.isEmpty &&
-        inner.unions.isEmpty && inner.services.isEmpty,
-        "GRAPH blocks in view definitions take bare BGP bodies")
-      inner.where.map(tp => (tp, g))
-    }
-    val plain = b.where.map(tp =>
-      (tp, C(Quads.DefaultGraph): Term))
-    val pats = plain ++ fromGraphs
-    require(pats.nonEmpty, "empty view body")
-    require(!q.distinct && q.orderKeys.isEmpty && q.limit.isEmpty &&
-      q.offset.isEmpty && q.selectAggs.isEmpty && q.groupVars.isEmpty &&
-      q.having.isEmpty && q.selectBinds.isEmpty,
-      "view definitions take no solution modifiers or aggregation")
-    val vars = pats.flatMap { case (tp, g) => Seq(tp.s, tp.p, tp.o, g) }
-      .collect { case V(n) => n }.distinct
-    require(q.projection == Seq("*") || q.projection.toSet == vars.toSet,
-      s"the materialized view holds the FULL binding (${
-        vars.mkString(", ")}) — project or aggregate over the view's " +
-        "reads, or via IncrementalAgg on its delta")
-    pats
-  }
+  /** Bootstrap a triple view of `patterns` over the `graph` slice. */
+  def create(spark: SparkSession, storeRoot: String, viewRoot: String,
+      patterns: Seq[TP], graph: String = ""): Int =
+    createView(spark, storeRoot, viewRoot, "triple", graph,
+      render(patterns.map(inDefault)))
 
-  /** [[createQuads]] from SPARQL text. */
+  /** Bootstrap a QUAD-pattern view (GRAPH-aware — constant graph terms
+    * pin legs, a shared variable makes the graph a view column tracking
+    * every graph). */
+  def createQuads(spark: SparkSession, storeRoot: String, viewRoot: String,
+      patterns: Seq[(TP, Term)]): Int =
+    createView(spark, storeRoot, viewRoot, "quads", Quads.DefaultGraph,
+      render(patterns))
+
+  /** Bootstrap whatever maintainable view `text` defines ([[classify]]). */
+  def createFromSparql(spark: SparkSession, storeRoot: String,
+      viewRoot: String, text: String, graph: String = ""): Int =
+    createView(spark, storeRoot, viewRoot, classify(text).kind, graph, text)
+
+  /** A FILTERED view: segments are the counting rule's net a/d rows
+    * restricted by the same row-local predicate as the bootstrap. */
+  def createFilteredFromSparql(spark: SparkSession, storeRoot: String,
+      viewRoot: String, text: String, graph: String = ""): Int =
+    createView(spark, storeRoot, viewRoot, "filtered", graph, text)
+
+  /** A QUAD view from text (a GRAPH-free BGP is a default-graph one). */
   def createQuadsFromSparql(spark: SparkSession, storeRoot: String,
       viewRoot: String, text: String): Int =
-    createQuads(spark, storeRoot, viewRoot, quadPatternsFromSparql(text))
+    createView(spark, storeRoot, viewRoot, "quads", Quads.DefaultGraph, text)
 
-  // the shared loud rejections of the maintainable-fragment parsers
-  private def noModifiers(q: Sparql.Query): Unit =
-    require(!q.distinct && q.orderKeys.isEmpty && q.limit.isEmpty &&
-      q.offset.isEmpty && q.selectAggs.isEmpty && q.groupVars.isEmpty &&
-      q.having.isEmpty && q.selectBinds.isEmpty &&
-      q.trailingValues.isEmpty,
-      "view definitions take no solution modifiers or aggregation")
-  private def bareBody(b: Sparql.Block, what: String,
-      allowOptional: Boolean = false, allowPaths: Boolean = false): Unit =
-    require((allowOptional || b.optionals.isEmpty) && b.filters.isEmpty &&
-      b.minuses.isEmpty && b.values.isEmpty && b.binds.isEmpty &&
-      (allowPaths || b.paths.isEmpty) && b.exists.isEmpty &&
-      b.subqueries.isEmpty &&
-      b.graphs.isEmpty && b.unions.isEmpty && b.services.isEmpty,
-      s"$what — anything richer composes downstream of the " +
-        "materialization")
-  private def tpVars(pats: Seq[TP]): Seq[String] =
-    pats.flatMap(tp => Seq(tp.s, tp.p, tp.o))
-      .collect { case V(n) => n }.distinct
-  private def fullBinding(q: Sparql.Query, vars: Seq[String]): Unit =
-    require(q.projection == Seq("*") || q.projection.toSet == vars.toSet,
-      s"the materialized view holds the FULL binding (${
-        vars.mkString(", ")}) — project over the view's reads")
-
-  /** The UNION-view fragment from SPARQL text: two or more top-level
-    * `{ BGP } UNION { BGP }` branches over the SAME variable set. */
-  def unionBranchesFromSparql(text: String): Seq[Seq[TP]] = {
-    val q = Sparql.parse(text)
-    require(!q.ask && q.construct.isEmpty && q.describe.isEmpty,
-      "view definitions are SELECTs")
-    require(q.branches.size >= 2,
-      "a union view needs two or more UNION branches — use " +
-        "createFromSparql for a single BGP")
-    noModifiers(q)
-    val branches = q.branches.map { b =>
-      bareBody(b, "each union branch of a maintainable view is a " +
-        "plain BGP")
-      require(b.where.nonEmpty, "empty union branch")
-      b.where
-    }
-    val per = branches.map(tpVars(_).toSet)
-    require(per.forall(_ == per.head),
-      "union view branches must bind the same variable set, got " +
-        per.map(_.toSeq.sorted.mkString("{", ",", "}")).mkString(" vs "))
-    fullBinding(q, per.head.toSeq.sorted)
-    branches
-  }
-
-  /** [[createUnion]] from SPARQL text. */
+  /** A UNION view — persisted as the counting algorithm's SUPPORT COUNT
+    * frame ([[BgpView.computeUnionCounts]]): set union does not
+    * distribute over set deltas, support does — segments carry
+    * per-binding net support changes and membership is support > 0. */
   def createUnionFromSparql(spark: SparkSession, storeRoot: String,
       viewRoot: String, text: String, graph: String = ""): Int =
-    createUnion(spark, storeRoot, viewRoot,
-      unionBranchesFromSparql(text), graph)
+    createView(spark, storeRoot, viewRoot, "union", graph, text)
 
-  /** The OPTIONAL-view fragment from SPARQL text: a plain required BGP
-    * plus exactly one `OPTIONAL { BGP }` block → (left, right). */
-  def optionalFromSparql(text: String): (Seq[TP], Seq[TP]) = {
-    val q = Sparql.parse(text)
-    require(q.branches.size == 1 && !q.ask && q.construct.isEmpty &&
-      q.describe.isEmpty, "view definitions are single-block SELECTs")
-    val b = q.branches.head
-    bareBody(b, "a maintainable OPTIONAL view is a plain BGP plus one " +
-      "OPTIONAL { BGP }", allowOptional = true)
-    require(b.where.nonEmpty, "empty required body")
-    require(b.optionals.size == 1, "exactly one OPTIONAL block")
-    val ob = b.optionals.head
-    require(ob.pats.nonEmpty && ob.paths.isEmpty && ob.filters.isEmpty,
-      "the OPTIONAL body of a maintainable view is a bare BGP")
-    noModifiers(q)
-    fullBinding(q, tpVars(b.where ++ ob.pats).sorted)
-    (b.where, ob.pats)
-  }
-
-  /** [[createOptional]] from SPARQL text. */
+  /** An OPTIONAL view — `left ⟕ right`, padded rows carrying null
+    * optional columns; segments are net a/d rows maintained by
+    * [[BgpView.deltaOptional]]'s transition rule. */
   def createOptionalFromSparql(spark: SparkSession, storeRoot: String,
-      viewRoot: String, text: String, graph: String = ""): Int = {
-    val (left, right) = optionalFromSparql(text)
-    createOptional(spark, storeRoot, viewRoot, left, right, graph)
-  }
+      viewRoot: String, text: String, graph: String = ""): Int =
+    createView(spark, storeRoot, viewRoot, "optional", graph, text)
 
-  /** The PATH-view fragment from SPARQL text: exactly
-    * `SELECT … WHERE { ?src (p1|…|^q1|…)+ ?dst }` — a one-or-more
-    * closure over a LINEAR predicate alternation (linear in the triples,
-    * so the edge-level delta is the alternation applied to the change
-    * feed). Sequences/nesting inside the `+` are rejected loudly: their
-    * edge sets are joins, whose deltas need the full conjunctive rule. */
-  def pathFromSparql(text: String)
-      : (String, String, Seq[String], Seq[String]) = {
-    val q = Sparql.parse(text)
-    require(q.branches.size == 1 && !q.ask && q.construct.isEmpty &&
-      q.describe.isEmpty, "view definitions are single-block SELECTs")
-    val b = q.branches.head
-    require(b.where.isEmpty && b.paths.size == 1,
-      "a maintainable path view is exactly one path pattern")
-    bareBody(b, "a maintainable path view is exactly one path pattern",
-      allowPaths = true)
-    noModifiers(q)
-    val (sv, dv, fwd, inv) = b.paths.head match {
-      case (V(s), PPlus(inner), V(d)) =>
-        val (f, i) = linearAlt(inner)
-        (s, d, f, i)
-      case (_, p, _) => throw new IllegalArgumentException(
-        s"a maintainable path view is `?src (preds)+ ?dst`, got $p — " +
-          "`*`'s zero-hop row set and constant endpoints compose " +
-          "downstream of the materialization")
-    }
-    require(sv != dv, "path view endpoints must be distinct variables")
-    fullBinding(q, Seq(sv, dv).sorted)
-    (sv, dv, fwd, inv)
-  }
-
-  private def linearAlt(p: Path): (Seq[String], Seq[String]) = p match {
-    case PEdge(v: String) => (Seq(v), Nil)
-    case PInv(PEdge(v: String)) => (Nil, Seq(v))
-    case PAlt(l, r) =>
-      val (lf, li) = linearAlt(l)
-      val (rf, ri) = linearAlt(r)
-      (lf ++ rf, li ++ ri)
-    case other => throw new IllegalArgumentException(
-      s"a maintainable path view closes over a LINEAR predicate " +
-        s"alternation (p|…|^q|…), got $other — for `p/q` SEQUENCES use " +
-        "the pathseq mode (createPathSeqFromSparql) and for any nested " +
-        "seq/alt tree the pathexpr mode (createPathExprFromSparql); " +
-        "their edge deltas run the conjunctive rule")
-  }
-
-  /** `?src (s1/s2/…)+ ?dst` where each `s_i` is a linear predicate
-    * alternation — the SEQUENCE generalization of [[pathFromSparql]]
-    * (which is the one-step special case). Nested `+`/`*`/`?` inside a
-    * step stay rejected: their step-edge sets are themselves closures,
-    * not joins. */
-  def pathSeqFromSparql(text: String)
-      : (String, String, Seq[(Seq[String], Seq[String])]) = {
-    val q = Sparql.parse(text)
-    require(q.branches.size == 1 && !q.ask && q.construct.isEmpty &&
-      q.describe.isEmpty, "view definitions are single-block SELECTs")
-    val b = q.branches.head
-    require(b.where.isEmpty && b.paths.size == 1,
-      "a maintainable path view is exactly one path pattern")
-    bareBody(b, "a maintainable path view is exactly one path pattern",
-      allowPaths = true)
-    noModifiers(q)
-    val (sv, dv, steps) = b.paths.head match {
-      case (V(s), PPlus(inner), V(d)) =>
-        (s, d, flattenSeq(inner).map(linearAlt))
-      case (_, p, _) => throw new IllegalArgumentException(
-        s"a maintainable sequence-path view is `?src (s1/s2/…)+ ?dst`, " +
-          s"got $p")
-    }
-    require(sv != dv, "path view endpoints must be distinct variables")
-    fullBinding(q, Seq(sv, dv).sorted)
-    (sv, dv, steps)
-  }
-
-  private def flattenSeq(p: Path): Seq[Path] = p match {
-    case PSeq(l, r) => flattenSeq(l) ++ flattenSeq(r)
-    case other => Seq(other)
-  }
-
-  /** [[createPath]] from SPARQL text. */
+  /** A PATH view — the closure of a linear alternation, columns
+    * (srcVar, dstVar); segments are net a/d pair rows maintained by
+    * [[Paths.maintainClosureChurn]] (DRed deletions, semi-naive
+    * insertions). */
   def createPathFromSparql(spark: SparkSession, storeRoot: String,
+      viewRoot: String, text: String, graph: String = ""): Int =
+    createView(spark, storeRoot, viewRoot, "path", graph, text)
+
+  /** A SEQUENCE path view `(s1/s2/…)+` ([[pathSeqFromSparql]]): a
+    * pathexpr view whose tree is a sequence of linear alternations. */
+  def createPathSeqFromSparql(spark: SparkSession, storeRoot: String,
       viewRoot: String, text: String, graph: String = ""): Int = {
-    val (sv, dv, fwd, inv) = pathFromSparql(text)
-    createPath(spark, storeRoot, viewRoot, sv, dv, fwd, inv, graph)
+    pathSeqFromSparql(text): Unit
+    createView(spark, storeRoot, viewRoot, "pathexpr", graph, text)
   }
+
+  /** A GENERAL path-expression view — the transitive closure of any
+    * seq/alt tree's edge set, maintained by [[maintainEdgeSets]]
+    * composed with the closure's DRed rule. */
+  def createPathExprFromSparql(spark: SparkSession, storeRoot: String,
+      viewRoot: String, text: String, graph: String = ""): Int =
+    createView(spark, storeRoot, viewRoot, "pathexpr", graph, text)
 
   // ---- lifecycle ------------------------------------------------------
 
@@ -649,36 +528,9 @@ object ViewStore {
     QuadStore.readVersionGraph(spark, storeRoot, v, graph)
       .select("s", "p", "o")
 
-  /** Bootstrap the view at the store's current version: computes the
-    * full view once, publishes it as the base, persists the definition.
-    * Idempotent: an existing complete base at the same version is kept. */
-  def create(spark: SparkSession, storeRoot: String, viewRoot: String,
-      patterns: Seq[TP], graph: String = ""): Int = {
-    val cur = QuadStore.currentVersion(storeRoot).getOrElse(
-      throw new IllegalArgumentException(
-        s"no store under $storeRoot — init() before create()"))
-    writeMeta(viewRoot, graph, patterns)
-    graft.sources.AtomicStore.materializeParquet(Rows.basePath(viewRoot, cur)) {
-      BgpView.compute(slice(spark, storeRoot, cur, graph), patterns)
-    }
-    cur
-  }
-
-  /** Bootstrap a QUAD-pattern view (GRAPH-aware — constant graph terms
-    * pin legs, a shared variable makes the graph a view column tracking
-    * every graph) at the store's current version. */
-  def createQuads(spark: SparkSession, storeRoot: String, viewRoot: String,
-      patterns: Seq[(TP, Term)]): Int = {
-    val cur = QuadStore.currentVersion(storeRoot).getOrElse(
-      throw new IllegalArgumentException(
-        s"no store under $storeRoot — init() before create()"))
-    writeMetaQuads(viewRoot, patterns)
-    graft.sources.AtomicStore.materializeParquet(Rows.basePath(viewRoot, cur)) {
-      BgpView.computeQuads(QuadStore.readVersion(spark, storeRoot, cur),
-        patterns)
-    }
-    cur
-  }
+  /** (src, dst) pairs renamed to a path view's endpoint columns. */
+  private def named(df: DataFrame, src: String, dst: String): DataFrame =
+    df.select(col("src").as(src), col("dst").as(dst))
 
   /** The per-direction edge scan of a path view — a SET (the closure's
     * domain), so alternation duplicates collapse. */
@@ -735,42 +587,7 @@ object ViewStore {
     (churn, candAdds)
   }
 
-  /** Bootstrap a UNION view — branches of conjunctive BGPs over the same
-    * variable set. The persisted artifact is the counting algorithm's
-    * SUPPORT COUNT frame ([[BgpView.computeUnionCounts]]): set union
-    * does not distribute over set deltas, support does — segments carry
-    * per-binding net support changes and membership is support > 0. */
-  def createUnion(spark: SparkSession, storeRoot: String, viewRoot: String,
-      branches: Seq[Seq[TP]], graph: String = ""): Int = {
-    val cur = QuadStore.currentVersion(storeRoot).getOrElse(
-      throw new IllegalArgumentException(
-        s"no store under $storeRoot — init() before createUnion()"))
-    writeMetaUnion(viewRoot, graph, branches)
-    graft.sources.AtomicStore.materializeParquet(Rows.basePath(viewRoot, cur)) {
-      BgpView.computeUnionCounts(slice(spark, storeRoot, cur, graph),
-        branches)
-    }
-    cur
-  }
-
-  /** Bootstrap an OPTIONAL view — `left ⟕ right`, padded rows carrying
-    * null optional columns; segments are net a/d rows maintained by
-    * [[BgpView.deltaOptional]]'s transition rule. */
-  def createOptional(spark: SparkSession, storeRoot: String,
-      viewRoot: String, left: Seq[TP], right: Seq[TP],
-      graph: String = ""): Int = {
-    val cur = QuadStore.currentVersion(storeRoot).getOrElse(
-      throw new IllegalArgumentException(
-        s"no store under $storeRoot — init() before createOptional()"))
-    writeMetaOptional(viewRoot, graph, left, right)
-    graft.sources.AtomicStore.materializeParquet(Rows.basePath(viewRoot, cur)) {
-      BgpView.computeOptional(slice(spark, storeRoot, cur, graph),
-        left, right)
-    }
-    cur
-  }
-
-  // ---- persisted composed step-edge sets (pathseq / pathexpr)
+  // ---- persisted composed step-edge sets (pathexpr views)
   //
   // Round-11 lifecycle fix: earlier rounds recomputed the UNCHANGED
   // operand's composed edge set from the store slice at every sync
@@ -791,42 +608,16 @@ object ViewStore {
   // Every composed node then nets exactly from its children's persisted
   // old sets + deltas. Sync never touches the store slice at all.
 
-  /** Does the view carry the edge-set artifact? Views created before it
-    * existed do not ([[bootstrapEdges]] migrates them at their next
-    * non-empty sync). */
-  private def hasEdges(root: String): Boolean = Edges.lastSynced(root) > 0
-
   /** All nodes' edge sets as they stood at synced version `v`:
     * (__n, src, dst), the base plus net segments folded by one
-    * last-op window — [[readAt]]'s fold over the edge chain. Same
-    * ownership rule as [[readAt]]: the frame belongs to the fold cache
-    * and must never be passed to [[graft.Materialize.release]]. */
+    * last-op window — [[readAt]]'s fold over the edge chain, through the
+    * same fold cache (separate key): the edge state is re-folded by
+    * every sync and compaction, and extends by its net segments exactly
+    * like the binding fold. Same ownership rule as [[readAt]]: the frame
+    * belongs to the fold cache and must never be passed to
+    * [[graft.Materialize.release]]. */
   private def readEdgesAt(spark: SparkSession, root: String,
-      v: Int): DataFrame = {
-    val link = Edges.at(root, v)
-    // same fold cache as [[readAt]] (separate key space): the edge state
-    // is re-folded by every sync and compaction, and extends by its net
-    // segments exactly like the binding fold
-    val key = (graft.sources.AtomicStore.sessionId(spark), root + "#edges")
-    val cached = foldCache.get(key)
-      .filter(c => graft.sources.AtomicStore.markerToken(c.endPath) ==
-        c.token && c.token.nonEmpty)
-    def put(df: DataFrame): DataFrame = {
-      val end = Edges.endPath(root, link)
-      val tok = graft.sources.AtomicStore.markerToken(end)
-      if (tok.nonEmpty) foldCache.put(key, CachedFold(v, end, tok, df))
-      df
-    }
-    cached match {
-      case Some(c) if c.v == v => c.df
-      case Some(c) if c.v < v && link.segs.exists(_._1 == c.v) =>
-        put(graft.Materialize(applySegs(spark, c.df, root,
-          link.segs.filter(_._1 >= c.v), Edges)))
-      case _ =>
-        val folded = Edges.foldLastOp(spark, root, link)
-        put(if (link.segs.isEmpty) folded else graft.Materialize(folded))
-    }
-  }
+      v: Int): DataFrame = cachedFold(spark, Edges, root, root + "#edges", v)
 
   /** The edge-set tree in flat form, id = index, root = 0, children
     * after parents (preorder): atoms carry one (predicate, direction);
@@ -839,15 +630,6 @@ object ViewStore {
     * closure of its child's — maintained by the same DRed/semi-naive
     * rule the root closure uses, over the child's net deltas. */
   private final case class EClosure(l: Int) extends ENode
-
-  /** A step sequence as a [[Path]] tree (each step's alternation a
-    * PAlt chain, steps joined by PSeq) — one engine serves both view
-    * modes. */
-  private def stepsTree(steps: Seq[(Seq[String], Seq[String])]): Path =
-    steps.map { case (f, i) =>
-      (f.map(PEdge(_): Path) ++ i.map(p => PInv(PEdge(p)): Path))
-        .reduce(PAlt(_, _))
-    }.reduce(PSeq(_, _))
 
   /** Flatten a maintainable seq/alt tree to [[ENode]]s (preorder). */
   private def edgeNodes(p: Path): Vector[ENode] = {
@@ -907,18 +689,6 @@ object ViewStore {
       v: Int): DataFrame =
     readEdgesAt(spark, root, v).filter(col("__n") === 0)
       .select("src", "dst")
-
-  /** Migrate a legacy view (created before the edge artifact existed):
-    * publish the full per-node sets at the view's current version, ONCE
-    * — every later sync is incremental. */
-  private def bootstrapEdges(spark: SparkSession, storeRoot: String,
-      viewRoot: String, v: Int, graph: String,
-      nodes: Vector[ENode]): Unit =
-    if (!hasEdges(viewRoot))
-      graft.sources.AtomicStore.materializeParquet(
-          Edges.basePath(viewRoot, v)) {
-        nodeSetsFrame(slice(spark, storeRoot, v, graph), nodes)
-      }: Unit
 
   /** Net per-node edge deltas from the store's net triple deltas, ALL
     * state read from the persisted artifact — never the store.
@@ -1034,113 +804,11 @@ object ViewStore {
     (segFrame, old(0))
   }
 
-  /** Bootstrap a GENERAL path-expression view — the transitive closure
-    * of any seq/alt tree's edge set, maintained by [[exprEdgeCands]]
-    * composed with the closure's DRed rule (the sequence mode's
-    * lifecycle over an arbitrary tree). Defined from SPARQL text only —
-    * the text IS the persisted definition. */
-  def createPathExprFromSparql(spark: SparkSession, storeRoot: String,
-      viewRoot: String, text: String, graph: String = ""): Int = {
-    val (sv, dv, inner) = pathExprFromSparql(text)
-    val cur = QuadStore.currentVersion(storeRoot).getOrElse(
-      throw new IllegalArgumentException(
-        s"no store under $storeRoot — init() before createPathExpr()"))
-    writeMetaPathExpr(viewRoot, graph, sv, dv, text)
-    // per-node composed edge sets first — the closure bootstraps from
-    // the published root set, and sync maintains both incrementally
-    graft.sources.AtomicStore.materializeParquet(
-        Edges.basePath(viewRoot, cur)) {
-      nodeSetsFrame(slice(spark, storeRoot, cur, graph),
-        edgeNodes(inner))
-    }
-    graft.sources.AtomicStore.materializeParquet(Rows.basePath(viewRoot, cur)) {
-      Paths.transitiveClosure(rootEdgeSet(spark, viewRoot, cur))
-        .select(col("src").as(sv), col("dst").as(dv))
-    }
-    cur
-  }
-
-  /** Candidate composed-edge pairs whose derivation passes through at
-    * least one CHANGED step edge — the conjunctive delta rule: for each
-    * step position, the chain joins the Δ-slice's edges at that step
-    * against the full `state` at every other step. Candidates OVERcount
-    * (a pair may have surviving derivations); the caller's membership
-    * anti-joins net them. Each step edge derives from ONE triple (steps
-    * are linear alternations), so Δ step edges come straight off the
-    * triple change feed. */
-  private def seqEdgeCands(state: DataFrame, deltaT: DataFrame,
-      steps: Seq[(Seq[String], Seq[String])]): DataFrame =
-    steps.indices.map { i =>
-      steps.zipWithIndex.map { case ((f, v), j) =>
-        if (j == i) pathEdges(deltaT, f, v) else pathEdges(state, f, v)
-      }.reduce { (a, b) =>
-        a.select(col("src"), col("dst").as("__m"))
-          .join(b.select(col("src").as("__m"), col("dst")), "__m")
-          .select("src", "dst")
-      }
-    }.reduce(_.unionByName(_)).distinct()
-
-  /** Bootstrap a SEQUENCE-path view — the transitive closure of a step
-    * sequence `(s1/s2/…)+` (each step a linear alternation), columns
-    * (srcVar, dstVar). Maintenance composes the conjunctive rule (step-
-    * edge deltas, [[seqEdgeCands]]) with the closure's DRed rule — the
-    * single-alternation mode's lifecycle, one level of join deeper. */
-  def createPathSeq(spark: SparkSession, storeRoot: String,
-      viewRoot: String, srcVar: String, dstVar: String,
-      steps: Seq[(Seq[String], Seq[String])], graph: String = ""): Int = {
-    require(steps.nonEmpty &&
-      steps.forall(s => s._1.nonEmpty || s._2.nonEmpty),
-      "every sequence step needs at least one predicate")
-    require(srcVar != dstVar, "path view endpoints must be distinct vars")
-    val cur = QuadStore.currentVersion(storeRoot).getOrElse(
-      throw new IllegalArgumentException(
-        s"no store under $storeRoot — init() before createPathSeq()"))
-    writeMetaPathSeq(viewRoot, graph, srcVar, dstVar, steps)
-    graft.sources.AtomicStore.materializeParquet(
-        Edges.basePath(viewRoot, cur)) {
-      nodeSetsFrame(slice(spark, storeRoot, cur, graph),
-        edgeNodes(stepsTree(steps)))
-    }
-    graft.sources.AtomicStore.materializeParquet(Rows.basePath(viewRoot, cur)) {
-      Paths.transitiveClosure(rootEdgeSet(spark, viewRoot, cur))
-        .select(col("src").as(srcVar), col("dst").as(dstVar))
-    }
-    cur
-  }
-
-  /** [[createPathSeq]] from SPARQL text. */
-  def createPathSeqFromSparql(spark: SparkSession, storeRoot: String,
-      viewRoot: String, text: String, graph: String = ""): Int = {
-    val (sv, dv, steps) = pathSeqFromSparql(text)
-    createPathSeq(spark, storeRoot, viewRoot, sv, dv, steps, graph)
-  }
-
-  /** Bootstrap a PATH view — the transitive closure of a predicate
-    * alternation `(p1|…|^q1|…)+`, columns (srcVar, dstVar); segments are
-    * net a/d pair rows maintained by [[Paths.maintainClosureDelta]]
-    * (DRed deletions, semi-naive insertions). */
-  def createPath(spark: SparkSession, storeRoot: String, viewRoot: String,
-      srcVar: String, dstVar: String, fwd: Seq[String],
-      inv: Seq[String] = Nil, graph: String = ""): Int = {
-    require(fwd.nonEmpty || inv.nonEmpty, "empty predicate alternation")
-    require(srcVar != dstVar, "path view endpoints must be distinct vars")
-    val cur = QuadStore.currentVersion(storeRoot).getOrElse(
-      throw new IllegalArgumentException(
-        s"no store under $storeRoot — init() before createPath()"))
-    writeMetaPath(viewRoot, graph, srcVar, dstVar, fwd, inv)
-    graft.sources.AtomicStore.materializeParquet(Rows.basePath(viewRoot, cur)) {
-      Paths.transitiveClosure(
-          pathEdges(slice(spark, storeRoot, cur, graph), fwd, inv))
-        .select(col("src").as(srcVar), col("dst").as(dstVar))
-    }
-    cur
-  }
-
   /** Fold the store's changes since the last sync into one view-delta
     * segment; returns the store version the view now reflects.
     * Idempotent and crash-safe (marker-gated, coverage-named). Serves
-    * every view shape — the meta's mode discriminates; union segments
-    * carry net SUPPORT changes, the rest net a/d binding rows. */
+    * every view shape — the classified definition discriminates; union
+    * segments carry net SUPPORT changes, the rest net a/d binding rows. */
   def sync(spark: SparkSession, storeRoot: String,
       viewRoot: String): Int = {
     val cur = QuadStore.currentVersion(storeRoot).getOrElse(
@@ -1148,31 +816,31 @@ object ViewStore {
         s"no store under $storeRoot — init() before sync()"))
     val last = lastSynced(viewRoot)
     require(last > 0, s"no view under $viewRoot — create() before sync()")
+    val Definition(_, graph, shape) = definitionOf(viewRoot)
     if (cur <= last) return last
     val (adds, dels) = QuadStore.changes(spark, storeRoot, last, cur)
     val opRows = (d: (DataFrame, DataFrame)) =>
       d._1.withColumn("__op", lit("a"))
         .unionByName(d._2.withColumn("__op", lit("d")))
-    val tOf = (graph: String) => (df: DataFrame) =>
+    val t = (df: DataFrame) =>
       df.filter(col("g") === graph).select("s", "p", "o")
+    lazy val oldT = slice(spark, storeRoot, last, graph)
     // no-op fast path: versions advanced but the raw change log is
     // empty (idempotent replays) — coverage still needs its segment, but
-    // the mode's whole delta machinery (conjunctive chains, DRed,
+    // the shape's whole delta machinery (conjunctive chains, DRed,
     // transition rules) has nothing to do. The RAW probe is one plain
     // segment scan; probing `adds`/`dels` directly would execute the
     // whole net-delta plan (broadcast anti-joins) just for the verdict —
     // measured ~7 scheduler round-trips per sync on the lifecycle keys.
     if (QuadStore.changesRawEmpty(spark, storeRoot, last, cur)) {
-      val empty =
-        if (mode(viewRoot) == "union")
-          readUnionCountsAt(spark, viewRoot, last).limit(0)
-        else readAt(spark, viewRoot, last).limit(0)
+      val empty = shape match {
+        case _: UnionBgp => readUnionCountsAt(spark, viewRoot, last).limit(0)
+        case _ => cachedFold(spark, Rows, viewRoot, viewRoot, last).limit(0)
           .withColumn("__op", lit("a"))
+      }
       // the edge-set chain needs its (empty) segment too — contiguity
-      // is checked per chain; legacy views without the artifact skip
-      // (they bootstrap at their next non-empty sync, gap-free)
-      if (Seq("pathseq", "pathexpr").contains(mode(viewRoot)) &&
-          hasEdges(viewRoot))
+      // is checked per chain
+      if (shape.isInstanceOf[ExprPath])
         graft.sources.AtomicStore.materializeParquet(
             Edges.segPath(viewRoot, last, cur)) {
           spark.range(0).select(lit(0).as("__n"), lit("").as("src"),
@@ -1184,39 +852,20 @@ object ViewStore {
       }
       return cur
     }
-    val segment = mode(viewRoot) match {
-      case "quads" =>
+    val segment = shape match {
+      case QuadBgp(pats) =>
         opRows(BgpView.deltaQuads(
-          QuadStore.readVersion(spark, storeRoot, last),
-          adds, dels, definitionQuads(viewRoot)))
-      case "union" =>
-        val (graph, branches) = definitionUnion(viewRoot)
-        val t = tOf(graph)
-        BgpView.deltaUnionCounts(slice(spark, storeRoot, last, graph),
-          t(adds), t(dels), branches)
-      case "optional" =>
-        val (graph, left, right) = definitionOptional(viewRoot)
-        val t = tOf(graph)
-        opRows(BgpView.deltaOptional(slice(spark, storeRoot, last, graph),
-          t(adds), t(dels), left, right))
-      case m @ ("pathseq" | "pathexpr") =>
-        val (graph, sv, dv, nodes) =
-          if (m == "pathseq") {
-            val (g, s, d, steps) = definitionPathSeq(viewRoot)
-            (g, s, d, edgeNodes(stepsTree(steps)))
-          } else {
-            val (g, s, d, inner) = definitionPathExpr(viewRoot)
-            (g, s, d, edgeNodes(inner))
-          }
-        val t = tOf(graph)
-        // legacy views (pre-edge-artifact) migrate once, then every
-        // sync below is store-free: composed-set state comes from the
-        // persisted artifact, deltas from the net change feed
-        bootstrapEdges(spark, storeRoot, viewRoot, last, graph, nodes)
-        // the feed frames fan into every atom slice AND the segment
-        // write — ONE fused job checkpoints the feed and answers both
-        // side-emptiness probes (the old shape paid the checkpoint plus
-        // an isEmpty job per side)
+          QuadStore.readVersion(spark, storeRoot, last), adds, dels, pats))
+      case UnionBgp(branches) =>
+        BgpView.deltaUnionCounts(oldT, t(adds), t(dels), branches)
+      case OptionalBgp(left, right) =>
+        opRows(BgpView.deltaOptional(oldT, t(adds), t(dels), left, right))
+      case ExprPath(sv, dv, tree) =>
+        // store-free: composed-set state comes from the persisted
+        // artifact, deltas from the net change feed. The feed frames fan
+        // into every atom slice AND the segment write — ONE fused job
+        // checkpoints the feed and answers both side-emptiness probes
+        // (the old shape paid the checkpoint plus an isEmpty job per side)
         val (feed, counts) = graft.Materialize.probedN(
           t(adds).withColumn("__op", lit("a"))
             .unionByName(t(dels).withColumn("__op", lit("d"))),
@@ -1225,7 +874,7 @@ object ViewStore {
         val tAdds = feed.filter(col("__op") === "a").select("s", "p", "o")
         val tDels = feed.filter(col("__op") === "d").select("s", "p", "o")
         val (edgeSeg, oldE) = maintainEdgeSets(spark, viewRoot, last,
-          nodes, tAdds, tDels, nA > 0L, nD > 0L)
+          edgeNodes(tree), tAdds, tDels, nA > 0L, nD > 0L)
         // edge segment FIRST: if a crash lands between the two
         // publishes, the closure chain (the coverage authority) still
         // ends at `last` and the replayed sync's edge publish no-ops.
@@ -1243,39 +892,28 @@ object ViewStore {
         val eDels = segM.filter(col("__n") === 0 && col("__op") === "d")
           .select("src", "dst")
         val (_, pa, pd) = Paths.maintainClosureDelta(
-          read(spark, viewRoot)
+          cachedFold(spark, Rows, viewRoot, viewRoot, last)
             .select(col(sv).as("src"), col(dv).as("dst")),
           oldE, eAdds, eDels)
-        val named = (df: DataFrame) =>
-          df.select(col("src").as(sv), col("dst").as(dv))
-        opRows((named(pa), named(pd)))
-      case "path" =>
-        val (graph, sv, dv, fwd, inv) = definitionPath(viewRoot)
-        val t = tOf(graph)
-        val oldT = slice(spark, storeRoot, last, graph)
-        val (churn, candAdds) = pathChurn(oldT, t(adds), t(dels), fwd, inv)
+        opRows((named(pa, sv, dv), named(pd, sv, dv)))
+      case path: AltPath =>
+        val AltPath(sv, dv, _) = path
+        val (churn, candAdds) =
+          pathChurn(oldT, t(adds), t(dels), path.fwd, path.inv)
         // the old edge set stays lazy: only a DRed phase reads it
         val (_, pa, pd) = Paths.maintainClosureChurn(
-          read(spark, viewRoot)
+          cachedFold(spark, Rows, viewRoot, viewRoot, last)
             .select(col(sv).as("src"), col(dv).as("dst")),
-          pathEdges(oldT, fwd, inv), churn, candAdds)
-        val named = (df: DataFrame) =>
-          df.select(col("src").as(sv), col("dst").as(dv))
-        opRows((named(pa), named(pd)))
-      case "filtered" =>
-        val (graph, pats, fs) = definitionFiltered(viewRoot)
-        val t = tOf(graph)
+          pathEdges(oldT, path.fwd, path.inv), churn, candAdds)
+        opRows((named(pa, sv, dv), named(pd, sv, dv)))
+      case FilteredBgp(pats, fs) =>
         // the row-local predicate commutes with the counting rule:
         // filtering the NET a/d rows is the filtered view's exact delta
         val cond = fs.map(Sparql.filterColumn).reduce(_ && _)
-        val (ba, bd) = BgpView.delta(slice(spark, storeRoot, last, graph),
-          t(adds), t(dels), pats)
+        val (ba, bd) = BgpView.delta(oldT, t(adds), t(dels), pats)
         opRows((ba.filter(cond), bd.filter(cond)))
-      case _ =>
-        val (graph, patterns) = definition(viewRoot)
-        val t = tOf(graph)
-        opRows(BgpView.delta(slice(spark, storeRoot, last, graph),
-          t(adds), t(dels), patterns))
+      case TripleBgp(pats) =>
+        opRows(BgpView.delta(oldT, t(adds), t(dels), pats))
     }
     // an empty delta still writes its (tiny) segment: coverage
     // contiguity is what lets a replayed or raced sync be a no-op and
@@ -1324,7 +962,7 @@ object ViewStore {
     * together — the anti-join must too. */
   private def applySegs(spark: SparkSession, state: DataFrame,
       root: String, segs: Seq[(Int, Int)],
-      chain: graft.sources.VersionChain = Rows): DataFrame = {
+      chain: graft.sources.VersionChain): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val cols = state.columns.toSeq
     val ops = chain.segFrames(spark, root, segs).zip(segs)
@@ -1360,34 +998,43 @@ object ViewStore {
     * fails irrecoverably. The blocks are reclaimed by Spark's
     * ContextCleaner once the entry leaves the LRU and nothing else
     * reaches it. */
-  def readAt(spark: SparkSession, viewRoot: String, v: Int): DataFrame = {
-    if (mode(viewRoot) == "union")
-      return readUnionCountsAt(spark, viewRoot, v)
-        .drop(BgpView.SupportCol)
-    val link = Rows.at(viewRoot, v)
-    val key = (graft.sources.AtomicStore.sessionId(spark), viewRoot)
-    val cached = foldCache.get(key)
+  def readAt(spark: SparkSession, viewRoot: String, v: Int): DataFrame =
+    definitionOf(viewRoot).shape match {
+      case _: UnionBgp =>
+        readUnionCountsAt(spark, viewRoot, v).drop(BgpView.SupportCol)
+      case _ => cachedFold(spark, Rows, viewRoot, viewRoot, v)
+    }
+
+  /** `chain`'s fold at `v` through the fold cache under `key`: a hit at
+    * `v` is served as is, a hit at an earlier version that a segment
+    * starts from extends by exactly the (hit, v] sub-chain, and a miss
+    * folds the whole link. */
+  private def cachedFold(spark: SparkSession,
+      chain: graft.sources.VersionChain, root: String, key: String,
+      v: Int): DataFrame = {
+    val link = chain.at(root, v)
+    val k = (graft.sources.AtomicStore.sessionId(spark), key)
+    val cached = foldCache.get(k)
       // the fingerprint must still match ITS path — a wiped/recompacted
       // root reads as a miss, never as pre-wipe state
       .filter(c => graft.sources.AtomicStore.markerToken(c.endPath) ==
         c.token && c.token.nonEmpty)
     def put(df: DataFrame): DataFrame = {
-      val end = Rows.endPath(viewRoot, link)
+      val end = chain.endPath(root, link)
       val tok = graft.sources.AtomicStore.markerToken(end)
-      if (tok.nonEmpty) foldCache.put(key, CachedFold(v, end, tok, df))
+      if (tok.nonEmpty) foldCache.put(k, CachedFold(v, end, tok, df))
       df
     }
     cached match {
       case Some(c) if c.v == v => c.df
       case Some(c) if c.v < v && link.segs.exists(_._1 == c.v) =>
-        // contiguous extension: exactly the (c.v, v] sub-chain
-        val ext = link.segs.filter(_._1 >= c.v)
-        put(graft.Materialize(applySegs(spark, c.df, viewRoot, ext)))
+        put(graft.Materialize(applySegs(spark, c.df, root,
+          link.segs.filter(_._1 >= c.v), chain)))
       case _ =>
         // a bare base is already a cheap one-file scan — cache it lazy
         // (extensions anti-join against the scan; Materialize.reuse-class
         // argument), where a checkpoint would cost a job for nothing
-        val folded = Rows.foldLastOp(spark, viewRoot, link)
+        val folded = chain.foldLastOp(spark, root, link)
         put(if (link.segs.isEmpty) folded else graft.Materialize(folded))
     }
   }
@@ -1422,7 +1069,7 @@ object ViewStore {
         "pass countCol explicitly")
     // a union view's counts are per-binding supports, not ±1 signs —
     // fold the supports first, then count present bindings per group
-    if (mode(viewRoot) == "union")
+    if (definitionOf(viewRoot).shape.isInstanceOf[UnionBgp])
       return readUnionCounts(spark, viewRoot)
         .groupBy(groupVars.map(col): _*)
         .agg(count(lit(1)).as(countCol))
@@ -1454,11 +1101,12 @@ object ViewStore {
     * alongside, at the same head. */
   def compact(spark: SparkSession, viewRoot: String): Unit = {
     val head = lastSynced(viewRoot)
-    Rows.compact(viewRoot, head)(tmp =>
-      (if (mode(viewRoot) == "union") readUnionCounts(spark, viewRoot)
-       else read(spark, viewRoot)).write.parquet(tmp))
-    if (Seq("pathseq", "pathexpr").contains(mode(viewRoot)) &&
-        hasEdges(viewRoot))
+    val shape = definitionOf(viewRoot).shape
+    Rows.compact(viewRoot, head)(tmp => (shape match {
+      case _: UnionBgp => readUnionCountsAt(spark, viewRoot, head)
+      case _ => cachedFold(spark, Rows, viewRoot, viewRoot, head)
+    }).write.parquet(tmp))
+    if (shape.isInstanceOf[ExprPath])
       Edges.compact(viewRoot, head)(tmp =>
         readEdgesAt(spark, viewRoot, head).write.parquet(tmp))
   }

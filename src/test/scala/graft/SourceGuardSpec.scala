@@ -10,7 +10,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * through `sources.VersionChain`. Also for the fixpoints: no round cap,
   * the path closures' rounds all run through `Materialize.semiNaive`,
   * their composition through the closure is written once, and the path
-  * view's edge delta is a probe, not anti-joins of whole edge sets. */
+  * view's edge delta is a probe, not anti-joins of whole edge sets. A
+  * view's definition has one codec. */
 class SourceGuardSpec extends AnyFunSuite {
 
   private val main = new java.io.File("src/main/scala/graft")
@@ -80,13 +81,34 @@ class SourceGuardSpec extends AnyFunSuite {
       assert(i >= 0, s"`$from` moved — update this guard")
       t.substring(i, t.indexOf(to, i + from.length))
     }
-    val branch = between("case \"path\" =>", "case \"")
+    val branch =
+      between("case path: AltPath =>", "case FilteredBgp(")
     val churn = between("private def pathChurn(", "  /** ")
     assert(branch.contains("pathChurn("))
     assert(!branch.contains("left_anti") && !churn.contains("left_anti"),
       "the path sync anti-joins to get its edge delta")
     assert(!churn.contains("pathEdges("),
       "the edge delta builds a full (distinct) edge set")
+  }
+
+  test("a view's meta.tsv has one writer/reader pair beside the summary " +
+      "codec") {
+    val users = Seq("rdf/ViewStore.scala", "rdf/EncodedView.scala").flatMap {
+      p =>
+        val f = new java.io.File(main, p)
+        assert(f.isFile, s"view module $p moved — update this guard")
+        val t = text(f)
+        "/meta\\.tsv\"".r.findAllMatchIn(t).map(m => p ->
+          "def (\\w+)".r.findAllMatchIn(t.substring(0, m.start)).toSeq
+            .last.group(1)).toSeq
+    }
+    assert(users.toSet === Set(
+      "rdf/ViewStore.scala" -> "writeDefinition",
+      "rdf/ViewStore.scala" -> "readDefinition",
+      "rdf/ViewStore.scala" -> "writeMetaAgg",
+      "rdf/ViewStore.scala" -> "definitionAgg",
+      "rdf/EncodedView.scala" -> "writeMetaAgg",
+      "rdf/EncodedView.scala" -> "definitionAgg"))
   }
 
   test("rdf/ reaches into llm/ only for connected components") {

@@ -156,6 +156,26 @@ class EncodedViewSpec extends SparkSpec {
     Seq(store, mirror, view).foreach(p => rmTree(new java.io.File(p)))
   }
 
+  test("the string-space lifecycle rejects an id-space view by name") {
+    val (store, mirror, view) = roots("kind")
+    val cat = java.nio.file.Files.createTempDirectory("ev_kind_cat").toString
+    QuadStore.init(Seq(("c1", "name", "alice", ""))
+      .toDF("s", "p", "o", "g"), store)
+    EncodedMirror.sync(spark, store, mirror)
+    EncodedView.create(spark, mirror, view,
+      Seq(TP(V("c"), C("name"), V("n"))))
+    assert(ViewStore.mode(view) === "encoded")
+    val reg = intercept[IllegalArgumentException](
+      ViewCatalog.register(cat, view))
+    assert(reg.getMessage.contains("id-space"), reg.getMessage)
+    assert(ViewCatalog.roots(cat).isEmpty)
+    QuadStore.update(spark, store, """INSERT DATA { <c2> <name> "bob" }""")
+    val sync = intercept[IllegalArgumentException](
+      ViewStore.sync(spark, store, view))
+    assert(sync.getMessage.contains("id-space"), sync.getMessage)
+    Seq(store, mirror, view, cat).foreach(p => rmTree(new java.io.File(p)))
+  }
+
   test("mirror retention: compacting past the view's sync point is loud") {
     val (store, mirror, view) = roots("ret")
     QuadStore.init(Seq(("c1", "name", "alice", ""))

@@ -872,7 +872,7 @@ class ViewStoreSpec extends SparkSpec {
       storeRoot)
     ViewStore.createPathSeqFromSparql(spark, storeRoot, viewRoot,
       "SELECT * WHERE { ?x (<p>/<q>)+ ?y }")
-    assert(ViewStore.mode(viewRoot) === "pathseq")
+    assert(ViewStore.mode(viewRoot) === "pathexpr")
     assert(rowSet(ViewStore.read(spark, viewRoot)) ===
       Set(Seq("a", "b"), Seq("a", "c"), Seq("b", "c")))
     // churn 1: grow c's chain (composed edge c→d appears, plus derived)
